@@ -6,8 +6,10 @@ package graft.config
   * (reference: src/config/sequence_config.rs:25-175) so a user of the
   * reference can express the same pipelines, generalized with file
   * sources (the natural Spark idiom; SURVEY §7.1). Values are plain
-  * Scala case classes; `JsonConfig` parses the JSON rendering (the
-  * offline build has no TOML library — documented deviation).
+  * Scala case classes, and their parameter defaults are the config
+  * defaults. `TomlConfig` loads the reference's `.toml` layout through
+  * graft's own `Toml` parser, `JsonConfig` loads the JSON rendering, and
+  * both decode the tables their layouts share through `TableDecoder`.
   */
 
 /** HTTP request shape (S2/S3): method, headers, query params, payload,
@@ -362,9 +364,9 @@ final case class NearDedupRegistryDef(
     shingleSize: Int = 2,
     minJaccard: Double = 0.5)
 
-final case class LangFilterDef(field: String, allowed: Seq[String])
+final case class LangFilterDef(field: String, allowed: Seq[String] = Nil)
 
-final case class QualityFilterDef(field: String, min: Double)
+final case class QualityFilterDef(field: String, min: Double = 0.0)
 
 /** LLM-extension: hashed-linear classifier filter inside a pipeline's
   * transform — fastText-style quality gating: score each row's

@@ -21,7 +21,8 @@ import scala.collection.mutable
   *
   * Output shape: `Map[String, Any]` with Any ∈ String | Long | Double |
   * Boolean | Vector[Any] | Map[String, Any] — the same value universe
-  * `JsonConfig`'s node walkers consume.
+  * `Json.toScala` yields for a JSON config, which `TableDecoder` reads
+  * for both front-ends.
   */
 object Toml {
 

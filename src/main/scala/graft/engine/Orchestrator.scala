@@ -2,8 +2,9 @@ package graft.engine
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 import org.apache.spark.storage.StorageLevel
 
 import graft.config._
@@ -443,6 +444,26 @@ object Orchestrator {
   private def nondeterministicSource(p: PipelineDef): Boolean =
     p.extract.firstRecordOnly || p.extract.maxRecords.nonEmpty
 
+  /** A side table a transform stage reads by path (lookup, registry,
+    * weights, merges, target corpus); csv side tables have a header row. */
+  private def readSide(spark: SparkSession, format: String, path: String,
+      options: Map[String, String] = Map.empty): DataFrame =
+    spark.read.format(format)
+      .options(options ++ (if (format == "csv") Map("header" -> "true") else Map.empty))
+      .load(path)
+
+  /** A payload column as bytes: a BinaryType field rides as-is, a
+    * StringType one is UTF-8-encoded (the zero-egress media stand-in). */
+  private def payloadCol(frame: DataFrame, field: String): Column =
+    if (frame.schema(field).dataType == BinaryType) col(field)
+    else graft.operators.MultimodalOps.withPayload(col(field))
+
+  /** Keeps each dedup component's canonical row: the one whose id is the
+    * component's `canonical_id`. */
+  private def keepCanonical(df: DataFrame, idField: String, groups: DataFrame): DataFrame =
+    df.join(groups.filter(col(idField) === col("canonical_id")).select(idField),
+      Seq(idField), "left_semi")
+
   /** Transform phase in the reference's operator order
     * (contextual_pipeline.rs:879-1121): text ops → mapping → projection
     * → enrichment → merge → computed → flags → column order; then the
@@ -470,10 +491,7 @@ object Orchestrator {
     else if (t.excludeFields.nonEmpty) df = Ops.exclude(t.excludeFields)(df)
     if (t.enrichment.nonEmpty) df = Ops.enrichPlaceholder(t.enrichment)(df)
     t.lookup.foreach { lk =>
-      val lookupDf = spark.read.format(lk.format)
-        .options(lk.options ++ (if (lk.format == "csv") Map("header" -> "true") else Map.empty))
-        .load(lk.path)
-      df = Ops.lookupJoin(lookupDf, lk.key)(df)
+      df = Ops.lookupJoin(readSide(spark, lk.format, lk.path, lk.options), lk.key)(df)
     }
     if (t.mergeWithPrevious) {
       ctx.latestDf.foreach { prev =>
@@ -485,11 +503,8 @@ object Orchestrator {
     t.nearDedup.foreach { nd =>
       val pairs = graft.operators.LlmOps
         .minHashCandidatePairs(df, nd.idField, nd.textField, nd.shingleSize)
-      val groups = graft.operators.LlmOps.dedupGroups(df, nd.idField, pairs)
-      val keepers = groups
-        .filter(col(nd.idField) === col("canonical_id"))
-        .select(nd.idField)
-      df = df.join(keepers, Seq(nd.idField), "left_semi")
+      df = keepCanonical(df, nd.idField,
+        graft.operators.LlmOps.dedupGroups(df, nd.idField, pairs))
     }
     t.winnowDedup.foreach { wd =>
       val pairs = graft.operators.TextOps
@@ -497,46 +512,26 @@ object Orchestrator {
           wd.maxDocsPerFp, wd.minShared)
         .filter(col("overlap") >= wd.minOverlap)
         .select(col("doc_a"), col("doc_b"))
-      val groups = graft.operators.LlmOps.dedupGroups(df, wd.idField, pairs)
-      val keepers = groups
-        .filter(col(wd.idField) === col("canonical_id"))
-        .select(wd.idField)
-      df = df.join(keepers, Seq(wd.idField), "left_semi")
+      df = keepCanonical(df, wd.idField,
+        graft.operators.LlmOps.dedupGroups(df, wd.idField, pairs))
     }
     t.payloadDedup.foreach { pd =>
-      // a StringType payload is UTF-8-encoded (the zero-egress media
-      // stand-in); BinaryType rides as-is
-      val isBinary = df.schema(pd.payloadField).dataType ==
-        org.apache.spark.sql.types.BinaryType
-      val payload =
-        if (isBinary) col(pd.payloadField)
-        else graft.operators.MultimodalOps.withPayload(col(pd.payloadField))
-      val src = df.withColumn("__payload", payload)
+      val src = df.withColumn("__payload", payloadCol(df, pd.payloadField))
       val pairs = graft.operators.MultimodalOps
         .payloadNearDupPairs(src, pd.idField, "__payload", pd.maxHamming)
         .select(col("doc_a"), col("doc_b"))
-      val groups = graft.operators.LlmOps.dedupGroups(df, pd.idField, pairs)
-      val keepers = groups
-        .filter(col(pd.idField) === col("canonical_id"))
-        .select(pd.idField)
-      df = df.join(keepers, Seq(pd.idField), "left_semi")
+      df = keepCanonical(df, pd.idField,
+        graft.operators.LlmOps.dedupGroups(df, pd.idField, pairs))
     }
     t.payloadDedupRegistry.foreach { pr =>
       // "dedup today's crawl against the media registry": probe the
       // historical (band, slice) space with the NEW batch only —
       // history is never re-paired against itself
-      def asPayload(frame: DataFrame, field: String): org.apache.spark.sql.Column =
-        if (frame.schema(field).dataType ==
-              org.apache.spark.sql.types.BinaryType) col(field)
-        else graft.operators.MultimodalOps.withPayload(col(field))
-      val hist0 = spark.read.format(pr.historyFormat)
-        .options(if (pr.historyFormat == "csv") Map("header" -> "true")
-                 else Map.empty[String, String])
-        .load(pr.historyPath)
+      val hist0 = readSide(spark, pr.historyFormat, pr.historyPath)
       val hist = hist0
         .select(col(pr.historyIdField).as(pr.idField),
-          asPayload(hist0, pr.historyPayloadField).as("__payload"))
-      val src = df.withColumn("__payload", asPayload(df, pr.payloadField))
+          payloadCol(hist0, pr.historyPayloadField).as("__payload"))
+      val src = df.withColumn("__payload", payloadCol(df, pr.payloadField))
       df = graft.operators.MultimodalOps.payloadIncrementalNearDup(
         src, hist, pr.idField, "__payload", pr.maxHamming)
         .drop("__payload")
@@ -544,18 +539,9 @@ object Orchestrator {
     t.crossModalDedup.foreach { xm =>
       // cross-modal canonicalization: text SimHash edges ∪ payload
       // perceptual edges → one CC pass, keep each component's min id
-      val isBinary = df.schema(xm.payloadField).dataType ==
-        org.apache.spark.sql.types.BinaryType
-      val payload =
-        if (isBinary) col(xm.payloadField)
-        else graft.operators.MultimodalOps.withPayload(col(xm.payloadField))
-      val src = df.withColumn("__payload", payload)
-      val groups = graft.operators.MultimodalOps.crossModalDupGroups(
-        src, xm.idField, xm.textField, "__payload", xm.maxHamming)
-      val keepers = groups
-        .filter(col(xm.idField) === col("canonical_id"))
-        .select(xm.idField)
-      df = df.join(keepers, Seq(xm.idField), "left_semi")
+      val src = df.withColumn("__payload", payloadCol(df, xm.payloadField))
+      df = keepCanonical(df, xm.idField, graft.operators.MultimodalOps.crossModalDupGroups(
+        src, xm.idField, xm.textField, "__payload", xm.maxHamming))
     }
     t.imageDedup.foreach { im =>
       // perceptual image dedup: decode → aHash60 → banded Hamming
@@ -563,43 +549,28 @@ object Orchestrator {
       // no code and therefore no pairs — they are their own singleton
       // component and always survive (no perceptual information is no
       // evidence of duplication).
-      val src = df.withColumn("__payload",
-        if (df.schema(im.payloadField).dataType ==
-              org.apache.spark.sql.types.BinaryType) col(im.payloadField)
-        else graft.operators.MultimodalOps.withPayload(col(im.payloadField)))
+      val src = df.withColumn("__payload", payloadCol(df, im.payloadField))
       val pairs = graft.operators.ImageOps
         .imageNearDupPairs(src, im.idField, "__payload", im.maxHamming)
         .select(col("doc_a"), col("doc_b"))
-      val groups = graft.operators.LlmOps.dedupGroups(df, im.idField, pairs)
-      val keepers = groups
-        .filter(col(im.idField) === col("canonical_id"))
-        .select(im.idField)
-      df = df.join(keepers, Seq(im.idField), "left_semi")
+      df = keepCanonical(df, im.idField,
+        graft.operators.LlmOps.dedupGroups(df, im.idField, pairs))
     }
     t.imageSemanticDedup.foreach { im =>
       // semantic image dedup: grid-cell contrast embedding through the
       // banded hyperplane-LSH + exact-cosine ANN stack — pairs resize/
       // re-encoded variants whose aHash bits drifted apart. Keep-min
       // canonical like every other dedup stage.
-      val src = df.withColumn("__payload",
-        if (df.schema(im.payloadField).dataType ==
-              org.apache.spark.sql.types.BinaryType) col(im.payloadField)
-        else graft.operators.MultimodalOps.withPayload(col(im.payloadField)))
+      val src = df.withColumn("__payload", payloadCol(df, im.payloadField))
       val pairs = graft.operators.ImageOps
         .imageSemanticNearDupPairs(src, im.idField, "__payload",
           im.threshold, im.grid)
         .select(col("keep_id").as("doc_a"), col("dup_id").as("doc_b"))
-      val groups = graft.operators.LlmOps.dedupGroups(df, im.idField, pairs)
-      val keepers = groups
-        .filter(col(im.idField) === col("canonical_id"))
-        .select(im.idField)
-      df = df.join(keepers, Seq(im.idField), "left_semi")
+      df = keepCanonical(df, im.idField,
+        graft.operators.LlmOps.dedupGroups(df, im.idField, pairs))
     }
     t.decontaminate.foreach { dc =>
-      val bench = spark.read.format(dc.benchFormat)
-        .options(if (dc.benchFormat == "csv") Map("header" -> "true")
-                 else Map.empty[String, String])
-        .load(dc.benchPath)
+      val bench = readSide(spark, dc.benchFormat, dc.benchPath)
       df = graft.operators.LlmOps.decontaminate(
         df, dc.idField, dc.textField,
         bench, dc.benchIdField, dc.benchTextField,
@@ -611,10 +582,7 @@ object Orchestrator {
         sd.k, sd.w, sd.maxDocsPerFp, sd.gap, sd.minFps)
     }
     t.nearDedupRegistry.foreach { nr =>
-      val hist = spark.read.format(nr.historyFormat)
-        .options(if (nr.historyFormat == "csv") Map("header" -> "true")
-                 else Map.empty[String, String])
-        .load(nr.historyPath)
+      val hist = readSide(spark, nr.historyFormat, nr.historyPath)
         .withColumnRenamed(nr.historyIdField, nr.idField)
         .withColumnRenamed(nr.historyTextField, nr.textField)
       df = graft.operators.LlmOps.incrementalNearDedup(
@@ -629,10 +597,7 @@ object Orchestrator {
         graft.operators.TextOps.qualityScore(col(qf.field)) >= qf.min)
     }
     t.classifierFilter.foreach { cf =>
-      val weights = spark.read.format(cf.weightsFormat)
-        .options(if (cf.weightsFormat == "csv") Map("header" -> "true")
-                 else Map.empty[String, String])
-        .load(cf.weightsPath)
+      val weights = readSide(spark, cf.weightsFormat, cf.weightsPath)
       val scores = graft.operators.TextOps.classifierScore(
         df, cf.idField, cf.textField, weights,
         cf.nBuckets, cf.scale, cf.bias)
@@ -681,7 +646,7 @@ object Orchestrator {
         .drop("text_clean")
     }
     t.dsirSelect.foreach { ds =>
-      val target = spark.read.format(ds.targetFormat).load(ds.targetPath)
+      val target = readSide(spark, ds.targetFormat, ds.targetPath)
         .select(col(ds.targetTextField.getOrElse(ds.textField))
           .as(ds.textField))
       val wts = graft.operators.TextOps.dsirWeights(
@@ -713,10 +678,7 @@ object Orchestrator {
             ep.trainMerges)
         else ep.mergesPath match {
           case Some(path) =>
-            spark.read.format(ep.mergesFormat)
-              .options(if (ep.mergesFormat == "csv") Map("header" -> "true")
-                       else Map.empty[String, String])
-              .load(path)
+            readSide(spark, ep.mergesFormat, path)
               .select(col("rank").cast("long").as("rank"),
                 col("x").cast("string"), col("y").cast("string"))
               .orderBy("rank").collect()

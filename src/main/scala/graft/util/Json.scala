@@ -1,7 +1,7 @@
 package graft.util
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.node.{ArrayNode, BooleanNode, DoubleNode, JsonNodeFactory, LongNode, NullNode, ObjectNode, TextNode}
 import scala.jdk.CollectionConverters._
 
 /** Minimal JSON utilities over Jackson (ships in /opt/spark/jars — no new
@@ -25,6 +25,28 @@ object Json {
     case o: ObjectNode =>
       o.properties().asScala.map(e => e.getKey -> toScala(e.getValue)).toMap
     case other => other.toString
+  }
+
+  /** Plain Scala value (the `toScala` universe) → compact JSON text,
+    * formatted exactly as Jackson prints the node it came from. */
+  def render(v: Any): String = toNode(v).toString
+
+  private def toNode(v: Any): JsonNode = v match {
+    case null => NullNode.instance
+    case s: String => TextNode.valueOf(s)
+    case l: Long => LongNode.valueOf(l)
+    case i: Int => LongNode.valueOf(i.toLong)
+    case d: Double => DoubleNode.valueOf(d)
+    case b: Boolean => BooleanNode.valueOf(b)
+    case m: Map[_, _] =>
+      val o = JsonNodeFactory.instance.objectNode()
+      m.foreach { case (k, x) => o.set[JsonNode](k.toString, toNode(x)) }
+      o
+    case xs: Iterable[_] =>
+      val a = JsonNodeFactory.instance.arrayNode()
+      xs.foreach(x => a.add(toNode(x)))
+      a
+    case other => TextNode.valueOf(other.toString)
   }
 
   /** Top-level fields of a JSON object as a Scala map. */

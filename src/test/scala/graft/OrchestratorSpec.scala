@@ -833,6 +833,30 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(out.head.schema.fieldNames.contains("dsir_score"))
   }
 
+  test("dsir_select reads a csv target corpus by its header row, like " +
+    "every other side table") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsrcsv").toString
+    Seq("physics quark neutron the of", "physics boson lattice the of")
+      .toDF("body").write.option("header", "true").csv(s"$dir/target")
+    Seq((1L, "recipe butter sugar the of"),
+      (2L, "physics quark paper the of"),
+      (3L, "recipe oven flour the of"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/docs")
+    val seq = SequenceDef("s", Seq("d"), Seq(
+      PipelineDef("d", FileSource(s"$dir/docs"),
+        transform = TransformDef(addProcessedFlags = false,
+          dsirSelect = Some(DsirSelectDef(
+            idField = "doc_id", textField = "text",
+            targetPath = s"$dir/target", targetFormat = "csv",
+            targetTextField = Some("body"), nBuckets = 64, k = 1))))))
+    val ctx = Orchestrator.execute(spark, seq, unpersistOnEnd = false)
+    assert(ctx.results("d").status === "succeeded", ctx.results("d").error)
+    val out = ctx.results("d").df.get.collect()
+    assert(out.map(_.getAs[Long]("doc_id")).toSeq === Seq(2L),
+      "the physics doc must win under the physics target")
+  }
+
   test("transform.sample: config-level stratified sampling keeps the " +
     "deterministic per-stratum subset") {
     import spark.implicits._

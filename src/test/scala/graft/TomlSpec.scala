@@ -784,39 +784,177 @@ class TomlSpec extends AnyFunSuite {
       && ep.diffField.contains("quality")))
   }
 
-  test("image_dedup and image_semantic_dedup parse from the JSON " +
-    "front-end with the same keys as TOML") {
-    val seq = graft.config.JsonConfig.loadSequence(
-      """{"pipelines": [{
-        |  "name": "imgs",
-        |  "source": {"type": "file", "path": "/tmp/imgs"},
-        |  "transform": {
-        |    "image_dedup": {
-        |      "id_field": "doc_id", "payload_field": "img",
-        |      "max_hamming": 1},
-        |    "image_semantic_dedup": {
-        |      "id_field": "doc_id", "payload_field": "img",
-        |      "threshold": 0.95, "grid": 6}
-        |  }
-        |}]}""".stripMargin)
-    val t = seq.pipelines.head.transform
-    assert(t.imageDedup.exists(i => i.idField == "doc_id"
-      && i.payloadField == "img" && i.maxHamming == 1))
-    assert(t.imageSemanticDedup.exists(i => i.idField == "doc_id"
-      && i.payloadField == "img" && i.threshold == 0.95 && i.grid == 6))
-    // defaults: hamming 3, threshold 0.99, grid 4
-    val dflt = graft.config.JsonConfig.loadSequence(
-      """{"pipelines": [{
-        |  "name": "d",
-        |  "source": {"type": "file", "path": "/tmp/imgs"},
-        |  "transform": {
-        |    "image_dedup": {"id_field": "i", "payload_field": "p"},
-        |    "image_semantic_dedup": {"id_field": "i", "payload_field": "p"}
-        |  }
-        |}]}""".stripMargin).pipelines.head.transform
-    assert(dflt.imageDedup.exists(_.maxHamming == 3))
-    assert(dflt.imageSemanticDedup.exists(i =>
-      i.threshold == 0.99 && i.grid == 4))
+  /** A file-source pipeline with `keys` at `path` ("extract",
+    * "transform.near_dedup", ...), as TOML text and as JSON text. */
+  private def bothFrontEndTexts(path: String, keys: Map[String, Any]): (String, String) = {
+    def toml(v: Any): String = v match {
+      case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      case xs: Seq[_] => xs.map(toml).mkString("[", ", ", "]")
+      case m: Map[_, _] => m.map { case (k, x) => s"$k = ${toml(x)}" }.mkString("{ ", ", ", " }")
+      case other => other.toString
+    }
+    val tomlText = (Seq("[[pipelines]]", "name = \"p\"", "[pipelines.source]",
+      "type = \"file\"", "path = \"/tmp/docs\"", s"[pipelines.$path]") ++
+      keys.map { case (k, v) => s"$k = ${toml(v)}" }).mkString("", "\n", "\n")
+    val nested = path.split('.').foldRight(keys: Any)((seg, inner) => Map(seg -> inner))
+    val jsonText = graft.util.Json.render(Map("pipelines" -> Seq(
+      Map("name" -> "p", "source" -> Map("type" -> "file", "path" -> "/tmp/docs")) ++
+        nested.asInstanceOf[Map[String, Any]])))
+    (tomlText, jsonText)
+  }
+
+  /** That pipeline decoded through the TOML and the JSON front-end. */
+  private def bothFrontEnds(path: String, keys: Map[String, Any]): (PipelineDef, PipelineDef) = {
+    val (toml, json) = bothFrontEndTexts(path, keys)
+    (TomlConfig.loadSequence(toml, env = Map.empty).pipelines.head,
+      JsonConfig.loadSequence(json, env = Map.empty).pipelines.head)
+  }
+
+  test("every shared config table decodes the same through the TOML and " +
+    "JSON front-ends; omitted stage keys take the Model defaults") {
+    val idText = Map("id_field" -> "doc_id", "text_field" -> "text")
+    val idPayload = Map("id_field" -> "doc_id", "payload_field" -> "img")
+    // every key set to a non-default value
+    val full: Seq[(String, Map[String, Any])] = Seq(
+      "extract" -> Map("field_mapping" -> Map("id" -> "doc_id"),
+        "max_records" -> 9, "concurrent_requests" -> 2,
+        "first_record_only" -> true, "filters" -> Map("lang" -> "en"),
+        "data_processing" -> Map("deduplicate" -> true,
+          "deduplicate_fields" -> Seq("doc_id"), "sort_by" -> "doc_id",
+          "sort_order" -> "desc", "sort_as_string" -> true),
+        "error_handling" -> Map("on_api_failure" -> "fail"),
+        "sample_data" -> Seq(Map("id" -> 1), "{\"id\": 2}")),
+      "conditions" -> Map("enabled" -> false, "when_previous_succeeded" -> true,
+        "when_records_count" -> Map("min" -> 1, "max" -> 9, "from_pipeline" -> "a"),
+        "when_shared_data" -> Map("mode" -> "on"), "skip_if_empty" -> true),
+      "transform" -> Map("field_mapping" -> Map("t" -> "$.a.b"),
+        "record_index_order_by" -> Seq("doc_id"),
+        "data_enrichment" -> Map("lookup_data" -> Map("src" -> "dst")),
+        "merge_with_previous" -> true, "merge_key" -> "doc_id",
+        "add_processed_flags" -> false),
+      "transform.lookup" -> Map("path" -> "/tmp/lk", "format" -> "parquet",
+        "key" -> "doc_id", "options" -> Map("mergeSchema" -> "true")),
+      "transform.intermediate" -> Map("conditions" -> Map("status" -> "ok"),
+        "min_conditions" -> Map("v" -> 20), "shared_key" -> "auth"),
+      "transform.validation" -> Map("required_fields" -> Seq("doc_id"),
+        "min_records" -> 1, "max_records" -> 50),
+      "transform.near_dedup" -> (idText + ("shingle_size" -> 3)),
+      "transform.winnow_dedup" -> (idText ++ Map("k" -> 5, "w" -> 3,
+        "max_docs_per_fp" -> 40, "min_shared" -> 3, "min_overlap" -> 0.25)),
+      "transform.payload_dedup" -> (idPayload + ("max_hamming" -> 2)),
+      "transform.payload_dedup_registry" -> (idPayload ++ Map(
+        "history_path" -> "/tmp/h", "history_format" -> "csv",
+        "history_id_field" -> "hid", "history_payload_field" -> "hp",
+        "max_hamming" -> 1)),
+      "transform.crossmodal_dedup" -> (idText ++ Map("payload_field" -> "img",
+        "max_hamming" -> 2)),
+      "transform.image_dedup" -> (idPayload + ("max_hamming" -> 1)),
+      "transform.image_semantic_dedup" -> (idPayload ++ Map("threshold" -> 0.95,
+        "grid" -> 6)),
+      "transform.decontaminate" -> (idText ++ Map("bench_path" -> "/tmp/b",
+        "bench_format" -> "csv", "bench_id_field" -> "bid",
+        "bench_text_field" -> "bt", "n" -> 4, "min_overlap_ngrams" -> 6,
+        "k" -> 7, "w" -> 3, "min_containment" -> 0.4)),
+      "transform.strip_dup_spans" -> (idText ++ Map("k" -> 6, "w" -> 2,
+        "max_docs_per_fp" -> 20, "gap" -> 16, "min_fps" -> 3)),
+      "transform.near_dedup_registry" -> (idText ++ Map("history_path" -> "/tmp/nh",
+        "history_format" -> "csv", "history_id_field" -> "hid",
+        "history_text_field" -> "ht", "shingle_size" -> 3, "min_jaccard" -> 0.7)),
+      "transform.lang_filter" -> Map("field" -> "text", "allowed" -> Seq("en", "de")),
+      "transform.quality_filter" -> Map("field" -> "text", "min" -> 0.4),
+      "transform.classifier_filter" -> (idText ++ Map("weights_path" -> "/tmp/w",
+        "weights_format" -> "csv", "n_buckets" -> 256, "scale" -> 100,
+        "bias" -> -1.5, "min" -> 0.6)),
+      "transform.classifier_train" -> (idText ++ Map("pos_source" -> "good",
+        "neg_source" -> "bad", "src_field" -> "src", "n_buckets" -> 128,
+        "iters" -> 2, "lr_den" -> 64, "min" -> 0.7)),
+      "transform.lm_filter" -> (idText ++ Map("src_field" -> "source",
+        "train_source" -> "wiki", "thresh_bits" -> 6)),
+      "transform.gopher_filter" -> (idText ++ Map("min_words" -> 40,
+        "max_words" -> 5000, "min_mean_word_len" -> 2.5,
+        "max_mean_word_len" -> 9, "max_symbol_ratio" -> 0.2,
+        "max_bullet_frac" -> 0.8, "max_ellipsis_frac" -> 0.2,
+        "min_alpha_frac" -> 0.7, "min_stopwords" -> 1)),
+      "transform.c4_clean" -> (idText ++ Map("window" -> 8, "min_seg_words" -> 4,
+        "min_segs" -> 2, "blacklist" -> Seq("lorem"))),
+      "transform.dsir_select" -> (idText ++ Map("target_path" -> "/tmp/t",
+        "target_format" -> "csv", "target_text_field" -> "tt",
+        "n_buckets" -> 512, "k" -> 50)),
+      "transform.repetition_filter" -> (idText ++ Map("top_2" -> 0.25,
+        "top_4" -> 0.1, "dup_5" -> 0.2, "dup_10" -> 0.05)),
+      "transform.sample" -> Map("id_field" -> "doc_id", "strata_field" -> "lang",
+        "rates" -> Map("en" -> 0.5, "de" -> 1), "default_rate" -> 0.1),
+      "transform.epoch_pack" -> (idText ++ Map("budget" -> 128, "n_shards" -> 2,
+        "salt" -> "s", "mix_field" -> "lang", "mix_budget_tokens" -> 3000,
+        "temperature" -> 1.5, "merges_path" -> "/tmp/m", "merges_format" -> "csv",
+        "train_merges" -> 4, "layout" -> "curriculum", "diff_field" -> "q")))
+    assert(full.count(_._1.startsWith("transform.")) === 24, "21 stages + 3 tables")
+    def decode(path: String, keys: Map[String, Any]): Option[PipelineDef] = {
+      val (toml, json) = bothFrontEndTexts(path, keys)
+      val t = scala.util.Try(TomlConfig.loadSequence(toml, env = Map.empty)).toOption
+      val j = scala.util.Try(JsonConfig.loadSequence(json, env = Map.empty)).toOption
+      assert(t === j, s"$path: TOML and JSON decode differently")
+      t.map(_.pipelines.head)
+    }
+    full.foreach { case (path, keys) =>
+      val both = decode(path, keys)
+      assert(both.nonEmpty, s"$path failed to decode")
+      // every key reaches the model: dropping any one changes the result
+      keys.keys.foreach { k =>
+        assert(decode(path, keys - k) != both, s"$path.$k has no effect")
+      }
+    }
+    // a stage with only its required keys is the Model constructor called
+    // with only those keys
+    val minimal: Seq[(String, Map[String, Any], TransformDef)] = Seq(
+      ("near_dedup", idText, TransformDef(nearDedup = Some(NearDedupDef("doc_id", "text")))),
+      ("winnow_dedup", idText, TransformDef(winnowDedup = Some(WinnowDedupDef("doc_id", "text")))),
+      ("payload_dedup", idPayload,
+        TransformDef(payloadDedup = Some(PayloadDedupDef("doc_id", "img")))),
+      ("payload_dedup_registry", idPayload + ("history_path" -> "/h"),
+        TransformDef(payloadDedupRegistry = Some(PayloadDedupRegistryDef("doc_id", "img", "/h",
+          historyIdField = "doc_id", historyPayloadField = "img")))),
+      ("crossmodal_dedup", idText + ("payload_field" -> "img"),
+        TransformDef(crossModalDedup = Some(CrossModalDedupDef("doc_id", "text", "img")))),
+      ("image_dedup", idPayload, TransformDef(imageDedup = Some(ImageDedupDef("doc_id", "img")))),
+      ("image_semantic_dedup", idPayload,
+        TransformDef(imageSemanticDedup = Some(ImageSemanticDedupDef("doc_id", "img")))),
+      ("decontaminate", idText ++ Map("bench_path" -> "/b", "bench_id_field" -> "bid",
+        "bench_text_field" -> "bt"),
+        TransformDef(decontaminate = Some(DecontaminateDef("doc_id", "text", "/b",
+          benchIdField = "bid", benchTextField = "bt")))),
+      ("strip_dup_spans", idText,
+        TransformDef(stripDupSpans = Some(StripDupSpansDef("doc_id", "text")))),
+      ("near_dedup_registry", idText + ("history_path" -> "/h"),
+        TransformDef(nearDedupRegistry = Some(NearDedupRegistryDef("doc_id", "text", "/h",
+          historyIdField = "doc_id", historyTextField = "text")))),
+      ("lang_filter", Map("field" -> "text"),
+        TransformDef(langFilter = Some(LangFilterDef("text")))),
+      ("quality_filter", Map("field" -> "text"),
+        TransformDef(qualityFilter = Some(QualityFilterDef("text")))),
+      ("classifier_filter", idText + ("weights_path" -> "/w"),
+        TransformDef(classifierFilter = Some(ClassifierFilterDef("doc_id", "text", "/w")))),
+      ("classifier_train", idText ++ Map("pos_source" -> "good", "neg_source" -> "bad"),
+        TransformDef(classifierTrain = Some(ClassifierTrainDef("doc_id", "text", "good", "bad")))),
+      ("lm_filter", idText ++ Map("src_field" -> "src", "train_source" -> "wiki"),
+        TransformDef(lmFilter = Some(LmFilterDef("doc_id", "text", "src", "wiki")))),
+      ("gopher_filter", idText, TransformDef(gopherFilter = Some(GopherFilterDef("doc_id", "text")))),
+      ("c4_clean", idText, TransformDef(c4Clean = Some(C4CleanDef("doc_id", "text")))),
+      ("dsir_select", idText + ("target_path" -> "/t"),
+        TransformDef(dsirSelect = Some(DsirSelectDef("doc_id", "text", "/t")))),
+      ("repetition_filter", idText,
+        TransformDef(repetitionFilter = Some(RepetitionFilterDef("doc_id", "text")))),
+      ("sample", Map("id_field" -> "doc_id", "strata_field" -> "lang"),
+        TransformDef(sample = Some(SampleDef("doc_id", "lang")))),
+      ("epoch_pack", idText, TransformDef(epochPack = Some(EpochPackDef("doc_id", "text")))))
+    assert(minimal.map(_._1).toSet === full.map(_._1).collect {
+      case p if p.startsWith("transform.") => p.stripPrefix("transform.")
+    }.toSet -- Set("lookup", "intermediate", "validation"))
+    minimal.foreach { case (stage, keys, expected) =>
+      val (t, j) = bothFrontEnds(s"transform.$stage", keys)
+      assert(t.transform === expected, s"$stage (TOML)")
+      assert(j.transform === expected, s"$stage (JSON)")
+    }
   }
 
   test("a non-integral TOML float in an integer slot fails loud instead " +
@@ -833,6 +971,40 @@ class TomlSpec extends AnyFunSuite {
         |k = 8.9
         |""".stripMargin, env = Map.empty))
     assert(e.getMessage.contains("expected an integer"), e.getMessage)
+    // the same slot through the JSON front-end, and an integer outside
+    // Int range through both: each fails loud instead of truncating or
+    // wrapping
+    val rejects = Seq(
+      "transform.winnow_dedup" -> Map("id_field" -> "doc_id",
+        "text_field" -> "text", "k" -> 8.9),
+      "transform.classifier_filter" -> Map("id_field" -> "doc_id",
+        "text_field" -> "text", "weights_path" -> "/w",
+        "n_buckets" -> 5000000000L))
+    rejects.foreach { case (path, keys) =>
+      val (toml, json) = bothFrontEndTexts(path, keys)
+      Seq("TOML" -> (() => TomlConfig.loadSequence(toml, env = Map.empty)),
+        "JSON" -> (() => JsonConfig.loadSequence(json, env = Map.empty))).foreach {
+        case (frontEnd, load) =>
+          val e = intercept[RuntimeException](load())
+          assert(e.getMessage.contains("expected an integer"),
+            s"$frontEnd $path: ${e.getMessage}")
+      }
+    }
+  }
+
+  test("TOML sample_data given as inline tables decodes to JSON records") {
+    val seq = TomlConfig.loadSequence(
+      """[[pipelines]]
+        |name = "p"
+        |[pipelines.source]
+        |type = "api"
+        |endpoint = "http://h/x"
+        |[pipelines.extract]
+        |sample_data = [{id = 1, name = "a"}, '{"id": 2, "name": "b"}']
+        |""".stripMargin, env = Map.empty)
+    val records = seq.pipelines.head.extract.sampleData
+      .map(graft.util.Json.objectToMap)
+    assert(records === Seq(Map("id" -> 1L, "name" -> "a"), Map("id" -> 2L, "name" -> "b")))
   }
 
   test("a DECLARED but empty curation table errors on its missing " +
