@@ -162,7 +162,7 @@ object BpeTokens {
     }
 
   /** One merge table + a PER-THREAD bounded LRU memo of word →
-    * segmentation (r18, CurriculumStageProbe-named fix): the merge
+    * segmentation (r18, a `curriculum_stages` probe fix): the merge
     * loop is O(len²) hash probes with a string allocation per probe,
     * and corpora repeat words with Zipf mass — a memo hit skips the
     * loop entirely while returning the IDENTICAL (immutable, shared)

@@ -326,7 +326,7 @@ object ImageOps {
     * (probes timing it twice, interactive use) accumulate one pinned
     * narrow frame per call — grid²·3 floats per image; callers that
     * care should time/consume promptly or run inside a bounded
-    * session, as tools/MultimodalScaleProbe does.
+    * session, as the `multimodal_scale` probe does.
     *
     * `kCells`/`iters`/`nprobe` are the standard IVF knobs (see
     * annTopKIvf); recall at 100 TB is tuned with nprobe, cost with

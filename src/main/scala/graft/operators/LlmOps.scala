@@ -1529,8 +1529,8 @@ object LlmOps {
     * (any LSH is); pass `planes` explicitly for the pinned
     * single-table form.
     *
-    * MEASURED (r15 probe, `tools/EmbedBandsProbe`,
-    * `bench_r15_embed_bands.json`): the default bands = 4 is justified
+    * MEASURED (r15 probe, `bench_r15_embed_bands.json`): the default
+    * bands = 4 is justified
     * by the recall axis, not guesswork — at sf1 (20k vecs, w = 14)
     * the verified-pair counts are 62,581 / 117,414 / 208,184 for
     * bands 1 / 2 / 4, and at sf10 (200k vecs) 3.81M / 7.07M / 17.2M:
@@ -1892,7 +1892,7 @@ object LlmOps {
     * size-in-bytes stats estimation overflowed BigInteger at planning
     * time around round 40 — i.e. on that graph something accumulates
     * across rounds that the per-round localCheckpoint should be
-    * truncating. Until that growth is understood (CcIterProbe is the
+    * truncating. Until that growth is understood (probe `cc_iter` is the
     * tool), the cap stays at 25: a clean, early, attributable failure
     * beats a 40-round death march into a planner crash. Every
     * oracle-scale graph converges in ≤ 16 rounds. */

@@ -532,7 +532,7 @@ object TextOps {
           bpeTokenCountCol(col(textCol), merges).as("__n"))
         .join(ord, Seq(idCol)))
       .select(col("shard"), col(idCol), col("__off"))
-    // r18 (CurriculumStageProbe-named fix): attach the offsets at DOC
+    // r18 (a `curriculum_stages` probe fix): attach the offsets at DOC
     // granularity BEFORE the encode, so the join is doc-sized and the
     // encode's token rows flow straight into the cut arithmetic — the
     // old shape joined the ENCODE OUTPUT to the offsets, a corpus-
@@ -657,7 +657,7 @@ object TextOps {
     * Σ_t df(t)² over surviving terms only. Corpus size N stays in-plan
     * (1-row agg, broadcast) — no driver action.
     *
-    * MEASURED (r8 sf10 probe, `tools/TfidfScaleProbe`): the cap is a
+    * MEASURED (r8 sf10 probe, `bench_r8_tfidf_band_probe.json`): the cap is a
     * noise valve, not a speed dial. On decorrelated natural text no
     * term approaches any sane cap (max df 999 of 500k docs) and the
     * cap moves nothing; against injected boilerplate (terms whose df
@@ -1784,7 +1784,7 @@ object TextOps {
     * distinct-gram count (uni+bi+tri rows, 4 longs each), NOT the
     * corpus; long-lived sessions that call this repeatedly accumulate
     * one pinned table-triple per call and should consume promptly or
-    * run inside a bounded session (as tools/LmGateStageProbe does). At
+    * run inside a bounded session (as the `lm_gate_stages` probe does). At
     * a Wikipedia-scale reference the triple is executor-storage
     * pressure worth releasing between calls.
     *  - The SCORE side was the dominant cost as interpreted work, not

@@ -441,7 +441,8 @@ object Streams {
     // PIN the cleaned text before the gates: gopherKeep references
     // text_clean ~10 times and predicate pushdown substitutes the full
     // C4 reassembly into every reference (measured: 21 copies in the
-    // optimized plan, 9.4 s vs 0.7 s at sf0.1 — tools/CurationPlanProbe).
+    // optimized plan, 9.4 s vs 0.7 s at sf0.1 — SURVEY.md,
+    // the `ext_stream_curation` shaping variants).
     // Batch pins with the curation2 localCheckpoint discipline; a
     // stream can't checkpoint, so it pins with a typed map(identity)
     // round-trip — an opaque-lambda barrier the optimizer cannot push

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /** Deterministic scale-up of the harness testdata (TESTDATA.md schemas)
   * for scale-proof benchmarking: `sfN × factor` rows with the SAME
   * per-replica statistical structure, so a plan that is linear in rows
@@ -176,7 +178,7 @@ object ScaleData {
           new com.fasterxml.jackson.databind.ObjectMapper().readTree(raw)
           raw
         } catch {
-          case _: Throwable =>
+          case NonFatal(_) =>
             "\"" + raw.replace("\\", "\\\\").replace("\"", "\\\"")
               .replace("\n", "\\n").replace("\r", "\\r")
               .replace("\t", "\\t") + "\""
@@ -209,7 +211,7 @@ object ScaleData {
         s""""prior_stamp":$prior,"parent":$parent}"""
       java.nio.file.Files.write(outStampPath,
         (stamp + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[scaledata] could not stamp provenance: $e") }
     println(s"[scaledata] wrote $outDir at factor $factor from $srcDir")
   }

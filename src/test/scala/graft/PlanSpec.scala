@@ -573,7 +573,7 @@ class PlanSpec extends AnyFunSuite {
     "inlined per gate reference") {
     import org.apache.spark.sql.functions._
     // the unpinned composition measured 21 reassembly copies and 13x
-    // the runtime (tools/CurationPlanProbe) — predicate pushdown
+    // the runtime (SURVEY.md, ext_stream_curation) — predicate pushdown
     // substitutes text_clean's definition into every reference of the
     // ~10-term Gopher predicate; this locks the pin for BOTH branches
     val docs = spark.read.parquet(
