@@ -51,8 +51,18 @@ final class RunContext(val executionId: String) {
     * least one pipeline set `load.append_to_sequence` and the combined
     * write succeeded (see Orchestrator.writeCombined). */
   var combinedOutput: Option[String] = None
-  /** Frames cached for cross-pipeline reuse; released at sequence end. */
+  /** Frames cached for cross-pipeline reuse, and stage inputs cached
+    * because the stage reads them more than once (`epoch_pack`); all
+    * released together at sequence end. */
   val persisted: mutable.ListBuffer[DataFrame] = mutable.ListBuffer.empty
+  /** Caches `df` lazily (MEMORY_AND_DISK) and registers it in
+    * [[persisted]]. A cache, not a checkpoint: callers may read a
+    * result frame after [[unpersistAll]], which then recomputes. */
+  def cache(df: DataFrame): DataFrame = {
+    val c = df.persist(StorageLevel.MEMORY_AND_DISK)
+    persisted += c
+    c
+  }
   def unpersistAll(): Unit = { persisted.foreach(_.unpersist(false)); persisted.clear() }
 
   def succeeded: Seq[PipelineOutcome] = results.values.filter(_.status == "succeeded").toSeq
@@ -356,12 +366,7 @@ object Orchestrator {
       try transform(spark, p, ctx, extracted)
       catch { case scala.util.control.NonFatal(e) =>
         throw PhaseFailed("transform", e, None) })
-    val main =
-      if (persist) {
-        val c = main0.persist(StorageLevel.MEMORY_AND_DISK)
-        ctx.persisted += c
-        c
-      } else main0
+    val main = if (persist) ctx.cache(main0) else main0
     // transform.validation (declared-but-dead in the reference,
     // implemented honestly): schema check is free; min/max force ONE
     // count — after persist, so the materialization is reused by the
@@ -628,13 +633,15 @@ object Orchestrator {
       df = df.join(keep, Seq(lf.idField), "left_semi")
     }
     t.gopherFilter.foreach { gf =>
-      val keep = graft.operators.TextOps.gopherRules(
-        df, gf.idField, gf.textField,
-        gf.minWords, gf.maxWords, gf.minMeanWordLen, gf.maxMeanWordLen,
-        gf.maxSymbolRatio, gf.maxBulletFrac, gf.maxEllipsisFrac,
-        gf.minAlphaFrac, gf.minStopwords)
-        .filter(col("keep")).select(col(gf.idField))
-      df = df.join(keep, Seq(gf.idField), "left_semi")
+      // a per-row gate is a filter, so the upstream is read once; a row
+      // without an id never passes a gate. bindOnce: gopherKeep names the
+      // text ~10 times, and pushdown would copy an upstream rewrite into each
+      df = df.filter(col(gf.idField).isNotNull &&
+        graft.operators.TextOps.bindOnce(col(gf.textField))(text =>
+          graft.operators.TextOps.gopherKeep(text,
+            gf.minWords, gf.maxWords, gf.minMeanWordLen, gf.maxMeanWordLen,
+            gf.maxSymbolRatio, gf.maxBulletFrac, gf.maxEllipsisFrac,
+            gf.minAlphaFrac, gf.minStopwords)))
     }
     t.c4Clean.foreach { cc =>
       val cleaned = graft.operators.TextOps.c4Clean(
@@ -658,16 +665,18 @@ object Orchestrator {
       df = df.join(top, Seq(ds.idField))
     }
     t.repetitionFilter.foreach { rf =>
-      val keep = graft.operators.TextOps.gopherRepetition(
-        df, rf.idField, rf.textField, rf.topThresholds, rf.dupThresholds)
-        .filter(col("keep")).select(col(rf.idField))
-      df = df.join(keep, Seq(rf.idField), "left_semi")
+      df = df.filter(col(rf.idField).isNotNull &&
+        graft.operators.TextOps.gopherRepetitionKeep(col(rf.textField),
+          rf.topThresholds, rf.dupThresholds))
     }
     t.sample.foreach { sd =>
       df = graft.operators.TextOps.stratifiedSample(
         df, sd.idField, col(sd.strataField), sd.rates, sd.defaultRate)
     }
     t.epochPack.foreach { ep =>
+      // training, layout, vocabulary, prefix sum and the sink each read
+      // the gated frame: cache it once instead of recomputing it per action
+      df = ctx.cache(df)
       // merge table: in-engine training > persisted artifact > built-in.
       // The artifact collect is merge-table-sized (the tokenizer build
       // step persists rank-ordered (rank, x, y) rows — tens of k), the

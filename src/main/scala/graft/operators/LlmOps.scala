@@ -97,11 +97,6 @@ object LlmOps {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** n-word shingles of a text column (convenience; for hot paths use
-    * shinglesOf over a projected words array). */
-  def wordShingles(textCol: Column, n: Int): Column =
-    shinglesOf(words(textCol), n)
-
   /** [[strHash]] of every n-word shingle of a words array, as ONE
     * native rolling pass per row ([[graft.functions.GramHashes]]) —
     * the hash multiset `transform(shinglesOf(ws, n), strHash)` would
@@ -934,15 +929,6 @@ object LlmOps {
       (acc, i) => acc +
         element_at(x, (j * sub + i + 1).cast("int")) *
         element_at(y, (j * sub + i + 1).cast("int")))
-
-  /** Subspace-j squared L2 distance, sequential over the slice. */
-  private def pqSubL2(x: Column, y: Column, j: Column, sub: Int): Column =
-    aggregate(sequence(lit(0), lit(sub - 1)), lit(0.0),
-      (acc, i) => {
-        val d = element_at(x, (j * sub + i + 1).cast("int")) -
-          element_at(y, (j * sub + i + 1).cast("int"))
-        acc + d * d
-      })
 
   /** The shared nonzero-vector base frame: (vid, e, nrm). */
   private def pqBase(vecs: DataFrame, idCol: String, vecCol: String) =

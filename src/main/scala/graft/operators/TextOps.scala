@@ -1075,7 +1075,11 @@ object TextOps {
     * predicate Column — for callers that only gate (a plain `filter`,
     * ONE evaluation of the input) and don't need the report frame: a
     * `join(gopherRules(df).filter(keep))` evaluates the upstream plan
-    * twice, a `df.filter(gopherKeep(col))` once. NULL text → false. */
+    * twice, a `df.filter(gopherKeep(col))` once. NULL text → false.
+    * Callers: the `gopher_filter` stage of
+    * [[graft.engine.Orchestrator.transform]] (under [[bindOnce]], since
+    * the text is referenced ~10 times here),
+    * [[graft.streaming.Streams.curationIngest]] and the text queries. */
   def gopherKeep(
       text: Column,
       minWords: Long = 50, maxWords: Long = 100000,
@@ -2604,20 +2608,13 @@ object TextOps {
       dupThresholds: Map[Int, Double] =
         Map(5 -> 0.15, 6 -> 0.14, 7 -> 0.13, 8 -> 0.12,
             9 -> 0.11, 10 -> 0.10)): DataFrame = {
-    val ns = (topThresholds.keySet ++ dupThresholds.keySet).toSeq.sorted
-    require(ns.nonEmpty && ns.min >= 2,
-      s"n-gram sizes must be >= 2: $ns")
     val topNs = topThresholds.keys.toSeq.sorted
     val dupNs = dupThresholds.keys.toSeq.sorted
-    val covCol = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.GopherRepCoverage(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(
-          LlmOps.words(col(textCol))), topNs, dupNs))
     // NULL text → NULL struct → coalesce to 0, the exact rendering the
     // old left-join + na.fill(0) path produced for docs with no grams
     val perDoc = df.select(col(idCol),
         length(col(textCol)).cast("long").as("__chars"),
-        covCol.as("__cov"))
+        repetitionCoverage(col(textCol), topNs, dupNs).as("__cov"))
       .select(Seq(col(idCol), col("__chars")) ++
         topNs.map(n =>
           coalesce(col(s"__cov.top_$n"), lit(0L)).as(s"__top_$n")) ++
@@ -2626,12 +2623,8 @@ object TextOps {
     // fractions + flags on unrounded values
     val chars = col("__chars").cast("double")
     val fracs =
-      topThresholds.keys.toSeq.sorted.map(n =>
-        (s"top_${n}gram_frac", s"__top_$n", topThresholds(n))) ++
-        dupThresholds.keys.toSeq.sorted.map(n =>
-          (s"dup_${n}gram_frac", s"__dup_$n", dupThresholds(n)))
-    val keep = fracs.map { case (_, c, th) => col(c) / chars <= th }
-      .reduce(_ && _)
+      topNs.map(n => (s"top_${n}gram_frac", s"__top_$n")) ++
+        dupNs.map(n => (s"dup_${n}gram_frac", s"__dup_$n"))
     // Rendered fraction: integer-exact HALF-UP rounding at 6 digits,
     // floor((2e6·cov + chars)/(2·chars)) / 1e6 in BIGINT — NOT
     // round(double, 6). The double form hit a real tie at sf1
@@ -2653,9 +2646,70 @@ object TextOps {
     // left-join + scoped na.fill rendered it.
     perDoc
       .select(col(idCol) +:
-        fracs.map { case (name, c, _) => renderedFrac(c).as(name) } :+
-        coalesce(keep, lit(false)).as("keep"): _*)
+        fracs.map { case (name, c) => renderedFrac(c).as(name) } :+
+        repetitionKeep(chars, f => col(s"__$f"), topThresholds,
+          dupThresholds).as("keep"): _*)
   }
+
+  /** The [[gopherRepetition]] `keep` flag as a standalone per-row
+    * predicate Column, for callers that only gate: a
+    * `df.filter(gopherRepetitionKeep(col))` evaluates its input once,
+    * where a join back to the report frame evaluates it twice. The
+    * text is bound once (see [[bindOnce]]), and so is the coverage
+    * kernel, so predicate pushdown copies neither an upstream text
+    * rewrite nor the kernel. NULL text → false, as in the report. */
+  def gopherRepetitionKeep(
+      text: Column,
+      topThresholds: Map[Int, Double] =
+        Map(2 -> 0.20, 3 -> 0.18, 4 -> 0.16),
+      dupThresholds: Map[Int, Double] =
+        Map(5 -> 0.15, 6 -> 0.14, 7 -> 0.13, 8 -> 0.12,
+            9 -> 0.11, 10 -> 0.10)): Column = {
+    val topNs = topThresholds.keys.toSeq.sorted
+    val dupNs = dupThresholds.keys.toSeq.sorted
+    bindOnce(text)(t =>
+      bindOnce(repetitionCoverage(t, topNs, dupNs))(cov =>
+        repetitionKeep(length(t).cast("double"),
+          f => coalesce(cov.getField(f), lit(0L)),
+          topThresholds, dupThresholds)))
+  }
+
+  /** The [[graft.functions.GopherRepCoverage]] kernel over a text's
+    * words: struct(top_<n>.., dup_<n>..), NULL for NULL text. */
+  private def repetitionCoverage(
+      text: Column, topNs: Seq[Int], dupNs: Seq[Int]): Column = {
+    val ns = (topNs ++ dupNs).sorted
+    require(ns.nonEmpty && ns.min >= 2,
+      s"n-gram sizes must be >= 2: $ns")
+    org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      graft.functions.GopherRepCoverage(
+        org.apache.spark.sql.graftbridge.ColumnBridge.expression(
+          LlmOps.words(text)), topNs, dupNs))
+  }
+
+  /** The repetition threshold conjunction shared by [[gopherRepetition]]
+    * and [[gopherRepetitionKeep]]: every coverage `coverage("top_<n>")`
+    * / `coverage("dup_<n>")` over `chars` at or under its threshold,
+    * compared unrounded. A NULL fraction (NULL text) → false. */
+  private def repetitionKeep(
+      chars: Column, coverage: String => Column,
+      topThresholds: Map[Int, Double],
+      dupThresholds: Map[Int, Double]): Column = {
+    val rules =
+      topThresholds.toSeq.sorted.map { case (n, th) => (s"top_$n", th) } ++
+        dupThresholds.toSeq.sorted.map { case (n, th) => (s"dup_$n", th) }
+    coalesce(rules.map { case (f, th) => coverage(f) / chars <= th }
+      .reduce(_ && _), lit(false))
+  }
+
+  /** `f(c)` with `c` evaluated once per row:
+    * `element_at(transform(array(c), f), 1)`. Inside `f`, `c` is a
+    * lambda variable, so a predicate built this way names `c` once.
+    * Pushed below a projection, it copies that projection's expression
+    * for `c` once, not once per reference (the fan-out
+    * `Streams.curationIngest` pins against). */
+  def bindOnce(c: Column)(f: Column => Column): Column =
+    element_at(transform(array(c), f), 1)
 }
 
 /** Multimodal column plumbing: image/audio/video payloads as opaque

@@ -757,7 +757,9 @@ class OrchestratorSpec extends AnyFunSuite {
     val good = (Seq("the", "report", "that", "we", "have", "shared",
       "with") ++ (1 to 53).map(i => s"word${i % 7}x")).mkString(" ")
     val tooShort = "the short one that we have with"
-    Seq((1L, good), (2L, tooShort)).toDF("doc_id", "text")
+    // a null id and a null text drop, as the old id semi-join dropped them
+    Seq((Some(1L), Some(good)), (Some(2L), Some(tooShort)),
+      (None, Some(good)), (Some(4L), None)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/docs")
     val seq = SequenceDef("s", Seq("g"), Seq(
       PipelineDef("g", FileSource(s"$dir/docs"),
@@ -767,7 +769,7 @@ class OrchestratorSpec extends AnyFunSuite {
     val ctx = Orchestrator.execute(spark, seq, unpersistOnEnd = false)
     val out = ctx.results("g").df.get.collect()
     assert(out.map(_.getAs[Long]("doc_id")).toSeq === Seq(1L))
-    // the filter is a semi-join: no report columns leak into the row
+    // the gate is a plain filter: no report columns leak into the row
     assert(!out.head.schema.fieldNames.contains("keep"))
   }
 
@@ -798,7 +800,9 @@ class OrchestratorSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_rep").toString
     val clean = (1 to 60).map(i => s"uniq${i}w").mkString(" ")
     val spammy = (1 to 30).map(_ => "spam").mkString(" ")
-    Seq((1L, clean), (2L, spammy)).toDF("doc_id", "text")
+    // a null id and a null text drop, as the old id semi-join dropped them
+    Seq((Some(1L), Some(clean)), (Some(2L), Some(spammy)),
+      (None, Some(clean)), (Some(4L), None)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/docs")
     val seq = SequenceDef("s", Seq("r"), Seq(
       PipelineDef("r", FileSource(s"$dir/docs"),
@@ -808,6 +812,84 @@ class OrchestratorSpec extends AnyFunSuite {
     val ctx = Orchestrator.execute(spark, seq, unpersistOnEnd = false)
     val out = ctx.results("r").df.get.collect()
     assert(out.map(_.getAs[Long]("doc_id")).toSeq === Seq(1L))
+  }
+
+  test("the curate chain evaluates its input once: gopher_filter, " +
+    "repetition_filter, epoch_pack and the sink read each row once") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, udf}
+    val dir = java.nio.file.Files.createTempDirectory("graft_once").toString
+    def good(i: Int) = "the report that we have shared with " +
+      (1 to 53).map(w => s"d${i}w$w").mkString(" ")
+    val texts = (0 until 12).map {
+      case i if i % 6 == 4 => (1 to 30).map(_ => "the spam and").mkString(" ")
+      case i if i % 6 == 5 => "the short one that we have with"
+      case i => good(i)
+    }
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, ((i * 7) % 5).toDouble, t) }
+      .toDF("doc_id", "difficulty", "raw")
+      .write.mode("overwrite").parquet(s"$dir/docs")
+    // Counts every evaluation of the input frame. Nondeterministic, so
+    // the optimizer keeps it in its projection and never copies it into
+    // a pushed-down predicate: the count is evaluations, not references.
+    val evals = spark.sparkContext.longAccumulator("curate_evals")
+    val tick = udf { (s: String) => evals.add(1L); s }.asNondeterministic()
+    val docs = spark.read.parquet(s"$dir/docs")
+    val input = docs.select(col("doc_id"), col("difficulty"),
+      tick(col("raw")).as("text"))
+    val p = PipelineDef("once", FileSource(s"$dir/docs"),
+      transform = TransformDef(addProcessedFlags = false,
+        gopherFilter = Some(GopherFilterDef("doc_id", "text")),
+        repetitionFilter = Some(RepetitionFilterDef("doc_id", "text")),
+        epochPack = Some(EpochPackDef(idField = "doc_id", textField = "text",
+          budget = 16L, nShards = 3, trainMerges = 4,
+          layout = "curriculum_range", diffField = Some("difficulty")))))
+    val ctx = new graft.engine.RunContext("once")
+    val (out, intermediate) = Orchestrator.transform(spark, p, ctx, input)
+    graft.sinks.Sinks.write(spark, out, intermediate,
+      LoadDef(s"$dir/out", formats = Seq("csv")), p.name, ctx.executionId)
+    ctx.unpersistAll()
+    assert(evals.value > 0L && evals.value <= texts.size.toLong,
+      s"${evals.value} evaluations of ${texts.size} input rows")
+    // and the gates kept exactly the good docs, packed as by hand
+    val kept = docs.filter(col("doc_id") % 6 < 4).withColumnRenamed("raw", "text")
+    val merges = graft.operators.TextOps.bpeTrainLocal(kept, "text", 4)
+    val order = graft.operators.TextOps.curriculumLayoutRange(
+      kept.select("doc_id", "difficulty"), "doc_id", "difficulty", 3)
+    val expect = graft.operators.TextOps.packTokenIdsBy(
+      kept, "doc_id", "text", 16L, order, merges)
+    val sunk = spark.read.option("header", "true")
+      .csv(s"$dir/out/once_output_csv")
+      .select(expect.schema.map(f => col(f.name).cast(f.dataType)): _*)
+    assert(sunk.collect().map(_.toSeq).toSet ===
+      expect.collect().map(_.toSeq).toSet)
+  }
+
+  test("per-row gates plan their kernels once: a pushed-down gate copies " +
+    "neither the coverage kernel nor an upstream text rewrite per reference") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_gplan").toString
+    Seq((1L, "alpha beta gamma delta"), (2L, "one two three four five"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/docs")
+    def optimizedPlan(t: TransformDef): String = {
+      val p = filePipeline("g", s"$dir/docs", t)
+      val ctx = new graft.engine.RunContext("plan")
+      Orchestrator.transform(spark, p, ctx, Orchestrator.extract(spark, p, ctx))
+        ._1.queryExecution.optimizedPlan.toString
+    }
+    def mentions(plan: String, name: String): Int =
+      s"\\Q$name\\E".r.findAllMatchIn(plan).size
+    val rep = Some(RepetitionFilterDef("doc_id", "text"))
+    val c4Rep = optimizedPlan(TransformDef(addProcessedFlags = false,
+      c4Clean = Some(C4CleanDef("doc_id", "text")), repetitionFilter = rep))
+    assert(mentions(c4Rep, "graft_gopher_rep_coverage") === 1, c4Rep)
+    // the semi-join gate named the kernel 9 times and the C4 kernel 21
+    assert(mentions(c4Rep, "graft_c4_clean") <= 21, c4Rep)
+    val cleanGates = optimizedPlan(TransformDef(addProcessedFlags = false,
+      cleanText = true, gopherFilter = Some(GopherFilterDef("doc_id", "text")),
+      repetitionFilter = rep))
+    // the semi-join gates named it 110 times
+    assert(mentions(cleanGates, "regexp_replace") <= 110, cleanGates)
   }
 
   test("dsir_select transform keeps the top-k docs by importance " +
