@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -41,7 +42,7 @@ object Verify {
       // order-independent by design.
       try fn(spark, sfDir).repartition(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         val msg = s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(2000)}"
         System.err.println(s"[verify] $name FAILED: $msg")
         errors(name) = msg

@@ -5,7 +5,6 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
-import org.apache.spark.storage.StorageLevel
 
 import graft.config._
 import graft.operators.Ops
@@ -55,15 +54,15 @@ final class RunContext(val executionId: String) {
     * because the stage reads them more than once (`epoch_pack`); all
     * released together at sequence end. */
   val persisted: mutable.ListBuffer[DataFrame] = mutable.ListBuffer.empty
-  /** Caches `df` lazily (MEMORY_AND_DISK) and registers it in
+  /** Caches `df` lazily ([[Pin.cache]]) and registers it in
     * [[persisted]]. A cache, not a checkpoint: callers may read a
     * result frame after [[unpersistAll]], which then recomputes. */
   def cache(df: DataFrame): DataFrame = {
-    val c = df.persist(StorageLevel.MEMORY_AND_DISK)
+    val c = Pin.cache(df)
     persisted += c
     c
   }
-  def unpersistAll(): Unit = { persisted.foreach(_.unpersist(false)); persisted.clear() }
+  def unpersistAll(): Unit = { persisted.foreach(Pin.release); persisted.clear() }
 
   def succeeded: Seq[PipelineOutcome] = results.values.filter(_.status == "succeeded").toSeq
   def latestDf: Option[DataFrame] = succeeded.reverse.flatMap(_.df).headOption
@@ -735,7 +734,7 @@ object Orchestrator {
         // so pin the frame first. localCheckpoint (not persist): cache
         // blocks can be evicted and silently recomputed; checkpoint
         // blocks cannot.
-        if (nondeterministicSource(p)) df = df.localCheckpoint(true)
+        if (nondeterministicSource(p)) df = Pin.checkpoint(df, eager = true)
         // order key: explicit config wins; the first-column fallback is
         // only deterministic when that column is unique (documented).
         val orderCols =

@@ -1,8 +1,12 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.engine.Pin
 
 /** REAL image decode / resize / perceptual hash over opaque BinaryType
   * payload columns, built ONLY on the JDK's public imaging stack
@@ -102,7 +106,7 @@ object ImageOps {
     try {
       javax.imageio.ImageIO.setUseCache(false)
       Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Decode metadata + perceptual features in ONE pass: (id, ok, width,
     * height, mean_luma — BT.601 ×1000 as an exact integer —, ahash60).
@@ -317,16 +321,8 @@ object ImageOps {
     * would re-decode every image — the decode pass must run exactly
     * once (the frame is narrow: grid²·3 floats per image). Undecodable
     * payloads can't embed and so neither probe nor match — consistent
-    * with the dedup family's "no perceptual information" rule.
-    *
-    * The pin is RETAINED for the session (r18 advice item, documented
-    * contract): localCheckpoint blocks are released only by session GC
-    * or unpersist, and this helper cannot know when its caller's last
-    * action ran. Long-lived sessions that call imageAnnTopK repeatedly
-    * (probes timing it twice, interactive use) accumulate one pinned
-    * narrow frame per call — grid²·3 floats per image; callers that
-    * care should time/consume promptly or run inside a bounded
-    * session, as the `multimodal_scale` probe does.
+    * with the dedup family's "no perceptual information" rule. The pin
+    * backs the result for the session (see [[graft.engine.Pin]]).
     *
     * `kCells`/`iters`/`nprobe` are the standard IVF knobs (see
     * annTopKIvf); recall at 100 TB is tuned with nprobe, cost with
@@ -338,10 +334,9 @@ object ImageOps {
       probeFilter: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       topK: Int, grid: Int = 4, kCells: Int = 8, iters: Int = 0,
       nprobe: Int = 1): DataFrame = {
-    val embs = imageEmbedding(df, idCol, payloadCol, grid)
+    val embs = Pin.checkpoint(imageEmbedding(df, idCol, payloadCol, grid)
       .filter(col("ok"))
-      .select(col("id").as(idCol), col("embedding"))
-      .localCheckpoint(true) // one decode pass, lineage cut
+      .select(col("id").as(idCol), col("embedding")), eager = true)
     LlmOps.annTopKIvf(embs, idCol, "embedding", probeFilter, topK,
       kCells, iters, nprobe, dims = grid * grid * 3)
   }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Pin
+
 /** Text-analysis operators for training-data curation (brief: language
   * ID, quality scoring, token counting, fingerprinting). All are
   * per-row, shuffle-free, codegen-friendly column expressions — at
@@ -220,8 +222,8 @@ object TextOps {
     *     collect, the training loop's only driver traffic;
     *  3. apply the merge to every vocab word left-to-right
     *     non-overlapping (the native [[graft.functions.BpeApplyMerge]]
-    *     pass), localCheckpoint (constant-size lineage, superseded
-    *     blocks released — the kmeansCentroids discipline), repeat.
+    *     pass), checkpoint it ([[graft.engine.Pin.rounds]]: constant-size
+    *     lineage, superseded rounds released), repeat.
     *
     * Integer pair counts are order-free, so training is partition-
     * invariant and rerun-identical; the DuckDB oracle replays every
@@ -234,40 +236,30 @@ object TextOps {
     require(nMerges >= 1, s"nMerges must be positive: $nMerges")
     val wf = df.select(explode(LlmOps.words(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
-    var syms = wf.select(col("word"), col("freq"),
+    val words = Pin.checkpoint(wf.select(col("word"), col("freq"),
         when(col("word") === "", array().cast("array<string>"))
-          .otherwise(split(col("word"), "")).as("s"))
-      .localCheckpoint(true)
+          .otherwise(split(col("word"), "")).as("s")), eager = true)
     val learned = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    try {
-      var r = 0
-      var exhausted = false
-      while (r < nMerges && !exhausted) {
-        val top = syms.filter(size(col("s")) >= 2)
-          .select(col("freq"), explode(transform(
-            sequence(lit(0), size(col("s")) - 2),
-            i => struct(
-              element_at(col("s"), (i + 1).cast("int")).as("x"),
-              element_at(col("s"), (i + 2).cast("int")).as("y")))).as("p"))
-          .groupBy(col("p.x").as("x"), col("p.y").as("y"))
-          .agg(sum(col("freq")).as("cnt"))
-          .orderBy(col("cnt").desc, col("x"), col("y"))
-          .limit(1).collect()
-        if (top.isEmpty) exhausted = true
-        else {
-          val (a, b) = (top(0).getString(0), top(0).getString(1))
+    val out = Pin.rounds(words, nMerges) { syms =>
+      syms.filter(size(col("s")) >= 2)
+        .select(col("freq"), explode(transform(
+          sequence(lit(0), size(col("s")) - 2),
+          i => struct(
+            element_at(col("s"), (i + 1).cast("int")).as("x"),
+            element_at(col("s"), (i + 2).cast("int")).as("y")))).as("p"))
+        .groupBy(col("p.x").as("x"), col("p.y").as("y"))
+        .agg(sum(col("freq")).as("cnt"))
+        .orderBy(col("cnt").desc, col("x"), col("y"))
+        .limit(1).collect().headOption.map { top =>
+          val (a, b) = (top.getString(0), top.getString(1))
           learned += ((a, b))
-          val merged = org.apache.spark.sql.graftbridge.ColumnBridge.column(
+          syms.withColumn("s", org.apache.spark.sql.graftbridge.ColumnBridge.column(
             graft.functions.BpeApplyMerge(
               org.apache.spark.sql.graftbridge.ColumnBridge.expression(
-                col("s")), a, b))
-          val next = syms.withColumn("s", merged).localCheckpoint(true)
-          LlmOps.releaseCheckpoint(syms)
-          syms = next
+                col("s")), a, b)))
         }
-        r += 1
-      }
-    } finally LlmOps.releaseCheckpoint(syms)
+    }
+    Pin.release(out.frame)
     learned.toSeq
   }
 
@@ -561,18 +553,11 @@ object TextOps {
     * WITHIN each (partition, shard) slice via a partitioned window,
     * then add the slice's global offset from one bounded collect of
     * per-(partition, shard) totals (≤ partitions·shards tiny rows,
-    * broadcast back). Pinning, r15 form: the INPUT is persist()-pinned
-    * before the range exchange — repartitionByRange runs a boundary
-    * SAMPLING job over its child before the shuffle writes, so an
-    * unpinned upstream (the per-doc BPE token count here) evaluates
-    * TWICE; with the pin the sampling job materializes the cache and
-    * the shuffle write replays it, then the input is unpersisted as
-    * soon as the post-shuffle checkpoint holds the rows. The
-    * post-shuffle localCheckpoint is LAZY: the totals collect is the
-    * first action, so the SAME job that computes the totals
-    * materializes it (r14's eager form paid one extra full pass just
-    * to persist) — after it, the sampled partition assignment is
-    * frozen for the window pass. `shard` is normalized to long
+    * broadcast back). Pinned as in [[rankLayout]]: the input (the
+    * per-doc BPE token count here) is cached for the boundary sampling
+    * job and the shuffle write, and released once the LAZY post-shuffle
+    * checkpoint, materialized by the totals collect, freezes the sampled
+    * partition assignment for the window pass. `shard` is normalized to long
     * (callers may pass an IntegerType band) and a slice whose `__n`
     * is all-null sums to 0, not a driver NPE. Input (any id columns,
     * shard, __dpos, __n); output the same rows + `__off`. */
@@ -580,19 +565,17 @@ object TextOps {
     import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
     val parts = spark.sessionState.conf.numShufflePartitions
-    val pinned = docs.withColumn("shard", col("shard").cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ranged = pinned
+    val pinned = Pin.cache(docs.withColumn("shard", col("shard").cast("long")))
+    val ranged = Pin.checkpoint(pinned
       .repartitionByRange(parts, col("shard"), col("__dpos"))
-      .withColumn("__pid", spark_partition_id().cast("long"))
-      .localCheckpoint(false)
-    val tots = ranged.groupBy("__pid", "shard")
+      .withColumn("__pid", spark_partition_id().cast("long")), eager = false)
+    // once the checkpoint holds the ranged rows, the pre-shuffle pin has
+    // served both its reads (boundary sampling + shuffle write)
+    val tots = try ranged.groupBy("__pid", "shard")
       .agg(coalesce(sum("__n"), lit(0L)).as("__t"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(t => (t._2, t._1)) // shard, then partition order
-    // the checkpoint now holds the ranged rows; the pre-shuffle pin has
-    // served both its reads (boundary sampling + shuffle write)
-    pinned.unpersist(false)
+    finally Pin.release(pinned)
     val offs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     var curShard = Long.MinValue
     var acc = 0L
@@ -1442,17 +1425,15 @@ object TextOps {
     val spark = scored.sparkSession
     val parts = if (partitions > 0) partitions
       else spark.sessionState.conf.numShufflePartitions
-    val pinned = scored.select(col(idCol), col(diffCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ranged = pinned
+    val pinned = Pin.cache(scored.select(col(idCol), col(diffCol)))
+    val ranged = Pin.checkpoint(pinned
       .repartitionByRange(parts, col(diffCol), col(idCol))
-      .withColumn("__pid", spark_partition_id().cast("long"))
-      .localCheckpoint(false)
-    val counts = ranged.groupBy("__pid").agg(count(lit(1)).as("__c"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    // the checkpoint now holds the ranged rows; the pre-shuffle pin has
+      .withColumn("__pid", spark_partition_id().cast("long")), eager = false)
+    // once the checkpoint holds the ranged rows, the pre-shuffle pin has
     // served both its reads (boundary sampling + shuffle write)
-    pinned.unpersist(false)
+    val counts = try ranged.groupBy("__pid").agg(count(lit(1)).as("__c"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    finally Pin.release(pinned)
     var acc = 0L
     val offs = counts.map { case (pid, c) =>
       val o = (pid, acc); acc += c; o
@@ -1476,8 +1457,8 @@ object TextOps {
     if (nBands == 1) return rankLayout(scored, idCol, diffCol)
     // lazy: the boundary agg below is the first action and
     // materializes the pin in the same pass (see rankLayout)
-    val narrow = scored.select(col(idCol), col(diffCol))
-      .localCheckpoint(false)
+    val narrow = Pin.checkpoint(scored.select(col(idCol), col(diffCol)),
+      eager = false)
     val qs = (1 until nBands).map(_.toDouble / nBands)
     val bounds = narrow
       .agg(percentile_approx(col(diffCol).cast("double"),
@@ -1513,8 +1494,8 @@ object TextOps {
       .orderBy(col(diffCol), col(idCol))
     // lazy: the min/max agg is the first action and materializes the
     // pin in the same pass (see rankLayout)
-    val narrow = scored.select(col(idCol), col(diffCol))
-      .localCheckpoint(false)
+    val narrow = Pin.checkpoint(scored.select(col(idCol), col(diffCol)),
+      eager = false)
     val mm = narrow.agg(
       min(col(diffCol).cast("double")).as("mn"),
       max(col(diffCol).cast("double")).as("mx")).head()
@@ -1776,21 +1757,13 @@ object TextOps {
     *    recompute, and the pinned row counts drive the join-strategy
     *    branch below.
     *
-    * EAGERNESS + RETAINED-PIN CONTRACT (documented like
-    * [[graft.operators.ImageOps.imageAnnTopK]]): CONSTRUCTING the
-    * returned frame runs Spark jobs — three eager localCheckpoints of
-    * the count tables plus their row counts (the measured-size branch
-    * needs real sizes before planning; estimates were the fragility
-    * this replaced) — and the three pinned tables are RETAINED until
-    * session GC or unpersist: this helper cannot know when its
-    * caller's last action over the returned frame has run, so it never
-    * releases them itself. Size is bounded by the train split's
-    * distinct-gram count (uni+bi+tri rows, 4 longs each), NOT the
-    * corpus; long-lived sessions that call this repeatedly accumulate
-    * one pinned table-triple per call and should consume promptly or
-    * run inside a bounded session (as the `lm_gate_stages` probe does). At
-    * a Wikipedia-scale reference the triple is executor-storage
-    * pressure worth releasing between calls.
+    * EAGERNESS: CONSTRUCTING the returned frame runs Spark jobs —
+    * three eager checkpoints of the count tables plus their row counts
+    * (the measured-size branch needs real sizes before planning;
+    * estimates were the fragility this replaced). The three tables back
+    * the result for the session ([[graft.engine.Pin]]'s lifetime
+    * rules); their size is bounded by the train split's distinct-gram
+    * count (uni+bi+tri rows, 4 longs each), NOT the corpus.
     *  - The SCORE side was the dominant cost as interpreted work, not
     *    as shuffles: the r18 position frame built FIVE shingle strings
     *    per trigram position through a `transform` lambda and hashed
@@ -1846,13 +1819,13 @@ object TextOps {
       .select(LlmOps.words(col(textCol)).as("__ws"))
       .select(explode(LlmOps.gramHashesOf(col("__ws"), n)).as("h"))
       .groupBy("h").agg(count(lit(1)).as("c"))
-    val uni = counts(1).select(col("h"), col("c"),
-      log2Fixed(col("c")).as("f"), log2Fixed(col("c") + 1L).as("fp"))
-      .localCheckpoint(true)
-    val bi = counts(2).select(col("h"), log2Fixed(col("c")).as("f"))
-      .localCheckpoint(true)
-    val tri = counts(3).select(col("h"), log2Fixed(col("c")).as("f"))
-      .localCheckpoint(true)
+    val uni = Pin.checkpoint(counts(1).select(col("h"), col("c"),
+      log2Fixed(col("c")).as("f"), log2Fixed(col("c") + 1L).as("fp")),
+      eager = true)
+    val bi = Pin.checkpoint(
+      counts(2).select(col("h"), log2Fixed(col("c")).as("f")), eager = true)
+    val tri = Pin.checkpoint(
+      counts(3).select(col("h"), log2Fixed(col("c")).as("f")), eager = true)
     // the unigram floor's add-one denominator: one row, broadcast.
     // Derived from the pinned uni (which carries c) — no extra train
     // scan, identical numbers (uni IS counts(1) row for row).
@@ -2369,46 +2342,33 @@ object TextOps {
       }
       return w
     }
-    val f = feats(pos, 1).unionByName(feats(neg, 0))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val f = Pin.cache(feats(pos, 1).unionByName(feats(neg, 0)))
     val nd = f.groupBy(col("y"), col("__r"))
       .agg(count(lit(1)).as("__n"))
-    var w: DataFrame = spark.range(nBuckets)
+    val w0 = spark.range(nBuckets)
       .select(col("id").as("bucket"), lit(0L).as("w"))
-    var prevCp: Option[DataFrame] = None
-    try {
-      for (_ <- 1 to iters) {
-        // logit numerators: one keyed agg over the feature frame with
-        // the nBuckets-row weight table broadcast in
-        val z = f.join(broadcast(w), Seq("bucket"))
-          .groupBy(col("y"), col("__r"))
-          .agg(sum(col("w")).as("__zn"))
-          .join(nd, Seq("y", "__r"))
-        // hard sigmoid in 2^-20 fixed point: every float op is either
-        // exact (power-of-two scaling, clamp) or a single IEEE divide
-        val p = greatest(lit(0.0), least(lit(1.0),
-          lit(0.5) + col("__zn").cast("double") /
-            (lit(4.0 * scale) * col("__n"))))
-        val err = z.select(col("y"), col("__r"),
-          (round(p * FP, 0).cast("long") - col("y") * FP).as("__e"))
-        val grad = f.join(err, Seq("y", "__r"))
-          .groupBy(col("bucket"))
-          .agg(sum(col("__e")).as("__g"))
-        w = w.join(grad, Seq("bucket"), "left")
-          .select(col("bucket"),
-            (col("w") - expr(s"coalesce(__g, 0L) * $lrNum div $lrDen"))
-              .as("w"))
-          .localCheckpoint(true)
-        prevCp.foreach(LlmOps.releaseCheckpoint)
-        prevCp = Some(w)
-      }
-    } catch { case t: Throwable =>
-      prevCp.foreach(LlmOps.releaseCheckpoint)
-      f.unpersist(false)
-      throw t
-    }
-    f.unpersist(false)
-    w
+    Pin.rounds(w0, iters, scoped = Seq(f)) { w =>
+      // logit numerators: one keyed agg over the feature frame with
+      // the nBuckets-row weight table broadcast in
+      val z = f.join(broadcast(w), Seq("bucket"))
+        .groupBy(col("y"), col("__r"))
+        .agg(sum(col("w")).as("__zn"))
+        .join(nd, Seq("y", "__r"))
+      // hard sigmoid in 2^-20 fixed point: every float op is either
+      // exact (power-of-two scaling, clamp) or a single IEEE divide
+      val p = greatest(lit(0.0), least(lit(1.0),
+        lit(0.5) + col("__zn").cast("double") /
+          (lit(4.0 * scale) * col("__n"))))
+      val err = z.select(col("y"), col("__r"),
+        (round(p * FP, 0).cast("long") - col("y") * FP).as("__e"))
+      val grad = f.join(err, Seq("y", "__r"))
+        .groupBy(col("bucket"))
+        .agg(sum(col("__e")).as("__g"))
+      Some(w.join(grad, Seq("bucket"), "left")
+        .select(col("bucket"),
+          (col("w") - expr(s"coalesce(__g, 0L) * $lrNum div $lrDen"))
+            .as("w")))
+    }.frame
   }
 
   /** C4-style line/segment cleaning (Raffel et al. 2020 §2.2), on the

@@ -38,30 +38,22 @@ object LlmQueries {
     * immutable-snapshot layout). If data under `dir` is rewritten
     * within a session, consumers see the labels of the FIRST read; use
     * a fresh session (or a new dir, e.g. a versioned snapshot path) to
-    * re-label. Concurrent first use is race-safe: exactly one frame
-    * wins the memo, and a loser's checkpoint blocks are released
-    * instead of staying pinned for the session. */
-  private val ccLabelMemo = new scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  private def memoizedLabels(
-      s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val key = (s, dir)
-    ccLabelMemo.get(key).getOrElse {
+    * re-label. Concurrent first use is race-safe: the memo holds one
+    * lazy cell per key, so CC runs once and no loser's checkpoint is
+    * left pinned. */
+  private final class LabelCell(s: org.apache.spark.sql.SparkSession, dir: String) {
+    lazy val labels: org.apache.spark.sql.DataFrame = {
       val docs = t(s, dir, "documents")
-      val fresh = LlmOps.dedupGroups(docs, "doc_id",
+      LlmOps.dedupGroups(docs, "doc_id",
         LlmOps.minHashCandidatePairs(docs, "doc_id", "text"))
-      ccLabelMemo.putIfAbsent(key, fresh) match {
-        case Some(winner) =>
-          // lost a concurrent first-use race: the winner's frame serves
-          // everyone; release the loser's checkpoint blocks now rather
-          // than pinning them until session end
-          LlmOps.releaseCheckpoint(fresh)
-          winner
-        case None => fresh
-      }
     }
   }
+  private val ccLabelMemo = new scala.collection.concurrent.TrieMap[
+    (org.apache.spark.sql.SparkSession, String), LabelCell]
+
+  private def memoizedLabels(
+      s: org.apache.spark.sql.SparkSession, dir: String) =
+    ccLabelMemo.getOrElseUpdate((s, dir), new LabelCell(s, dir)).labels
 
   /** DuckDB CTEs: distinct (doc_id, shingle-hash h) over 2-gram shingles. */
   private def duckShingleHashes(where: String = ""): String =

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.engine.Pin
 import graft.operators.{LlmOps, MultimodalOps, TextOps}
 import Tables.t
 
@@ -3165,19 +3166,17 @@ object TextQueries {
         // reassembly expression into every reference (the LD14
         // optimizer hazard — measured 6.4 s for the filter alone);
         // against a materialized column it is one cheap per-row pass.
-        val shaped = docs.select(col("doc_id"), col("source"))
-          .join(cleaned, Seq("doc_id"))
-          .localCheckpoint(true)
+        val shaped = Pin.checkpoint(docs.select(col("doc_id"), col("source"))
+          .join(cleaned, Seq("doc_id")), eager = true)
         // The gate is a plain per-row filter, not a report+semi-join —
         // ONE evaluation — and the gated frame is pinned too (same
         // discipline as llm_curation_e2e): the DSIR stage reads it
         // from four consumers (target/raw counts, totals, scores).
         // Measured at sf0.1: 10.2 s unpinned+semi-join, 7.4 s with
         // only the post-gate pin, 2.6 s with this shape.
-        val kept = shaped
+        val kept = Pin.checkpoint(shaped
           .filter(TextOps.gopherKeep(col("tc"),
-            minWords = 40, minStopwords = 1))
-          .localCheckpoint(true)
+            minWords = 40, minStopwords = 1)), eager = true)
         val target = kept.filter(col("source") === "src0")
         val raw = kept.filter(col("source") =!= "src0")
         val wts = TextOps.dsirWeights(target, raw, "tc", nBuckets = 512)
@@ -3348,7 +3347,7 @@ object TextQueries {
       // Pin the fused prefix ONCE: the CC pair generation AND the final
       // keep-join both read this frame — without the pin the whole
       // boilerplate+filter+dedup prefix would recompute per consumer.
-      val pinned = exact.localCheckpoint(true)
+      val pinned = Pin.checkpoint(exact, eager = true)
       val labels = LlmOps.dedupGroups(pinned, "doc_id",
         LlmOps.minHashCandidatePairs(pinned, "doc_id", "tc"))
       val kept = pinned.join(

@@ -9,6 +9,7 @@ import java.time.Duration
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.config.{HttpRequestDef, Templates}
+import graft.engine.Pin
 import graft.util.Json
 
 /** HTTP sources (SURVEY §2.1 S1-S4, S8; §2.4 J2).
@@ -130,7 +131,7 @@ object Http {
     // localCheckpoint materializes the fan-out exactly once per run
     // (per task attempt — at-least-once under task retry, documented
     // SURVEY §7.4) and downstream evaluation reads the pinned blocks.
-    val bodies = fetched.localCheckpoint(true)
+    val bodies = Pin.checkpoint(fetched.toDF(), eager = true).as[String]
     spark.read.json(bodies)
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.engine.Pin
+
 /** Typed rows for the custom-state operators (Dataset[T] + Encoders:
   * type safety where the state logic is imperative). */
 final case class KeyedEvent(key: String, ts: java.sql.Timestamp, value: Double)
@@ -364,13 +366,13 @@ object Streams {
         val merged = existing
           .join(batchKeys, sameKey, "left_anti")
           .unionByName(latest)
-        val pinned = merged.localCheckpoint(true)
+        val pinned = Pin.checkpoint(merged, eager = true)
         try {
           pinned.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(partitionCol)
             .parquet(tablePath)
-        } finally graft.operators.LlmOps.releaseCheckpoint(pinned)
+        } finally Pin.release(pinned)
       }
     }
   }
@@ -455,7 +457,7 @@ object Streams {
       if (df.isStreaming) {
         val enc = org.apache.spark.sql.Encoders.row(cleaned0.schema)
         cleaned0.map(identity(_))(enc)
-      } else cleaned0.localCheckpoint(true)
+      } else Pin.checkpoint(cleaned0, eager = true)
     val gated = cleaned
       .filter(TextOps.gopherKeep(col("text_clean"),
         minWords = minWords, minStopwords = minStopwords))

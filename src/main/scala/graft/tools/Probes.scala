@@ -9,10 +9,9 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
+import graft.engine.Pin
 import graft.operators.{ImageOps, LlmOps, MultimodalOps, TextOps}
 
 /** The probes `graft.tools.Probe <name> <sfDir> [args…]` runs. Each is a
@@ -39,78 +38,17 @@ object Probes {
 
   /** Connected components, pair build vs label loop: for the MinHash
     * graph (`llm_dedup_groups`) and the SimHash ∪ payload graph
-    * (`llm_crossmodal_groups`), per arm `<arm>.pairs`, `<arm>.cc` (an
-    * instrumented copy of the `LlmOps.dedupGroups` loop; `<arm>.rounds`
-    * holds [seconds, labels changed] per round of its last run) and
-    * `<arm>.prod_count` (production; a run past its 25-round cap is a
-    * recorded failure). The instrumented loop runs up to 40 rounds, so
-    * the trajectory past the cap stays visible.
+    * (`llm_crossmodal_groups`), per arm `<arm>.pairs`, `<arm>.cc`
+    * (`LlmOps.dedupGroups` over the pinned pairs with a 40-round cap, so
+    * the trajectory past the production cap of 25 stays visible;
+    * `<arm>.rounds` holds [seconds, labels changed] per round of its last
+    * run) and `<arm>.prod_count` (production as callers run it; a run
+    * past its 25-round cap is a recorded failure).
     * Latest artifact: `bench_r20_cc_iters_sf1.json`.
     * args: [all|minhash|crossmodal] */
   private def ccIter(p: Probe, args: Seq[String]): Unit = {
     val armFilter = args.headOption.getOrElse("all")
     val docs = p.docs
-
-    def ccRounds(ids: DataFrame, pairs: DataFrame):
-        (Seq[Seq[Any]], Boolean, DataFrame) = {
-      val sess = ids.sparkSession
-      val edges0 = pairs
-        .select(explode(array(
-          struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-          struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .localCheckpoint(false)
-      val edgeCount = edges0.count()
-      val defParts = sess.conf.get("spark.sql.shuffle.partitions", "200").toInt
-      val loopParts = math.min(defParts.toLong,
-        math.max(4L, edgeCount / 2000000L + 1L))
-      val loopSess = sess.newSession()
-      loopSess.conf.set("spark.sql.adaptive.enabled", "false")
-      loopSess.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-      val edges = DatasetBridge.rehost(edges0, loopSess)
-      var labels = edges
-        .groupBy(col("src").as("id")).agg(min("dst").as("nmin"))
-        .select(col("id"), least(col("id"), col("nmin")).as("label"))
-        .localCheckpoint(false)
-      var labelsCp = labels
-      def messages(l: DataFrame): DataFrame = {
-        val selfMsgs = l
-          .select(col("id"), col("label").as("msg"), lit(true).as("self"))
-        val neighborMsgs = edges
-          .join(l.select(col("id").as("src"), col("label").as("msg")), "src")
-          .select(col("dst").as("id"), col("msg"), lit(false).as("self"))
-        val jumpMsgs = l.alias("l1")
-          .join(l.alias("l2"), col("l1.label") === col("l2.id"))
-          .select(col("l1.id").as("id"), col("l2.label").as("msg"),
-            lit(false).as("self"))
-        selfMsgs.union(neighborMsgs).union(jumpMsgs)
-      }
-      val rounds = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
-      var converged = false
-      while (!converged && rounds.size < 40) {
-        val t0 = System.nanoTime()
-        val next = messages(labels)
-          .groupBy("id")
-          .agg(min("msg").as("newLabel"),
-            min(when(col("self"), col("msg"))).as("oldLabel"))
-          .localCheckpoint(false)
-        val changed = next.filter(col("newLabel") < col("oldLabel")).count()
-        LlmOps.releaseCheckpoint(labelsCp)
-        labelsCp = next
-        labels = next.select(col("id"), col("newLabel").as("label"))
-        val sec = math.round((System.nanoTime() - t0) / 1e6).toDouble / 1000.0
-        rounds += Seq[Any](sec, changed)
-        converged = changed == 0
-      }
-      LlmOps.releaseCheckpoint(edges0)
-      val finalLabels = DatasetBridge.rehost(labelsCp, sess)
-        .select(col("id"), col("newLabel").as("label"))
-      val isolated = ids.select(col("doc_id").as("id"))
-        .join(finalLabels.select(col("id")), Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("label"))
-      (rounds.toSeq, converged, finalLabels.union(isolated)
-        .select(col("id").as("doc_id"), col("label").as("canonical_id")))
-    }
 
     def chk(d: DataFrame): String = {
       val r = d.agg(count(lit(1)),
@@ -122,19 +60,23 @@ object Probes {
     def runArm(arm: String, mkPairs: () => DataFrame,
         prodLabels: () => DataFrame): Unit = {
       p.stage(s"$arm.pairs")(mkPairs())
-      val pinned = mkPairs().localCheckpoint(true)
+      val pinned = Pin.checkpoint(mkPairs(), eager = true)
       p.value(s"$arm.n_pairs")(pinned.count())
-      val instChk = p.action(s"$arm.cc")(ccRounds(docs.select("doc_id"), pinned))
-        .flatMap { case (rounds, converged, labels) =>
-          p.value(s"$arm.converged")(converged)
-          p.value(s"$arm.rounds")(rounds)
-          p.value(s"$arm.chk_inst")(
-            if (converged) chk(labels) else "not_converged")
+      val rounds = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
+      val labels = p.action(s"$arm.cc") {
+        rounds.clear()
+        LlmOps.dedupGroupsObserved(docs.select("doc_id"), "doc_id",
+          pinned, maxIters = 40) { (sec, changed) =>
+          rounds += Seq[Any](math.round(sec * 1000).toDouble / 1000.0, changed)
         }
+      }
+      p.value(s"$arm.converged")(labels.isDefined)
+      p.value(s"$arm.rounds")(rounds.toSeq)
+      val instChk = p.value(s"$arm.chk_inst")(labels.fold("not_converged")(chk))
       p.action(s"$arm.prod_count")(prodLabels().count())
       val prodChk = p.value(s"$arm.chk_prod")(chk(prodLabels()))
-      p.value(s"$arm.chk_equal")(instChk.isDefined && instChk == prodChk)
-      LlmOps.releaseCheckpoint(pinned)
+      p.value(s"$arm.chk_equal")(labels.isDefined && instChk == prodChk)
+      Pin.release(pinned)
     }
 
     if (armFilter == "all" || armFilter == "minhash")
@@ -324,7 +266,7 @@ object Probes {
     p.value("salts")(salts)
     p.stage("tf")(mkTf)
     p.stage("wt")(mkWt)
-    val wt = mkWt.localCheckpoint(true)
+    val wt = Pin.checkpoint(mkWt, eager = true)
     p.value("n_wt")(wt.count())
     p.stage("dots_onelevel")(dotsOne(wt))
     p.stage("dots_twolevel")(dotsTwo(wt))
@@ -356,7 +298,7 @@ object Probes {
       p.value("sim_chk_prod")(chkSim(prod)))
     p.value("chk_equal")(Seq(dots, sims).forall(cs =>
       cs.forall(_.isDefined) && cs.distinct.size == 1))
-    LlmOps.releaseCheckpoint(wt)
+    Pin.release(wt)
   }
 
   /** `TextOps.classifierTrain` by stage: `feats` (the distinct (y, doc,
@@ -412,8 +354,7 @@ object Probes {
         .orderBy("doc_id")
 
     p.stage("feats")(mkF)
-    val fPinned = mkF.persist(StorageLevel.MEMORY_AND_DISK)
-    fPinned.count()
+    val fPinned = Pin.cache(mkF, eager = true)
     p.stage("train")(train)
     p.stage("train_fused")(trainFused(mkF))
     p.stage("train_fused_pinned")(trainFused(fPinned))
@@ -428,7 +369,7 @@ object Probes {
     val prodChk = p.value("chk_prod")(chk(train))
     val fusedChk = p.value("chk_fused")(chk(trainFused(mkF)))
     p.value("chk_equal")(prodChk.isDefined && prodChk == fusedChk)
-    fPinned.unpersist(false)
+    Pin.release(fPinned)
   }
 
   /** The stupid-backoff LM gate (`TextOps.lmStupidBackoff`) by stage:
@@ -497,11 +438,8 @@ object Probes {
     p.stage("pos")(mkPos)
 
     // pinned inputs isolate the score side
-    val uni = mkUni.localCheckpoint(true)
-    val bi = mkBi.localCheckpoint(true)
-    val tri = mkTri.localCheckpoint(true)
-    val tot = mkTot.localCheckpoint(true)
-    val pos = mkPos.localCheckpoint(true)
+    val Seq(uni, bi, tri, tot, pos) =
+      Seq(mkUni, mkBi, mkTri, mkTot, mkPos).map(Pin.checkpoint(_, eager = true))
     p.value("n_pos")(pos.count())
     p.value("n_uni")(uni.count())
     p.value("n_bi")(bi.count())
@@ -551,7 +489,7 @@ object Probes {
       p.value("bcast_chk")(chk(prodB)),
       p.value("shuffle_chk")(chk(prodS)))
     p.value("chk_equal")(chks.forall(_.isDefined) && chks.distinct.size == 1)
-    Seq(uni, bi, tri, tot, pos).foreach(LlmOps.releaseCheckpoint)
+    Seq(uni, bi, tri, tot, pos).foreach(Pin.release)
   }
 
   /** `llm_curriculum_pack_banded` by stage, each against pinned inputs
@@ -570,14 +508,14 @@ object Probes {
       trainPred = col("source") === "src0", threshBits = 8)
       .filter(col("kept") === 1L)
     p.counted("lm_gate", "n_kept")(mkScored.count())
-    val scored = mkScored.select("doc_id", "bits_per_gram")
-      .localCheckpoint(true)
+    val scored = Pin.checkpoint(
+      mkScored.select("doc_id", "bits_per_gram"), eager = true)
     def mkOrder = TextOps.curriculumLayoutRange(
       scored, "doc_id", "bits_per_gram", nBands = 4)
     p.action("layout")(mkOrder.count())
-    val order = mkOrder.localCheckpoint(true)
-    val sel = docs.join(order.select("doc_id"), Seq("doc_id"))
-      .select("doc_id", "text").localCheckpoint(true)
+    val order = Pin.checkpoint(mkOrder, eager = true)
+    val sel = Pin.checkpoint(docs.join(order.select("doc_id"), Seq("doc_id"))
+      .select("doc_id", "text"), eager = true)
     val vocab = p.action("vocab")(TextOps.bpeVocab(sel, "text", TextOps.BpeMergesEn))
     vocab.foreach(v => p.value("vocab_size")(v.size))
     val nTok = p.counted("count_kernel", "n_tokens")(sel.select(
@@ -597,7 +535,7 @@ object Probes {
       val se = docs.join(or.select("doc_id"), Seq("doc_id"))
       TextOps.packTokenIdsBy(se, "doc_id", "text", budget, order = or).count()
     }
-    Seq(scored, order, sel).foreach(LlmOps.releaseCheckpoint)
+    Seq(scored, order, sel).foreach(Pin.release)
   }
 
   /** Deterministic 24×24 gray PNG for a seed: pixel = a full murmur
@@ -658,8 +596,7 @@ object Probes {
         Row(id, makePng(id % seedMod))
       }), imgSchema)
     p.stage("img_gen")(mkImages)
-    val images = mkImages.persist(StorageLevel.MEMORY_AND_DISK)
-    images.count()
+    val images = Pin.cache(mkImages, eager = true)
     p.counted("img_decode", "img_decoded")(
       ImageOps.decodeImageMeta(images, "doc_id", "img")
         .agg(sum(when(col("ok"), 1L).otherwise(0L))).head().getLong(0))
@@ -671,7 +608,7 @@ object Probes {
     p.counted("img_ann", "img_ann_rows")(ImageOps.imageAnnTopK(
       images, "doc_id", "img", id => id % 97 === 0, topK = 5,
       kCells = 16, nprobe = 2).count())
-    images.unpersist(false)
+    Pin.release(images)
   }
 
   /** Writes `.explain("formatted")` of each named `SparkEntry` query to

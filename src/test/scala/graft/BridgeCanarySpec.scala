@@ -3,18 +3,25 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge, StorageBridge}
 
-/** CANARY for the two deliberate Spark-private seams.
+/** CANARY for the deliberate Spark-private seams.
   *
-  * graft reaches into `org.apache.spark.sql` package scope in exactly two
+  * graft reaches into `org.apache.spark` package scope in exactly four
   * places (see the VERDICT-documented upgrade risk):
   *
   *   - `ColumnBridge` → `org.apache.spark.sql.classic.ExpressionUtils`
   *     (Expression ⇄ Column factory; Spark 4 sealed the public path)
   *   - `DatasetBridge` → `org.apache.spark.sql.classic.Dataset.ofRows` +
-  *     `org.apache.spark.sql.execution.LogicalRDD.newInstance`
-  *     (re-host a checkpoint-backed frame in a sibling session)
+  *     `org.apache.spark.sql.execution.LogicalRDD.newInstance` / `.copy`
+  *     (re-host a checkpoint-backed frame in a sibling session; re-wrap
+  *     it with measured statistics)
+  *   - `StorageBridge` → `BlockManagerMaster.getStorageStatus`,
+  *     `SparkContext.unpersistRDD` and `RDD.checkpointData` (the bytes a
+  *     checkpoint holds; a release without the "locally checkpointed"
+  *     warning)
+  *   - `ListenerBridge` → `SparkContext.listenerBus.waitUntilEmpty`
+  *     (the probe harness's per-stage listener totals)
   *
   * These internals carry no compatibility promise. This suite exercises
   * every behavior graft depends on, with failure messages that name the
@@ -108,5 +115,52 @@ class BridgeCanarySpec extends AnyFunSuite {
     assert(shuffles.head.outputPartitioning.numPartitions === 3,
       "rehosted frame ignored the target session's shuffle width — " +
         "per-session SQLConf binding through Dataset.ofRows changed")
+  }
+
+  test("DatasetBridge.withSizeInBytes + StorageBridge.storedBytes: a " +
+    "re-wrapped checkpoint reads the same rows, reports the measured " +
+    "size, and keeps it through rehost (seam: LogicalRDD.copy + " +
+    "BlockManagerMaster.getStorageStatus)") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    def leafSize(df: org.apache.spark.sql.DataFrame): BigInt =
+      df.queryExecution.optimizedPlan.collectLeaves().collectFirst {
+        case lr: LogicalRDD => lr.stats.sizeInBytes
+      }.getOrElse(fail("no LogicalRDD leaf — the checkpoint plan changed shape"))
+    val lazyCp = spark.range(1000).select(col("id"), (col("id") % 7).as("k"))
+      .localCheckpoint(false)
+    val rdd = StorageBridge.checkpointed(lazyCp).getOrElse(
+      fail("checkpointData no longer marks a localCheckpoint'd RDD"))
+    assert(StorageBridge.storedBytes(rdd).isEmpty,
+      "an unmaterialized checkpoint must not report a size")
+    assert(lazyCp.count() === 1000)
+    val bytes = StorageBridge.storedBytes(rdd).getOrElse(fail(
+      "a materialized checkpoint reports no stored blocks — the master's " +
+        "storage status or RDDBlockId layout changed"))
+    assert(bytes > 0)
+    val sized = DatasetBridge.withSizeInBytes(lazyCp, BigInt(bytes))
+    assert(TestSpark.rowsOf(sized.orderBy("id")) ===
+      TestSpark.rowsOf(lazyCp.orderBy("id")),
+      "the re-wrapped checkpoint reads different rows — LogicalRDD.copy " +
+        "no longer keeps the RDD")
+    assert(leafSize(sized) === BigInt(bytes),
+      "LogicalRDD ignores the originStats it was copied with")
+    assert(leafSize(lazyCp) !== BigInt(bytes),
+      "the un-wrapped checkpoint already reports the measured size")
+    val hosted = DatasetBridge.rehost(sized, spark.newSession())
+    assert(leafSize(hosted) === BigInt(bytes),
+      "rehost dropped the measured stats — newInstance() no longer " +
+        "carries originStats")
+  }
+
+  test("StorageBridge.release: frees a checkpoint's blocks and forgets " +
+    "it as persistent (seam: SparkContext.unpersistRDD)") {
+    val cp = spark.range(100).toDF("id").localCheckpoint(true)
+    val rdd = StorageBridge.checkpointed(cp).get
+    assert(spark.sparkContext.getPersistentRDDs.contains(rdd.id))
+    StorageBridge.release(rdd)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(rdd.id),
+      "unpersistRDD no longer drops the RDD from persistentRdds")
+    assert(StorageBridge.checkpointed(spark.range(3).toDF()).isEmpty,
+      "a plain frame was taken for a checkpoint")
   }
 }

@@ -728,6 +728,40 @@ class LlmOpsSpec extends AnyFunSuite {
     }
     assert(pinnedKm <= 1,
       s"kmeansCentroids left $pinnedKm RDDs pinned (max 1: the final round)")
+
+    // bpeTrain returns merges, not a frame: every round pin is released
+    val corpus = Seq((1L, "lower lowest newer newest wider widest"),
+      (2L, "low lower new newer wide wider")).toDF("doc_id", "text")
+    val (merges, pinnedBpe) = pinnedBy {
+      TextOps.bpeTrain(corpus, "text", nMerges = 4)
+    }
+    assert(merges.size === 4)
+    assert(pinnedBpe === 0, s"bpeTrain left $pinnedBpe RDDs pinned (max 0)")
+    // iters = 5 takes the checkpointed (unfused) classifierTrain branch
+    val pos = (1L to 8L).map(i => (i, s"careful prose number$i")).toDF("doc_id", "text")
+    val neg = (1L to 8L).map(i => (i, s"casino jackpot number$i")).toDF("doc_id", "text")
+    val (_, pinnedCls) = pinnedBy {
+      TextOps.classifierTrain(pos, neg, "doc_id", "text",
+        nBuckets = 16, iters = 5).collect()
+    }
+    assert(pinnedCls <= 1,
+      s"classifierTrain left $pinnedCls RDDs pinned (max 1: the final round)")
+  }
+
+  test("dedupGroups labels report their measured size, not an estimate " +
+    "that grows with every self-joining round") {
+    // the 100-node chain above: ~7 rounds, each joining the labels with
+    // themselves — Spark's carried-over estimate multiplies per round
+    val ids = (1L to 120L).toDF("doc_id")
+    val pairs = (1L until 100L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val labels = LlmOps.dedupGroups(ids, "doc_id", pairs)
+    val sizes = labels.queryExecution.optimizedPlan.collectLeaves().collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.stats.sizeInBytes
+    }
+    info(s"LogicalRDD sizeInBytes: ${sizes.mkString(", ")}")
+    assert(sizes.nonEmpty, "the labels are read from the final round's checkpoint")
+    assert(sizes.forall(_ <= BigInt(1 << 20)),
+      s"checkpoint leaves report ${sizes.mkString(", ")} bytes (max 1 MB)")
   }
 
   test("dedupGroups never touches the caller session's planning config; " +
