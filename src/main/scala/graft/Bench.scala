@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -16,7 +17,7 @@ object Bench {
         spark.read.parquet(s"$sfDir/documents.parquet")
           .select(graft.operators.LlmOps.strHash(col("text")).as("h"))
           .agg(min("h")).collect()
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }
     // Corpus provenance stamp (r17 judge task #3): row counts, a cheap
     // content fingerprint, and the generation recipe ride IN every bench
@@ -31,7 +32,7 @@ object Bench {
       def tbl(name: String): Option[DataFrame] =
         try {
           val d = spark.read.parquet(s"$sfDir/$name.parquet"); d.schema; Some(d)
-        } catch { case _: Throwable => None }
+        } catch { case NonFatal(_) => None }
       // fingerprint = sum of polyhash mod 1e9+7: order-independent,
       // bounded (< 9.2e18 up to ~9e9 rows — no ANSI sum overflow), and
       // any content edit moves it with probability ~1 - 1e-9
@@ -68,13 +69,13 @@ object Bench {
             new com.fasterxml.jackson.databind.ObjectMapper().readTree(raw)
             raw
           } catch {
-            case _: Throwable =>
+            case NonFatal(_) =>
               "\"" + raw.replace("\\", "\\\\").replace("\"", "\\\"")
                 .replace("\n", "\\n").replace("\r", "\\r")
                 .replace("\t", "\\t") + "\""
           }
         } else "null"
-      } catch { case _: Throwable => "null" }
+      } catch { case NonFatal(_) => "null" }
       s""""corpus":{"tables":${parts.flatten.mkString("{", ",", "}")},""" +
         s""""provenance":$prov}"""
     }
@@ -94,7 +95,7 @@ object Bench {
     def timeOne(fn: (SparkSession, String) => DataFrame): (Boolean, Double) = {
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
-      catch { case _: Throwable => false }
+      catch { case NonFatal(_) => false }
       (ok, (System.nanoTime() - t0) / 1e9)
     }
     // Host-contention self-labeling (round-16, after the r15 artifact
@@ -181,7 +182,7 @@ object Bench {
           (rs, re, rs > 2.0 && re > 2.0)
         }
       } else (-1.0, -1.0, false)
-    } catch { case _: Throwable => (-1.0, -1.0, false) }
+    } catch { case NonFatal(_) => (-1.0, -1.0, false) }
     def r6(x: Double) = math.round(x * 1e6) / 1e6
     val canaries = s""""canary_start":${cjson(canaryStart)},""" +
       s""""canary_end":${cjson(canaryEnd)},""" +
@@ -207,7 +208,7 @@ object Bench {
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (fullJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case e: Throwable => System.err.println(s"bench: could not write $outPath: $e") }
+    } catch { case NonFatal(e) => System.err.println(s"bench: could not write $outPath: $e") }
     spark.stop()
     // Tail-proof headline: log-tail capture keeps the END of stdout, so
     // the LAST line is a compact (<200 byte) summary that survives any

@@ -522,7 +522,7 @@ object TextOps {
     val offsets = shardPrefixSum(
       df.select(col(idCol),
           bpeTokenCountCol(col(textCol), merges).as("__n"))
-        .join(ord, Seq(idCol)))
+        .join(ord, Seq(idCol)), Seq("__dpos"))
       .select(col("shard"), col(idCol), col("__off"))
     // r18 (a `curriculum_stages` probe fix): attach the offsets at DOC
     // granularity BEFORE the encode, so the join is doc-sized and the
@@ -544,30 +544,37 @@ object TextOps {
   }
 
   /** Distributed EXCLUSIVE prefix sum of `__n` within each `shard` in
-    * `__dpos` order — the scalable replacement for a
-    * Window.partitionBy(shard) running sum, whose largest task holds a
-    * whole shard (and the whole corpus when the layout is a global
-    * rank with one shard). Same two-pass shape as [[rankLayout]]:
-    * range-partition on (shard, __dpos) — __dpos is unique within a
-    * shard, so ranges are disjoint and the order total — prefix-sum
-    * WITHIN each (partition, shard) slice via a partitioned window,
-    * then add the slice's global offset from one bounded collect of
-    * per-(partition, shard) totals (≤ partitions·shards tiny rows,
-    * broadcast back). Pinned as in [[rankLayout]]: the input (the
-    * per-doc BPE token count here) is cached for the boundary sampling
-    * job and the shuffle write, and released once the LAZY post-shuffle
-    * checkpoint, materialized by the totals collect, freezes the sampled
-    * partition assignment for the window pass. `shard` is normalized to long
-    * (callers may pass an IntegerType band) and a slice whose `__n`
-    * is all-null sums to 0, not a driver NPE. Input (any id columns,
-    * shard, __dpos, __n); output the same rows + `__off`. */
-  private def shardPrefixSum(docs: DataFrame): DataFrame = {
+    * `order` — the scalable replacement for a Window.partitionBy(shard)
+    * running sum, whose largest task holds a whole shard (and the whole
+    * corpus when the layout is a global rank with one shard). Two
+    * passes (the classic zipWithIndex shape): range-partition on
+    * (shard, order…) — the caller's `order` must be unique within a
+    * shard, so ranges are disjoint and the order total wherever the
+    * sampled boundaries land — prefix-sum WITHIN each (partition, shard)
+    * slice via a partitioned window, then add the slice's global offset
+    * from one bounded collect of per-(partition, shard) totals
+    * (≤ partitions·shards tiny rows, broadcast back). The largest
+    * per-task sort is one range partition (~N/partitions rows).
+    *
+    * Pinning (r15 form): the input is cached for its two reads — the
+    * range exchange's boundary sampling job and the shuffle write, so
+    * the upstream (a difficulty scorer, the per-doc BPE token count) is
+    * evaluated once — and released once the LAZY post-shuffle
+    * checkpoint, materialized by the totals collect itself, holds the
+    * ranged rows. That checkpoint freezes the sampled partition
+    * assignment for the window pass (unpinned, boundaries could move
+    * between actions and mis-order) and backs the result for the
+    * session. `shard` is normalized to long (callers may pass an
+    * IntegerType band) and a slice whose `__n` is all-null sums to 0,
+    * not a driver NPE. Input (any id columns, shard, order…, __n);
+    * output the same rows + `__off`. */
+  private def shardPrefixSum(docs: DataFrame, order: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
     val parts = spark.sessionState.conf.numShufflePartitions
     val pinned = Pin.cache(docs.withColumn("shard", col("shard").cast("long")))
     val ranged = Pin.checkpoint(pinned
-      .repartitionByRange(parts, col("shard"), col("__dpos"))
+      .repartitionByRange(parts, (col("shard") +: order.map(col)): _*)
       .withColumn("__pid", spark_partition_id().cast("long")), eager = false)
     // once the checkpoint holds the ranged rows, the pre-shuffle pin has
     // served both its reads (boundary sampling + shuffle write)
@@ -586,7 +593,7 @@ object TextOps {
     }
     val offDf = spark.createDataFrame(offs.toSeq)
       .toDF("__pid", "shard", "__poff")
-    val w = Window.partitionBy("__pid", "shard").orderBy(col("__dpos"))
+    val w = Window.partitionBy("__pid", "shard").orderBy(order.map(col): _*)
       .rowsBetween(Window.unboundedPreceding, -1)
     ranged.join(broadcast(offDf), Seq("__pid", "shard"))
       .withColumn("__off",
@@ -620,6 +627,13 @@ object TextOps {
     tf.join(dfreq, Seq("term"))
       .select(col(idCol), col("term"), col("tf"), col("df"))
   }
+
+  /** The measured row count at or below which a doc- or gram-keyed
+    * lookup table is broadcast into its join instead of shuffled
+    * against the larger side ([[sparseCosinePairs]]' norm table,
+    * [[lmStupidBackoff]]'s count tables): 2M rows is tens to low
+    * hundreds of MB hashed, the "usually fine" broadcast band. */
+  private[graft] val BroadcastMaxRows = 2000000L
 
   /** Sparse cosine-similarity pairs via an inverted-index join over
     * n-word shingle terms with integer-idf weights — the exact
@@ -663,11 +677,12 @@ object TextOps {
     *  - the two norm joins against the PAIR-sized dots frame (117.9M
     *    rows at sf10, planned SortMergeJoin — 14 SMJ / 0 BHJ in the
     *    sf10 plan) broadcast the DOC-sized norm table when the corpus
-    *    is measurably small enough (one cheap metadata count; env
-    *    `SPARK_GRAFT_TFIDF_BCAST_MAXDOCS` overrides, default 2M docs ≈
-    *    tens of MB hashed): scoring tail 32.6 s → 18.4 s (1.77×).
-    *    Past the threshold (the 100 TB shape) the joins stay
-    *    sort-merge — a billion-row norm table must not broadcast.
+    *    has at most [[BroadcastMaxRows]] docs (tens of MB hashed):
+    *    scoring tail 32.6 s → 18.4 s (1.77×). Past it (the 100 TB
+    *    shape) the joins stay sort-merge — a billion-row norm table
+    *    must not broadcast. AQE's runtime SMJ→BHJ conversion is no
+    *    substitute: it drops only the sort and still writes the
+    *    pair-sized shuffle.
     *
     * EAGERNESS: the branch decision runs one `df.count()` at
     * DataFrame-construction time (metadata-cheap on a parquet scan;
@@ -677,9 +692,6 @@ object TextOps {
       df: DataFrame, idCol: String, textCol: String, n: Int = 3,
       minDf: Long = 2L, maxDfFrac: Double = 0.05,
       minSim: Double = 0.35): DataFrame = {
-    val maxBcastDocs = sys.env.get("SPARK_GRAFT_TFIDF_BCAST_MAXDOCS")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(2000000L)
     val tf = LlmOps.shingleTf(df, idCol, textCol, n)
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val nDocs = df.select(col(idCol)).agg(count(lit(1)).as("n_docs"))
@@ -690,7 +702,7 @@ object TextOps {
       .select(col(idCol), col("term"),
         expr("tf * (1000000 div df)").as("w"))
     val nrm0 = wt.groupBy(col(idCol)).agg(sum(col("w") * col("w")).as("n2"))
-    val nrm = if (df.count() <= maxBcastDocs) broadcast(nrm0) else nrm0
+    val nrm = if (df.count() <= BroadcastMaxRows) broadcast(nrm0) else nrm0
     val dots = wt.select(col(idCol).as("doc_a"), col("term"), col("w").as("wa"))
       .join(wt.select(col(idCol).as("doc_b"), col("term"), col("w").as("wb")),
         Seq("term"))
@@ -1366,6 +1378,22 @@ object TextOps {
       .withColumn("pos", row_number().over(w).cast("long"))
   }
 
+  /** EXACT global curriculum rank with NO single-task sort: the
+    * [[shardPrefixSum]] of `1` per doc over one shard in (diffCol,
+    * idCol) order — idCol unique makes that order total, so the rank is
+    * exact wherever the sampled range boundaries land, and the largest
+    * per-task sort is one range partition (~N/partitions rows), so the
+    * layout survives a corpus that no longer fits one task. The scan's
+    * pins hold only the narrow (idCol, diffCol) projection; its
+    * checkpoint also serves [[packTokenIdsBy]]'s double read of the
+    * layout, so the upstream scorer runs once. Output (idCol, shard =
+    * 0, pos = 1-based global rank by (diffCol, idCol)) — exactly
+    * [[curriculumLayout]](nBands = 1), which delegates here. */
+  def rankLayout(scored: DataFrame, idCol: String, diffCol: String): DataFrame =
+    shardPrefixSum(scored.select(col(idCol), col(diffCol),
+        lit(0L).as("shard"), lit(1L).as("__n")), Seq(diffCol, idCol))
+      .select(col(idCol), col("shard"), (col("__off") + 1L).as("pos"))
+
   /** PRODUCTION curriculum layout — the banded twin of the
     * llm_curriculum_pack oracle's single global rank window: shard =
     * difficulty band, pos = rank within the band. Band boundaries come
@@ -1393,60 +1421,6 @@ object TextOps {
     * full LM-scoring pass, which cost more than the funnel it
     * removed. The checkpoint is two columns per doc — the same
     * doc-sized pin every CC/packing path in this repo carries. */
-  /** EXACT global curriculum rank with NO single-task sort — the
-    * distributed two-pass rank (the classic zipWithIndex shape,
-    * Spark-first): range-partition the localCheckpoint-pinned narrow
-    * (idCol, diffCol) frame on (diffCol, idCol) — idCol unique makes
-    * the order total, so ranges are disjoint and rank is exact
-    * wherever the sampled boundaries land — then rank WITHIN each
-    * range partition (a partitionBy window, never one task) and add
-    * the partition's global offset from one bounded collect of
-    * per-partition counts (≤ `partitions` rows, broadcast back).
-    * Pinning, r15 form: the narrow (idCol, diffCol) INPUT is
-    * persist()-pinned before the range exchange (repartitionByRange's
-    * boundary sampling job would otherwise evaluate the upstream
-    * scorer a second time before the shuffle write does) and released
-    * once the post-shuffle checkpoint holds the rows; the LAZY
-    * post-shuffle checkpoint is materialized by the counts action
-    * itself (one pass, not eager-persist + collect as in r14) and
-    * then pins BOTH the partition assignment for the rank pass (range
-    * boundaries are sampled — unpinned they could move between
-    * actions and mis-rank) AND the upstream scorer against
-    * packTokenIdsBy's double read. Output
-    * (idCol, shard = 0, pos = 1-based global rank by (diffCol,
-    * idCol)) — exactly [[curriculumLayout]](nBands = 1), which
-    * delegates here; the largest per-task sort is one range partition
-    * (~N/partitions rows), so the layout survives a corpus that no
-    * longer fits one task. */
-  def rankLayout(
-      scored: DataFrame, idCol: String, diffCol: String,
-      partitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = scored.sparkSession
-    val parts = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
-    val pinned = Pin.cache(scored.select(col(idCol), col(diffCol)))
-    val ranged = Pin.checkpoint(pinned
-      .repartitionByRange(parts, col(diffCol), col(idCol))
-      .withColumn("__pid", spark_partition_id().cast("long")), eager = false)
-    // once the checkpoint holds the ranged rows, the pre-shuffle pin has
-    // served both its reads (boundary sampling + shuffle write)
-    val counts = try ranged.groupBy("__pid").agg(count(lit(1)).as("__c"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    finally Pin.release(pinned)
-    var acc = 0L
-    val offs = counts.map { case (pid, c) =>
-      val o = (pid, acc); acc += c; o
-    }.toSeq
-    val offDf = spark.createDataFrame(offs).toDF("__pid", "__off")
-    val within = Window.partitionBy("__pid")
-      .orderBy(col(diffCol), col(idCol))
-    ranged.join(broadcast(offDf), Seq("__pid"))
-      .withColumn("pos",
-        (col("__off") + row_number().over(within)).cast("long"))
-      .select(col(idCol), lit(0L).as("shard"), col("pos"))
-  }
-
   def curriculumLayout(
       scored: DataFrame, idCol: String, diffCol: String,
       nBands: Int, accuracy: Int = 10000): DataFrame = {
@@ -1773,13 +1747,10 @@ object TextOps {
     *    strings exist at all, each gram hashed once.
     *  - The five count-table lookups pick their join strategy by
     *    MEASURED size, not estimate: when the pinned tables total ≤
-    *    `maxBroadcastRows` (default 2M rows ≈ low hundreds of MB of
-    *    hashed relation — the guide's "usually fine" broadcast band;
-    *    env `SPARK_GRAFT_LM_BCAST_MAXROWS` overrides, and the full
-    *    oracle gate is replayed with the override forcing each branch)
-    *    they are explicitly broadcast — the token-granularity frame is
-    *    never shuffled, the exact CCNet shape (the reference corpus is
-    *    small by construction). Past the threshold — the 100 TB shape
+    *    [[BroadcastMaxRows]] rows they are explicitly broadcast — the
+    *    token-granularity frame is never shuffled, the exact CCNet
+    *    shape (the reference corpus is small by construction). Past
+    *    the threshold — the 100 TB shape
     *    with a Wikipedia-scale reference — the three tables tag-union
     *    into ONE frame keyed by `k = h·4 + level` (injective:
     *    [[LlmOps.strHash]] < 2^30 so k < 2^32), each position explodes
@@ -1802,12 +1773,10 @@ object TextOps {
       df: DataFrame, idCol: String, textCol: String,
       trainPred: Column, threshBits: Int = 8): DataFrame =
     lmStupidBackoffImpl(df, idCol, textCol, trainPred, threshBits,
-      // a malformed env value must not break every call — fall back to
-      // the default rather than throwing NumberFormatException (advice)
-      maxBroadcastRows = sys.env.get("SPARK_GRAFT_LM_BCAST_MAXROWS")
-        .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-        .getOrElse(2000000L))
+      BroadcastMaxRows)
 
+  /** [[lmStupidBackoff]] with its broadcast threshold exposed, so a
+    * test or probe can force either join-strategy branch. */
   private[graft] def lmStupidBackoffImpl(
       df: DataFrame, idCol: String, textCol: String,
       trainPred: Column, threshBits: Int,
@@ -2245,6 +2214,10 @@ object TextOps {
         .as("score"))
   }
 
+  /** Gradient rounds [[classifierTrain]] chains into one lazy plan
+    * before it pins: the fuse limit the r20 probe measured. */
+  private val ClassifierFuseRounds = 4
+
   /** TRAIN the hashed-linear quality classifier in-engine — the
     * missing half of [[classifierScore]]'s inference slot: given
     * labeled seed sets (the GPT-3/LLaMA recipe: positives = a curated
@@ -2278,23 +2251,25 @@ object TextOps {
     * shuffles of the feature frame, the same shape as one
     * [[classifierScore]] pass.
     *
-    * Round chaining (r20, probe-measured): for `iters` ≤
-    * `SPARK_GRAFT_CLASSIFIER_FUSE_MAXITERS` (default 4) the rounds are
-    * chained IN ONE LAZY PLAN — no per-round localCheckpoint, no
-    * persist: the feature frame's exchange subtree is identical at
-    * every reference, so Spark's exchange reuse computes it once, and
-    * the whole training runs as one job at action time. The sf10 probe
-    * (`bench_r20_classifier_train_stages_sf10.json`) put the
-    * checkpointed loop at 9.3 s vs 3.1 s fused on the production query
-    * (count-forced), with bit-identical weights — the per-round eager
-    * checkpoint jobs WERE the cost (they also explain the r19 driver's
-    * anomalous 0.35 core-scaling reading: fixed per-job overhead, not
-    * compute). Past the threshold the checkpointed loop returns
-    * (constant-size lineage — plan depth grows per chained round, the
-    * [[LlmOps.kmeansCentroids]] training discipline); the returned
-    * frame is then pinned, where the fused form re-trains per action —
-    * callers that act repeatedly on a small-iters result should
-    * localCheckpoint it themselves. */
+    * Round chaining (r20, probe-measured): rounds are chained IN ONE
+    * LAZY PLAN in blocks of at most [[ClassifierFuseRounds]] — no
+    * per-round localCheckpoint, no persist: the feature frame's
+    * exchange subtree is identical at every reference, so Spark's
+    * exchange reuse computes it once, and a block runs only inside
+    * the action that reads it. The sf10 probe
+    * (`bench_r20_classifier_train_stages_sf10.json`) put a
+    * per-round-checkpointed loop at 9.3 s vs 3.1 s fused on the
+    * production query (count-forced), with bit-identical weights — the
+    * per-round eager checkpoint jobs WERE the cost (they also explain
+    * the r19 driver's anomalous 0.35 core-scaling reading: fixed
+    * per-job overhead, not compute). Plan depth grows per chained
+    * round, so every block but the last is pinned through
+    * [[graft.engine.Pin.rounds]] (eager checkpoint, the feature frame a
+    * scoped cache): `iters` ≤ [[ClassifierFuseRounds]] (the default and
+    * every production caller) runs no job and pins nothing at
+    * construction. The last block stays lazy and re-trains per action —
+    * callers that act repeatedly on the result should pin it
+    * themselves. */
   def classifierTrain(
       pos: DataFrame, neg: DataFrame, idCol: String, textCol: String,
       nBuckets: Int, iters: Int = 3, scale: Long = 1L << 20,
@@ -2304,9 +2279,6 @@ object TextOps {
     require(scale > 0 && lrNum > 0 && lrDen > 0,
       s"scale/lr must be positive: $scale $lrNum $lrDen")
     val FP = 1L << 20
-    val spark = pos.sparkSession
-    val fuseMax = sys.env.get("SPARK_GRAFT_CLASSIFIER_FUSE_MAXITERS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(4)
     // (y, id) keys a doc — ids need only be unique WITHIN each side
     def feats(df: DataFrame, y: Int): DataFrame = df
       .select(col(idCol).as("__r"), col(textCol))
@@ -2314,19 +2286,19 @@ object TextOps {
       .select(lit(y).as("y"), col("__r"),
         pmod(LlmOps.strHash(col("__w")), lit(nBuckets.toLong)).as("bucket"))
       .distinct()
-    if (iters <= fuseMax) {
-      // fused branch: one lazy plan, exchange reuse dedupes the feature
-      // frame, zero training-time Spark jobs
-      val f = feats(pos, 1).unionByName(feats(neg, 0))
+    // `n` gradient rounds over features `f`, chained lazily from `w0`
+    def train(f: DataFrame, w0: DataFrame, n: Int): DataFrame = {
       val nd = f.groupBy(col("y"), col("__r"))
         .agg(count(lit(1)).as("__n"))
-      var w: DataFrame = spark.range(nBuckets)
-        .select(col("id").as("bucket"), lit(0L).as("w"))
-      for (_ <- 1 to iters) {
+      (1 to n).foldLeft(w0) { (w, _) =>
+        // logit numerators: one keyed agg over the feature frame with
+        // the nBuckets-row weight table broadcast in
         val z = f.join(broadcast(w), Seq("bucket"))
           .groupBy(col("y"), col("__r"))
           .agg(sum(col("w")).as("__zn"))
           .join(nd, Seq("y", "__r"))
+        // hard sigmoid in 2^-20 fixed point: every float op is either
+        // exact (power-of-two scaling, clamp) or a single IEEE divide
         val p = greatest(lit(0.0), least(lit(1.0),
           lit(0.5) + col("__zn").cast("double") /
             (lit(4.0 * scale) * col("__n"))))
@@ -2335,40 +2307,25 @@ object TextOps {
         val grad = f.join(err, Seq("y", "__r"))
           .groupBy(col("bucket"))
           .agg(sum(col("__e")).as("__g"))
-        w = w.join(grad, Seq("bucket"), "left")
+        w.join(grad, Seq("bucket"), "left")
           .select(col("bucket"),
             (col("w") - expr(s"coalesce(__g, 0L) * $lrNum div $lrDen"))
               .as("w"))
       }
-      return w
     }
-    val f = Pin.cache(feats(pos, 1).unionByName(feats(neg, 0)))
-    val nd = f.groupBy(col("y"), col("__r"))
-      .agg(count(lit(1)).as("__n"))
-    val w0 = spark.range(nBuckets)
+    val f = feats(pos, 1).unionByName(feats(neg, 0))
+    val w0 = pos.sparkSession.range(nBuckets)
       .select(col("id").as("bucket"), lit(0L).as("w"))
-    Pin.rounds(w0, iters, scoped = Seq(f)) { w =>
-      // logit numerators: one keyed agg over the feature frame with
-      // the nBuckets-row weight table broadcast in
-      val z = f.join(broadcast(w), Seq("bucket"))
-        .groupBy(col("y"), col("__r"))
-        .agg(sum(col("w")).as("__zn"))
-        .join(nd, Seq("y", "__r"))
-      // hard sigmoid in 2^-20 fixed point: every float op is either
-      // exact (power-of-two scaling, clamp) or a single IEEE divide
-      val p = greatest(lit(0.0), least(lit(1.0),
-        lit(0.5) + col("__zn").cast("double") /
-          (lit(4.0 * scale) * col("__n"))))
-      val err = z.select(col("y"), col("__r"),
-        (round(p * FP, 0).cast("long") - col("y") * FP).as("__e"))
-      val grad = f.join(err, Seq("y", "__r"))
-        .groupBy(col("bucket"))
-        .agg(sum(col("__e")).as("__g"))
-      Some(w.join(grad, Seq("bucket"), "left")
-        .select(col("bucket"),
-          (col("w") - expr(s"coalesce(__g, 0L) * $lrNum div $lrDen"))
-            .as("w")))
-    }.frame
+    val pinnedBlocks = math.max(0, iters - 1) / ClassifierFuseRounds
+    val w =
+      if (pinnedBlocks == 0) w0
+      else {
+        val fc = Pin.cache(f)
+        Pin.rounds(w0, pinnedBlocks, scoped = Seq(fc)) { w =>
+          Some(train(fc, w, ClassifierFuseRounds))
+        }.frame
+      }
+    train(f, w, iters - pinnedBlocks * ClassifierFuseRounds)
   }
 
   /** C4-style line/segment cleaning (Raffel et al. 2020 §2.2), on the

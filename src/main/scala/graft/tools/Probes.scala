@@ -302,8 +302,8 @@ object Probes {
   }
 
   /** `TextOps.classifierTrain` by stage: `feats` (the distinct (y, doc,
-    * bucket) feature frame), `train` (production, checkpointed rounds),
-    * `train_fused` / `train_fused_pinned` (the same arithmetic as one
+    * bucket) feature frame), `train` (production), `train_fused` /
+    * `train_fused_pinned` (the inline twin: the same arithmetic as one
     * lazy plan, over fresh and over persisted features), and the full
     * `llm_classifier_train` shape by count: `prod_count` and
     * `prod_fused_count`. The trained weights must be bit-identical.

@@ -737,15 +737,18 @@ class LlmOpsSpec extends AnyFunSuite {
     }
     assert(merges.size === 4)
     assert(pinnedBpe === 0, s"bpeTrain left $pinnedBpe RDDs pinned (max 0)")
-    // iters = 5 takes the checkpointed (unfused) classifierTrain branch
+    // iters past 4 pin every 4-round block but the last: 5 pins one
+    // block, 9 pins two and must release the first
     val pos = (1L to 8L).map(i => (i, s"careful prose number$i")).toDF("doc_id", "text")
     val neg = (1L to 8L).map(i => (i, s"casino jackpot number$i")).toDF("doc_id", "text")
-    val (_, pinnedCls) = pinnedBy {
-      TextOps.classifierTrain(pos, neg, "doc_id", "text",
-        nBuckets = 16, iters = 5).collect()
+    for (iters <- Seq(5, 9)) {
+      val (_, pinnedCls) = pinnedBy {
+        TextOps.classifierTrain(pos, neg, "doc_id", "text",
+          nBuckets = 16, iters = iters).collect()
+      }
+      assert(pinnedCls <= 1, s"classifierTrain(iters = $iters) left " +
+        s"$pinnedCls RDDs pinned (max 1: the last pinned block)")
     }
-    assert(pinnedCls <= 1,
-      s"classifierTrain left $pinnedCls RDDs pinned (max 1: the final round)")
   }
 
   test("dedupGroups labels report their measured size, not an estimate " +

@@ -538,18 +538,27 @@ class PlanSpec extends AnyFunSuite {
     assert(!out.queryExecution.executedPlan.toString.contains("SinglePartition"),
       "rankLayout must never funnel the corpus through one task")
     // output = the global row_number, bit for bit. The expected rank is
-    // computed DRIVER-SIDE over the collected sf0.001 rows (test-only;
-    // ~500 docs) rather than with a no-partition Window.orderBy — the
+    // computed DRIVER-SIDE over the collected rows (test-only; ~500
+    // docs) rather than with a no-partition Window.orderBy — the
     // Window form flooded every `sbt test` run with WindowExec
     // single-partition warnings that could mask a REAL production
     // regression (r15 verdict item 3).
-    val expect = df.select("doc_id", "bits").collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-      .sortBy { case (id, bits) => (bits, id) }
-      .zipWithIndex.map { case ((id, _), i) => (id, (i + 1).toLong) }.toSet
-    val got = out.select("doc_id", "pos").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == expect, "rankLayout must equal the exact global rank")
+    def exactRank(in: org.apache.spark.sql.DataFrame): Unit = {
+      val expect = in.select("doc_id", "bits").collect()
+        .map(r => (r.getLong(0), r.getDouble(1)))
+        .sortBy { case (id, bits) => (bits, id) }
+        .zipWithIndex.map { case ((id, _), i) => (id, (i + 1).toLong) }.toSet
+      val got = graft.operators.TextOps.rankLayout(in, "doc_id", "bits")
+        .select("doc_id", "pos").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == expect, "rankLayout must equal the exact global rank")
+    }
+    exactRank(df)
+    // many ties: 3 difficulty values over ~500 docs, arriving in
+    // descending id order, so ranges split inside a tie and only the id
+    // orders each run
+    exactRank(df.withColumn("bits", (col("doc_id") % 3).cast("double"))
+      .orderBy(col("doc_id").desc))
     // and the full pinned corpus query keeps that property end to end
     val q = graft.SparkEntry.queries("llm_curriculum_pack")(
       spark, "/root/testdata/sf0.001")
