@@ -39,6 +39,111 @@ object DuckSql {
        |$out AS (SELECT $keyCols, xor(__x, __x // 65536) AS k FROM __${out}2)"""
       .stripMargin
 
+  /** `$out(doc_id, s)`: every `n`-word shingle of `$src(doc_id, ws)`,
+    * the words joined by single spaces (LlmOps.shingleHashes' input). */
+  def duckWordShingles(out: String, src: String, n: Int = 2): String = {
+    val gram = (0 until n).map(k => if (k == 0) "ws[i]" else s"ws[i+$k]")
+      .mkString(" || ' ' || ")
+    s"""$out AS (
+       |  SELECT doc_id, unnest(list_transform(generate_series(1, len(ws)-${n - 1}),
+       |    i -> $gram)) AS s
+       |  FROM $src
+       |)""".stripMargin
+  }
+
+  /** DuckDB rendering of LlmOps.minHashCandidatePairs' signature and
+    * band keys over `$hashed(doc_id, h)`: 8 seeded permutation minima
+    * `mh(doc_id, m0..m7)`, then 4 bands of 2 rows hashed into
+    * `bands(doc_id, band, bh)`. */
+  def duckMinHashBands(hashed: String = "hashed"): String =
+    s"""mh AS (
+       |  SELECT doc_id,
+       |    min((1000003 * h + 12345) % 2147483647) AS m0,
+       |    min((1000033 * h + 54321) % 2147483647) AS m1,
+       |    min((1000037 * h + 11111) % 2147483647) AS m2,
+       |    min((1000039 * h + 22222) % 2147483647) AS m3,
+       |    min((1000081 * h + 33333) % 2147483647) AS m4,
+       |    min((1000099 * h + 44444) % 2147483647) AS m5,
+       |    min((1000117 * h + 55555) % 2147483647) AS m6,
+       |    min((1000121 * h + 66666) % 2147483647) AS m7
+       |  FROM $hashed GROUP BY doc_id
+       |),
+       |bands AS (
+       |  SELECT doc_id, 0 AS band, (m0 * 1000003 + m1) % 2147483647 AS bh FROM mh
+       |  UNION ALL SELECT doc_id, 1, (m2 * 1000003 + m3) % 2147483647 FROM mh
+       |  UNION ALL SELECT doc_id, 2, (m4 * 1000003 + m5) % 2147483647 FROM mh
+       |  UNION ALL SELECT doc_id, 3, (m6 * 1000003 + m7) % 2147483647 FROM mh
+       |)""".stripMargin
+
+  /** The LSH candidate pairs `$out(doc_a, doc_b)`: distinct doc pairs
+    * sharing at least one `bands` bucket, smaller id first. */
+  def duckBandPairs(out: String): String =
+    s"""$out AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
+       |                           AND a.doc_id < b.doc_id
+       |)""".stripMargin
+
+  /** Connected components as recursive reachability, the oracle twin of
+    * LlmOps.dedupGroups: `$edges` holds both directions of each
+    * `prs(doc_a, doc_b)` edge, and `reach(doc_id, label)` spreads
+    * every node's own id from `$nodes` along them, so a node's
+    * component label is its `min(label)`. The caller's WITH must say
+    * RECURSIVE. `wrapStep` breaks the recursive step over two lines. */
+  def duckCcReach(nodes: String, edges: String = "edges",
+      wrapStep: Boolean = false): String = {
+    val step = if (wrapStep) "\n  " else " "
+    s"""$edges AS (
+       |  SELECT doc_a AS src, doc_b AS dst FROM prs
+       |  UNION ALL SELECT doc_b, doc_a FROM prs
+       |),
+       |reach AS (
+       |  SELECT doc_id, doc_id AS label FROM $nodes
+       |  UNION
+       |  SELECT e.dst AS doc_id, r.label${step}FROM reach r JOIN $edges e ON e.src = r.doc_id
+       |)""".stripMargin
+  }
+
+  /** The band-count CTE `nn(wd)` of the 60-bit banded Hamming search:
+    * the largest divisor of 60 in {4,5,6,10,12,15} under the
+    * bitlength(n - 1) - 1 law over the `documents` count (the twin of
+    * LlmOps.stableBandWidth). */
+  val duckBandWidthNn: String =
+    """nn AS (
+      |  SELECT CASE WHEN p >= 15 THEN 15 WHEN p >= 12 THEN 12
+      |              WHEN p >= 10 THEN 10 WHEN p >= 6 THEN 6
+      |              WHEN p >= 5 THEN 5 ELSE 4 END AS wd
+      |  FROM (SELECT greatest(4, least(15, length(bin(count(*) - 1)) - 1))
+      |          AS p FROM documents)
+      |)""".stripMargin
+
+  /** `$out(doc_id, $code, band, slice)`: each 60-bit `$code` of `$src`
+    * cut into 60 / nn.wd slices of nn.wd bits; `filter` is appended to
+    * the WHERE clause. */
+  def duckBandSlices(out: String, src: String, code: String,
+      filter: String = ""): String =
+    s"""$out AS (
+       |  SELECT doc_id, $code, band,
+       |    ($code >> CAST(band * nn.wd AS INT))
+       |      & ((CAST(1 AS BIGINT) << nn.wd) - 1) AS slice
+       |  FROM $src, generate_series(0, 14) g(band), nn
+       |  WHERE band < 60 // nn.wd$filter
+       |)""".stripMargin
+
+  /** The banded Hamming pair search over `$src(doc_id, $code)` ending
+    * the query: slices, every pair agreeing on one slice (`$pairs`),
+    * and the pairs within Hamming distance 3. Needs `nn`. */
+  def duckHammingPairsSql(src: String, code: String, pairs: String): String =
+    s"""${duckBandSlices("banded", src, code)},
+       |$pairs AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       |         CAST(bit_count(xor(a.$code, b.$code)) AS BIGINT) AS hamming
+       |  FROM banded a JOIN banded b ON a.band = b.band AND a.slice = b.slice
+       |                             AND a.doc_id < b.doc_id
+       |)
+       |SELECT doc_a, doc_b, hamming FROM $pairs WHERE hamming <= 3
+       |ORDER BY doc_a, doc_b""".stripMargin
+
   /** Sequential left-fold double sum (mirrors LlmOps' aggregate order). */
   def duckFold(terms: String): String =
     s"list_reduce(list_prepend(0.0, $terms), (a, x) -> a + x)"

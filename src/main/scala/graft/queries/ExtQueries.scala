@@ -18,6 +18,68 @@ import Tables.t
   */
 object ExtQueries {
 
+  /** The batch-mode sessions oracle (Streams.sessionAgg / sessionize,
+    * 30-minute gap), tie-safe gaps-and-islands: boundaries come from
+    * the DISTINCT (event_type, ts) grid — a ROWS running sum over
+    * duplicate timestamps is order-UNDERDETERMINED (ties split
+    * arbitrarily around a boundary row, and the scaled corpora
+    * duplicate ts by construction) — then every event row joins back
+    * to its timestamp's session. Identical result on tie-free data;
+    * the engines' gap semantics (equal ts ⇒ same session) made exact.
+    * The key column is emitted as `keyAlias`. */
+  private def duckSessionsSql(keyAlias: String, orderKey: String): String =
+    s"""WITH d AS (SELECT DISTINCT event_type, ts FROM events),
+       |o AS (
+       |  SELECT event_type, ts,
+       |         CASE WHEN lag(ts) OVER w IS NULL
+       |              OR ts - lag(ts) OVER w > INTERVAL '30 minutes'
+       |              THEN 1 ELSE 0 END AS new_sess
+       |  FROM d
+       |  WINDOW w AS (PARTITION BY event_type ORDER BY ts)
+       |),
+       |s AS (
+       |  SELECT event_type, ts,
+       |         sum(new_sess) OVER (PARTITION BY event_type ORDER BY ts
+       |                             ROWS UNBOUNDED PRECEDING) AS sid
+       |  FROM o
+       |)
+       |SELECT e.event_type AS $keyAlias, min(e.ts) AS session_start,
+       |       CAST(count(*) AS BIGINT) AS n_events
+       |FROM events e
+       |JOIN s ON s.event_type = e.event_type AND s.ts = e.ts
+       |GROUP BY e.event_type, s.sid
+       |ORDER BY $orderKey, session_start""".stripMargin
+
+  /** `daily(event_type, day_ts, day_value_c)`: per-type daily sums of
+    * `value` in integer cents, over the events passing `filter`. */
+  private def duckDailyCents(filter: Option[String] = None): String = {
+    val from = filter.fold("FROM events GROUP BY 1, 2")(f =>
+      s"FROM events WHERE $f\n  GROUP BY 1, 2")
+    s"""daily AS (
+       |  SELECT event_type,
+       |         CAST(date_trunc('day', ts) AS TIMESTAMP) AS day_ts,
+       |         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+       |           AS day_value_c
+       |  $from
+       |)""".stripMargin
+  }
+
+  /** The interval-join oracle: each error event `l` against the same
+    * user's purchases `r` whose hour-long window holds it, joined by
+    * `join` (JOIN / LEFT JOIN / FULL JOIN); `sel` and `orderBy` finish
+    * the query. The purchase WHERE line is padded to sit under its
+    * SELECT whatever the join keyword's length. */
+  private def duckErrorPurchaseSql(sel: String, join: String,
+      orderBy: String): String =
+    s"""SELECT $sel
+       |FROM (SELECT event_id, user_id, ts FROM events
+       |      WHERE event_type = 'error') l
+       |$join (SELECT event_id, user_id, ts FROM events
+       |${" " * (join.length + 2)}WHERE event_type = 'purchase') r
+       |  ON l.user_id = r.user_id
+       | AND l.ts >= r.ts AND l.ts < r.ts + INTERVAL 1 HOUR
+       |ORDER BY $orderBy""".stripMargin
+
   val defs: Seq[QDef] = Seq(
 
     // ----- Streams.windowedAgg in batch mode over events ---------------
@@ -50,34 +112,7 @@ object ExtQueries {
     // aggregate by island id). Order-independent aggs only.
     QDef.sql(
       "ext_session_agg",
-      // Tie-safe gaps-and-islands: boundaries come from the DISTINCT
-      // (event_type, ts) grid — a ROWS running sum over duplicate
-      // timestamps is order-UNDERDETERMINED (ties split arbitrarily
-      // around a boundary row, and the scaled corpora duplicate ts by
-      // construction) — then every event row joins back to its
-      // timestamp's session. Identical result on tie-free data; the
-      // engines' gap semantics (equal ts ⇒ same session) made exact.
-      """WITH d AS (SELECT DISTINCT event_type, ts FROM events),
-        |o AS (
-        |  SELECT event_type, ts,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |              OR ts - lag(ts) OVER w > INTERVAL '30 minutes'
-        |              THEN 1 ELSE 0 END AS new_sess
-        |  FROM d
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY ts)
-        |),
-        |s AS (
-        |  SELECT event_type, ts,
-        |         sum(new_sess) OVER (PARTITION BY event_type ORDER BY ts
-        |                             ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM o
-        |)
-        |SELECT e.event_type AS event_type, min(e.ts) AS session_start,
-        |       CAST(count(*) AS BIGINT) AS n_events
-        |FROM events e
-        |JOIN s ON s.event_type = e.event_type AND s.ts = e.ts
-        |GROUP BY e.event_type, s.sid
-        |ORDER BY 1, session_start""".stripMargin) { (s, dir) =>
+      duckSessionsSql("event_type", "1")) { (s, dir) =>
       Streams.sessionAgg(
         t(s, dir, "events"),
         tsCol = "ts", watermarkDelay = "10 minutes", gap = "30 minutes",
@@ -93,28 +128,7 @@ object ExtQueries {
     // independent implementations, one answer.
     QDef.sql(
       "ext_sessionize",
-      // Same tie-safe distinct-grid form as ext_session_agg (see there).
-      """WITH d AS (SELECT DISTINCT event_type, ts FROM events),
-        |o AS (
-        |  SELECT event_type, ts,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |              OR ts - lag(ts) OVER w > INTERVAL '30 minutes'
-        |              THEN 1 ELSE 0 END AS new_sess
-        |  FROM d
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY ts)
-        |),
-        |s AS (
-        |  SELECT event_type, ts,
-        |         sum(new_sess) OVER (PARTITION BY event_type ORDER BY ts
-        |                             ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM o
-        |)
-        |SELECT e.event_type AS key, min(e.ts) AS session_start,
-        |       CAST(count(*) AS BIGINT) AS n_events
-        |FROM events e
-        |JOIN s ON s.event_type = e.event_type AND s.ts = e.ts
-        |GROUP BY e.event_type, s.sid
-        |ORDER BY key, session_start""".stripMargin) { (s, dir) =>
+      duckSessionsSql("key", "key")) { (s, dir) =>
       val sp = s
       import sp.implicits._
       val typed = t(s, dir, "events")
@@ -306,14 +320,7 @@ object ExtQueries {
     // fill runs on the aggregated grain, never the raw events.
     QDef.sql(
       "ext_gapfill",
-      """WITH daily AS (
-        |  SELECT event_type,
-        |         CAST(date_trunc('day', ts) AS TIMESTAMP) AS day_ts,
-        |         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |           AS day_value_c
-        |  FROM events WHERE value > 200
-        |  GROUP BY 1, 2
-        |),
+      s"""WITH ${duckDailyCents(Some("value > 200"))},
         |span AS (
         |  SELECT event_type, min(day_ts) AS d0, max(day_ts) AS d1
         |  FROM daily GROUP BY 1
@@ -366,13 +373,7 @@ object ExtQueries {
     // keyed window.
     QDef.sql(
       "ext_lag_delta",
-      """WITH daily AS (
-        |  SELECT event_type,
-        |         CAST(date_trunc('day', ts) AS TIMESTAMP) AS day_ts,
-        |         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |           AS day_value_c
-        |  FROM events GROUP BY 1, 2
-        |)
+      s"""WITH ${duckDailyCents()}
         |SELECT event_type, day_ts, day_value_c,
         |       day_value_c - lag(day_value_c) OVER (
         |         PARTITION BY event_type ORDER BY day_ts) AS delta_c
@@ -396,13 +397,7 @@ object ExtQueries {
     // integer day number. One agg shuffle + one keyed window.
     QDef.sql(
       "ext_rolling",
-      """WITH daily AS (
-        |  SELECT event_type,
-        |         CAST(date_trunc('day', ts) AS TIMESTAMP) AS day_ts,
-        |         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |           AS day_value_c
-        |  FROM events GROUP BY 1, 2
-        |),
+      s"""WITH ${duckDailyCents()},
         |d2 AS (
         |  SELECT *, datediff('day', TIMESTAMP '1970-01-01', day_ts) AS day_num
         |  FROM daily
@@ -673,14 +668,8 @@ object ExtQueries {
     // degenerates to a cartesian.
     QDef.sql(
       "x_range_join",
-      """SELECT l.event_id, l.user_id, r.event_id AS p_event
-        |FROM (SELECT event_id, user_id, ts FROM events
-        |      WHERE event_type = 'error') l
-        |JOIN (SELECT event_id, user_id, ts FROM events
-        |      WHERE event_type = 'purchase') r
-        |  ON l.user_id = r.user_id
-        | AND l.ts >= r.ts AND l.ts < r.ts + INTERVAL 1 HOUR
-        |ORDER BY l.event_id, p_event""".stripMargin) { (s, dir) =>
+      duckErrorPurchaseSql("l.event_id, l.user_id, r.event_id AS p_event",
+        "JOIN", "l.event_id, p_event")) { (s, dir) =>
       val ev = t(s, dir, "events")
       val l = ev.filter(col("event_type") === "error")
         .select("event_id", "user_id", "ts")
@@ -704,14 +693,8 @@ object ExtQueries {
     // inequality SQL) must produce one answer.
     QDef.sql(
       "ext_stream_stream",
-      """SELECT l.event_id, l.user_id, r.event_id AS p_event
-        |FROM (SELECT event_id, user_id, ts FROM events
-        |      WHERE event_type = 'error') l
-        |JOIN (SELECT event_id, user_id, ts FROM events
-        |      WHERE event_type = 'purchase') r
-        |  ON l.user_id = r.user_id
-        | AND l.ts >= r.ts AND l.ts < r.ts + INTERVAL 1 HOUR
-        |ORDER BY l.event_id, p_event""".stripMargin) { (s, dir) =>
+      duckErrorPurchaseSql("l.event_id, l.user_id, r.event_id AS p_event",
+        "JOIN", "l.event_id, p_event")) { (s, dir) =>
       val ev = t(s, dir, "events")
       val l = ev.filter(col("event_type") === "error")
         .select("event_id", "user_id", "ts")
@@ -734,14 +717,8 @@ object ExtQueries {
     // those deferred emissions converge to.
     QDef.sql(
       "ext_stream_stream_outer",
-      """SELECT l.event_id, l.user_id, r.event_id AS p_event
-        |FROM (SELECT event_id, user_id, ts FROM events
-        |      WHERE event_type = 'error') l
-        |LEFT JOIN (SELECT event_id, user_id, ts FROM events
-        |           WHERE event_type = 'purchase') r
-        |  ON l.user_id = r.user_id
-        | AND l.ts >= r.ts AND l.ts < r.ts + INTERVAL 1 HOUR
-        |ORDER BY l.event_id, p_event NULLS FIRST""".stripMargin) { (s, dir) =>
+      duckErrorPurchaseSql("l.event_id, l.user_id, r.event_id AS p_event",
+        "LEFT JOIN", "l.event_id, p_event NULLS FIRST")) { (s, dir) =>
       val ev = t(s, dir, "events")
       val l = ev.filter(col("event_type") === "error")
         .select("event_id", "user_id", "ts")
@@ -765,14 +742,8 @@ object ExtQueries {
     // output so the null pattern is fully checkable.
     QDef.sql(
       "ext_stream_full_outer",
-      """SELECT l.event_id, l.user_id, r.event_id AS p_event, r.user_id AS p_user
-        |FROM (SELECT event_id, user_id, ts FROM events
-        |      WHERE event_type = 'error') l
-        |FULL JOIN (SELECT event_id, user_id, ts FROM events
-        |           WHERE event_type = 'purchase') r
-        |  ON l.user_id = r.user_id
-        | AND l.ts >= r.ts AND l.ts < r.ts + INTERVAL 1 HOUR
-        |ORDER BY l.event_id NULLS FIRST, p_event NULLS FIRST""".stripMargin) { (s, dir) =>
+      duckErrorPurchaseSql("l.event_id, l.user_id, r.event_id AS p_event, r.user_id AS p_user",
+        "FULL JOIN", "l.event_id NULLS FIRST, p_event NULLS FIRST")) { (s, dir) =>
       val ev = t(s, dir, "events")
       val l = ev.filter(col("event_type") === "error")
         .select("event_id", "user_id", "ts")

@@ -15,7 +15,7 @@ import Tables.t
   */
 object LlmQueries {
 
-  import DuckSql.{duckFold, duckHash}
+  import DuckSql.{duckBandPairs, duckCcReach, duckFold, duckHash, duckMinHashBands}
 
   /** Memoized CC labels per (session, dir): a real curation pipeline
     * materializes the cluster labeling ONCE and every downstream pass
@@ -60,11 +60,7 @@ object LlmQueries {
     s"""words AS (
        |  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents $where
        |),
-       |shingles AS (
-       |  SELECT doc_id, unnest(list_transform(generate_series(1, len(ws)-1),
-       |    i -> ws[i] || ' ' || ws[i+1])) AS s
-       |  FROM words
-       |),
+       |${DuckSql.duckWordShingles("shingles", "words")},
        |hashed AS (
        |  SELECT DISTINCT doc_id, ${duckHash("s")} AS h FROM shingles
        |)""".stripMargin
@@ -103,6 +99,354 @@ object LlmQueries {
        |  FROM $inCents p LEFT JOIN pack_$tag q ON p.cid = q.cid
        |)""".stripMargin
 
+  /** `sizes(doc_id, n)` shingle counts and `inter(doc_a, doc_b, i)`
+    * shared-shingle counts over `hashed`: the exact-Jaccard inputs. */
+  private val duckSharedShingles: String =
+    """sizes AS (SELECT doc_id, count(*) AS n FROM hashed GROUP BY doc_id),
+      |inter AS (
+      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
+      |  FROM hashed a JOIN hashed b ON a.h = b.h AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2
+      |)""".stripMargin
+
+  /** `$name(vec_id, $col)`: the embeddings as DOUBLE arrays. */
+  private def duckEmb(name: String, col: String = "e"): String =
+    s"""$name AS (
+       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS $col
+       |  FROM embeddings
+       |)""".stripMargin
+
+  /** `v(vec_id, e, nrm)`: the embeddings as doubles with their
+    * dimension-order squared norm; zero vectors stay. */
+  private val duckVecNrm: String =
+    s"""v AS (
+       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
+       |         ${duckFold("list_transform(generate_series(1,64), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")} AS nrm
+       |  FROM embeddings
+       |)""".stripMargin
+
+  /** `cents(cid, ce, cnrm)`: the seeded IVF codebook (iters = 0), the
+    * first 8 nonzero vectors of `v`. */
+  private val duckSeedCents: String =
+    s"""cents AS (
+       |  SELECT vec_id AS cid, e AS ce,
+       |    ${duckFold("list_transform(generate_series(1,64), i -> e[i] * e[i])")} AS cnrm
+       |  FROM v WHERE vec_id < 8 AND nrm > 0
+       |)""".stripMargin
+
+  /** Rows (`sel`, ccos): every nonzero `v` against every `cents`
+    * centroid by cosine, the candidates of the coarse IVF assignment. */
+  private def duckCentroidCos(sel: String): String =
+    s"""    SELECT $sel,
+       |      ${duckFold("list_transform(generate_series(1,64), i -> v.e[i] * c.ce[i])")}
+       |        / (sqrt(v.nrm) * sqrt(c.cnrm)) AS ccos
+       |    FROM v, cents c
+       |    WHERE v.nrm > 0""".stripMargin
+
+  /** `assign(vec_id, carry..., cell)`: each nonzero vector's
+    * argmax-cosine centroid, id tiebreak (LlmOps.annTopKIvf). */
+  private def duckIvfAssign(carry: Seq[String] = Nil): String = {
+    val outer = ("vec_id" +: carry :+ "cid AS cell").mkString(", ")
+    val inner = (("vec_id" +: carry).map("v." + _) :+ "c.cid").mkString(", ")
+    s"""assign AS (
+       |  SELECT $outer
+       |  FROM (
+       |${duckCentroidCos(inner)}
+       |  )
+       |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) = 1
+       |)""".stripMargin
+  }
+
+  /** The trained-IVF prefix of llm_ann_ivf and llm_semantic_dedup:
+    * `v`, seeded init plus 2 k-means rounds, the final `cents` and
+    * `assign(vec_id, e, nrm, cell)`. */
+  private val duckTrainedIvf: String =
+    s"""$duckVecNrm,
+       |cents_0 AS (
+       |  SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8 AND nrm > 0
+       |),
+       |${kmeansIterCte("cents_0", "cents_1", "t1")},
+       |${kmeansIterCte("cents_1", "cents_2", "t2")},
+       |cents AS (
+       |  SELECT cid, ce,
+       |    ${duckFold("list_transform(generate_series(1,64), i -> ce[i] * ce[i])")} AS cnrm
+       |  FROM cents_2
+       |),
+       |${duckIvfAssign(Seq("e", "nrm"))}""".stripMargin
+
+  /** The IVF-PQ prefix: `v`, the seeded `cents` and each nonzero
+    * vector's home cell `assign(vec_id, cell)`. */
+  private val duckIvfPqPrefix: String =
+    s"""$duckVecNrm,
+       |$duckSeedCents,
+       |assign AS (
+       |  SELECT vec_id, cell
+       |  FROM (
+       |${duckCentroidCos("v.vec_id, c.cid AS cell")}
+       |  )
+       |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cell) = 1
+       |)""".stripMargin
+
+  /** Final select of the top `k` candidates per probe from
+    * `scored(probe_id, cand_id, extra..., cos)`. */
+  private def duckCosTopK(k: Int, extra: String = ""): String =
+    s"""SELECT probe_id, cand_id, ${extra}round(cos, 6) AS cosine
+       |FROM scored
+       |QUALIFY row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) <= $k
+       |ORDER BY probe_id, cosine DESC, cand_id""".stripMargin
+
+  /** Symmetric int8 quantization (LlmOps.quantizeInt8): `m(vec_id, v)`,
+    * the per-vector max |x| `s`, and `qz(vec_id, q)`; `keepMx` also
+    * carries `mx` into `qz`. */
+  private def duckQuantCtes(keepMx: Boolean = false): String =
+    s"""${duckEmb("m", "v")},
+       |s AS (
+       |  SELECT vec_id, v,
+       |    list_reduce(list_prepend(0.0, list_transform(v, x -> abs(x))),
+       |                (a, b) -> CASE WHEN b > a THEN b ELSE a END) AS mx
+       |  FROM m
+       |),
+       |qz AS (
+       |  SELECT vec_id,${if (keepMx) " mx," else ""}
+       |    list_transform(v, x -> CAST(round(
+       |      x * (CASE WHEN mx = 0 THEN 0.0 ELSE 127.0 / mx END)) AS BIGINT))
+       |      AS q
+       |  FROM s
+       |)""".stripMargin
+
+  /** `n(vec_id, q, n2)`: the nonzero quantized vectors with their
+    * integer squared norm. */
+  private val duckQuantNorm: String =
+    """n AS (
+      |  SELECT vec_id, q,
+      |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+      |      list_transform(q, x -> x * x)), (a, b) -> a + b) AS n2
+      |  FROM qz
+      |  WHERE n2 > 0
+      |)""".stripMargin
+
+  /** `m0` and `v(vec_id, e, nrm)`: the nonzero embeddings that the
+    * global PQ oracles encode. */
+  private val duckPqVec: String =
+    s"""${duckEmb("m0")},
+       |v AS (
+       |  SELECT vec_id, e,
+       |    list_reduce(list_prepend(0.0, list_transform(e, x -> x * x)),
+       |                (a, b) -> a + b) AS nrm
+       |  FROM m0 WHERE nrm > 0
+       |)""".stripMargin
+
+  /** `code(vec_id, j, rnk)`: each subvector's nearest `cj` centroid,
+    * rank tiebreak. */
+  private val duckPqCode: String =
+    """code AS (
+      |  SELECT vec_id, j, rnk FROM cj
+      |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
+      |                             ORDER BY l2, rnk) = 1
+      |)""".stripMargin
+
+  /** `anrm(vec_id, anrm)`: the reconstruction norm, folded over the
+    * per-subspace `selfd` terms in subspace order. */
+  private val duckPqAnrm: String =
+    """anrm AS (
+      |  SELECT vec_id,
+      |    list_reduce(list_prepend(0.0, list(sd ORDER BY j)),
+      |                (a, b) -> a + b) AS anrm
+      |  FROM selfd GROUP BY vec_id
+      |)""".stripMargin
+
+  /** PQ encode of `v` against the seeded sub-codebooks `cbr(rnk, ce)`
+    * (8 subspaces × the first 8 vectors, LlmOps.annTopKPq), ending in
+    * `code` and `anrm`. `nrmGuard` skips zero vectors for a `v` that
+    * still holds them. */
+  private def duckPqEncode(nrmGuard: Boolean = false): String = {
+    val (seedGuard, cjGuard) =
+      if (nrmGuard) (" AND nrm > 0", "\n  WHERE v.nrm > 0") else ("", "")
+    s"""cbr AS (
+       |  SELECT row_number() OVER (ORDER BY vec_id) AS rnk, e AS ce
+       |  FROM v WHERE vec_id < 8$seedGuard
+       |),
+       |cj AS (
+       |  SELECT v.vec_id, g.j, c.rnk,
+       |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
+       |      i -> (v.e[g.j * 8 + i] - c.ce[g.j * 8 + i])
+       |         * (v.e[g.j * 8 + i] - c.ce[g.j * 8 + i]))),
+       |      (a, b) -> a + b) AS l2
+       |  FROM v, generate_series(0, 7) g(j), cbr c$cjGuard
+       |),
+       |$duckPqCode,
+       |selfd AS (
+       |  SELECT code.vec_id, code.j,
+       |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
+       |      i -> c.ce[code.j * 8 + i] * c.ce[code.j * 8 + i])),
+       |      (a, b) -> a + b) AS sd
+       |  FROM code JOIN cbr c ON c.rnk = code.rnk
+       |),
+       |$duckPqAnrm""".stripMargin
+  }
+
+  /** The global PQ chain through the ADC dots: `duckPqVec`, the
+    * encode, and `sc(probe_id, cand_id, adot)` for probes vec_id < 5
+    * against every other encoded vector. */
+  private val duckPqAdc: String =
+    s"""$duckPqVec,
+       |${duckPqEncode()},
+       |pt AS (
+       |  SELECT p.vec_id AS probe_id, code.vec_id AS cand_id, code.j,
+       |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
+       |      i -> p.e[code.j * 8 + i] * c.ce[code.j * 8 + i])),
+       |      (a, b) -> a + b) AS t
+       |  FROM v p, code JOIN cbr c ON c.rnk = code.rnk
+       |  WHERE p.vec_id < 5 AND code.vec_id != p.vec_id
+       |),
+       |sc AS (
+       |  SELECT probe_id, cand_id,
+       |    list_reduce(list_prepend(0.0, list(t ORDER BY j)),
+       |                (a, b) -> a + b) AS adot
+       |  FROM pt GROUP BY 1, 2
+       |)""".stripMargin
+
+  /** `$out(probe_id, cand_id)`: each probe's top `k` by ADC cosine. */
+  private def duckPqShortlist(out: String, k: Int): String =
+    s"""$out AS (
+       |  SELECT probe_id, cand_id
+       |  FROM (
+       |    SELECT sc.probe_id, sc.cand_id,
+       |      adot / (sqrt(p.nrm) * sqrt(a.anrm)) AS c
+       |    FROM sc JOIN v p ON p.vec_id = sc.probe_id
+       |            JOIN anrm a ON a.vec_id = sc.cand_id
+       |    WHERE a.anrm > 0
+       |  )
+       |  QUALIFY row_number() OVER (PARTITION BY probe_id
+       |                             ORDER BY c DESC, cand_id) <= $k
+       |)""".stripMargin
+
+  /** `scored` (the `dot` over the probe norm from `probes` and the
+    * candidate's reconstruction norm) and the final select of each
+    * probe's top `k`; `cell` carries `sc.cell` through. */
+  private def duckPqTopK(k: Int, cell: Boolean = false, dot: String = "adot",
+      probes: String = "v"): String = {
+    val (scCell, outCell) = if (cell) (", sc.cell", "cell, ") else ("", "")
+    s"""scored AS (
+       |  SELECT sc.probe_id, sc.cand_id$scCell,
+       |    $dot / (sqrt(p.nrm) * sqrt(a.anrm)) AS c
+       |  FROM sc JOIN $probes p ON p.vec_id = sc.probe_id
+       |          JOIN anrm a ON a.vec_id = sc.cand_id
+       |  WHERE a.anrm > 0
+       |)
+       |SELECT probe_id, cand_id, ${outCell}round(c, 6) AS pqcosine
+       |FROM scored
+       |QUALIFY row_number() OVER (PARTITION BY probe_id
+       |                           ORDER BY c DESC, cand_id) <= $k
+       |ORDER BY probe_id, pqcosine DESC, cand_id""".stripMargin
+  }
+
+  /** One per-subspace k-means round of PQ codebook training
+    * (LlmOps.pqCodebookTrained): assign each subvector of `$src.$col`
+    * to its nearest `$cb${r - 1}` centroid, average each (j, rank)
+    * cell, and keep the previous centroid of an empty cell, giving
+    * `$cb$r`. */
+  private def duckPqTrainRound(r: Int, src: String, col: String,
+      cb: String): String =
+    s"""asg$r AS (
+       |  SELECT vec_id, j, rnk FROM (
+       |    SELECT $src.vec_id, g.j, c.rnk,
+       |      list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
+       |        i -> ($src.$col[g.j * 8 + i] - c.ce[g.j * 8 + i])
+       |           * ($src.$col[g.j * 8 + i] - c.ce[g.j * 8 + i]))),
+       |        (a, b) -> a + b) AS l2
+       |    FROM $src, generate_series(0, 7) g(j), $cb${r - 1} c
+       |  )
+       |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
+       |                             ORDER BY l2, rnk) = 1
+       |),
+       |mean$r AS (
+       |  SELECT a.j, a.rnk, g.i AS i, avg($src.$col[a.j * 8 + g.i]) AS mv
+       |  FROM asg$r a JOIN $src ON $src.vec_id = a.vec_id,
+       |       generate_series(1, 8) g(i)
+       |  GROUP BY a.j, a.rnk, g.i
+       |),
+       |pk$r AS (
+       |  SELECT j, rnk, list(mv ORDER BY i) AS seg
+       |  FROM mean$r GROUP BY j, rnk
+       |),
+       |$cb$r AS (
+       |  SELECT c.rnk,
+       |    flatten(list(coalesce(p.seg,
+       |      list_transform(generate_series(1, 8),
+       |        i -> c.ce[g.j * 8 + i])) ORDER BY g.j)) AS ce
+       |  FROM $cb${r - 1} c CROSS JOIN generate_series(0, 7) g(j)
+       |  LEFT JOIN pk$r p ON p.rnk = c.rnk AND p.j = g.j
+       |  GROUP BY c.rnk
+       |)""".stripMargin
+
+  /** The residual IVF-PQ prefix: `duckIvfPqPrefix` plus `rv(vec_id,
+    * cell, e, nrm, bce)`, every assigned vector beside its home
+    * centroid. */
+  private val duckResidualRows: String =
+    s"""$duckIvfPqPrefix,
+       |rv AS (
+       |  SELECT a.vec_id, a.cell, v.e, v.nrm, c.ce AS bce
+       |  FROM assign a JOIN v ON v.vec_id = a.vec_id
+       |                JOIN cents c ON c.cid = a.cell
+       |)""".stripMargin
+
+  /** `$out(rnk, ce)`: a residual sub-codebook seeded from the residuals
+    * of vectors 8..15 (vectors 0..7 are the centroids themselves). */
+  private def duckResidualSeeds(out: String): String =
+    s"""$out AS (
+       |  SELECT row_number() OVER (ORDER BY vec_id) AS rnk,
+       |    list_transform(generate_series(1, 64), i -> e[i] - bce[i]) AS ce
+       |  FROM rv WHERE vec_id >= 8 AND vec_id < 16
+       |)""".stripMargin
+
+  /** The residual IVF-PQ tail against sub-codebook `$cb`: residual
+    * encode, reconstruction norm |centroid + residual|², probe-centroid
+    * dots `pb`, in-cell residual ADC, and the top-3 select. */
+  private def duckResidualAdcSql(cb: String): String =
+    s"""cj AS (
+       |  SELECT rv.vec_id, g.j, c.rnk,
+       |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
+       |      i -> ((rv.e[g.j * 8 + i] - rv.bce[g.j * 8 + i]) - c.ce[g.j * 8 + i])
+       |         * ((rv.e[g.j * 8 + i] - rv.bce[g.j * 8 + i]) - c.ce[g.j * 8 + i]))),
+       |      (a, b) -> a + b) AS l2
+       |  FROM rv, generate_series(0, 7) g(j), $cb c
+       |),
+       |$duckPqCode,
+       |selfd AS (
+       |  SELECT code.vec_id, code.j,
+       |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
+       |      i -> (rv.bce[code.j * 8 + i] + c.ce[code.j * 8 + i])
+       |         * (rv.bce[code.j * 8 + i] + c.ce[code.j * 8 + i]))),
+       |      (a, b) -> a + b) AS sd
+       |  FROM code JOIN $cb c ON c.rnk = code.rnk
+       |            JOIN rv ON rv.vec_id = code.vec_id
+       |),
+       |$duckPqAnrm,
+       |pb AS (
+       |  SELECT vec_id, cell, e, nrm,
+       |    ${duckFold("list_transform(generate_series(1,64), i -> e[i] * bce[i])")} AS pcd
+       |  FROM rv WHERE vec_id < 20
+       |),
+       |pt AS (
+       |  SELECT p.vec_id AS probe_id, ca.vec_id AS cand_id,
+       |         p.cell AS cell, code.j,
+       |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
+       |      i -> p.e[code.j * 8 + i] * c.ce[code.j * 8 + i])),
+       |      (a, b) -> a + b) AS t
+       |  FROM pb p
+       |  JOIN rv ca ON ca.cell = p.cell AND ca.vec_id != p.vec_id
+       |  JOIN code ON code.vec_id = ca.vec_id
+       |  JOIN $cb c ON c.rnk = code.rnk
+       |),
+       |sc AS (
+       |  SELECT probe_id, cand_id, cell,
+       |    list_reduce(list_prepend(0.0, list(t ORDER BY j)),
+       |                (a, b) -> a + b) AS adc
+       |  FROM pt GROUP BY 1, 2, 3
+       |),
+       |${duckPqTopK(3, cell = true, "(p.pcd + sc.adc)", "pb")}""".stripMargin
+
   val defs: Seq[QDef] = Seq(
 
     // ----- MinHash + banded LSH near-duplicate candidates --------------
@@ -111,24 +455,7 @@ object LlmQueries {
     QDef.sql(
       "llm_minhash_pairs",
       s"""WITH ${duckShingleHashes()},
-         |mh AS (
-         |  SELECT doc_id,
-         |    min((1000003 * h + 12345) % 2147483647) AS m0,
-         |    min((1000033 * h + 54321) % 2147483647) AS m1,
-         |    min((1000037 * h + 11111) % 2147483647) AS m2,
-         |    min((1000039 * h + 22222) % 2147483647) AS m3,
-         |    min((1000081 * h + 33333) % 2147483647) AS m4,
-         |    min((1000099 * h + 44444) % 2147483647) AS m5,
-         |    min((1000117 * h + 55555) % 2147483647) AS m6,
-         |    min((1000121 * h + 66666) % 2147483647) AS m7
-         |  FROM hashed GROUP BY doc_id
-         |),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, (m0 * 1000003 + m1) % 2147483647 AS bh FROM mh
-         |  UNION ALL SELECT doc_id, 1, (m2 * 1000003 + m3) % 2147483647 FROM mh
-         |  UNION ALL SELECT doc_id, 2, (m4 * 1000003 + m5) % 2147483647 FROM mh
-         |  UNION ALL SELECT doc_id, 3, (m6 * 1000003 + m7) % 2147483647 FROM mh
-         |)
+         |${duckMinHashBands()}
          |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
          |                         AND a.doc_id < b.doc_id
@@ -144,29 +471,8 @@ object LlmQueries {
     QDef.sql(
       "llm_source_overlap",
       s"""WITH ${duckShingleHashes()},
-         |mh AS (
-         |  SELECT doc_id,
-         |    min((1000003 * h + 12345) % 2147483647) AS m0,
-         |    min((1000033 * h + 54321) % 2147483647) AS m1,
-         |    min((1000037 * h + 11111) % 2147483647) AS m2,
-         |    min((1000039 * h + 22222) % 2147483647) AS m3,
-         |    min((1000081 * h + 33333) % 2147483647) AS m4,
-         |    min((1000099 * h + 44444) % 2147483647) AS m5,
-         |    min((1000117 * h + 55555) % 2147483647) AS m6,
-         |    min((1000121 * h + 66666) % 2147483647) AS m7
-         |  FROM hashed GROUP BY doc_id
-         |),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, (m0 * 1000003 + m1) % 2147483647 AS bh FROM mh
-         |  UNION ALL SELECT doc_id, 1, (m2 * 1000003 + m3) % 2147483647 FROM mh
-         |  UNION ALL SELECT doc_id, 2, (m4 * 1000003 + m5) % 2147483647 FROM mh
-         |  UNION ALL SELECT doc_id, 3, (m6 * 1000003 + m7) % 2147483647 FROM mh
-         |),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |                           AND a.doc_id < b.doc_id
-         |),
+         |${duckMinHashBands()},
+         |${duckBandPairs("cand")},
          |sizes AS (SELECT doc_id, count(*) AS nsh FROM hashed GROUP BY doc_id),
          |inter AS (
          |  SELECT cand.doc_a, cand.doc_b, count(*) AS i
@@ -224,41 +530,15 @@ object LlmQueries {
           .map(i => s"(CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END)")
           .mkString(" + ")
         s"""WITH ${duckShingleHashes()},
-           |mh AS (
-           |  SELECT doc_id,
-           |    min((1000003 * h + 12345) % 2147483647) AS m0,
-           |    min((1000033 * h + 54321) % 2147483647) AS m1,
-           |    min((1000037 * h + 11111) % 2147483647) AS m2,
-           |    min((1000039 * h + 22222) % 2147483647) AS m3,
-           |    min((1000081 * h + 33333) % 2147483647) AS m4,
-           |    min((1000099 * h + 44444) % 2147483647) AS m5,
-           |    min((1000117 * h + 55555) % 2147483647) AS m6,
-           |    min((1000121 * h + 66666) % 2147483647) AS m7
-           |  FROM hashed GROUP BY doc_id
-           |),
-           |bands AS (
-           |  SELECT doc_id, 0 AS band, (m0 * 1000003 + m1) % 2147483647 AS bh FROM mh
-           |  UNION ALL SELECT doc_id, 1, (m2 * 1000003 + m3) % 2147483647 FROM mh
-           |  UNION ALL SELECT doc_id, 2, (m4 * 1000003 + m5) % 2147483647 FROM mh
-           |  UNION ALL SELECT doc_id, 3, (m6 * 1000003 + m7) % 2147483647 FROM mh
-           |),
-           |cand AS (
-           |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-           |                           AND a.doc_id < b.doc_id
-           |),
+           |${duckMinHashBands()},
+           |${duckBandPairs("cand")},
            |est AS (
            |  SELECT cand.doc_a, cand.doc_b,
            |         CAST($agree AS BIGINT) AS sig_matches
            |  FROM cand JOIN mh a ON a.doc_id = cand.doc_a
            |            JOIN mh b ON b.doc_id = cand.doc_b
            |),
-           |sizes AS (SELECT doc_id, count(*) AS n FROM hashed GROUP BY doc_id),
-           |inter AS (
-           |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-           |  FROM hashed a JOIN hashed b ON a.h = b.h AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2
-           |),
+           |$duckSharedShingles,
            |exact AS (
            |  SELECT doc_a, doc_b,
            |         round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) AS jaccard
@@ -302,12 +582,7 @@ object LlmQueries {
     QDef.sql(
       "llm_jaccard_pairs",
       s"""WITH ${duckShingleHashes("WHERE doc_id < 40")},
-         |sizes AS (SELECT doc_id, count(*) AS n FROM hashed GROUP BY doc_id),
-         |inter AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-         |  FROM hashed a JOIN hashed b ON a.h = b.h AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2
-         |)
+         |$duckSharedShingles
          |SELECT doc_a, doc_b,
          |       round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) AS jaccard
          |FROM inter
@@ -336,10 +611,7 @@ object LlmQueries {
          |       * sqrt(${duckFold("list_transform(generate_series(1,64), i -> c.e[i] * c.e[i])")})) AS cos
          |  FROM v p, v c WHERE p.vec_id < 5 AND c.vec_id != p.vec_id
          |)
-         |SELECT probe_id, cand_id, round(cos, 6) AS cosine
-         |FROM scored
-         |QUALIFY row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) <= 5
-         |ORDER BY probe_id, cosine DESC, cand_id""".stripMargin) { (s, dir) =>
+         |${duckCosTopK(5)}""".stripMargin) { (s, dir) =>
       LlmOps.cosineTopK(t(s, dir, "embeddings"), "vec_id", "embedding",
         probeFilter = col("vec_id") < 5, k = 5)
         .orderBy(col("probe_id"), col("cosine").desc, col("cand_id"))
@@ -349,10 +621,7 @@ object LlmQueries {
     // Probes scored only within their bucket: shuffle on bucket id, no n².
     QDef.sql(
       "llm_ann_lsh",
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-         |  FROM embeddings
-         |),
+      s"""WITH ${duckEmb("v")},
          |dots AS (
          |  SELECT vec_id, h,
          |    ${duckFold("""list_transform(generate_series(1,64),
@@ -377,10 +646,7 @@ object LlmQueries {
          |  FROM vn p JOIN vn c ON p.bucket = c.bucket AND c.vec_id != p.vec_id
          |  WHERE p.vec_id < 20
          |)
-         |SELECT probe_id, cand_id, bucket, round(cos, 6) AS cosine
-         |FROM scored
-         |QUALIFY row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) <= 3
-         |ORDER BY probe_id, cosine DESC, cand_id""".stripMargin) { (s, dir) =>
+         |${duckCosTopK(3, "bucket, ")}""".stripMargin) { (s, dir) =>
       LlmOps.annTopKLsh(t(s, dir, "embeddings"), "vec_id", "embedding",
         probeFilter = _ < 20, k = 3, planes = 8)
         .orderBy(col("probe_id"), col("cosine").desc, col("cand_id"))
@@ -395,27 +661,9 @@ object LlmQueries {
     // llm_embed_quantize.
     QDef.sql(
       "llm_ann_ivf_quantized",
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
-         |         ${duckFold("list_transform(generate_series(1,64), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")} AS nrm
-         |  FROM embeddings
-         |),
-         |cents AS (
-         |  SELECT vec_id AS cid, e AS ce,
-         |    ${duckFold("list_transform(generate_series(1,64), i -> e[i] * e[i])")} AS cnrm
-         |  FROM v WHERE vec_id < 8 AND nrm > 0
-         |),
-         |assign AS (
-         |  SELECT vec_id, cid AS cell
-         |  FROM (
-         |    SELECT v.vec_id, c.cid,
-         |      ${duckFold("list_transform(generate_series(1,64), i -> v.e[i] * c.ce[i])")}
-         |        / (sqrt(v.nrm) * sqrt(c.cnrm)) AS ccos
-         |    FROM v, cents c
-         |    WHERE v.nrm > 0
-         |  )
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) = 1
-         |),
+      s"""WITH $duckVecNrm,
+         |$duckSeedCents,
+         |${duckIvfAssign()},
          |s AS (
          |  SELECT vec_id,
          |    list_reduce(list_prepend(0.0, list_transform(e, x -> abs(x))),
@@ -472,10 +720,7 @@ object LlmQueries {
     // band are not searched, by design, never by a quadratic scan.
     QDef.sql(
       "llm_embed_neardup",
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-         |  FROM embeddings
-         |),
+      s"""WITH ${duckEmb("v")},
          |pl AS (
          |  SELECT greatest(1, least(15, length(bin(count(*) - 1)) - 1)) AS p
          |  FROM v
@@ -527,32 +772,7 @@ object LlmQueries {
     // ~1e-16 — far below the round-6 compare.
     QDef.sql(
       "llm_ann_ivf",
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
-         |         ${duckFold("list_transform(generate_series(1,64), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")} AS nrm
-         |  FROM embeddings
-         |),
-         |cents_0 AS (
-         |  SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8 AND nrm > 0
-         |),
-         |${kmeansIterCte("cents_0", "cents_1", "t1")},
-         |${kmeansIterCte("cents_1", "cents_2", "t2")},
-         |cents AS (
-         |  SELECT cid, ce,
-         |    ${duckFold("list_transform(generate_series(1,64), i -> ce[i] * ce[i])")} AS cnrm
-         |  FROM cents_2
-         |),
-         |assign AS (
-         |  SELECT vec_id, e, nrm, cid AS cell
-         |  FROM (
-         |    SELECT v.vec_id, v.e, v.nrm, c.cid,
-         |      ${duckFold("list_transform(generate_series(1,64), i -> v.e[i] * c.ce[i])")}
-         |        / (sqrt(v.nrm) * sqrt(c.cnrm)) AS ccos
-         |    FROM v, cents c
-         |    WHERE v.nrm > 0
-         |  )
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) = 1
-         |),
+      s"""WITH $duckTrainedIvf,
          |scored AS (
          |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id, p.cell AS cell,
          |    ${duckFold("list_transform(generate_series(1,64), i -> p.e[i] * c.e[i])")}
@@ -560,10 +780,7 @@ object LlmQueries {
          |  FROM assign p JOIN assign c ON p.cell = c.cell AND c.vec_id != p.vec_id
          |  WHERE p.vec_id < 20
          |)
-         |SELECT probe_id, cand_id, cell, round(cos, 6) AS cosine
-         |FROM scored
-         |QUALIFY row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) <= 3
-         |ORDER BY probe_id, cosine DESC, cand_id""".stripMargin) { (s, dir) =>
+         |${duckCosTopK(3, "cell, ")}""".stripMargin) { (s, dir) =>
       LlmOps.annTopKIvf(t(s, dir, "embeddings"), "vec_id", "embedding",
         probeFilter = _ < 20, topK = 3, k = 8, iters = 2)
         .orderBy(col("probe_id"), col("cosine").desc, col("cand_id"))
@@ -576,32 +793,7 @@ object LlmQueries {
     // emitted column only), mirrored exactly in the oracle.
     QDef.sql(
       "llm_semantic_dedup",
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
-         |         ${duckFold("list_transform(generate_series(1,64), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")} AS nrm
-         |  FROM embeddings
-         |),
-         |cents_0 AS (
-         |  SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8 AND nrm > 0
-         |),
-         |${kmeansIterCte("cents_0", "cents_1", "t1")},
-         |${kmeansIterCte("cents_1", "cents_2", "t2")},
-         |cents AS (
-         |  SELECT cid, ce,
-         |    ${duckFold("list_transform(generate_series(1,64), i -> ce[i] * ce[i])")} AS cnrm
-         |  FROM cents_2
-         |),
-         |assign AS (
-         |  SELECT vec_id, e, nrm, cid AS cell
-         |  FROM (
-         |    SELECT v.vec_id, v.e, v.nrm, c.cid,
-         |      ${duckFold("list_transform(generate_series(1,64), i -> v.e[i] * c.ce[i])")}
-         |        / (sqrt(v.nrm) * sqrt(c.cnrm)) AS ccos
-         |    FROM v, cents c
-         |    WHERE v.nrm > 0
-         |  )
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) = 1
-         |),
+      s"""WITH $duckTrainedIvf,
          |best AS (
          |  SELECT a.vec_id,
          |    max(${duckFold("list_transform(generate_series(1,64), i -> a.e[i] * b.e[i])")}
@@ -625,25 +817,13 @@ object LlmQueries {
     // CTE; the trained-codebook path is covered by llm_ann_ivf.
     QDef.sql(
       "llm_ann_ivf_probe2",
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
-         |         ${duckFold("list_transform(generate_series(1,64), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")} AS nrm
-         |  FROM embeddings
-         |),
-         |cents AS (
-         |  SELECT vec_id AS cid, e AS ce,
-         |    ${duckFold("list_transform(generate_series(1,64), i -> e[i] * e[i])")} AS cnrm
-         |  FROM v WHERE vec_id < 8 AND nrm > 0
-         |),
+      s"""WITH $duckVecNrm,
+         |$duckSeedCents,
          |ranked AS (
          |  SELECT vec_id, e, nrm, cid,
          |    row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn
          |  FROM (
-         |    SELECT v.vec_id, v.e, v.nrm, c.cid,
-         |      ${duckFold("list_transform(generate_series(1,64), i -> v.e[i] * c.ce[i])")}
-         |        / (sqrt(v.nrm) * sqrt(c.cnrm)) AS ccos
-         |    FROM v, cents c
-         |    WHERE v.nrm > 0
+         |${duckCentroidCos("v.vec_id, v.e, v.nrm, c.cid")}
          |  )
          |),
          |cand AS (SELECT vec_id, e, nrm, cid AS cell FROM ranked WHERE rn = 1),
@@ -655,10 +835,7 @@ object LlmQueries {
          |      / (sqrt(p.nrm) * sqrt(c.nrm)) AS cos
          |  FROM probe p JOIN cand c ON p.cell = c.cell AND c.vec_id != p.vec_id
          |)
-         |SELECT probe_id, cand_id, cell, round(cos, 6) AS cosine
-         |FROM scored
-         |QUALIFY row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) <= 3
-         |ORDER BY probe_id, cosine DESC, cand_id""".stripMargin) { (s, dir) =>
+         |${duckCosTopK(3, "cell, ")}""".stripMargin) { (s, dir) =>
       LlmOps.annTopKIvf(t(s, dir, "embeddings"), "vec_id", "embedding",
         probeFilter = _ < 20, topK = 3, k = 8, iters = 0, nprobe = 2)
         .orderBy(col("probe_id"), col("cosine").desc, col("cand_id"))
@@ -670,38 +847,9 @@ object LlmQueries {
     QDef.sql(
       "llm_dedup_groups",
       s"""WITH RECURSIVE ${duckShingleHashes()},
-         |mh AS (
-         |  SELECT doc_id,
-         |    min((1000003 * h + 12345) % 2147483647) AS m0,
-         |    min((1000033 * h + 54321) % 2147483647) AS m1,
-         |    min((1000037 * h + 11111) % 2147483647) AS m2,
-         |    min((1000039 * h + 22222) % 2147483647) AS m3,
-         |    min((1000081 * h + 33333) % 2147483647) AS m4,
-         |    min((1000099 * h + 44444) % 2147483647) AS m5,
-         |    min((1000117 * h + 55555) % 2147483647) AS m6,
-         |    min((1000121 * h + 66666) % 2147483647) AS m7
-         |  FROM hashed GROUP BY doc_id
-         |),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, (m0 * 1000003 + m1) % 2147483647 AS bh FROM mh
-         |  UNION ALL SELECT doc_id, 1, (m2 * 1000003 + m3) % 2147483647 FROM mh
-         |  UNION ALL SELECT doc_id, 2, (m4 * 1000003 + m5) % 2147483647 FROM mh
-         |  UNION ALL SELECT doc_id, 3, (m6 * 1000003 + m7) % 2147483647 FROM mh
-         |),
-         |prs AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |                           AND a.doc_id < b.doc_id
-         |),
-         |edges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM prs
-         |  UNION ALL SELECT doc_b, doc_a FROM prs
-         |),
-         |reach AS (
-         |  SELECT doc_id, doc_id AS label FROM documents
-         |  UNION
-         |  SELECT e.dst AS doc_id, r.label FROM reach r JOIN edges e ON e.src = r.doc_id
-         |)
+         |${duckMinHashBands()},
+         |${duckBandPairs("prs")},
+         |${duckCcReach("documents")}
          |SELECT doc_id, min(label) AS canonical_id
          |FROM reach GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val docs = t(s, dir, "documents")
@@ -729,13 +877,7 @@ object LlmQueries {
     // stays exactly 1.0 wherever the width lands.
     QDef.sql(
       "llm_simhash_pairs",
-      s"""WITH nn AS (
-         |  SELECT CASE WHEN p >= 15 THEN 15 WHEN p >= 12 THEN 12
-         |              WHEN p >= 10 THEN 10 WHEN p >= 6 THEN 6
-         |              WHEN p >= 5 THEN 5 ELSE 4 END AS wd
-         |  FROM (SELECT greatest(4, least(15, length(bin(count(*) - 1)) - 1))
-         |          AS p FROM documents)
-         |),
+      s"""WITH ${DuckSql.duckBandWidthNn},
          |toks AS (
          |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w FROM documents
          |),
@@ -762,21 +904,7 @@ object LlmQueries {
          |      AS simhash
          |  FROM bitsv GROUP BY doc_id
          |),
-         |banded AS (
-         |  SELECT doc_id, simhash, band,
-         |    (simhash >> CAST(band * nn.wd AS INT))
-         |      & ((CAST(1 AS BIGINT) << nn.wd) - 1) AS slice
-         |  FROM sh, generate_series(0, 14) g(band), nn
-         |  WHERE band < 60 // nn.wd
-         |),
-         |p AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |         CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-         |  FROM banded a JOIN banded b ON a.band = b.band AND a.slice = b.slice
-         |                             AND a.doc_id < b.doc_id
-         |)
-         |SELECT doc_a, doc_b, hamming FROM p WHERE hamming <= 3
-         |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
+         |${DuckSql.duckHammingPairsSql("sh", "simhash", "p")}""".stripMargin) { (s, dir) =>
       LlmOps.simHashPairsAuto(t(s, dir, "documents"), "doc_id", "text",
         maxHamming = 3)
         .orderBy("doc_a", "doc_b")
@@ -791,38 +919,9 @@ object LlmQueries {
     QDef.sql(
       "llm_dedup_best",
       s"""WITH RECURSIVE ${duckShingleHashes()},
-         |mh AS (
-         |  SELECT doc_id,
-         |    min((1000003 * h + 12345) % 2147483647) AS m0,
-         |    min((1000033 * h + 54321) % 2147483647) AS m1,
-         |    min((1000037 * h + 11111) % 2147483647) AS m2,
-         |    min((1000039 * h + 22222) % 2147483647) AS m3,
-         |    min((1000081 * h + 33333) % 2147483647) AS m4,
-         |    min((1000099 * h + 44444) % 2147483647) AS m5,
-         |    min((1000117 * h + 55555) % 2147483647) AS m6,
-         |    min((1000121 * h + 66666) % 2147483647) AS m7
-         |  FROM hashed GROUP BY doc_id
-         |),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, (m0 * 1000003 + m1) % 2147483647 AS bh FROM mh
-         |  UNION ALL SELECT doc_id, 1, (m2 * 1000003 + m3) % 2147483647 FROM mh
-         |  UNION ALL SELECT doc_id, 2, (m4 * 1000003 + m5) % 2147483647 FROM mh
-         |  UNION ALL SELECT doc_id, 3, (m6 * 1000003 + m7) % 2147483647 FROM mh
-         |),
-         |prs AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |                           AND a.doc_id < b.doc_id
-         |),
-         |cedges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM prs
-         |  UNION ALL SELECT doc_b, doc_a FROM prs
-         |),
-         |reach AS (
-         |  SELECT doc_id, doc_id AS label FROM documents
-         |  UNION
-         |  SELECT e.dst AS doc_id, r.label FROM reach r JOIN cedges e ON e.src = r.doc_id
-         |),
+         |${duckMinHashBands()},
+         |${duckBandPairs("prs")},
+         |${duckCcReach("documents", "cedges")},
          |canon AS (
          |  SELECT doc_id, min(label) AS comp FROM reach GROUP BY doc_id
          |),
@@ -871,11 +970,7 @@ object LlmQueries {
       s"""WITH words AS (
          |  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents
          |),
-         |shingles AS (
-         |  SELECT doc_id, unnest(list_transform(generate_series(1, len(ws)-2),
-         |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
-         |  FROM words
-         |),
+         |${DuckSql.duckWordShingles("shingles", "words", 3)},
          |hashed AS (
          |  SELECT DISTINCT doc_id, ${duckHash("s")} AS h FROM shingles
          |),
@@ -931,24 +1026,7 @@ object LlmQueries {
     QDef.sql(
       "llm_incremental_neardedup",
       s"""WITH ${duckShingleHashes()},
-         |mh AS (
-         |  SELECT doc_id,
-         |    min((1000003 * h + 12345) % 2147483647) AS m0,
-         |    min((1000033 * h + 54321) % 2147483647) AS m1,
-         |    min((1000037 * h + 11111) % 2147483647) AS m2,
-         |    min((1000039 * h + 22222) % 2147483647) AS m3,
-         |    min((1000081 * h + 33333) % 2147483647) AS m4,
-         |    min((1000099 * h + 44444) % 2147483647) AS m5,
-         |    min((1000117 * h + 55555) % 2147483647) AS m6,
-         |    min((1000121 * h + 66666) % 2147483647) AS m7
-         |  FROM hashed GROUP BY doc_id
-         |),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, (m0 * 1000003 + m1) % 2147483647 AS bh FROM mh
-         |  UNION ALL SELECT doc_id, 1, (m2 * 1000003 + m3) % 2147483647 FROM mh
-         |  UNION ALL SELECT doc_id, 2, (m4 * 1000003 + m5) % 2147483647 FROM mh
-         |  UNION ALL SELECT doc_id, 3, (m6 * 1000003 + m7) % 2147483647 FROM mh
-         |),
+         |${duckMinHashBands()},
          |cand AS (
          |  SELECT DISTINCT a.doc_id AS nid, b.doc_id AS hid
          |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
@@ -988,23 +1066,7 @@ object LlmQueries {
     // verified through its exact L1/extremes/saturation stats.
     QDef.sql(
       "llm_embed_quantize",
-      """WITH m AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings
-        |),
-        |s AS (
-        |  SELECT vec_id, v,
-        |    list_reduce(list_prepend(0.0, list_transform(v, x -> abs(x))),
-        |                (a, b) -> CASE WHEN b > a THEN b ELSE a END) AS mx
-        |  FROM m
-        |),
-        |qz AS (
-        |  SELECT vec_id, mx,
-        |    list_transform(v, x -> CAST(round(
-        |      x * (CASE WHEN mx = 0 THEN 0.0 ELSE 127.0 / mx END)) AS BIGINT))
-        |      AS q
-        |  FROM s
-        |)
+      s"""WITH ${duckQuantCtes(keepMx = true)}
         |SELECT vec_id, round(mx, 6) AS max_abs,
         |  CAST(len(q) AS BIGINT) AS n_dims,
         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
@@ -1024,23 +1086,7 @@ object LlmQueries {
     // dimension-order folds, IEEE sqrt — bit-for-bit replayable.
     QDef.sql(
       "llm_embed_outliers",
-      s"""WITH m AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings
-         |),
-         |s AS (
-         |  SELECT vec_id, v,
-         |    list_reduce(list_prepend(0.0, list_transform(v, x -> abs(x))),
-         |                (a, b) -> CASE WHEN b > a THEN b ELSE a END) AS mx
-         |  FROM m
-         |),
-         |qz AS (
-         |  SELECT vec_id,
-         |    list_transform(v, x -> CAST(round(
-         |      x * (CASE WHEN mx = 0 THEN 0.0 ELSE 127.0 / mx END)) AS BIGINT))
-         |      AS q
-         |  FROM s
-         |),
+      s"""WITH ${duckQuantCtes()},
          |cd AS (
          |  SELECT p, CAST(sum(x) AS BIGINT) AS sm, count(*) AS n
          |  FROM (SELECT unnest(q) AS x,
@@ -1077,30 +1123,8 @@ object LlmQueries {
     // ordering engine-exact, no float-sum order concerns at all.
     QDef.sql(
       "llm_ann_quantized",
-      """WITH m AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings
-        |),
-        |s AS (
-        |  SELECT vec_id, v,
-        |    list_reduce(list_prepend(0.0, list_transform(v, x -> abs(x))),
-        |                (a, b) -> CASE WHEN b > a THEN b ELSE a END) AS mx
-        |  FROM m
-        |),
-        |qz AS (
-        |  SELECT vec_id,
-        |    list_transform(v, x -> CAST(round(
-        |      x * (CASE WHEN mx = 0 THEN 0.0 ELSE 127.0 / mx END)) AS BIGINT))
-        |      AS q
-        |  FROM s
-        |),
-        |n AS (
-        |  SELECT vec_id, q,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(q, x -> x * x)), (a, b) -> a + b) AS n2
-        |  FROM qz
-        |  WHERE n2 > 0
-        |),
+      s"""WITH ${duckQuantCtes()},
+        |$duckQuantNorm,
         |scored AS (
         |  SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
         |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
@@ -1127,72 +1151,8 @@ object LlmQueries {
     // scores bit for bit.
     QDef.sql(
       "llm_ann_pq",
-      """WITH m0 AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |  FROM embeddings
-        |),
-        |v AS (
-        |  SELECT vec_id, e,
-        |    list_reduce(list_prepend(0.0, list_transform(e, x -> x * x)),
-        |                (a, b) -> a + b) AS nrm
-        |  FROM m0 WHERE nrm > 0
-        |),
-        |cbr AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) AS rnk, e AS ce
-        |  FROM v WHERE vec_id < 8
-        |),
-        |cj AS (
-        |  SELECT v.vec_id, g.j, c.rnk,
-        |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-        |      i -> (v.e[g.j * 8 + i] - c.ce[g.j * 8 + i])
-        |         * (v.e[g.j * 8 + i] - c.ce[g.j * 8 + i]))),
-        |      (a, b) -> a + b) AS l2
-        |  FROM v, generate_series(0, 7) g(j), cbr c
-        |),
-        |code AS (
-        |  SELECT vec_id, j, rnk FROM cj
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-        |                             ORDER BY l2, rnk) = 1
-        |),
-        |selfd AS (
-        |  SELECT code.vec_id, code.j,
-        |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-        |      i -> c.ce[code.j * 8 + i] * c.ce[code.j * 8 + i])),
-        |      (a, b) -> a + b) AS sd
-        |  FROM code JOIN cbr c ON c.rnk = code.rnk
-        |),
-        |anrm AS (
-        |  SELECT vec_id,
-        |    list_reduce(list_prepend(0.0, list(sd ORDER BY j)),
-        |                (a, b) -> a + b) AS anrm
-        |  FROM selfd GROUP BY vec_id
-        |),
-        |pt AS (
-        |  SELECT p.vec_id AS probe_id, code.vec_id AS cand_id, code.j,
-        |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-        |      i -> p.e[code.j * 8 + i] * c.ce[code.j * 8 + i])),
-        |      (a, b) -> a + b) AS t
-        |  FROM v p, code JOIN cbr c ON c.rnk = code.rnk
-        |  WHERE p.vec_id < 5 AND code.vec_id != p.vec_id
-        |),
-        |sc AS (
-        |  SELECT probe_id, cand_id,
-        |    list_reduce(list_prepend(0.0, list(t ORDER BY j)),
-        |                (a, b) -> a + b) AS adot
-        |  FROM pt GROUP BY 1, 2
-        |),
-        |scored AS (
-        |  SELECT sc.probe_id, sc.cand_id,
-        |    adot / (sqrt(p.nrm) * sqrt(a.anrm)) AS c
-        |  FROM sc JOIN v p ON p.vec_id = sc.probe_id
-        |          JOIN anrm a ON a.vec_id = sc.cand_id
-        |  WHERE a.anrm > 0
-        |)
-        |SELECT probe_id, cand_id, round(c, 6) AS pqcosine
-        |FROM scored
-        |QUALIFY row_number() OVER (PARTITION BY probe_id
-        |                           ORDER BY c DESC, cand_id) <= 5
-        |ORDER BY probe_id, pqcosine DESC, cand_id""".stripMargin) { (s, dir) =>
+      s"""WITH $duckPqAdc,
+        |${duckPqTopK(5)}""".stripMargin) { (s, dir) =>
       LlmOps.annTopKPq(t(s, dir, "embeddings"), "vec_id", "embedding",
         probeFilter = _ < 5, k = 5)
         .orderBy(col("probe_id"), col("pqcosine").desc, col("cand_id"))
@@ -1204,58 +1164,8 @@ object LlmQueries {
     // the global sub-codebooks. Candidate = cell id + 8 codes + 1 norm.
     QDef.sql(
       "llm_ann_ivf_pq",
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
-         |         ${duckFold("list_transform(generate_series(1,64), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")} AS nrm
-         |  FROM embeddings
-         |),
-         |cents AS (
-         |  SELECT vec_id AS cid, e AS ce,
-         |    ${duckFold("list_transform(generate_series(1,64), i -> e[i] * e[i])")} AS cnrm
-         |  FROM v WHERE vec_id < 8 AND nrm > 0
-         |),
-         |assign AS (
-         |  SELECT vec_id, cell
-         |  FROM (
-         |    SELECT v.vec_id, c.cid AS cell,
-         |      ${duckFold("list_transform(generate_series(1,64), i -> v.e[i] * c.ce[i])")}
-         |        / (sqrt(v.nrm) * sqrt(c.cnrm)) AS ccos
-         |    FROM v, cents c
-         |    WHERE v.nrm > 0
-         |  )
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cell) = 1
-         |),
-         |cbr AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) AS rnk, e AS ce
-         |  FROM v WHERE vec_id < 8 AND nrm > 0
-         |),
-         |cj AS (
-         |  SELECT v.vec_id, g.j, c.rnk,
-         |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-         |      i -> (v.e[g.j * 8 + i] - c.ce[g.j * 8 + i])
-         |         * (v.e[g.j * 8 + i] - c.ce[g.j * 8 + i]))),
-         |      (a, b) -> a + b) AS l2
-         |  FROM v, generate_series(0, 7) g(j), cbr c
-         |  WHERE v.nrm > 0
-         |),
-         |code AS (
-         |  SELECT vec_id, j, rnk FROM cj
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-         |                             ORDER BY l2, rnk) = 1
-         |),
-         |selfd AS (
-         |  SELECT code.vec_id, code.j,
-         |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-         |      i -> c.ce[code.j * 8 + i] * c.ce[code.j * 8 + i])),
-         |      (a, b) -> a + b) AS sd
-         |  FROM code JOIN cbr c ON c.rnk = code.rnk
-         |),
-         |anrm AS (
-         |  SELECT vec_id,
-         |    list_reduce(list_prepend(0.0, list(sd ORDER BY j)),
-         |                (a, b) -> a + b) AS anrm
-         |  FROM selfd GROUP BY vec_id
-         |),
+      s"""WITH $duckIvfPqPrefix,
+         |${duckPqEncode(nrmGuard = true)},
          |pt AS (
          |  SELECT p.vec_id AS probe_id, a.vec_id AS cand_id,
          |         pa.cell AS cell, code.j,
@@ -1275,18 +1185,7 @@ object LlmQueries {
          |                (a, b) -> a + b) AS adot
          |  FROM pt GROUP BY 1, 2, 3
          |),
-         |scored AS (
-         |  SELECT sc.probe_id, sc.cand_id, sc.cell,
-         |    adot / (sqrt(p.nrm) * sqrt(a.anrm)) AS c
-         |  FROM sc JOIN v p ON p.vec_id = sc.probe_id
-         |          JOIN anrm a ON a.vec_id = sc.cand_id
-         |  WHERE a.anrm > 0
-         |)
-         |SELECT probe_id, cand_id, cell, round(c, 6) AS pqcosine
-         |FROM scored
-         |QUALIFY row_number() OVER (PARTITION BY probe_id
-         |                           ORDER BY c DESC, cand_id) <= 3
-         |ORDER BY probe_id, pqcosine DESC, cand_id""".stripMargin) { (s, dir) =>
+         |${duckPqTopK(3, cell = true)}""".stripMargin) { (s, dir) =>
       LlmOps.annTopKIvfPq(t(s, dir, "embeddings"), "vec_id", "embedding",
         probeFilter = _ < 20, topK = 3, kCells = 8, iters = 0, nprobe = 1)
         .orderBy(col("probe_id"), col("pqcosine").desc, col("cand_id"))
@@ -1299,99 +1198,9 @@ object LlmQueries {
     // reconstruction|²; pair score = dot(p, centroid) + residual ADC.
     QDef.sql(
       "llm_ann_ivf_pqr",
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
-         |         ${duckFold("list_transform(generate_series(1,64), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")} AS nrm
-         |  FROM embeddings
-         |),
-         |cents AS (
-         |  SELECT vec_id AS cid, e AS ce,
-         |    ${duckFold("list_transform(generate_series(1,64), i -> e[i] * e[i])")} AS cnrm
-         |  FROM v WHERE vec_id < 8 AND nrm > 0
-         |),
-         |assign AS (
-         |  SELECT vec_id, cell
-         |  FROM (
-         |    SELECT v.vec_id, c.cid AS cell,
-         |      ${duckFold("list_transform(generate_series(1,64), i -> v.e[i] * c.ce[i])")}
-         |        / (sqrt(v.nrm) * sqrt(c.cnrm)) AS ccos
-         |    FROM v, cents c
-         |    WHERE v.nrm > 0
-         |  )
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cell) = 1
-         |),
-         |rv AS (
-         |  SELECT a.vec_id, a.cell, v.e, v.nrm, c.ce AS bce
-         |  FROM assign a JOIN v ON v.vec_id = a.vec_id
-         |                JOIN cents c ON c.cid = a.cell
-         |),
-         |rcb AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) AS rnk,
-         |    list_transform(generate_series(1, 64), i -> e[i] - bce[i]) AS ce
-         |  FROM rv WHERE vec_id >= 8 AND vec_id < 16
-         |),
-         |cj AS (
-         |  SELECT rv.vec_id, g.j, c.rnk,
-         |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-         |      i -> ((rv.e[g.j * 8 + i] - rv.bce[g.j * 8 + i]) - c.ce[g.j * 8 + i])
-         |         * ((rv.e[g.j * 8 + i] - rv.bce[g.j * 8 + i]) - c.ce[g.j * 8 + i]))),
-         |      (a, b) -> a + b) AS l2
-         |  FROM rv, generate_series(0, 7) g(j), rcb c
-         |),
-         |code AS (
-         |  SELECT vec_id, j, rnk FROM cj
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-         |                             ORDER BY l2, rnk) = 1
-         |),
-         |selfd AS (
-         |  SELECT code.vec_id, code.j,
-         |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-         |      i -> (rv.bce[code.j * 8 + i] + c.ce[code.j * 8 + i])
-         |         * (rv.bce[code.j * 8 + i] + c.ce[code.j * 8 + i]))),
-         |      (a, b) -> a + b) AS sd
-         |  FROM code JOIN rcb c ON c.rnk = code.rnk
-         |            JOIN rv ON rv.vec_id = code.vec_id
-         |),
-         |anrm AS (
-         |  SELECT vec_id,
-         |    list_reduce(list_prepend(0.0, list(sd ORDER BY j)),
-         |                (a, b) -> a + b) AS anrm
-         |  FROM selfd GROUP BY vec_id
-         |),
-         |pb AS (
-         |  SELECT vec_id, cell, e, nrm,
-         |    ${duckFold("list_transform(generate_series(1,64), i -> e[i] * bce[i])")} AS pcd
-         |  FROM rv WHERE vec_id < 20
-         |),
-         |pt AS (
-         |  SELECT p.vec_id AS probe_id, ca.vec_id AS cand_id,
-         |         p.cell AS cell, code.j,
-         |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-         |      i -> p.e[code.j * 8 + i] * c.ce[code.j * 8 + i])),
-         |      (a, b) -> a + b) AS t
-         |  FROM pb p
-         |  JOIN rv ca ON ca.cell = p.cell AND ca.vec_id != p.vec_id
-         |  JOIN code ON code.vec_id = ca.vec_id
-         |  JOIN rcb c ON c.rnk = code.rnk
-         |),
-         |sc AS (
-         |  SELECT probe_id, cand_id, cell,
-         |    list_reduce(list_prepend(0.0, list(t ORDER BY j)),
-         |                (a, b) -> a + b) AS adc
-         |  FROM pt GROUP BY 1, 2, 3
-         |),
-         |scored AS (
-         |  SELECT sc.probe_id, sc.cand_id, sc.cell,
-         |    (p.pcd + sc.adc) / (sqrt(p.nrm) * sqrt(a.anrm)) AS c
-         |  FROM sc JOIN pb p ON p.vec_id = sc.probe_id
-         |          JOIN anrm a ON a.vec_id = sc.cand_id
-         |  WHERE a.anrm > 0
-         |)
-         |SELECT probe_id, cand_id, cell, round(c, 6) AS pqcosine
-         |FROM scored
-         |QUALIFY row_number() OVER (PARTITION BY probe_id
-         |                           ORDER BY c DESC, cand_id) <= 3
-         |ORDER BY probe_id, pqcosine DESC, cand_id""".stripMargin) { (s, dir) =>
+      s"""WITH $duckResidualRows,
+         |${duckResidualSeeds("rcb")},
+         |${duckResidualAdcSql("rcb")}""".stripMargin) { (s, dir) =>
       LlmOps.annTopKIvfPq(t(s, dir, "embeddings"), "vec_id", "embedding",
         probeFilter = _ < 20, topK = 3, kCells = 8, iters = 0, nprobe = 1,
         residual = true)
@@ -1410,140 +1219,17 @@ object LlmQueries {
     // m x ksub budget (see PqTrainSpec for the measured recall and
     // reconstruction-error comparison on a clustered corpus).
     QDef.sql(
-      "llm_ann_ivf_pqr_t", {
-        def round_(r: Int): String =
-          s"""asg$r AS (
-             |  SELECT vec_id, j, rnk FROM (
-             |    SELECT res.vec_id, g.j, c.rnk,
-             |      list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-             |        i -> (res.re[g.j * 8 + i] - c.ce[g.j * 8 + i])
-             |           * (res.re[g.j * 8 + i] - c.ce[g.j * 8 + i]))),
-             |        (a, b) -> a + b) AS l2
-             |    FROM res, generate_series(0, 7) g(j), rcb${r - 1} c
-             |  )
-             |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-             |                             ORDER BY l2, rnk) = 1
-             |),
-             |mean$r AS (
-             |  SELECT a.j, a.rnk, g.i AS i, avg(res.re[a.j * 8 + g.i]) AS mv
-             |  FROM asg$r a JOIN res ON res.vec_id = a.vec_id,
-             |       generate_series(1, 8) g(i)
-             |  GROUP BY a.j, a.rnk, g.i
-             |),
-             |pk$r AS (
-             |  SELECT j, rnk, list(mv ORDER BY i) AS seg
-             |  FROM mean$r GROUP BY j, rnk
-             |),
-             |rcb$r AS (
-             |  SELECT c.rnk,
-             |    flatten(list(coalesce(p.seg,
-             |      list_transform(generate_series(1, 8),
-             |        i -> c.ce[g.j * 8 + i])) ORDER BY g.j)) AS ce
-             |  FROM rcb${r - 1} c CROSS JOIN generate_series(0, 7) g(j)
-             |  LEFT JOIN pk$r p ON p.rnk = c.rnk AND p.j = g.j
-             |  GROUP BY c.rnk
-             |)""".stripMargin
-        s"""WITH v AS (
-           |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
-           |         ${duckFold("list_transform(generate_series(1,64), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")} AS nrm
-           |  FROM embeddings
-           |),
-           |cents AS (
-           |  SELECT vec_id AS cid, e AS ce,
-           |    ${duckFold("list_transform(generate_series(1,64), i -> e[i] * e[i])")} AS cnrm
-           |  FROM v WHERE vec_id < 8 AND nrm > 0
-           |),
-           |assign AS (
-           |  SELECT vec_id, cell
-           |  FROM (
-           |    SELECT v.vec_id, c.cid AS cell,
-           |      ${duckFold("list_transform(generate_series(1,64), i -> v.e[i] * c.ce[i])")}
-           |        / (sqrt(v.nrm) * sqrt(c.cnrm)) AS ccos
-           |    FROM v, cents c
-           |    WHERE v.nrm > 0
-           |  )
-           |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cell) = 1
-           |),
-           |rv AS (
-           |  SELECT a.vec_id, a.cell, v.e, v.nrm, c.ce AS bce
-           |  FROM assign a JOIN v ON v.vec_id = a.vec_id
-           |                JOIN cents c ON c.cid = a.cell
-           |),
-           |res AS (
-           |  SELECT vec_id,
-           |    list_transform(generate_series(1, 64), i -> e[i] - bce[i]) AS re
-           |  FROM rv
-           |),
-           |rcb0 AS (
-           |  SELECT row_number() OVER (ORDER BY vec_id) AS rnk,
-           |    list_transform(generate_series(1, 64), i -> e[i] - bce[i]) AS ce
-           |  FROM rv WHERE vec_id >= 8 AND vec_id < 16
-           |),
-           |${round_(1)},
-           |${round_(2)},
-           |cj AS (
-           |  SELECT rv.vec_id, g.j, c.rnk,
-           |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-           |      i -> ((rv.e[g.j * 8 + i] - rv.bce[g.j * 8 + i]) - c.ce[g.j * 8 + i])
-           |         * ((rv.e[g.j * 8 + i] - rv.bce[g.j * 8 + i]) - c.ce[g.j * 8 + i]))),
-           |      (a, b) -> a + b) AS l2
-           |  FROM rv, generate_series(0, 7) g(j), rcb2 c
-           |),
-           |code AS (
-           |  SELECT vec_id, j, rnk FROM cj
-           |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-           |                             ORDER BY l2, rnk) = 1
-           |),
-           |selfd AS (
-           |  SELECT code.vec_id, code.j,
-           |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-           |      i -> (rv.bce[code.j * 8 + i] + c.ce[code.j * 8 + i])
-           |         * (rv.bce[code.j * 8 + i] + c.ce[code.j * 8 + i]))),
-           |      (a, b) -> a + b) AS sd
-           |  FROM code JOIN rcb2 c ON c.rnk = code.rnk
-           |            JOIN rv ON rv.vec_id = code.vec_id
-           |),
-           |anrm AS (
-           |  SELECT vec_id,
-           |    list_reduce(list_prepend(0.0, list(sd ORDER BY j)),
-           |                (a, b) -> a + b) AS anrm
-           |  FROM selfd GROUP BY vec_id
-           |),
-           |pb AS (
-           |  SELECT vec_id, cell, e, nrm,
-           |    ${duckFold("list_transform(generate_series(1,64), i -> e[i] * bce[i])")} AS pcd
-           |  FROM rv WHERE vec_id < 20
-           |),
-           |pt AS (
-           |  SELECT p.vec_id AS probe_id, ca.vec_id AS cand_id,
-           |         p.cell AS cell, code.j,
-           |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-           |      i -> p.e[code.j * 8 + i] * c.ce[code.j * 8 + i])),
-           |      (a, b) -> a + b) AS t
-           |  FROM pb p
-           |  JOIN rv ca ON ca.cell = p.cell AND ca.vec_id != p.vec_id
-           |  JOIN code ON code.vec_id = ca.vec_id
-           |  JOIN rcb2 c ON c.rnk = code.rnk
-           |),
-           |sc AS (
-           |  SELECT probe_id, cand_id, cell,
-           |    list_reduce(list_prepend(0.0, list(t ORDER BY j)),
-           |                (a, b) -> a + b) AS adc
-           |  FROM pt GROUP BY 1, 2, 3
-           |),
-           |scored AS (
-           |  SELECT sc.probe_id, sc.cand_id, sc.cell,
-           |    (p.pcd + sc.adc) / (sqrt(p.nrm) * sqrt(a.anrm)) AS c
-           |  FROM sc JOIN pb p ON p.vec_id = sc.probe_id
-           |          JOIN anrm a ON a.vec_id = sc.cand_id
-           |  WHERE a.anrm > 0
-           |)
-           |SELECT probe_id, cand_id, cell, round(c, 6) AS pqcosine
-           |FROM scored
-           |QUALIFY row_number() OVER (PARTITION BY probe_id
-           |                           ORDER BY c DESC, cand_id) <= 3
-           |ORDER BY probe_id, pqcosine DESC, cand_id""".stripMargin
-      }) { (s, dir) =>
+      "llm_ann_ivf_pqr_t",
+      s"""WITH $duckResidualRows,
+         |res AS (
+         |  SELECT vec_id,
+         |    list_transform(generate_series(1, 64), i -> e[i] - bce[i]) AS re
+         |  FROM rv
+         |),
+         |${duckResidualSeeds("rcb0")},
+         |${duckPqTrainRound(1, "res", "re", "rcb")},
+         |${duckPqTrainRound(2, "res", "re", "rcb")},
+         |${duckResidualAdcSql("rcb2")}""".stripMargin) { (s, dir) =>
       LlmOps.annTopKIvfPq(t(s, dir, "embeddings"), "vec_id", "embedding",
         probeFilter = _ < 20, topK = 3, kCells = 8, iters = 0, nprobe = 1,
         residual = true, trainIters = 2)
@@ -1559,38 +1245,6 @@ object LlmQueries {
     // means: 0.955 seeded → 0.698 trained at ksub=8).
     QDef.sql(
       "llm_pq_error", {
-        def round_(r: Int): String =
-          s"""asg$r AS (
-             |  SELECT vec_id, j, rnk FROM (
-             |    SELECT v.vec_id, g.j, c.rnk,
-             |      list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-             |        i -> (v.e[g.j * 8 + i] - c.ce[g.j * 8 + i])
-             |           * (v.e[g.j * 8 + i] - c.ce[g.j * 8 + i]))),
-             |        (a, b) -> a + b) AS l2
-             |    FROM v, generate_series(0, 7) g(j), cb${r - 1} c
-             |  )
-             |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-             |                             ORDER BY l2, rnk) = 1
-             |),
-             |mean$r AS (
-             |  SELECT a.j, a.rnk, g.i AS i, avg(v.e[a.j * 8 + g.i]) AS mv
-             |  FROM asg$r a JOIN v ON v.vec_id = a.vec_id,
-             |       generate_series(1, 8) g(i)
-             |  GROUP BY a.j, a.rnk, g.i
-             |),
-             |pk$r AS (
-             |  SELECT j, rnk, list(mv ORDER BY i) AS seg
-             |  FROM mean$r GROUP BY j, rnk
-             |),
-             |cb$r AS (
-             |  SELECT c.rnk,
-             |    flatten(list(coalesce(p.seg,
-             |      list_transform(generate_series(1, 8),
-             |        i -> c.ce[g.j * 8 + i])) ORDER BY g.j)) AS ce
-             |  FROM cb${r - 1} c CROSS JOIN generate_series(0, 7) g(j)
-             |  LEFT JOIN pk$r p ON p.rnk = c.rnk AND p.j = g.j
-             |  GROUP BY c.rnk
-             |)""".stripMargin
         def errCte(name: String, cbCte: String): String =
           s"""$name AS (
              |  SELECT vec_id,
@@ -1607,22 +1261,13 @@ object LlmQueries {
              |    ) GROUP BY vec_id, j
              |  ) GROUP BY vec_id
              |)""".stripMargin
-        s"""WITH m0 AS (
-           |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           |  FROM embeddings
-           |),
-           |v AS (
-           |  SELECT vec_id, e,
-           |    list_reduce(list_prepend(0.0, list_transform(e, x -> x * x)),
-           |                (a, b) -> a + b) AS nrm
-           |  FROM m0 WHERE nrm > 0
-           |),
+        s"""WITH $duckPqVec,
            |cb0 AS (
            |  SELECT row_number() OVER (ORDER BY vec_id) AS rnk, e AS ce
            |  FROM v WHERE vec_id < 8
            |),
-           |${round_(1)},
-           |${round_(2)},
+           |${duckPqTrainRound(1, "v", "e", "cb")},
+           |${duckPqTrainRound(2, "v", "e", "cb")},
            |${errCte("e0", "cb0")},
            |${errCte("et", "cb2")}
            |SELECT v.vec_id,
@@ -1647,72 +1292,8 @@ object LlmQueries {
     // answer to the PQ recall ceiling (cf. llm_ann_pq_recall).
     QDef.sql(
       "llm_ann_pq_rerank",
-      """WITH m0 AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |  FROM embeddings
-        |),
-        |v AS (
-        |  SELECT vec_id, e,
-        |    list_reduce(list_prepend(0.0, list_transform(e, x -> x * x)),
-        |                (a, b) -> a + b) AS nrm
-        |  FROM m0 WHERE nrm > 0
-        |),
-        |cbr AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) AS rnk, e AS ce
-        |  FROM v WHERE vec_id < 8
-        |),
-        |cj AS (
-        |  SELECT v.vec_id, g.j, c.rnk,
-        |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-        |      i -> (v.e[g.j * 8 + i] - c.ce[g.j * 8 + i])
-        |         * (v.e[g.j * 8 + i] - c.ce[g.j * 8 + i]))),
-        |      (a, b) -> a + b) AS l2
-        |  FROM v, generate_series(0, 7) g(j), cbr c
-        |),
-        |code AS (
-        |  SELECT vec_id, j, rnk FROM cj
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-        |                             ORDER BY l2, rnk) = 1
-        |),
-        |selfd AS (
-        |  SELECT code.vec_id, code.j,
-        |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-        |      i -> c.ce[code.j * 8 + i] * c.ce[code.j * 8 + i])),
-        |      (a, b) -> a + b) AS sd
-        |  FROM code JOIN cbr c ON c.rnk = code.rnk
-        |),
-        |anrm AS (
-        |  SELECT vec_id,
-        |    list_reduce(list_prepend(0.0, list(sd ORDER BY j)),
-        |                (a, b) -> a + b) AS anrm
-        |  FROM selfd GROUP BY vec_id
-        |),
-        |pt AS (
-        |  SELECT p.vec_id AS probe_id, code.vec_id AS cand_id, code.j,
-        |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-        |      i -> p.e[code.j * 8 + i] * c.ce[code.j * 8 + i])),
-        |      (a, b) -> a + b) AS t
-        |  FROM v p, code JOIN cbr c ON c.rnk = code.rnk
-        |  WHERE p.vec_id < 5 AND code.vec_id != p.vec_id
-        |),
-        |sc AS (
-        |  SELECT probe_id, cand_id,
-        |    list_reduce(list_prepend(0.0, list(t ORDER BY j)),
-        |                (a, b) -> a + b) AS adot
-        |  FROM pt GROUP BY 1, 2
-        |),
-        |coarse AS (
-        |  SELECT probe_id, cand_id
-        |  FROM (
-        |    SELECT sc.probe_id, sc.cand_id,
-        |      adot / (sqrt(p.nrm) * sqrt(a.anrm)) AS c
-        |    FROM sc JOIN v p ON p.vec_id = sc.probe_id
-        |            JOIN anrm a ON a.vec_id = sc.cand_id
-        |    WHERE a.anrm > 0
-        |  )
-        |  QUALIFY row_number() OVER (PARTITION BY probe_id
-        |                             ORDER BY c DESC, cand_id) <= 20
-        |),
+      s"""WITH $duckPqAdc,
+        |${duckPqShortlist("coarse", 20)},
         |rr AS (
         |  SELECT co.probe_id, co.cand_id,
         |    list_reduce(list_prepend(0.0, list_transform(
@@ -1737,72 +1318,8 @@ object LlmQueries {
     // the compressed index at scale.
     QDef.sql(
       "llm_ann_pq_recall",
-      """WITH m0 AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |  FROM embeddings
-        |),
-        |v AS (
-        |  SELECT vec_id, e,
-        |    list_reduce(list_prepend(0.0, list_transform(e, x -> x * x)),
-        |                (a, b) -> a + b) AS nrm
-        |  FROM m0 WHERE nrm > 0
-        |),
-        |cbr AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) AS rnk, e AS ce
-        |  FROM v WHERE vec_id < 8
-        |),
-        |cj AS (
-        |  SELECT v.vec_id, g.j, c.rnk,
-        |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-        |      i -> (v.e[g.j * 8 + i] - c.ce[g.j * 8 + i])
-        |         * (v.e[g.j * 8 + i] - c.ce[g.j * 8 + i]))),
-        |      (a, b) -> a + b) AS l2
-        |  FROM v, generate_series(0, 7) g(j), cbr c
-        |),
-        |code AS (
-        |  SELECT vec_id, j, rnk FROM cj
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-        |                             ORDER BY l2, rnk) = 1
-        |),
-        |selfd AS (
-        |  SELECT code.vec_id, code.j,
-        |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-        |      i -> c.ce[code.j * 8 + i] * c.ce[code.j * 8 + i])),
-        |      (a, b) -> a + b) AS sd
-        |  FROM code JOIN cbr c ON c.rnk = code.rnk
-        |),
-        |anrm AS (
-        |  SELECT vec_id,
-        |    list_reduce(list_prepend(0.0, list(sd ORDER BY j)),
-        |                (a, b) -> a + b) AS anrm
-        |  FROM selfd GROUP BY vec_id
-        |),
-        |pt AS (
-        |  SELECT p.vec_id AS probe_id, code.vec_id AS cand_id, code.j,
-        |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8),
-        |      i -> p.e[code.j * 8 + i] * c.ce[code.j * 8 + i])),
-        |      (a, b) -> a + b) AS t
-        |  FROM v p, code JOIN cbr c ON c.rnk = code.rnk
-        |  WHERE p.vec_id < 5 AND code.vec_id != p.vec_id
-        |),
-        |sc AS (
-        |  SELECT probe_id, cand_id,
-        |    list_reduce(list_prepend(0.0, list(t ORDER BY j)),
-        |                (a, b) -> a + b) AS adot
-        |  FROM pt GROUP BY 1, 2
-        |),
-        |pqtop AS (
-        |  SELECT probe_id, cand_id
-        |  FROM (
-        |    SELECT sc.probe_id, sc.cand_id,
-        |      adot / (sqrt(p.nrm) * sqrt(a.anrm)) AS c
-        |    FROM sc JOIN v p ON p.vec_id = sc.probe_id
-        |            JOIN anrm a ON a.vec_id = sc.cand_id
-        |    WHERE a.anrm > 0
-        |  )
-        |  QUALIFY row_number() OVER (PARTITION BY probe_id
-        |                             ORDER BY c DESC, cand_id) <= 5
-        |),
+      s"""WITH $duckPqAdc,
+        |${duckPqShortlist("pqtop", 5)},
         |extop AS (
         |  SELECT probe_id, cand_id
         |  FROM (
@@ -1843,30 +1360,8 @@ object LlmQueries {
     // the float math touches 20·probes rows, never the corpus.
     QDef.sql(
       "llm_ann_rerank",
-      s"""WITH m AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings
-         |),
-         |s AS (
-         |  SELECT vec_id, v,
-         |    list_reduce(list_prepend(0.0, list_transform(v, x -> abs(x))),
-         |                (a, b) -> CASE WHEN b > a THEN b ELSE a END) AS mx
-         |  FROM m
-         |),
-         |qz AS (
-         |  SELECT vec_id,
-         |    list_transform(v, x -> CAST(round(
-         |      x * (CASE WHEN mx = 0 THEN 0.0 ELSE 127.0 / mx END)) AS BIGINT))
-         |      AS q
-         |  FROM s
-         |),
-         |n AS (
-         |  SELECT vec_id, q,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(q, x -> x * x)), (a, b) -> a + b) AS n2
-         |  FROM qz
-         |  WHERE n2 > 0
-         |),
+      s"""WITH ${duckQuantCtes()},
+         |$duckQuantNorm,
          |coarse AS (
          |  SELECT probe_id, cand_id FROM (
          |    SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,

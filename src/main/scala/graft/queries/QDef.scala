@@ -14,6 +14,4 @@ final case class QDef(
 object QDef {
   def sql(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): QDef =
     QDef(name, fn, Some(oracle))
-  def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QDef =
-    QDef(name, fn, None)
 }

@@ -125,18 +125,15 @@ object TextQueries {
        |          length(bin(greatest(1, ($countSql)) - 1)) - 1))
        |          AS p))""".stripMargin
 
-  /** BPE encode-to-ids CTE chain — the llm_bpe_tokens recursion
-    * carried through to ids, ending in `enc(doc_id, pos, tid)`.
-    * Mirrors [[graft.operators.TextOps.bpeEncodeIds]] /
-    * [[graft.operators.TextOps.bpeVocab]] exactly: same merge ranks,
-    * same codepoint-ordered base vocabulary from id 1, merge outputs
-    * at nBase + rank with first-writer-wins (min id), UNK = 0. */
   /** BPE TRAINING CTE chain (Sennrich iterated argmax, one unrolled
     * block per round: pair counts → (count desc, pair asc) argmax →
     * run-parity-window merge application), ending with `bm1..bmN`
     * (the learned merges) and `syN` (the merged vocabulary state).
     * Mirrors [[graft.operators.TextOps.bpeTrain]] round for round;
-    * shared by llm_bpe_train and llm_tokenize_e2e. */
+    * shared by llm_bpe_train and llm_tokenize_e2e. `mg$r` and `sy$r`
+    * are MATERIALIZED: each round reads `mg$r` twice, and DuckDB 1.0.0
+    * inlines a plain CTE into every reference, so the work doubled per
+    * round (6 rounds exhausted a 6 GB memory limit at sf0.01). */
   private def duckBpeTrainCtes(nRounds: Int): String = {
     def round_(r: Int): String =
       s"""px$r AS (
@@ -156,13 +153,13 @@ object TextQueries {
          |           ORDER BY p.i) END AS runk
          |  FROM px$r p, bm$r b
          |),
-         |mg$r AS (
+         |mg$r AS MATERIALIZED (
          |  SELECT word, i,
          |    m AND (row_number() OVER (PARTITION BY word, runk
          |                              ORDER BY i)) % 2 = 1 AS dm
          |  FROM mk$r
          |),
-         |sy$r AS (
+         |sy$r AS MATERIALIZED (
          |  SELECT e.word, e.freq,
          |    list(CASE WHEN coalesce(dm0.dm, false) THEN e.sym || e.nxt
          |              ELSE e.sym END ORDER BY e.i) AS s
@@ -194,7 +191,30 @@ object TextQueries {
        |$rounds""".stripMargin
   }
 
-  /** `mmBody` must select one row with a `m` MAP('pair a b' → rank);
+  /** The static merge table as a DuckDB MAP('a b' → rank) select. */
+  private val bpeStaticMergeMap: String = {
+    val keys = TextOps.BpeMergesEn
+      .map { case (a, b) => s"'$a $b'" }.mkString("[", ",", "]")
+    val vals = TextOps.BpeMergesEn.indices
+      .map(_ + 1).mkString("[", ",", "]")
+    s"SELECT map($keys, $vals) AS m"
+  }
+
+  /** Position of the lowest-rank mergeable pair of `syms` under the
+    * merge MAP `m`, NULL when none applies (leftmost on rank ties). */
+  private val bpeBestJ: String =
+    "(list_sort(list_filter(list_transform(" +
+      "generate_series(1, len(syms)-1), " +
+      "i -> {'r': m[syms[i] || ' ' || syms[i+1]][1], 'i': i}), " +
+      "x -> x.r IS NOT NULL)))[1].i"
+
+  /** BPE encode-to-ids CTE chain — the llm_bpe_tokens recursion
+    * carried through to ids, ending in `enc(doc_id, pos, tid)`.
+    * Mirrors [[graft.operators.TextOps.bpeEncodeIds]] /
+    * [[graft.operators.TextOps.bpeVocab]] exactly: same merge ranks,
+    * same codepoint-ordered base vocabulary from id 1, merge outputs
+    * at nBase + rank with first-writer-wins (min id), UNK = 0.
+    * `mmBody` must select one row with a `m` MAP('pair a b' → rank);
     * `mvCte` must be a full CTE defining `mv(mrank, sym)` — the merge
     * outputs with their candidate-id ranks. Defaults render the
     * static `TextOps.BpeMergesEn` table; llm_tokenize_e2e passes
@@ -204,18 +224,10 @@ object TextQueries {
       mmBody: Option[String] = None,
       mvCte: Option[String] = None,
       src: String = "documents"): String = {
-    val keys = TextOps.BpeMergesEn
-      .map { case (a, b) => s"'$a $b'" }.mkString("[", ",", "]")
-    val vals = TextOps.BpeMergesEn.indices
-      .map(_ + 1).mkString("[", ",", "]")
     val mergeRows = TextOps.BpeMergesEn.zipWithIndex
       .map { case ((a, b), i) => s"(${i + 1}, '$a$b')" }.mkString(", ")
-    val mm = mmBody.getOrElse(s"SELECT map($keys, $vals) AS m")
+    val mm = mmBody.getOrElse(bpeStaticMergeMap)
     val mv = mvCte.getOrElse(s"mv(mrank, sym) AS (VALUES $mergeRows)")
-    val bestJ = "(list_sort(list_filter(list_transform(" +
-      "generate_series(1, len(syms)-1), " +
-      "i -> {'r': m[syms[i] || ' ' || syms[i+1]][1], 'i': i}), " +
-      "x -> x.r IS NOT NULL)))[1].i"
     s"""mm AS (
        |  $mm
        |),
@@ -238,12 +250,12 @@ object TextQueries {
        |  SELECT doc_id, wi,
        |         syms[1:bj-1] || [syms[bj] || syms[bj+1]] || syms[bj+2:]
        |  FROM (
-       |    SELECT doc_id, wi, syms, $bestJ AS bj FROM bst, mm
+       |    SELECT doc_id, wi, syms, $bpeBestJ AS bj FROM bst, mm
        |  ) WHERE bj IS NOT NULL
        |),
        |bfin AS (
        |  SELECT doc_id, wi, syms FROM (
-       |    SELECT doc_id, wi, syms, $bestJ AS bj FROM bst, mm
+       |    SELECT doc_id, wi, syms, $bpeBestJ AS bj FROM bst, mm
        |  ) WHERE bj IS NULL
        |),
        |vb AS (
@@ -471,6 +483,275 @@ object TextQueries {
        |ORDER BY e.source""".stripMargin
   }
 
+  /** Final select of the stopword language ID (TextOps.langId's tie
+    * precedence en > de > es > fr) over `c(doc_id, lang, c_en..c_fr)`. */
+  private val duckLangPredSql: String =
+    """SELECT doc_id, lang AS lang_actual,
+      |  CASE WHEN c_en > 0 AND c_en >= c_de AND c_en >= c_es AND c_en >= c_fr THEN 'en'
+      |       WHEN c_de > 0 AND c_de >= c_es AND c_de >= c_fr THEN 'de'
+      |       WHEN c_es > 0 AND c_es >= c_fr THEN 'es'
+      |       WHEN c_fr > 0 THEN 'fr'
+      |       ELSE 'und' END AS lang_pred
+      |FROM c ORDER BY doc_id""".stripMargin
+
+  /** The unrounded TextOps.qualityScore column over `text` and its
+    * lowercased words `ws`. */
+  private val duckQualityCol: String =
+    s"""    CASE WHEN length(text) = 0 THEN 0.0
+       |         ELSE least(1.0, CAST(len(ws) AS BIGINT) / 50.0) * 0.4
+       |           + CAST(${duckStopCount(TextOps.StopEn)} AS DOUBLE)
+       |             / CAST(len(ws) AS BIGINT) * 0.3
+       |           + (1.0 - CAST(length(regexp_replace(lower(text),
+       |               '[a-z0-9 ]', '', 'g')) AS DOUBLE)
+       |               / length(text)) * 0.3 END AS quality""".stripMargin
+
+  /** Every lowercased 2-gram shingle hash of `documents`, duplicates
+    * kept: `hashed(h)`, the stream the top-ngram counters read. */
+  private val duckBigramStream: String =
+    s"""words AS (
+       |  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents
+       |),
+       |${DuckSql.duckWordShingles("shingles", "words")},
+       |hashed AS (
+       |  SELECT ${duckHash("s")} AS h FROM shingles
+       |)""".stripMargin
+
+  /** The BPE merge recursion over `wds(doc_id, carry, wi, ws)`: `init`
+    * splits each word into characters and `st` applies one
+    * lowest-rank `mm` merge per step (the BpeTokens kernel's order). */
+  private def duckBpeMergeSteps(carry: String): String =
+    s"""init AS (
+       |  SELECT doc_id, $carry, wi,
+       |    CASE WHEN ws[wi] = '' THEN CAST([] AS VARCHAR[])
+       |         ELSE string_split(ws[wi], '') END AS syms
+       |  FROM wds
+       |),
+       |st AS (
+       |  SELECT doc_id, $carry, wi, syms FROM init
+       |  UNION ALL
+       |  SELECT doc_id, $carry, wi,
+       |         syms[1:bj-1] || [syms[bj] || syms[bj+1]] || syms[bj+2:]
+       |  FROM (
+       |    SELECT doc_id, $carry, wi, syms, $bpeBestJ AS bj
+       |    FROM st, mm
+       |  ) WHERE bj IS NOT NULL
+       |)""".stripMargin
+
+  /** Token-exact packing of `enc(doc_id, pos, tid)` into `budget`-token
+    * sequences from the per-doc stream offsets in `$off(doc_id, shard,
+    * o)` (TextOps.packTokenIdsBy's integer div/mod cut). */
+  private def duckPackCutSql(off: String, budget: Int): String =
+    s"""SELECT o.shard, (o.o + e.pos) // $budget AS seq_no,
+       |       (o.o + e.pos) % $budget AS seq_pos, e.doc_id, e.tid
+       |FROM enc e JOIN $off o ON o.doc_id = e.doc_id
+       |ORDER BY shard, seq_no, seq_pos""".stripMargin
+
+  /** `$cnt` token counts of `enc` per doc in shard doc_id % 4 and the
+    * exclusive per-shard running offsets `$off(doc_id, shard, o)` in
+    * doc-id order (TextOps.packTokenIds' layout). */
+  private def duckShardOffsets(cnt: String, off: String): String =
+    s"""$cnt AS (
+       |  SELECT doc_id, doc_id % 4 AS shard,
+       |         CAST(count(*) AS BIGINT) AS n
+       |  FROM enc GROUP BY 1, 2
+       |),
+       |$off AS (
+       |  SELECT doc_id, shard,
+       |    CAST(coalesce(sum(n) OVER (
+       |      PARTITION BY shard ORDER BY doc_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+       |      AS BIGINT) AS o
+       |  FROM $cnt
+       |)""".stripMargin
+
+  /** Winnow fingerprints of the doc_id < 150 slice (k 8, w 4), each
+    * fingerprint once per doc `f`, kept in `b` when 2..50 docs share
+    * it, with per-doc counts `sizes` and shared counts `inter(doc_a,
+    * doc_b, shared)` (TextOps.winnowPairs). */
+  private val duckWinnowOverlap: String =
+    s"""${duckWinnow(8, 4, "WHERE doc_id < 150")},
+       |f AS (SELECT DISTINCT doc_id, fp FROM fps),
+       |d AS (SELECT fp FROM f GROUP BY fp HAVING count(*) BETWEEN 2 AND 50),
+       |b AS (SELECT f.doc_id, f.fp FROM f JOIN d USING (fp)),
+       |sizes AS (SELECT doc_id, count(*) AS n FROM f GROUP BY 1),
+       |inter AS (
+       |  SELECT a.doc_id AS doc_a, b2.doc_id AS doc_b, count(*) AS shared
+       |  FROM b a JOIN b b2 ON a.fp = b2.fp AND a.doc_id < b2.doc_id
+       |  GROUP BY 1, 2
+       |)""".stripMargin
+
+  /** The duplicated-span islands of the doc_id < 150 slice
+    * (TextOps.dupSpans, k 8, w 4, df cap 50, gap 32): positions of
+    * fingerprints an earlier doc owns, grouped into `isl(doc_id, pos,
+    * g)`. */
+  private val duckDupSpanIslands: String =
+    s"""${duckWinnow(8, 4, "WHERE doc_id < 150")},
+       |f2 AS (SELECT DISTINCT doc_id, fp FROM fps),
+       |d AS (SELECT fp FROM f2 GROUP BY fp HAVING count(*) BETWEEN 2 AND 50),
+       |capped AS (SELECT f.doc_id, f.fp, f.pos FROM fps f JOIN d USING (fp)),
+       |own AS (SELECT fp, min(doc_id) AS o FROM capped GROUP BY 1),
+       |hits AS (
+       |  SELECT DISTINCT c.doc_id, c.pos
+       |  FROM capped c JOIN own ON c.fp = own.fp WHERE c.doc_id > own.o
+       |),
+       |seq AS (
+       |  SELECT doc_id, pos,
+       |    CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 32
+       |         THEN 1 ELSE 0 END AS brk
+       |  FROM hits
+       |),
+       |isl AS (
+       |  SELECT doc_id, pos, sum(brk) OVER (
+       |    PARTITION BY doc_id ORDER BY pos
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
+       |  FROM seq
+       |)""".stripMargin
+
+  /** `$name(doc_id, lang, n_tokens)`: whitespace token counts of `$src`. */
+  private def duckTokCounts(name: String, src: String): String =
+    s"""$name AS (
+       |  SELECT doc_id, lang,
+       |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+       |  FROM $src
+       |)""".stripMargin
+
+  /** Temperature-2 mixing rates over `$src` (TextOps.temperatureMix):
+    * token counts `tok`, per-language totals and sqrt weights `tot`,
+    * the sorted weight sum `sw` and keep rates `r(lang, rate_e4)` for a
+    * 3000-token budget; `sfx` suffixes every CTE name. */
+  private def duckTemperatureRates(src: String, sfx: String = ""): String =
+    s"""${duckTokCounts(s"tok$sfx", src)},
+       |tot$sfx AS (
+       |  SELECT lang, CAST(sum(n_tokens) AS DOUBLE) AS total,
+       |         sqrt(CAST(sum(n_tokens) AS DOUBLE)) AS w
+       |  FROM tok$sfx GROUP BY 1
+       |),
+       |sw$sfx AS (
+       |  SELECT ${DuckSql.duckFold(
+         "list_transform(list_sort(list(struct_pack(lang := lang, w := w))), x -> x.w)")}
+       |    AS sum_w
+       |  FROM tot$sfx
+       |),
+       |r$sfx AS (
+       |  SELECT lang,
+       |    CAST(floor(least(1.0, 3000.0 * w / sw$sfx.sum_w / total) * 10000)
+       |         AS BIGINT) AS rate_e4
+       |  FROM tot$sfx, sw$sfx
+       |)""".stripMargin
+
+  /** Final select of the budget mixes: the `tok` rows whose
+    * lang:doc_id bucket falls under their language's `r` rate. */
+  private val duckMixKeepSql: String =
+    s"""SELECT tok.doc_id, tok.lang, tok.n_tokens, r.rate_e4
+       |FROM tok JOIN r USING (lang)
+       |WHERE ${duckMixBucket("tok.lang || ':' || CAST(tok.doc_id AS VARCHAR)")}
+       |      < r.rate_e4
+       |ORDER BY doc_id""".stripMargin
+
+  /** The C4 segment keep-list: indexes of the 10-word segments of `ws`
+    * (`n` words, `nseg` segments, lowercased `wsl`) with at least 5
+    * words and no blacklisted token (TextOps.c4Clean). */
+  private val duckC4KeepIdx: String =
+    """    list_filter(generate_series(0, nseg - 1), i ->
+      |      least(10, n - i * 10) >= 5 AND
+      |      len(list_filter(wsl[i * 10 + 1 : i * 10 + 10], w ->
+      |        list_contains(['lorem','ipsum','javascript','{','}'], w)
+      |      )) = 0) AS keep_idx""".stripMargin
+
+  /** `wt(bucket, w)`: the deterministic LCG weight table (micro-units)
+    * standing in for a trained hashed-linear classifier. */
+  private val duckClassifierWeights: String =
+    """wt AS (
+      |  SELECT CAST(i AS BIGINT) AS bucket,
+      |         CAST((i * 1103515245 + 12345) % 2001 - 1000 AS BIGINT) AS w
+      |  FROM generate_series(0, 1023) t(i)
+      |)""".stripMargin
+
+  /** The hashed-linear classifier's scores over `documents`, shared by
+    * the aggregate and the per-row Spark forms (integer w_sum is
+    * order-free, so one oracle checks both). */
+  private val duckClassifierSql: String =
+    s"""WITH $duckClassifierWeights,
+       |toks AS (
+       |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+       |  FROM documents
+       |),
+       |hb AS (
+       |  SELECT doc_id, ${duckHash("tok")} % 1024 AS bucket FROM toks
+       |),
+       |agg AS (
+       |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+       |         CAST(sum(coalesce(wt.w, 0)) AS BIGINT) AS w_sum
+       |  FROM hb LEFT JOIN wt USING (bucket) GROUP BY 1
+       |)
+       |SELECT doc_id, n_tokens, w_sum,
+       |  round(1.0 / (1.0 + exp(-(CAST(w_sum AS DOUBLE) / 1000.0
+       |                           / n_tokens))), 6) AS score
+       |FROM agg ORDER BY doc_id""".stripMargin
+
+  /** DSIR unigram features over `$col` of `$src(doc_id, source, $col)`:
+    * target (src0) bucket counts `bt(bucket, ct)` and the raw docs'
+    * token buckets `rt(doc_id, bucket)`, 512 hashed buckets. */
+  private def duckDsirUnigrams(col: String, src: String): String =
+    s"""bt AS (
+       |  SELECT bucket, CAST(count(*) AS BIGINT) AS ct FROM (
+       |    SELECT ${duckHash("tok")} % 512 AS bucket FROM (
+       |      SELECT unnest(string_split(lower($col), ' ')) AS tok
+       |      FROM $src WHERE source = 'src0')
+       |  ) GROUP BY 1
+       |),
+       |rt AS (
+       |  SELECT doc_id, ${duckHash("tok")} % 512 AS bucket FROM (
+       |    SELECT doc_id, unnest(string_split(lower($col), ' ')) AS tok
+       |    FROM $src WHERE source <> 'src0')
+       |)""".stripMargin
+
+  /** DSIR from `bt`/`rt` to the top `k` raw docs (TextOps.dsirWeights
+    * + dsirScores + dsirTopK): add-one bucket counts, fixed-point
+    * log2-ratio weights `wt`, BIGINT doc scores. `ftAlias` names the
+    * target-total log join (the caller may own a CTE `ft`). */
+  private def duckDsirTopKSql(k: Int, ftAlias: String = "ft"): String =
+    s"""br AS (
+       |  SELECT bucket, CAST(count(*) AS BIGINT) AS cr
+       |  FROM rt GROUP BY 1
+       |),
+       |tot AS (
+       |  SELECT (SELECT CAST(sum(ct) AS BIGINT) FROM bt) AS t,
+       |         (SELECT CAST(sum(cr) AS BIGINT) FROM br) AS r
+       |),
+       |cnts AS (
+       |  SELECT g.i AS bucket, coalesce(ct, 0) + 1 AS a_t,
+       |         coalesce(cr, 0) + 1 AS a_r
+       |  FROM generate_series(0, 511) g(i)
+       |  LEFT JOIN bt ON bt.bucket = g.i
+       |  LEFT JOIN br ON br.bucket = g.i
+       |),
+       |args AS (
+       |  SELECT DISTINCT n FROM (
+       |    SELECT a_t AS n FROM cnts
+       |    UNION SELECT a_r FROM cnts
+       |    UNION SELECT t + 512 FROM tot
+       |    UNION SELECT r + 512 FROM tot)
+       |),
+       |${DuckSql.duckLog2FixedCtes("args")},
+       |wt AS (
+       |  SELECT cnts.bucket,
+       |    f1.f - $ftAlias.f - f2.f + fr.f AS w
+       |  FROM cnts CROSS JOIN tot
+       |  JOIN lg f1 ON f1.n = cnts.a_t
+       |  JOIN lg $ftAlias ON $ftAlias.n = tot.t + 512
+       |  JOIN lg f2 ON f2.n = cnts.a_r
+       |  JOIN lg fr ON fr.n = tot.r + 512
+       |),
+       |sc AS (
+       |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+       |         CAST(sum(wt.w) AS BIGINT) AS score
+       |  FROM rt LEFT JOIN wt USING (bucket) GROUP BY 1
+       |)
+       |SELECT doc_id, n_tokens, score,
+       |  round(CAST(score AS DOUBLE) / 1048576.0, 6) AS lr
+       |FROM sc ORDER BY score DESC, doc_id LIMIT $k""".stripMargin
+
   val defs: Seq[QDef] = Seq(
 
     // ----- Language ID: stopword-count heuristic -----------------------
@@ -487,13 +768,7 @@ object TextQueries {
          |    ${duckStopCount(TextOps.StopFr)} AS c_fr
          |  FROM w
          |)
-         |SELECT doc_id, lang AS lang_actual,
-         |  CASE WHEN c_en > 0 AND c_en >= c_de AND c_en >= c_es AND c_en >= c_fr THEN 'en'
-         |       WHEN c_de > 0 AND c_de >= c_es AND c_de >= c_fr THEN 'de'
-         |       WHEN c_es > 0 AND c_es >= c_fr THEN 'es'
-         |       WHEN c_fr > 0 THEN 'fr'
-         |       ELSE 'und' END AS lang_pred
-         |FROM c ORDER BY doc_id""".stripMargin) { (s, dir) =>
+         |$duckLangPredSql""".stripMargin) { (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"), col("lang").as("lang_actual"),
           TextOps.langId(col("text")).as("lang_pred"))
@@ -526,13 +801,7 @@ object TextQueries {
            |    len(list_filter(tris, x -> list_contains(${prof(TextOps.TriFr)}, x))) AS c_fr
            |  FROM g
            |)
-           |SELECT doc_id, lang AS lang_actual,
-           |  CASE WHEN c_en > 0 AND c_en >= c_de AND c_en >= c_es AND c_en >= c_fr THEN 'en'
-           |       WHEN c_de > 0 AND c_de >= c_es AND c_de >= c_fr THEN 'de'
-           |       WHEN c_es > 0 AND c_es >= c_fr THEN 'es'
-           |       WHEN c_fr > 0 THEN 'fr'
-           |       ELSE 'und' END AS lang_pred
-           |FROM c ORDER BY doc_id""".stripMargin
+           |$duckLangPredSql""".stripMargin
       }) { (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"), col("lang").as("lang_actual"),
@@ -588,13 +857,7 @@ object TextQueries {
            |),
            |q AS (
            |  SELECT doc_id, source, CAST(len(ws) AS BIGINT) AS n_words,
-           |    CASE WHEN length(text) = 0 THEN 0.0
-           |         ELSE least(1.0, CAST(len(ws) AS BIGINT) / 50.0) * 0.4
-           |           + CAST(${duckStopCount(TextOps.StopEn)} AS DOUBLE)
-           |             / CAST(len(ws) AS BIGINT) * 0.3
-           |           + (1.0 - CAST(length(regexp_replace(lower(text),
-           |               '[a-z0-9 ]', '', 'g')) AS DOUBLE)
-           |               / length(text)) * 0.3 END AS quality,
+           |$duckQualityCol,
            |    CASE WHEN
            |      CAST(len(string_split(text, ' ')) AS BIGINT)
            |        BETWEEN 40 AND 100000
@@ -677,13 +940,7 @@ object TextQueries {
          |),
          |q AS (
          |  SELECT doc_id,
-         |    CASE WHEN length(text) = 0 THEN 0.0
-         |         ELSE least(1.0, CAST(len(ws) AS BIGINT) / 50.0) * 0.4
-         |           + CAST(${duckStopCount(TextOps.StopEn)} AS DOUBLE)
-         |             / CAST(len(ws) AS BIGINT) * 0.3
-         |           + (1.0 - CAST(length(regexp_replace(lower(text),
-         |               '[a-z0-9 ]', '', 'g')) AS DOUBLE)
-         |               / length(text)) * 0.3 END AS quality
+         |$duckQualityCol
          |  FROM w
          |),
          |c AS (
@@ -728,56 +985,32 @@ object TextQueries {
     // replays the identical step order as a recursive CTE over symbol
     // lists — one row per (word, merge step), bounded by word length.
     QDef.sql(
-      "llm_bpe_tokens", {
-        val keys = TextOps.BpeMergesEn
-          .map { case (a, b) => s"'$a $b'" }.mkString("[", ",", "]")
-        val vals = TextOps.BpeMergesEn.indices
-          .map(_ + 1).mkString("[", ",", "]")
-        val bestJ = "(list_sort(list_filter(list_transform(" +
-          "generate_series(1, len(syms)-1), " +
-          "i -> {'r': m[syms[i] || ' ' || syms[i+1]][1], 'i': i}), " +
-          "x -> x.r IS NOT NULL)))[1].i"
-        s"""WITH RECURSIVE mm AS (
-           |  SELECT map($keys, $vals) AS m
-           |),
-           |w0 AS (
-           |  SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
-           |         string_split(lower(text), ' ') AS ws
-           |  FROM documents
-           |),
-           |wds AS (
-           |  SELECT doc_id, n_chars,
-           |         unnest(generate_series(1, len(ws))) AS wi, ws
-           |  FROM w0
-           |),
-           |init AS (
-           |  SELECT doc_id, n_chars, wi,
-           |    CASE WHEN ws[wi] = '' THEN CAST([] AS VARCHAR[])
-           |         ELSE string_split(ws[wi], '') END AS syms
-           |  FROM wds
-           |),
-           |st AS (
-           |  SELECT doc_id, n_chars, wi, syms FROM init
-           |  UNION ALL
-           |  SELECT doc_id, n_chars, wi,
-           |         syms[1:bj-1] || [syms[bj] || syms[bj+1]] || syms[bj+2:]
-           |  FROM (
-           |    SELECT doc_id, n_chars, wi, syms, $bestJ AS bj
-           |    FROM st, mm
-           |  ) WHERE bj IS NOT NULL
-           |),
-           |fin AS (
-           |  SELECT doc_id, n_chars, wi, len(syms) AS n_syms
-           |  FROM (
-           |    SELECT doc_id, n_chars, wi, syms, $bestJ AS bj
-           |    FROM st, mm
-           |  ) WHERE bj IS NULL
-           |)
-           |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words, n_chars,
-           |       CAST(sum(n_syms) AS BIGINT) AS bpe_tokens
-           |FROM fin GROUP BY doc_id, n_chars
-           |ORDER BY doc_id""".stripMargin
-      }) { (s, dir) =>
+      "llm_bpe_tokens",
+      s"""WITH RECURSIVE mm AS (
+         |  $bpeStaticMergeMap
+         |),
+         |w0 AS (
+         |  SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
+         |         string_split(lower(text), ' ') AS ws
+         |  FROM documents
+         |),
+         |wds AS (
+         |  SELECT doc_id, n_chars,
+         |         unnest(generate_series(1, len(ws))) AS wi, ws
+         |  FROM w0
+         |),
+         |${duckBpeMergeSteps("n_chars")},
+         |fin AS (
+         |  SELECT doc_id, n_chars, wi, len(syms) AS n_syms
+         |  FROM (
+         |    SELECT doc_id, n_chars, wi, syms, $bpeBestJ AS bj
+         |    FROM st, mm
+         |  ) WHERE bj IS NULL
+         |)
+         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words, n_chars,
+         |       CAST(sum(n_syms) AS BIGINT) AS bpe_tokens
+         |FROM fin GROUP BY doc_id, n_chars
+         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       TextOps.bpeTokenCount(t(s, dir, "documents"), "doc_id", "text")
         .orderBy("doc_id")
     },
@@ -826,23 +1059,8 @@ object TextQueries {
               mmBody = Some("SELECT map(list(x || ' ' || y ORDER BY mrank)," +
                 " list(mrank ORDER BY mrank)) AS m FROM mgd"),
               mvCte = Some("mv AS (SELECT mrank, x || y AS sym FROM mgd)"))},
-           |cnt2 AS (
-           |  SELECT doc_id, doc_id % 4 AS shard,
-           |         CAST(count(*) AS BIGINT) AS n
-           |  FROM enc GROUP BY 1, 2
-           |),
-           |off2 AS (
-           |  SELECT doc_id, shard,
-           |    CAST(coalesce(sum(n) OVER (
-           |      PARTITION BY shard ORDER BY doc_id
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           |      AS BIGINT) AS o
-           |  FROM cnt2
-           |)
-           |SELECT o.shard, (o.o + e.pos) // 256 AS seq_no,
-           |       (o.o + e.pos) % 256 AS seq_pos, e.doc_id, e.tid
-           |FROM enc e JOIN off2 o ON o.doc_id = e.doc_id
-           |ORDER BY shard, seq_no, seq_pos""".stripMargin
+           |${duckShardOffsets("cnt2", "off2")}
+           |${duckPackCutSql("off2", 256)}""".stripMargin
       }) { (s, dir) =>
       val docs = t(s, dir, "documents")
       val learned = TextOps.bpeTrain(docs, "text", nMerges = 6)
@@ -875,23 +1093,8 @@ object TextQueries {
     QDef.sql(
       "llm_pack_ids",
       s"""WITH RECURSIVE ${duckBpeEncodeCtes()},
-         |cnt AS (
-         |  SELECT doc_id, doc_id % 4 AS shard,
-         |         CAST(count(*) AS BIGINT) AS n
-         |  FROM enc GROUP BY 1, 2
-         |),
-         |off AS (
-         |  SELECT doc_id, shard,
-         |    CAST(coalesce(sum(n) OVER (
-         |      PARTITION BY shard ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS BIGINT) AS o
-         |  FROM cnt
-         |)
-         |SELECT o.shard, (o.o + e.pos) // 512 AS seq_no,
-         |       (o.o + e.pos) % 512 AS seq_pos, e.doc_id, e.tid
-         |FROM enc e JOIN off o ON o.doc_id = e.doc_id
-         |ORDER BY shard, seq_no, seq_pos""".stripMargin) { (s, dir) =>
+         |${duckShardOffsets("cnt", "off")}
+         |${duckPackCutSql("off", 512)}""".stripMargin) { (s, dir) =>
       TextOps.packTokenIds(t(s, dir, "documents"), "doc_id", "text",
         budget = 512L, nShards = 4)
         .orderBy("shard", "seq_no", "seq_pos")
@@ -916,28 +1119,7 @@ object TextQueries {
          |          t -> list_contains(string_split(lower(text), ' '), t)))
          |        >= 1
          |),
-         |tokm AS (
-         |  SELECT doc_id, lang,
-         |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-         |  FROM g0
-         |),
-         |totm AS (
-         |  SELECT lang, CAST(sum(n_tokens) AS DOUBLE) AS total,
-         |         sqrt(CAST(sum(n_tokens) AS DOUBLE)) AS w
-         |  FROM tokm GROUP BY 1
-         |),
-         |swm AS (
-         |  SELECT ${DuckSql.duckFold(
-             "list_transform(list_sort(list(struct_pack(lang := lang, w := w))), x -> x.w)")}
-         |    AS sum_w
-         |  FROM totm
-         |),
-         |rm AS (
-         |  SELECT lang,
-         |    CAST(floor(least(1.0, 3000.0 * w / swm.sum_w / total) * 10000)
-         |         AS BIGINT) AS rate_e4
-         |  FROM totm, swm
-         |),
+         |${duckTemperatureRates("g0", "m")},
          |seld AS MATERIALIZED (
          |  SELECT g0.doc_id, g0.text FROM g0 JOIN rm USING (lang)
          |  WHERE ${duckMixBucket("g0.lang || ':' || CAST(g0.doc_id AS VARCHAR)")}
@@ -968,10 +1150,7 @@ object TextQueries {
          |      AS BIGINT) AS o
          |  FROM shf2 s JOIN cnt3 c USING (doc_id)
          |)
-         |SELECT o.shard, (o.o + e.pos) // 128 AS seq_no,
-         |       (o.o + e.pos) % 128 AS seq_pos, e.doc_id, e.tid
-         |FROM enc e JOIN off3 o ON o.doc_id = e.doc_id
-         |ORDER BY shard, seq_no, seq_pos""".stripMargin) { (s, dir) =>
+         |${duckPackCutSql("off3", 128)}""".stripMargin) { (s, dir) =>
       val docs = t(s, dir, "documents")
       def ws = LlmOps.words(col("text"))
       val gated = docs.filter(size(ws) >= 40 &&
@@ -1017,16 +1196,7 @@ object TextQueries {
     // ----- Winnowing overlap pairs (local-similarity join) -------------
     QDef.sql(
       "llm_winnow_pairs",
-      s"""WITH ${duckWinnow(8, 4, "WHERE doc_id < 150")},
-         |f AS (SELECT DISTINCT doc_id, fp FROM fps),
-         |d AS (SELECT fp FROM f GROUP BY fp HAVING count(*) BETWEEN 2 AND 50),
-         |b AS (SELECT f.doc_id, f.fp FROM f JOIN d USING (fp)),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM f GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS doc_a, b2.doc_id AS doc_b, count(*) AS shared
-         |  FROM b a JOIN b b2 ON a.fp = b2.fp AND a.doc_id < b2.doc_id
-         |  GROUP BY 1, 2
-         |)
+      s"""WITH $duckWinnowOverlap
          |SELECT doc_a, doc_b, CAST(shared AS BIGINT) AS shared,
          |       round(CAST(shared AS DOUBLE) / least(sa.n, sb.n), 6) AS overlap
          |FROM inter
@@ -1051,16 +1221,7 @@ object TextQueries {
     // same round(·,6) value the Spark pairs emit.
     QDef.sql(
       "llm_winnow_dedup",
-      s"""WITH RECURSIVE ${duckWinnow(8, 4, "WHERE doc_id < 150")},
-         |f AS (SELECT DISTINCT doc_id, fp FROM fps),
-         |d AS (SELECT fp FROM f GROUP BY fp HAVING count(*) BETWEEN 2 AND 50),
-         |b AS (SELECT f.doc_id, f.fp FROM f JOIN d USING (fp)),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM f GROUP BY 1),
-         |inter AS (
-         |  SELECT a.doc_id AS doc_a, b2.doc_id AS doc_b, count(*) AS shared
-         |  FROM b a JOIN b b2 ON a.fp = b2.fp AND a.doc_id < b2.doc_id
-         |  GROUP BY 1, 2
-         |),
+      s"""WITH RECURSIVE $duckWinnowOverlap,
          |prs AS (
          |  SELECT doc_a, doc_b FROM inter
          |  JOIN sizes sa ON sa.doc_id = doc_a
@@ -1068,16 +1229,7 @@ object TextQueries {
          |  WHERE shared >= 2
          |    AND round(CAST(shared AS DOUBLE) / least(sa.n, sb.n), 6) >= 0.2
          |),
-         |edges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM prs
-         |  UNION ALL SELECT doc_b, doc_a FROM prs
-         |),
-         |reach AS (
-         |  SELECT doc_id, doc_id AS label FROM documents WHERE doc_id < 150
-         |  UNION
-         |  SELECT e.dst AS doc_id, r.label
-         |  FROM reach r JOIN edges e ON e.src = r.doc_id
-         |)
+         |${DuckSql.duckCcReach("documents WHERE doc_id < 150", wrapStep = true)}
          |SELECT doc_id FROM (
          |  SELECT doc_id, min(label) AS canonical_id FROM reach GROUP BY doc_id
          |) WHERE doc_id = canonical_id
@@ -1100,27 +1252,7 @@ object TextQueries {
     // positional hits merged gaps-and-islands style (gap 32, >= 2 fps).
     QDef.sql(
       "llm_dup_spans",
-      s"""WITH ${duckWinnow(8, 4, "WHERE doc_id < 150")},
-         |f2 AS (SELECT DISTINCT doc_id, fp FROM fps),
-         |d AS (SELECT fp FROM f2 GROUP BY fp HAVING count(*) BETWEEN 2 AND 50),
-         |capped AS (SELECT f.doc_id, f.fp, f.pos FROM fps f JOIN d USING (fp)),
-         |own AS (SELECT fp, min(doc_id) AS o FROM capped GROUP BY 1),
-         |hits AS (
-         |  SELECT DISTINCT c.doc_id, c.pos
-         |  FROM capped c JOIN own ON c.fp = own.fp WHERE c.doc_id > own.o
-         |),
-         |seq AS (
-         |  SELECT doc_id, pos,
-         |    CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 32
-         |         THEN 1 ELSE 0 END AS brk
-         |  FROM hits
-         |),
-         |isl AS (
-         |  SELECT doc_id, pos, sum(brk) OVER (
-         |    PARTITION BY doc_id ORDER BY pos
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-         |  FROM seq
-         |)
+      s"""WITH $duckDupSpanIslands
          |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
          |  CAST(max(pos) + 7 AS BIGINT) AS span_end,
          |  CAST(count(*) AS BIGINT) AS n_fps
@@ -1143,27 +1275,7 @@ object TextQueries {
     // cap/owner/islands → char mapping → cut rule → reassembly.
     QDef.sql(
       "llm_strip_dup_spans",
-      s"""WITH ${duckWinnow(8, 4, "WHERE doc_id < 150")},
-         |f2 AS (SELECT DISTINCT doc_id, fp FROM fps),
-         |d AS (SELECT fp FROM f2 GROUP BY fp HAVING count(*) BETWEEN 2 AND 50),
-         |capped AS (SELECT f.doc_id, f.fp, f.pos FROM fps f JOIN d USING (fp)),
-         |own AS (SELECT fp, min(doc_id) AS o FROM capped GROUP BY 1),
-         |hits AS (
-         |  SELECT DISTINCT c.doc_id, c.pos
-         |  FROM capped c JOIN own ON c.fp = own.fp WHERE c.doc_id > own.o
-         |),
-         |seq AS (
-         |  SELECT doc_id, pos,
-         |    CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 32
-         |         THEN 1 ELSE 0 END AS brk
-         |  FROM hits
-         |),
-         |isl AS (
-         |  SELECT doc_id, pos, sum(brk) OVER (
-         |    PARTITION BY doc_id ORDER BY pos
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS g
-         |  FROM seq
-         |),
+      s"""WITH $duckDupSpanIslands,
          |spans AS (
          |  SELECT doc_id, min(pos) AS s, max(pos) + 7 AS e
          |  FROM isl GROUP BY doc_id, g HAVING count(*) >= 2
@@ -1228,11 +1340,7 @@ object TextQueries {
          |  SELECT doc_id, string_split(lower(text), ' ') AS ws
          |  FROM documents WHERE doc_id < 300
          |),
-         |sh AS (
-         |  SELECT doc_id, unnest(list_transform(generate_series(1, len(ws)-2),
-         |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
-         |  FROM words
-         |),
+         |${DuckSql.duckWordShingles("sh", "words", 3)},
          |hashed AS (
          |  SELECT DISTINCT doc_id, ${duckHash("s")} AS h FROM sh
          |),
@@ -1302,17 +1410,7 @@ object TextQueries {
     // ----- Global top-20 2-grams ---------------------------------------
     QDef.sql(
       "llm_top_ngrams",
-      s"""WITH words AS (
-         |  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents
-         |),
-         |shingles AS (
-         |  SELECT doc_id, unnest(list_transform(generate_series(1, len(ws)-1),
-         |    i -> ws[i] || ' ' || ws[i+1])) AS s
-         |  FROM words
-         |),
-         |hashed AS (
-         |  SELECT ${duckHash("s")} AS h FROM shingles
-         |)
+      s"""WITH $duckBigramStream
          |SELECT h, CAST(count(*) AS BIGINT) AS freq
          |FROM hashed GROUP BY h
          |ORDER BY freq DESC, h LIMIT 20""".stripMargin) { (s, dir) =>
@@ -1336,17 +1434,7 @@ object TextQueries {
         val cellJoins = (0 until 4).map(r =>
           s"JOIN sketch s$r ON s$r.r = $r AND s$r.p = ${cellC(r)}")
           .mkString("\n  ")
-        s"""WITH words AS (
-           |  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents
-           |),
-           |shingles AS (
-           |  SELECT doc_id, unnest(list_transform(generate_series(1, len(ws)-1),
-           |    i -> ws[i] || ' ' || ws[i+1])) AS s
-           |  FROM words
-           |),
-           |hashed AS (
-           |  SELECT ${duckHash("s")} AS h FROM shingles
-           |),
+        s"""WITH $duckBigramStream,
            |cnt AS (
            |  SELECT h, CAST(count(*) AS BIGINT) AS exact_freq
            |  FROM hashed GROUP BY h
@@ -1416,11 +1504,7 @@ object TextQueries {
       s"""WITH w AS (
          |  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents
          |),
-         |sh AS (
-         |  SELECT doc_id, unnest(list_transform(generate_series(1, len(ws)-1),
-         |    i -> ws[i] || ' ' || ws[i+1])) AS s
-         |  FROM w
-         |),
+         |${DuckSql.duckWordShingles("sh", "w")},
          |shh AS (
          |  SELECT doc_id, ${duckHash("s")} AS h FROM sh
          |),
@@ -1485,22 +1569,14 @@ object TextQueries {
     // within ~15% of the budget per stratum.
     QDef.sql(
       "llm_mix_budget",
-      s"""WITH tok AS (
-         |  SELECT doc_id, lang,
-         |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-         |  FROM documents
-         |),
+      s"""WITH ${duckTokCounts("tok", "documents")},
          |r AS (
          |  SELECT lang,
          |    CAST(floor(least(1.0, 3000.0 / CAST(sum(n_tokens) AS DOUBLE))
          |               * 10000) AS BIGINT) AS rate_e4
          |  FROM tok GROUP BY 1
          |)
-         |SELECT tok.doc_id, tok.lang, tok.n_tokens, r.rate_e4
-         |FROM tok JOIN r USING (lang)
-         |WHERE ${duckMixBucket("tok.lang || ':' || CAST(tok.doc_id AS VARCHAR)")}
-         |      < r.rate_e4
-         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
+         |$duckMixKeepSql""".stripMargin) { (s, dir) =>
       TextOps.sampleToBudget(t(s, dir, "documents"), "doc_id", "text",
         col("lang"), budgetTokens = 3000L)
         .select(col("doc_id"), col("stratum").as("lang"),
@@ -1553,33 +1629,8 @@ object TextQueries {
     // pow and are operational-only.
     QDef.sql(
       "llm_temperature_mix",
-      s"""WITH tok AS (
-         |  SELECT doc_id, lang,
-         |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-         |  FROM documents
-         |),
-         |tot AS (
-         |  SELECT lang, CAST(sum(n_tokens) AS DOUBLE) AS total,
-         |         sqrt(CAST(sum(n_tokens) AS DOUBLE)) AS w
-         |  FROM tok GROUP BY 1
-         |),
-         |sw AS (
-         |  SELECT ${DuckSql.duckFold(
-               "list_transform(list_sort(list(struct_pack(lang := lang, w := w))), x -> x.w)")}
-         |    AS sum_w
-         |  FROM tot
-         |),
-         |r AS (
-         |  SELECT lang,
-         |    CAST(floor(least(1.0, 3000.0 * w / sw.sum_w / total) * 10000)
-         |         AS BIGINT) AS rate_e4
-         |  FROM tot, sw
-         |)
-         |SELECT tok.doc_id, tok.lang, tok.n_tokens, r.rate_e4
-         |FROM tok JOIN r USING (lang)
-         |WHERE ${duckMixBucket("tok.lang || ':' || CAST(tok.doc_id AS VARCHAR)")}
-         |      < r.rate_e4
-         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      s"""WITH ${duckTemperatureRates("documents")}
+         |$duckMixKeepSql""".stripMargin) { (s, dir) =>
       TextOps.temperatureMix(t(s, dir, "documents"), "doc_id", "text",
         col("lang"), budgetTokens = 3000L, temperature = 2.0)
         .select(col("doc_id"), col("stratum").as("lang"),
@@ -1669,66 +1720,42 @@ object TextQueries {
     // BPE kernel supplying n_tokens. Oracle = the llm_bpe_tokens
     // recursive replay feeding the llm_pack_sequences window.
     QDef.sql(
-      "llm_pack_bpe", {
-        val keys = TextOps.BpeMergesEn
-          .map { case (a, b) => s"'$a $b'" }.mkString("[", ",", "]")
-        val vals = TextOps.BpeMergesEn.indices
-          .map(_ + 1).mkString("[", ",", "]")
-        val bestJ = "(list_sort(list_filter(list_transform(" +
-          "generate_series(1, len(syms)-1), " +
-          "i -> {'r': m[syms[i] || ' ' || syms[i+1]][1], 'i': i}), " +
-          "x -> x.r IS NOT NULL)))[1].i"
-        s"""WITH RECURSIVE mm AS (
-           |  SELECT map($keys, $vals) AS m
-           |),
-           |w0 AS (
-           |  SELECT doc_id, lang, string_split(lower(text), ' ') AS ws
-           |  FROM documents
-           |),
-           |wds AS (
-           |  SELECT doc_id, lang,
-           |         unnest(generate_series(1, len(ws))) AS wi, ws
-           |  FROM w0
-           |),
-           |init AS (
-           |  SELECT doc_id, lang, wi,
-           |    CASE WHEN ws[wi] = '' THEN CAST([] AS VARCHAR[])
-           |         ELSE string_split(ws[wi], '') END AS syms
-           |  FROM wds
-           |),
-           |st AS (
-           |  SELECT doc_id, lang, wi, syms FROM init
-           |  UNION ALL
-           |  SELECT doc_id, lang, wi,
-           |         syms[1:bj-1] || [syms[bj] || syms[bj+1]] || syms[bj+2:]
-           |  FROM (
-           |    SELECT doc_id, lang, wi, syms, $bestJ AS bj
-           |    FROM st, mm
-           |  ) WHERE bj IS NOT NULL
-           |),
-           |fin AS (
-           |  SELECT doc_id, lang, len(syms) AS n_syms
-           |  FROM (
-           |    SELECT doc_id, lang, wi, syms, $bestJ AS bj
-           |    FROM st, mm
-           |  ) WHERE bj IS NULL
-           |),
-           |bp AS (
-           |  SELECT doc_id, lang AS shard,
-           |         CAST(sum(n_syms) AS BIGINT) AS n_tokens
-           |  FROM fin GROUP BY 1, 2
-           |),
-           |o AS (
-           |  SELECT doc_id, shard, n_tokens,
-           |         coalesce(sum(n_tokens) OVER (PARTITION BY shard
-           |           ORDER BY doc_id
-           |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-           |           0) AS off
-           |  FROM bp)
-           |SELECT doc_id, shard, n_tokens,
-           |       CAST(floor(off / 256.0) AS BIGINT) AS seq_no
-           |FROM o ORDER BY doc_id""".stripMargin
-      }) { (s, dir) =>
+      "llm_pack_bpe",
+      s"""WITH RECURSIVE mm AS (
+         |  $bpeStaticMergeMap
+         |),
+         |w0 AS (
+         |  SELECT doc_id, lang, string_split(lower(text), ' ') AS ws
+         |  FROM documents
+         |),
+         |wds AS (
+         |  SELECT doc_id, lang,
+         |         unnest(generate_series(1, len(ws))) AS wi, ws
+         |  FROM w0
+         |),
+         |${duckBpeMergeSteps("lang")},
+         |fin AS (
+         |  SELECT doc_id, lang, len(syms) AS n_syms
+         |  FROM (
+         |    SELECT doc_id, lang, wi, syms, $bpeBestJ AS bj
+         |    FROM st, mm
+         |  ) WHERE bj IS NULL
+         |),
+         |bp AS (
+         |  SELECT doc_id, lang AS shard,
+         |         CAST(sum(n_syms) AS BIGINT) AS n_tokens
+         |  FROM fin GROUP BY 1, 2
+         |),
+         |o AS (
+         |  SELECT doc_id, shard, n_tokens,
+         |         coalesce(sum(n_tokens) OVER (PARTITION BY shard
+         |           ORDER BY doc_id
+         |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+         |           0) AS off
+         |  FROM bp)
+         |SELECT doc_id, shard, n_tokens,
+         |       CAST(floor(off / 256.0) AS BIGINT) AS seq_no
+         |FROM o ORDER BY doc_id""".stripMargin) { (s, dir) =>
       TextOps.packSequences(
         t(s, dir, "documents"), "doc_id", "text",
         budget = 256L, shardCol = col("lang"),
@@ -1829,7 +1856,7 @@ object TextQueries {
     // information; exact-digest dedup owns them).
     QDef.sql(
       "llm_payload_neardup",
-      """WITH hx AS (
+      s"""WITH hx AS (
         |  SELECT doc_id, lower(hex(encode(text))) AS h,
         |         CAST(octet_length(encode(text)) AS BIGINT) AS n
         |  FROM documents WHERE octet_length(encode(text)) > 0
@@ -1860,28 +1887,8 @@ object TextQueries {
         |                  ELSE 0 END) AS BIGINT) AS pcode
         |  FROM pb p JOIN tt t USING (doc_id) GROUP BY 1
         |),
-        |nn AS (
-        |  SELECT CASE WHEN p >= 15 THEN 15 WHEN p >= 12 THEN 12
-        |              WHEN p >= 10 THEN 10 WHEN p >= 6 THEN 6
-        |              WHEN p >= 5 THEN 5 ELSE 4 END AS wd
-        |  FROM (SELECT greatest(4, least(15, length(bin(count(*) - 1)) - 1))
-        |          AS p FROM documents)
-        |),
-        |banded AS (
-        |  SELECT doc_id, pcode, band,
-        |    (pcode >> CAST(band * nn.wd AS INT))
-        |      & ((CAST(1 AS BIGINT) << nn.wd) - 1) AS slice
-        |  FROM code, generate_series(0, 14) g(band), nn
-        |  WHERE band < 60 // nn.wd
-        |),
-        |p2 AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |         CAST(bit_count(xor(a.pcode, b.pcode)) AS BIGINT) AS hamming
-        |  FROM banded a JOIN banded b ON a.band = b.band AND a.slice = b.slice
-        |                             AND a.doc_id < b.doc_id
-        |)
-        |SELECT doc_a, doc_b, hamming FROM p2 WHERE hamming <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
+        |${DuckSql.duckBandWidthNn},
+        |${DuckSql.duckHammingPairsSql("code", "pcode", "p2")}""".stripMargin) { (s, dir) =>
       val docs = t(s, dir, "documents")
         .withColumn("payload", MultimodalOps.withPayload(col("text")))
       MultimodalOps.payloadNearDupPairs(docs, "doc_id", "payload")
@@ -1901,20 +1908,8 @@ object TextQueries {
       s"""WITH ${duckPayloadCodeCtes("pcd")},
          |nn AS ${duckWidthLadder(
                "SELECT count(*) FROM documents WHERE doc_id % 3 = 0")},
-         |hb AS (
-         |  SELECT doc_id, pcode, band,
-         |    (pcode >> CAST(band * nn.wd AS INT))
-         |      & ((CAST(1 AS BIGINT) << nn.wd) - 1) AS slice
-         |  FROM pcd, generate_series(0, 14) g(band), nn
-         |  WHERE band < 60 // nn.wd AND doc_id % 3 = 0
-         |),
-         |nb AS (
-         |  SELECT doc_id, pcode, band,
-         |    (pcode >> CAST(band * nn.wd AS INT))
-         |      & ((CAST(1 AS BIGINT) << nn.wd) - 1) AS slice
-         |  FROM pcd, generate_series(0, 14) g(band), nn
-         |  WHERE band < 60 // nn.wd AND doc_id % 3 <> 0
-         |),
+         |${DuckSql.duckBandSlices("hb", "pcd", "pcode", " AND doc_id % 3 = 0")},
+         |${DuckSql.duckBandSlices("nb", "pcd", "pcode", " AND doc_id % 3 <> 0")},
          |dup AS (
          |  SELECT DISTINCT n.doc_id
          |  FROM nb n JOIN hb h ON n.band = h.band AND n.slice = h.slice
@@ -1944,20 +1939,8 @@ object TextQueries {
       s"""WITH RECURSIVE ${duckSimHash60Ctes("shc")},
          |${duckPayloadCodeCtes("pcd")},
          |nn AS ${duckWidthLadder("SELECT count(*) FROM documents")},
-         |tband AS (
-         |  SELECT doc_id, simhash, band,
-         |    (simhash >> CAST(band * nn.wd AS INT))
-         |      & ((CAST(1 AS BIGINT) << nn.wd) - 1) AS slice
-         |  FROM shc, generate_series(0, 14) g(band), nn
-         |  WHERE band < 60 // nn.wd
-         |),
-         |pband AS (
-         |  SELECT doc_id, pcode, band,
-         |    (pcode >> CAST(band * nn.wd AS INT))
-         |      & ((CAST(1 AS BIGINT) << nn.wd) - 1) AS slice
-         |  FROM pcd, generate_series(0, 14) g(band), nn
-         |  WHERE band < 60 // nn.wd
-         |),
+         |${DuckSql.duckBandSlices("tband", "shc", "simhash")},
+         |${DuckSql.duckBandSlices("pband", "pcd", "pcode")},
          |tp AS (
          |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |  FROM tband a JOIN tband b ON a.band = b.band AND a.slice = b.slice
@@ -1972,16 +1955,7 @@ object TextQueries {
          |),
          |prs AS (SELECT doc_a, doc_b FROM tp UNION
          |        SELECT doc_a, doc_b FROM pp),
-         |edges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM prs
-         |  UNION ALL SELECT doc_b, doc_a FROM prs
-         |),
-         |reach AS (
-         |  SELECT doc_id, doc_id AS label FROM documents
-         |  UNION
-         |  SELECT e.dst AS doc_id, r.label
-         |  FROM reach r JOIN edges e ON e.src = r.doc_id
-         |)
+         |${DuckSql.duckCcReach("documents", wrapStep = true)}
          |SELECT doc_id, min(label) AS canonical_id
          |FROM reach GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val docs = t(s, dir, "documents")
@@ -2058,11 +2032,7 @@ object TextQueries {
       "llm_tfidf_sim",
       s"""WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
          |           FROM documents),
-         |sh AS (
-         |  SELECT doc_id, unnest(list_transform(generate_series(1, len(ws)-2),
-         |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
-         |  FROM w
-         |),
+         |${DuckSql.duckWordShingles("sh", "w", 3)},
          |terms AS (SELECT doc_id, ${duckHash("s")} AS term FROM sh),
          |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
          |       FROM terms GROUP BY 1, 2),
@@ -2368,10 +2338,7 @@ object TextQueries {
          |      AS BIGINT) AS o
          |  FROM ordr o JOIN cnt5 c USING (doc_id)
          |)
-         |SELECT o.shard, (o.o + e.pos) // 256 AS seq_no,
-         |       (o.o + e.pos) % 256 AS seq_pos, e.doc_id, e.tid
-         |FROM enc e JOIN off5 o ON o.doc_id = e.doc_id
-         |ORDER BY shard, seq_no, seq_pos""".stripMargin) { (s, dir) =>
+         |${duckPackCutSql("off5", 256)}""".stripMargin) { (s, dir) =>
       val docs = t(s, dir, "documents")
       val scored = TextOps.lmStupidBackoff(docs, "doc_id", "text",
         trainPred = col("source") === "src0", threshBits = 8)
@@ -2420,27 +2387,7 @@ object TextQueries {
     // trained model (same plan shape: broadcast table, one keyed agg).
     QDef.sql(
       "llm_classifier",
-      s"""WITH wt AS (
-         |  SELECT CAST(i AS BIGINT) AS bucket,
-         |         CAST((i * 1103515245 + 12345) % 2001 - 1000 AS BIGINT) AS w
-         |  FROM generate_series(0, 1023) t(i)
-         |),
-         |toks AS (
-         |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-         |  FROM documents
-         |),
-         |hb AS (
-         |  SELECT doc_id, ${duckHash("tok")} % 1024 AS bucket FROM toks
-         |),
-         |agg AS (
-         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |         CAST(sum(coalesce(wt.w, 0)) AS BIGINT) AS w_sum
-         |  FROM hb LEFT JOIN wt USING (bucket) GROUP BY 1
-         |)
-         |SELECT doc_id, n_tokens, w_sum,
-         |  round(1.0 / (1.0 + exp(-(CAST(w_sum AS DOUBLE) / 1000.0
-         |                           / n_tokens))), 6) AS score
-         |FROM agg ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      duckClassifierSql) { (s, dir) =>
       val weights = s.range(1024).select(col("id").as("bucket"),
         ((col("id") * 1103515245L + 12345L) % 2001L - 1000L).as("w"))
       TextOps.classifierScore(t(s, dir, "documents"), "doc_id", "text",
@@ -2456,27 +2403,7 @@ object TextQueries {
     // the oracle is the same math as llm_classifier's.
     QDef.sql(
       "llm_classifier_row",
-      s"""WITH wt AS (
-         |  SELECT CAST(i AS BIGINT) AS bucket,
-         |         CAST((i * 1103515245 + 12345) % 2001 - 1000 AS BIGINT) AS w
-         |  FROM generate_series(0, 1023) t(i)
-         |),
-         |toks AS (
-         |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-         |  FROM documents
-         |),
-         |hb AS (
-         |  SELECT doc_id, ${duckHash("tok")} % 1024 AS bucket FROM toks
-         |),
-         |agg AS (
-         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |         CAST(sum(coalesce(wt.w, 0)) AS BIGINT) AS w_sum
-         |  FROM hb LEFT JOIN wt USING (bucket) GROUP BY 1
-         |)
-         |SELECT doc_id, n_tokens, w_sum,
-         |  round(1.0 / (1.0 + exp(-(CAST(w_sum AS DOUBLE) / 1000.0
-         |                           / n_tokens))), 6) AS score
-         |FROM agg ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      duckClassifierSql) { (s, dir) =>
       val weights = (0 until 1024).map(i =>
         i.toLong -> ((i.toLong * 1103515245L + 12345L) % 2001L - 1000L))
         .toMap
@@ -2513,11 +2440,7 @@ object TextQueries {
          |),
          |cl2 AS (
          |  SELECT doc_id, ws, nseg AS n_total,
-         |    list_filter(generate_series(0, nseg - 1), i ->
-         |      least(10, n - i * 10) >= 5 AND
-         |      len(list_filter(wsl[i * 10 + 1 : i * 10 + 10], w ->
-         |        list_contains(['lorem','ipsum','javascript','{','}'], w)
-         |      )) = 0) AS keep_idx
+         |$duckC4KeepIdx
          |  FROM cl1
          |),
          |cl AS (
@@ -2561,11 +2484,7 @@ object TextQueries {
          |    AND CAST(n_al AS DOUBLE) / n_words >= 0.8
          |    AND n_stop >= 1, false)
          |),
-         |wt AS (
-         |  SELECT CAST(i AS BIGINT) AS bucket,
-         |         CAST((i * 1103515245 + 12345) % 2001 - 1000 AS BIGINT) AS w
-         |  FROM generate_series(0, 1023) t(i)
-         |),
+         |$duckClassifierWeights,
          |agg AS (
          |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
          |         CAST(sum(coalesce(wt.w, 0)) AS BIGINT) AS w_sum
@@ -2762,11 +2681,7 @@ object TextQueries {
          |),
          |k AS (
          |  SELECT doc_id, ws, nseg AS n_total,
-         |    list_filter(generate_series(0, nseg - 1), i ->
-         |      least(10, n - i * 10) >= 5 AND
-         |      len(list_filter(wsl[i * 10 + 1 : i * 10 + 10], w ->
-         |        list_contains(['lorem','ipsum','javascript','{','}'], w)
-         |      )) = 0) AS keep_idx
+         |$duckC4KeepIdx
          |  FROM c
          |)
          |SELECT doc_id, n_total, CAST(len(keep_idx) AS BIGINT) AS n_kept,
@@ -2898,58 +2813,8 @@ object TextQueries {
     // selection = deterministic top-100 by (score, doc_id).
     QDef.sql(
       "llm_dsir",
-      s"""WITH bt AS (
-         |  SELECT bucket, CAST(count(*) AS BIGINT) AS ct FROM (
-         |    SELECT ${duckHash("tok")} % 512 AS bucket FROM (
-         |      SELECT unnest(string_split(lower(text), ' ')) AS tok
-         |      FROM documents WHERE source = 'src0')
-         |  ) GROUP BY 1
-         |),
-         |rt AS (
-         |  SELECT doc_id, ${duckHash("tok")} % 512 AS bucket FROM (
-         |    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-         |    FROM documents WHERE source <> 'src0')
-         |),
-         |br AS (
-         |  SELECT bucket, CAST(count(*) AS BIGINT) AS cr
-         |  FROM rt GROUP BY 1
-         |),
-         |tot AS (
-         |  SELECT (SELECT CAST(sum(ct) AS BIGINT) FROM bt) AS t,
-         |         (SELECT CAST(sum(cr) AS BIGINT) FROM br) AS r
-         |),
-         |cnts AS (
-         |  SELECT g.i AS bucket, coalesce(ct, 0) + 1 AS a_t,
-         |         coalesce(cr, 0) + 1 AS a_r
-         |  FROM generate_series(0, 511) g(i)
-         |  LEFT JOIN bt ON bt.bucket = g.i
-         |  LEFT JOIN br ON br.bucket = g.i
-         |),
-         |args AS (
-         |  SELECT DISTINCT n FROM (
-         |    SELECT a_t AS n FROM cnts
-         |    UNION SELECT a_r FROM cnts
-         |    UNION SELECT t + 512 FROM tot
-         |    UNION SELECT r + 512 FROM tot)
-         |),
-         |${DuckSql.duckLog2FixedCtes("args")},
-         |wt AS (
-         |  SELECT cnts.bucket,
-         |    f1.f - ft.f - f2.f + fr.f AS w
-         |  FROM cnts CROSS JOIN tot
-         |  JOIN lg f1 ON f1.n = cnts.a_t
-         |  JOIN lg ft ON ft.n = tot.t + 512
-         |  JOIN lg f2 ON f2.n = cnts.a_r
-         |  JOIN lg fr ON fr.n = tot.r + 512
-         |),
-         |sc AS (
-         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |         CAST(sum(wt.w) AS BIGINT) AS score
-         |  FROM rt LEFT JOIN wt USING (bucket) GROUP BY 1
-         |)
-         |SELECT doc_id, n_tokens, score,
-         |  round(CAST(score AS DOUBLE) / 1048576.0, 6) AS lr
-         |FROM sc ORDER BY score DESC, doc_id LIMIT 100""".stripMargin) {
+      s"""WITH ${duckDsirUnigrams("text", "documents")},
+         |${duckDsirTopKSql(100)}""".stripMargin) {
       (s, dir) =>
         val docs = t(s, dir, "documents")
         val target = docs.filter(col("source") === "src0")
@@ -2987,46 +2852,7 @@ object TextQueries {
          |rt AS (
          |  SELECT doc_id, bucket FROM ft WHERE source <> 'src0'
          |),
-         |br AS (
-         |  SELECT bucket, CAST(count(*) AS BIGINT) AS cr
-         |  FROM rt GROUP BY 1
-         |),
-         |tot AS (
-         |  SELECT (SELECT CAST(sum(ct) AS BIGINT) FROM bt) AS t,
-         |         (SELECT CAST(sum(cr) AS BIGINT) FROM br) AS r
-         |),
-         |cnts AS (
-         |  SELECT g.i AS bucket, coalesce(ct, 0) + 1 AS a_t,
-         |         coalesce(cr, 0) + 1 AS a_r
-         |  FROM generate_series(0, 511) g(i)
-         |  LEFT JOIN bt ON bt.bucket = g.i
-         |  LEFT JOIN br ON br.bucket = g.i
-         |),
-         |args AS (
-         |  SELECT DISTINCT n FROM (
-         |    SELECT a_t AS n FROM cnts
-         |    UNION SELECT a_r FROM cnts
-         |    UNION SELECT t + 512 FROM tot
-         |    UNION SELECT r + 512 FROM tot)
-         |),
-         |${DuckSql.duckLog2FixedCtes("args")},
-         |wt AS (
-         |  SELECT cnts.bucket,
-         |    f1.f - ft2.f - f2.f + fr.f AS w
-         |  FROM cnts CROSS JOIN tot
-         |  JOIN lg f1 ON f1.n = cnts.a_t
-         |  JOIN lg ft2 ON ft2.n = tot.t + 512
-         |  JOIN lg f2 ON f2.n = cnts.a_r
-         |  JOIN lg fr ON fr.n = tot.r + 512
-         |),
-         |sc AS (
-         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |         CAST(sum(wt.w) AS BIGINT) AS score
-         |  FROM rt LEFT JOIN wt USING (bucket) GROUP BY 1
-         |)
-         |SELECT doc_id, n_tokens, score,
-         |  round(CAST(score AS DOUBLE) / 1048576.0, 6) AS lr
-         |FROM sc ORDER BY score DESC, doc_id LIMIT 100""".stripMargin) {
+         |${duckDsirTopKSql(100, "ft2")}""".stripMargin) {
       (s, dir) =>
         val docs = t(s, dir, "documents")
         val target = docs.filter(col("source") === "src0")
@@ -3060,11 +2886,7 @@ object TextQueries {
          |),
          |ck AS (
          |  SELECT doc_id, source,
-         |    list_filter(generate_series(0, nseg - 1), i ->
-         |      least(10, n - i * 10) >= 5 AND
-         |      len(list_filter(wsl[i * 10 + 1 : i * 10 + 10], w ->
-         |        list_contains(['lorem','ipsum','javascript','{','}'], w)
-         |      )) = 0) AS keep_idx,
+         |$duckC4KeepIdx,
          |    ws
          |  FROM cc
          |),
@@ -3104,58 +2926,8 @@ object TextQueries {
          |          ['the','be','to','of','and','that','have','with'],
          |          t -> list_contains(cwsl, t))) >= 1
          |),
-         |bt AS (
-         |  SELECT bucket, CAST(count(*) AS BIGINT) AS ct FROM (
-         |    SELECT ${duckHash("tok")} % 512 AS bucket FROM (
-         |      SELECT unnest(string_split(lower(tc), ' ')) AS tok
-         |      FROM gk WHERE source = 'src0')
-         |  ) GROUP BY 1
-         |),
-         |rt AS (
-         |  SELECT doc_id, ${duckHash("tok")} % 512 AS bucket FROM (
-         |    SELECT doc_id, unnest(string_split(lower(tc), ' ')) AS tok
-         |    FROM gk WHERE source <> 'src0')
-         |),
-         |br AS (
-         |  SELECT bucket, CAST(count(*) AS BIGINT) AS cr
-         |  FROM rt GROUP BY 1
-         |),
-         |tot AS (
-         |  SELECT (SELECT CAST(sum(ct) AS BIGINT) FROM bt) AS t,
-         |         (SELECT CAST(sum(cr) AS BIGINT) FROM br) AS r
-         |),
-         |cnts AS (
-         |  SELECT g.i AS bucket, coalesce(ct, 0) + 1 AS a_t,
-         |         coalesce(cr, 0) + 1 AS a_r
-         |  FROM generate_series(0, 511) g(i)
-         |  LEFT JOIN bt ON bt.bucket = g.i
-         |  LEFT JOIN br ON br.bucket = g.i
-         |),
-         |args AS (
-         |  SELECT DISTINCT n FROM (
-         |    SELECT a_t AS n FROM cnts
-         |    UNION SELECT a_r FROM cnts
-         |    UNION SELECT t + 512 FROM tot
-         |    UNION SELECT r + 512 FROM tot)
-         |),
-         |${DuckSql.duckLog2FixedCtes("args")},
-         |wt AS (
-         |  SELECT cnts.bucket,
-         |    f1.f - ft.f - f2.f + fr.f AS w
-         |  FROM cnts CROSS JOIN tot
-         |  JOIN lg f1 ON f1.n = cnts.a_t
-         |  JOIN lg ft ON ft.n = tot.t + 512
-         |  JOIN lg f2 ON f2.n = cnts.a_r
-         |  JOIN lg fr ON fr.n = tot.r + 512
-         |),
-         |sc AS (
-         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |         CAST(sum(wt.w) AS BIGINT) AS score
-         |  FROM rt LEFT JOIN wt USING (bucket) GROUP BY 1
-         |)
-         |SELECT doc_id, n_tokens, score,
-         |  round(CAST(score AS DOUBLE) / 1048576.0, 6) AS lr
-         |FROM sc ORDER BY score DESC, doc_id LIMIT 150""".stripMargin) {
+         |${duckDsirUnigrams("tc", "gk")},
+         |${duckDsirTopKSql(150)}""".stripMargin) {
       (s, dir) =>
         val docs = t(s, dir, "documents")
         val cleaned = TextOps.c4Clean(docs, "doc_id", "text",
@@ -3265,46 +3037,13 @@ object TextQueries {
          |cws AS (
          |  SELECT doc_id, string_split(lower(tc), ' ') AS ws FROM exact
          |),
-         |csh AS (
-         |  SELECT doc_id, unnest(list_transform(generate_series(1, len(ws)-1),
-         |    i -> ws[i] || ' ' || ws[i+1])) AS s
-         |  FROM cws
-         |),
+         |${DuckSql.duckWordShingles("csh", "cws")},
          |chashed AS (
          |  SELECT DISTINCT doc_id, ${duckHash("s")} AS h FROM csh
          |),
-         |mh AS (
-         |  SELECT doc_id,
-         |    min((1000003 * h + 12345) % 2147483647) AS m0,
-         |    min((1000033 * h + 54321) % 2147483647) AS m1,
-         |    min((1000037 * h + 11111) % 2147483647) AS m2,
-         |    min((1000039 * h + 22222) % 2147483647) AS m3,
-         |    min((1000081 * h + 33333) % 2147483647) AS m4,
-         |    min((1000099 * h + 44444) % 2147483647) AS m5,
-         |    min((1000117 * h + 55555) % 2147483647) AS m6,
-         |    min((1000121 * h + 66666) % 2147483647) AS m7
-         |  FROM chashed GROUP BY doc_id
-         |),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, (m0 * 1000003 + m1) % 2147483647 AS bh FROM mh
-         |  UNION ALL SELECT doc_id, 1, (m2 * 1000003 + m3) % 2147483647 FROM mh
-         |  UNION ALL SELECT doc_id, 2, (m4 * 1000003 + m5) % 2147483647 FROM mh
-         |  UNION ALL SELECT doc_id, 3, (m6 * 1000003 + m7) % 2147483647 FROM mh
-         |),
-         |prs AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |                           AND a.doc_id < b.doc_id
-         |),
-         |cedges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM prs
-         |  UNION ALL SELECT doc_b, doc_a FROM prs
-         |),
-         |reach AS (
-         |  SELECT doc_id, doc_id AS label FROM exact
-         |  UNION
-         |  SELECT e.dst AS doc_id, r.label FROM reach r JOIN cedges e ON e.src = r.doc_id
-         |),
+         |${DuckSql.duckMinHashBands("chashed")},
+         |${DuckSql.duckBandPairs("prs")},
+         |${DuckSql.duckCcReach("exact", "cedges")},
          |canon AS (
          |  SELECT doc_id, min(label) AS comp FROM reach GROUP BY doc_id
          |),

@@ -551,7 +551,12 @@ class PlanSpec extends AnyFunSuite {
       val got = graft.operators.TextOps.rankLayout(in, "doc_id", "bits")
         .select("doc_id", "pos").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == expect, "rankLayout must equal the exact global rank")
+      val differing = ((got diff expect) ++ (expect diff got)).map(_._1)
+        .toSeq.sorted
+      val same = got == expect
+      assert(same, "rankLayout must equal the exact global rank: " +
+        s"${differing.size} doc_ids have a differing pos, first 10: " +
+        differing.take(10).mkString(", "))
     }
     exactRank(df)
     // many ties: 3 difficulty values over ~500 docs, arriving in

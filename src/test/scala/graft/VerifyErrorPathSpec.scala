@@ -7,9 +7,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * in its outDir slot plus an entry in `errors.json`), never as a
   * stderr line only. In round 8 a swallowed exception made 23 broken
   * queries "vanish" from the correctness artifact instead of showing
-  * as red rows — this suite keeps that class of wound closed. */
+  * as red rows — this suite keeps that class of wound closed. It also
+  * pins the query registry the harness iterates. */
 class VerifyErrorPathSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  test("query registry: 157 uniquely named queries, each with an oracle") {
+    val names = SparkEntry.allDefs.map(_.name)
+    val dups = names.diff(names.distinct).distinct
+    assert(dups.isEmpty,
+      s"a duplicate name silently drops a query from the registry: $dups")
+    assert(names.size == 157)
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
+  }
 
   test("a broken sfDir surfaces EVERY query as an _ERROR slot and an " +
     "errors.json entry, with oracle_sql.json still written") {
