@@ -156,18 +156,22 @@ object Main {
     val monitor = if (args.monitor || seq.monitoringEnabled) {
       val m = new graft.engine.SystemMonitor(); m.start(); Some(m)
     } else None
-    // persistAll: the metrics pass below forces every pipeline's deferred
-    // recordCount — an unpersisted frame would re-run its whole DAG (and
-    // re-fire fan-out HTTP side effects) AFTER the sink already wrote.
-    // Lazy persist costs nothing until the first materialization, and
-    // the sink/count is exactly that materialization. Unpersist once
-    // reporting is done. On a stop-on-failure abort the orchestrator
-    // hands back the partial context: the reference's runner writes
-    // sequence_metrics.json for failed runs too (sequence_etl.rs:336-400).
+    // records_count: the metrics pass below forces every pipeline's
+    // deferred recordCount. It comes from the sink's own pass (an
+    // Observation on a distributed write) or from the validation count,
+    // so most frames are read once and never pinned; execute pins only
+    // a frame something reads twice (a multi-format, ZIP or single-file
+    // sink, a later consumer), and its count reads that pin — so the
+    // pins are released only after reporting. Pinning every output
+    // instead would also run each cached plan without AQE's partition
+    // coalescing (a cached plan keeps its shuffle width). On a
+    // stop-on-failure abort the orchestrator hands back the partial
+    // context: the reference's runner writes sequence_metrics.json for
+    // failed runs too (sequence_etl.rs:336-400).
     val (ctx, abortErr) =
       try {
         val c = Orchestrator.execute(spark, seq, execId, args.only, args.skip,
-          unpersistOnEnd = false, persistAll = true)
+          unpersistOnEnd = false)
         (c, None)
       } catch {
         case e: Orchestrator.ValidationException =>

@@ -13,10 +13,12 @@ import graft.sources.Http
 
 /** Per-pipeline outcome held by the run context (reference
   * PipelineResult, sequence_pipeline.rs:8-15). `recordCount` is LAZY:
-  * counting is a Spark action, so it runs only when something actually
-  * demands it — a C2 records-count/skip-if-empty condition, the A1/W7
-  * summary, or an explicit caller. A pipeline with no conditions, no
-  * sink and no export triggers zero jobs. */
+  * it is read only when something actually demands it — a C2
+  * records-count/skip-if-empty condition, the A1/W7 summary, or an
+  * explicit caller — and it is a Spark action only when neither the
+  * sink's pass nor the validation count already counted the rows. A
+  * pipeline with no conditions, no sink and no export triggers zero
+  * jobs. */
 final case class PipelineOutcome(
     name: String,
     df: Option[DataFrame],
@@ -222,14 +224,7 @@ object Orchestrator {
       executionId: String = s"seq_${System.currentTimeMillis()}",
       only: Set[String] = Set.empty,
       skip: Set[String] = Set.empty,
-      unpersistOnEnd: Boolean = true,
-      /** Persist every succeeded pipeline's frame regardless of the
-        * consumed-later heuristic. Set by callers that will force every
-        * deferred recordCount afterwards (the CLI's metrics pass) — an
-        * unpersisted frame would re-run its whole DAG at count time,
-        * re-firing fan-out HTTP side effects after the sink already
-        * wrote. Lazy persist: costs nothing until first materialization. */
-      persistAll: Boolean = false): RunContext = {
+      unpersistOnEnd: Boolean = true): RunContext = {
     validate(seq)
     val ctx = new RunContext(executionId)
     val byName = seq.pipelines.map(p => p.name -> p).toMap
@@ -241,19 +236,25 @@ object Orchestrator {
     // round-1 eager persist+count anti-pattern). "More than once" means:
     // a later pipeline consumes previous outputs (source or merge), a
     // later pipeline's count-based condition forces a previous count,
-    // or the pipeline's own load runs one action per format / zip entry.
+    // the pipeline's own load runs one action per format / zip entry,
+    // `transform.validation` counts the frame before the sink, or the
+    // record count needs its own pass. The count rides on the sink's
+    // pass when the sink is a distributed write (an Observation on it);
+    // a single-file render cannot deliver one, so there the count is a
+    // second read. A pipeline with no sink is read once, by the count.
     def consumesPrevious(p: PipelineDef): Boolean = (p.source match {
       case _: PreviousSource | CombinedSource | _: MergedApiSource |
           _: ParameterizedApiSource => true
       case _ => p.transform.mergeWithPrevious
     }) || p.conditions.whenRecordsCount.nonEmpty || p.conditions.skipIfEmpty
-    def multiActionLoad(p: PipelineDef): Boolean =
-      p.load.exists(l => l.formats.size > 1 || l.zip || l.appendToSequence)
+    def readsTwice(p: PipelineDef): Boolean =
+      p.load.exists(l => l.formats.size > 1 || l.appendToSequence ||
+        !observesCount(l)) || validationCounts(p)
     selected.zipWithIndex.foreach { case (name, i) =>
       val p = byName(name)
-      val consumedLater = persistAll ||
+      val consumedLater =
         selected.drop(i + 1).exists(n => consumesPrevious(byName(n))) ||
-          multiActionLoad(p)
+          readsTwice(p)
       if (!shouldExecute(p, ctx)) {
         ctx.results(name) = PipelineOutcome(name, None, None, 0L, "skipped")
       } else {
@@ -345,11 +346,23 @@ object Orchestrator {
     }
   }
 
+  /** True when the sink's own pass can report the record count: a
+    * distributed write (one write action per format), which carries an
+    * Observation. Single-file and ZIP sinks render through the driver's
+    * `toLocalIterator`, which delivers none. */
+  private def observesCount(l: LoadDef): Boolean = !l.singleFile && !l.zip
+
+  /** True when `transform.validation` counts the frame (min/max bounds). */
+  private def validationCounts(p: PipelineDef): Boolean =
+    p.transform.validation.exists(v => v.minRecords.nonEmpty || v.maxRecords.nonEmpty)
+
   /** One pipeline: extract → transform → load (EtlEngine parity,
     * etl_engine.rs:25-65). Nothing is materialized unless something
     * demands it: the C1 export collects only the (bounded) intermediate
     * branch, the sink write is its own action, and the record count is
-    * deferred behind `PipelineOutcome.recordCount`. */
+    * deferred behind `PipelineOutcome.recordCount` — taken from the
+    * validation count or the sink's Observation when either ran, and by
+    * a count of the frame otherwise. */
   def runPipeline(
       spark: SparkSession,
       p: PipelineDef,
@@ -369,28 +382,39 @@ object Orchestrator {
     // transform.validation (declared-but-dead in the reference,
     // implemented honestly): schema check is free; min/max force ONE
     // count — after persist, so the materialization is reused by the
-    // sink and the deferred metrics count
-    try p.transform.validation.foreach { v =>
+    // sink — and that count is the record count
+    val validated = try p.transform.validation.flatMap { v =>
       val missing = v.requiredFields.filterNot(main.columns.contains)
       if (missing.nonEmpty) throw new IllegalStateException(
         s"pipeline '${p.name}': missing required fields ${missing.mkString(",")}")
-      if (v.minRecords.nonEmpty || v.maxRecords.nonEmpty) {
+      if (validationCounts(p)) {
         val n = main.count()
         v.minRecords.filter(n < _).foreach(m => throw new IllegalStateException(
           s"pipeline '${p.name}': $n records < min_records $m"))
         v.maxRecords.filter(n > _).foreach(m => throw new IllegalStateException(
           s"pipeline '${p.name}': $n records > max_records $m"))
-      }
+        Some(n)
+      } else None
     } catch { case scala.util.control.NonFatal(e) =>
       throw PhaseFailed("transform", e, None) }
     exportShared(p, ctx, intermediate)
+    val observation = p.load.filter(l => validated.isEmpty && observesCount(l))
+      .map(_ => org.apache.spark.sql.Observation())
+    val written = observation.fold(main)(o => main.observe(o, count(lit(1)).as("records")))
     val (outPath, lMs) = timed(
       try p.load.map { l =>
-        Sinks.write(spark, main, intermediate, l, p.name, ctx.executionId)
+        Sinks.write(spark, written, intermediate, l, p.name, ctx.executionId)
       } catch { case scala.util.control.NonFatal(e) =>
         throw PhaseFailed("load", e, Some(main)) })
+    // the Observation completes on the listener bus once the write's
+    // query finishes: drain the bus, then read it without blocking
+    def observed: Option[Long] = observation.flatMap { o =>
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+      o.future.value.flatMap(_.toOption).map(_.getLong(0))
+    }
     PipelineOutcome(p.name, Some(main), outPath, 0L, "succeeded", None,
-      () => main.count(), extractMs = eMs, transformMs = tMs, loadMs = lMs)
+      () => validated.orElse(observed).getOrElse(main.count()),
+      extractMs = eMs, transformMs = tMs, loadMs = lMs)
   }
 
   /** Extract phase: source dispatch (S1-S9) then the data_processing

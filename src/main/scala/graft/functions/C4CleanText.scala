@@ -30,9 +30,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    limit −1 (trailing empty strings kept) — identical to Spark's
   *    StringSplit;
   *  - the blacklist is matched on `split(lower(text), " ")` with
-  *    lower = UTF8String.toLowerCase (Spark's `lower()`), computed on
-  *    the WHOLE text before splitting — context-sensitive lowercasing
-  *    (e.g. Greek final sigma) behaves identically;
+  *    lower = [[GraftLower.lowerUtf8]] (Spark's `lower()`: ICU root
+  *    casing, whatever the JVM's default locale), computed on the WHOLE
+  *    text before splitting — context-sensitive lowercasing (e.g. Greek
+  *    final sigma) behaves identically;
   *  - the keep rule reads word counts from the ORIGINAL-case array
   *    and blacklist membership from the lowercase array, each sliced
   *    by its own bounds, exactly as the relational form did;
@@ -86,8 +87,8 @@ object C4CleanText {
 
     def clean(text: UTF8String): InternalRow = {
       val s = text.toString
-      // Spark lower(): UTF8String.toLowerCase, whole text first
-      val low = text.toLowerCase.toString
+      // Spark lower(), whole text first
+      val low = GraftLower.lowerUtf8(text).toString
       val ws = s.split(" ", -1)
       val wsl = low.split(" ", -1)
       val n = ws.length.toLong

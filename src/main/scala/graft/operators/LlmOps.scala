@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import graft.engine.Pin
+import graft.functions.GraftLower
 
 /** Large-scale training-data-pipeline operators (beyond reference parity;
   * the brief's "LLM data pipeline" surface): near-duplicate detection
@@ -50,8 +52,13 @@ object LlmOps {
       graft.functions.PolyHash(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
 
-  /** Lowercased whitespace tokens of a text column. */
-  def words(textCol: Column): Column = split(lower(textCol), " ")
+  /** Lowercased whitespace tokens of a text column. Lower-cases with
+    * [[graft.functions.GraftLower]] (`graft_lower`), not Spark's
+    * `lower()`: the results are the same, but Spark's first `lower()` in
+    * a JVM initializes `CollationAwareUTF8String`, whose title-case table
+    * costs ~1.4 s of one task thread, and graft runs one sequence per
+    * JVM. Every lower-casing on graft's product path goes through it. */
+  def words(textCol: Column): Column = split(GraftLower.lower(textCol), " ")
 
   /** Full-avalanche 32-bit finalizer (degski/Wang xor-shift-multiply,
     * two rounds of `x ^= x>>16; x *= 0x45d9f3b` plus a final fold) —
@@ -1752,59 +1759,69 @@ object LlmOps {
     * `canonical_id` (docs in no pair stay their own canonical). The
     * final step of corpus dedup — keep rows where id == canonical_id.
     *
-    * Iterative min-label propagation with pointer jumping: each round
-    * joins labels across edges (and across the label graph) and keeps
-    * the least label seen — O(log diameter) rounds, the standard
-    * large-graph CC pattern, all partition-parallel. The loop runs
-    * under loop-scoped planning config (static planning,
-    * edge-proportional shuffle width — see the inline note; fixed
-    * per-job overhead, not shuffle volume, dominates each round's
-    * cost). Each round checkpoints its frame and releases the previous
-    * one so both the lineage and the block-manager footprint stay
-    * bounded. Throws if `maxIters` rounds pass without a fixpoint,
-    * rather than returning a silently-wrong labeling.
+    * Two ways to a labeling, one result:
+    *  - a graph that fits on the driver — at most
+    *    [[TextOps.BroadcastMaxRows]] directed edges (each pair counts
+    *    twice), the bound graft already broadcasts lookup tables under —
+    *    is collected and finished there by union-find over primitive
+    *    arrays: one count and one collect instead of an init query and
+    *    2+ queries per round. The labels come back as a local relation;
+    *  - a larger graph runs iterative min-label propagation with pointer
+    *    jumping: each round joins labels across edges (and across the
+    *    label graph) and keeps the least label seen — O(log diameter)
+    *    rounds, all partition-parallel (the MapReduce family Kiveris et
+    *    al., SoCC 2014, analyze). After each round that still changed a
+    *    label, the contracted graph — distinct (label(src), label(dst))
+    *    pairs whose labels differ — is counted, and once it fits under
+    *    the same bound it is collected and finished on the driver the
+    *    same way, so the long tail of near-converged rounds never runs.
+    *    The loop plans in a private child session (static planning,
+    *    edge-proportional shuffle width — see the inline note) and
+    *    checkpoints each round, releasing the previous one, so lineage
+    *    and block-manager footprint stay bounded.
+    * Labels are minima in Spark's ordering of the id type, so any id
+    * type the loop orders (integral, string, …) gets the same labels
+    * either way. Throws if `maxIters` rounds pass without a fixpoint or
+    * a fitting contracted graph, rather than returning a
+    * silently-wrong labeling.
     *
-    * KNOWN SCALE LIMIT (r20 probe finding; its cause is fixed, sf10 not
-    * re-run): the `crossModalDupGroups` union graph at sf10 (500k docs)
-    * needs MORE than 25 rounds (16 at sf1 — long payload/simhash chain
-    * components), and raising this cap to 60 made round wall time grow
-    * with round index (1.8 → 5 → 13 min) until Catalyst's size-in-bytes
-    * estimation overflowed BigInteger around round 40. The cause: each
-    * round's checkpoint kept the ESTIMATED size of the plan it replaced,
-    * and every round joins the labels with themselves, so the estimate's
-    * digit count doubled per round (sf1 crossmodal: 13 digits at round
-    * 1, 846,245 at round 16). Rounds are now [[graft.engine.Pin]]
-    * checkpoints that report the bytes the block manager holds (sf1
-    * crossmodal: 1.4 MB every round, same rounds and labels). The cap
-    * stays at 25 until the `cc_iter` probe shows what sf10 needs; every
-    * oracle-scale graph converges in ≤ 16 rounds. */
+    * Scale record (`cc_iter` probe, 4 cores): at sf1 both probe graphs
+    * (1.0M and 85k directed edges) finish on the driver with no round,
+    * in 1.9 and 0.24 s; the loop took 8 and 16 rounds. At sf10 the
+    * cross-modal union graph (1.92M directed edges), which the loop
+    * needed 28 rounds and 30.6 s for, past the cap of 25, finishes on
+    * the driver in 2.8 s. Each loop round checkpoint reports the bytes
+    * the block manager holds ([[graft.engine.Pin]]), not Spark's
+    * estimate, which squared every self-joining round and overflowed by
+    * round ~40. */
   def dedupGroups(
       ids: DataFrame, idCol: String, pairs: DataFrame,
       maxIters: Int = 25): DataFrame =
-    dedupGroupsObserved(ids, idCol, pairs, maxIters)((_, _) => ())
+    dedupGroupsObserved(ids, idCol, pairs, maxIters)(_ => ()).labels
 
-  /** [[dedupGroups]], calling `onRound(seconds, labelsChanged)` after each
-    * propagation round — the per-round trajectory the `cc_iter` probe
-    * records. */
+  /** One round of [[dedupGroups]]' propagation loop: its seconds, the
+    * labels it lowered, and the directed edge count of the contracted
+    * graph it left (0 once no label changed). */
+  private[graft] final case class CcRound(
+      seconds: Double, changed: Long, contracted: Long)
+
+  /** A [[dedupGroups]] labeling, and whether the driver finished it. */
+  private[graft] final case class CcResult(labels: DataFrame, driverFinished: Boolean)
+
+  /** [[dedupGroups]], calling `onRound` after each propagation round —
+    * the per-round trajectory the `cc_iter` probe records — with the
+    * driver-finish bound exposed, so a test can force the loop. */
   private[graft] def dedupGroupsObserved(
-      ids: DataFrame, idCol: String, pairs: DataFrame, maxIters: Int)(
-      onRound: (Double, Long) => Unit): DataFrame = {
-    // Checkpoint, NOT cache: each pass references the previous labels
-    // several times, so without lineage truncation the logical plan
-    // doubles per pass — exponential analysis cost and an OOM by
-    // ~iteration 20. Checkpointing pins the rows and cuts the plan to a
-    // constant-size scan per pass.
-    // Edges are LAZY-checkpointed and materialized by ONE up-front
-    // count, which doubles as the loop's parallelism probe: the
-    // connected subgraph is typically orders of magnitude smaller than
-    // the corpus, so the iteration runs at edge-proportional width
-    // (~2M edges/partition) instead of the session's corpus-sized
-    // shuffle partitioning. The pairs plan itself (often a heavy
-    // MinHash/LSH pipeline) is still planned under the CALLER's config,
-    // AQE included.
+      ids: DataFrame, idCol: String, pairs: DataFrame, maxIters: Int,
+      driverMaxEdges: Long = TextOps.BroadcastMaxRows)(
+      onRound: CcRound => Unit): CcResult = {
     val sess = ids.sparkSession
     // Symmetrize via explode, not self-union: one scan of the (often
-    // expensive) pairs plan instead of two.
+    // expensive) pairs plan instead of two. The edges are LAZY-
+    // checkpointed and materialized by ONE up-front count, which picks
+    // the path and sizes the loop. The pairs plan itself (often a heavy
+    // MinHash/LSH pipeline) is planned under the CALLER's config, AQE
+    // included.
     val edgesCp = Pin.checkpoint(pairs
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
@@ -1812,10 +1829,31 @@ object LlmOps {
       .select(col("e.src").as("src"), col("e.dst").as("dst")), eager = false)
     val edgeCount = edgesCp.count()
     val edges0 = Pin.measure(edgesCp)
+    val idType = edges0.schema("src").dataType
+    // the edge-connected ids' (id, label) plus every other id of `ids`
+    // as its own label, as (idCol, canonical_id)
+    def withIsolated(labels: DataFrame): DataFrame = {
+      val isolated = ids.select(col(idCol).as("id"))
+        .join(labels.select(col("id")), Seq("id"), "left_anti")
+        .select(col("id"), col("id").as("label"))
+      labels.select(col("id"), col("label")).union(isolated)
+        .select(col("id").as(idCol), col("label").as("canonical_id"))
+    }
+    def local(rows: Array[Row]): DataFrame =
+      sess.createDataFrame(java.util.Arrays.asList(rows: _*),
+        StructType(Seq(
+          StructField("id", idType),
+          StructField("label", idType))))
+    // one direction of each undirected edge is enough for union-find
+    def halfEdges(e: DataFrame): Array[Row] =
+      e.filter(col("src") <= col("dst")).select(col("src"), col("dst")).collect()
+    if (edgeCount <= driverMaxEdges) {
+      val rows = try halfEdges(edges0) finally Pin.release(edges0)
+      return CcResult(withIsolated(local(driverLabels(rows, idType))),
+        driverFinished = true)
+    }
     // Only edge-connected nodes need label propagation; everything else
-    // is trivially its own canonical and rejoins at the end. In a real
-    // corpus near-dups are a small fraction, so the iterated set — and
-    // every per-round shuffle — shrinks by orders of magnitude.
+    // is trivially its own canonical and rejoins at the end.
     // Initialization fuses the would-be first round: over identity
     // labels, hop 1 reduces to "min neighbor id", so labels start at
     // least(id, min_neighbor) for the cost of the same one aggregation
@@ -1865,14 +1903,25 @@ object LlmOps {
       // the extra join outweighed the rounds it saved)
       selfMsgs.union(neighborMsgs).union(jumpMsgs)
     }
+    // the contracted graph: edges between labels, labels that differ
+    def contracted(l: DataFrame): DataFrame =
+      edges
+        .join(l.select(col("id").as("src"), col("label").as("ls")), "src")
+        .join(l.select(col("id").as("dst"), col("label").as("ld")), "dst")
+        .filter(col("ls") =!= col("ld"))
+        .select(col("ls").as("src"), col("ld").as("dst")).distinct()
     var t0 = 0L
+    var finish: Option[Array[Row]] = None
     // each round is a LAZY checkpoint whose changed-count materializes
     // it, so the convergence check and the checkpoint share ONE job
     val out = Pin.rounds(init, maxIters, eager = false, scoped = Seq(edges0),
       until = { next =>
         val changed = next.filter(col("label") < col("oldLabel")).count()
-        onRound((System.nanoTime() - t0) / 1e9, changed)
-        changed == 0
+        val nContracted = if (changed == 0) 0L else contracted(next).count()
+        if (nContracted > 0 && nContracted <= driverMaxEdges)
+          finish = Some(halfEdges(contracted(next)))
+        onRound(CcRound((System.nanoTime() - t0) / 1e9, changed, nContracted))
+        changed == 0 || nContracted <= driverMaxEdges
       }) { labels =>
       t0 = System.nanoTime()
       Some(messages(labels.select(col("id"), col("label")))
@@ -1891,14 +1940,69 @@ object LlmOps {
     // The final round's checkpoint backs the result; it is re-hosted
     // back into the CALLER's session so the corpus-sized final
     // anti-join is planned under the caller's config, AQE included.
-    val finalLabels = org.apache.spark.sql.graftbridge.DatasetBridge
+    val loopLabels = org.apache.spark.sql.graftbridge.DatasetBridge
       .rehost(out.frame, sess)
       .select(col("id"), col("label"))
-    val isolated = ids.select(col(idCol).as("id"))
-      .join(finalLabels.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("label"))
-    finalLabels.union(isolated)
-      .select(col("id").as(idCol), col("label").as("canonical_id"))
+    val labels = finish.fold(loopLabels) { rows =>
+      // each label of the contracted graph re-points to its component's
+      // minimum label, which is the component's minimum id
+      val roots = local(driverLabels(rows, idType))
+        .select(col("id").as("label"), col("label").as("__root"))
+      loopLabels.join(broadcast(roots), Seq("label"), "left")
+        .select(col("id"), coalesce(col("__root"), col("label")).as("label"))
+    }
+    CcResult(withIsolated(labels), driverFinished = finish.nonEmpty)
+  }
+
+  /** Union-find over an edge list collected to the driver: (id, label)
+    * for every node of `edges`, the label being the minimum id of the
+    * node's component in Spark's ordering of `idType`. Nodes are
+    * numbered in id order and a union links the larger root under the
+    * smaller, so each root is its component's minimum; the parent
+    * links are one primitive array with path halving. */
+  private def driverLabels(edges: Array[Row],
+      idType: DataType): Array[Row] = {
+    val ord = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(idType)
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(idType)
+    val n = edges.length * 2
+    val ext = new Array[Any](n) // endpoint 2e / 2e+1 = src / dst of edge e
+    val cat = new Array[Any](n)
+    var i = 0
+    while (i < n) {
+      ext(i) = edges(i / 2).get(i % 2)
+      cat(i) = toCatalyst(ext(i))
+      i += 1
+    }
+    val byId: Array[Integer] = Array.tabulate(n)(j => Integer.valueOf(j))
+    java.util.Arrays.sort(byId,
+      (a: Integer, b: Integer) => ord.compare(cat(a.intValue), cat(b.intValue)))
+    val node = new Array[Int](n) // endpoint -> node number
+    val first = new Array[Int](n) // node number -> an endpoint holding its id
+    var m = -1
+    i = 0
+    while (i < n) {
+      val p = byId(i).intValue
+      if (m < 0 || !ord.equiv(cat(first(m)), cat(p))) { m += 1; first(m) = p }
+      node(p) = m
+      i += 1
+    }
+    val nodes = m + 1
+    val parent = Array.tabulate(nodes)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var e = 0
+    while (e < edges.length) {
+      val a = find(node(2 * e))
+      val b = find(node(2 * e + 1))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      e += 1
+    }
+    Array.tabulate(nodes)(v =>
+      Row(ext(first(v)), ext(first(find(v)))))
   }
 
   /** Near-dup canonicalization keeping the BEST member per duplicate

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftLower
+
 /** Core row-shaping operators of the engine.
   *
   * Capability parity with the reference's `SequenceAwarePipeline` transform
@@ -195,7 +197,7 @@ object Ops {
     val targets = fields.filter(df.columns.contains).toSet
     if (targets.isEmpty) df
     else df.select(df.columns.toIndexedSeq.map { c =>
-      if (targets.contains(c)) lower(col(c)).as(c) else col(c)
+      if (targets.contains(c)) GraftLower.lower(col(c)).as(c) else col(c)
     }: _*)
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Pin
+import graft.functions.GraftLower
 
 /** Text-analysis operators for training-data curation (brief: language
   * ID, quality scoring, token counting, fingerprinting). All are
@@ -63,7 +64,7 @@ object TextOps {
     * statistics survive even in fragments). Per-row, shuffle-free,
     * fuses with the scan. */
   def langIdNgram(textCol: Column): Column = {
-    val t = lower(textCol)
+    val t = GraftLower.lower(textCol)
     val tris = when(length(t) >= 3,
       transform(sequence(lit(1), length(t) - 2), i => t.substr(i, lit(3))))
       .otherwise(array().cast("array<string>"))
@@ -90,7 +91,7 @@ object TextOps {
       val ws = LlmOps.words(text)
       val nWords = size(ws).cast("long")
       val stopRatio = stopCount(ws, StopEn).cast("double") / nWords
-      val punct = length(regexp_replace(lower(text), "[a-z0-9 ]", ""))
+      val punct = length(regexp_replace(GraftLower.lower(text), "[a-z0-9 ]", ""))
       val punctRatio = punct.cast("double") / length(text)
       least(lit(1.0), nWords / lit(50.0)) * 0.4 +
         stopRatio * 0.3 + (lit(1.0) - punctRatio) * 0.3
@@ -105,7 +106,7 @@ object TextOps {
     val nWords = when(empty, lit(0L)).otherwise(size(ws).cast("long"))
     val stopRatio = when(empty, lit(0.0))
       .otherwise(stopCount(ws, StopEn).cast("double") / size(ws).cast("long"))
-    val punct = length(regexp_replace(lower(text), "[a-z0-9 ]", ""))
+    val punct = length(regexp_replace(GraftLower.lower(text), "[a-z0-9 ]", ""))
     val punctRatio = when(empty, lit(0.0))
       .otherwise(punct.cast("double") / length(text))
     df.select(col(idCol), nWords.as("n_words"),
@@ -118,7 +119,7 @@ object TextOps {
     * chars/4 BPE-style estimate. */
   def tokenCounts(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val text = col(textCol)
-    val alnum = filter(split(lower(text), "[^a-z0-9]+"), x => length(x) > 0)
+    val alnum = filter(split(GraftLower.lower(text), "[^a-z0-9]+"), x => length(x) > 0)
     df.select(col(idCol),
       size(split(text, " ")).cast("long").as("ws_tokens"),
       size(alnum).cast("long").as("alnum_tokens"),
@@ -414,7 +415,7 @@ object TextOps {
   def bpeVocab(df: DataFrame, textCol: String,
       merges: Seq[(String, String)]): Seq[(String, Int)] = {
     val base = df
-      .select(explode(split(lower(col(textCol)), "")).as("ch"))
+      .select(explode(split(GraftLower.lower(col(textCol)), "")).as("ch"))
       .filter(col("ch") =!= "")
       .distinct().orderBy("ch")
       .collect().map(_.getString(0))
@@ -556,6 +557,14 @@ object TextOps {
     * (≤ partitions·shards tiny rows, broadcast back). The largest
     * per-task sort is one range partition (~N/partitions rows).
     *
+    * Partition count: the range exchange asks for no fixed number, so
+    * under AQE the session's `spark.sql.shuffle.partitions` is only the
+    * starting width and AQE coalesces it to the data — a few hundred
+    * docs become one partition instead of 32 near-empty ones, and the
+    * window, join, encode and write stages after it launch that many
+    * tasks. AQE only merges ADJACENT ranges, so `__pid` order stays the
+    * global (shard, order…) order the offsets rely on.
+    *
     * Pinning (r15 form): the input is cached for its two reads — the
     * range exchange's boundary sampling job and the shuffle write, so
     * the upstream (a difficulty scorer, the per-doc BPE token count) is
@@ -571,10 +580,9 @@ object TextOps {
   private def shardPrefixSum(docs: DataFrame, order: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
     val pinned = Pin.cache(docs.withColumn("shard", col("shard").cast("long")))
     val ranged = Pin.checkpoint(pinned
-      .repartitionByRange(parts, (col("shard") +: order.map(col)): _*)
+      .repartitionByRange((col("shard") +: order.map(col)): _*)
       .withColumn("__pid", spark_partition_id().cast("long")), eager = false)
     // once the checkpoint holds the ranged rows, the pre-shuffle pin has
     // served both its reads (boundary sampling + shuffle write)
@@ -1017,7 +1025,7 @@ object TextOps {
       minAlphaFrac: Double = 0.8, minStopwords: Int = 2): DataFrame = {
     val text = col(textCol)
     val ws = split(text, " ")
-    val wsl = split(lower(text), " ")
+    val wsl = split(GraftLower.lower(text), " ")
     val lines = split(text, "\n")
     val nWords = size(ws).cast("long")
     val nLines = size(lines).cast("long")
@@ -1083,7 +1091,7 @@ object TextOps {
       maxBulletFrac: Double = 0.9, maxEllipsisFrac: Double = 0.3,
       minAlphaFrac: Double = 0.8, minStopwords: Int = 2): Column = {
     val ws = split(text, " ")
-    val wsl = split(lower(text), " ")
+    val wsl = split(GraftLower.lower(text), " ")
     val lines = split(text, "\n")
     val nWords = size(ws).cast("long")
     val nLines = size(lines).cast("long")
@@ -1892,7 +1900,7 @@ object TextOps {
     * shuffles on fp — the intended dedup shuffle). */
   def fingerprints(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val norm = regexp_replace(trim(lower(col(textCol))), "\\s+", " ")
+    val norm = regexp_replace(trim(GraftLower.lower(col(textCol))), "\\s+", " ")
     df.select(col(idCol), LlmOps.strHash(norm).as("fp"))
       .withColumn("n_same", count(lit(1)).over(Window.partitionBy("fp")))
   }
@@ -1937,7 +1945,7 @@ object TextOps {
     def gram(s: Column, pos: Column): Column = ColumnBridge.column(
       Substring(ColumnBridge.expression(s), ColumnBridge.expression(pos),
         Literal(k)))
-    val norm = regexp_replace(lower(col(textCol)), "[^a-z0-9]", "")
+    val norm = regexp_replace(GraftLower.lower(col(textCol)), "[^a-z0-9]", "")
     val grams = df.select(col(idCol), norm.as("__s"))
       .withColumn("__n", length(col("__s")) - (k - 1)) // gram count
       .filter(col("__n") >= 1)
@@ -2767,7 +2775,7 @@ object MultimodalOps {
     // "(?<=\\G..)" splits the hex string after every 2nd char — one
     // cell per payload byte, so exploded rows carry 2 chars, not the
     // whole hex string.
-    val cells = split(lower(hex(col(payloadCol))), "(?<=\\G..)")
+    val cells = split(GraftLower.lower(hex(col(payloadCol))), "(?<=\\G..)")
     val bytes = df
       // length() on the raw payload, not size() of the split: Java
       // "".split(..) yields [""], which would fabricate a byte for a

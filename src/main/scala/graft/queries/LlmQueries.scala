@@ -1006,7 +1006,7 @@ object LlmQueries {
          |  AND fp NOT IN (SELECT fp FROM f WHERE doc_id % 5 <> 0)
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val bow = array_join(
-        array_sort(array_distinct(split(lower(col("text")), " "))), " ")
+        array_sort(array_distinct(LlmOps.words(col("text")))), " ")
       val fps = t(s, dir, "documents")
         .select(col("doc_id"), LlmOps.strHash(bow).as("fp"))
       LlmOps.incrementalDedup(

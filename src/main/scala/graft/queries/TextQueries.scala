@@ -3078,7 +3078,7 @@ object TextQueries {
       // same normalization as TextOps.fingerprints: lower, trim, collapse
       val exact = scored
         .withColumn("fp", LlmOps.strHash(
-          regexp_replace(trim(lower(col("tc"))), "\\s+", " ")))
+          regexp_replace(trim(graft.functions.GraftLower.lower(col("tc"))), "\\s+", " ")))
         .withColumn("__rn", row_number().over(
           Window.partitionBy(col("fp")).orderBy(col("doc_id"))))
         .filter(col("__rn") === 1)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.engine.Pin
+import graft.functions.GraftLower
 
 /** Typed rows for the custom-state operators (Dataset[T] + Encoders:
   * type safety where the state logic is imperative). */
@@ -466,7 +467,7 @@ object Streams {
       .filter(lit(bias) + col("__c.w_sum").cast("double") / lit(scale) /
         col("__c.n_tokens") >= lit(logitMin))
       .withColumn("fp", LlmOps.strHash(
-        regexp_replace(trim(lower(col("text_clean"))), "\\s+", " ")))
+        regexp_replace(trim(GraftLower.lower(col("text_clean"))), "\\s+", " ")))
       .select(col(idCol), col(tsCol), col("n_kept"),
         col("__c.score").as("score"), col("fp"), col("text_clean"))
     if (gated.isStreaming)

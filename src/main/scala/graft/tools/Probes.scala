@@ -36,15 +36,17 @@ object Probes {
 
   private def longOr0(r: Row, i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
 
-  /** Connected components, pair build vs label loop: for the MinHash
+  /** Connected components, pair build vs labeling: for the MinHash
     * graph (`llm_dedup_groups`) and the SimHash ∪ payload graph
     * (`llm_crossmodal_groups`), per arm `<arm>.pairs`, `<arm>.cc`
     * (`LlmOps.dedupGroups` over the pinned pairs with a 40-round cap, so
-    * the trajectory past the production cap of 25 stays visible;
-    * `<arm>.rounds` holds [seconds, labels changed] per round of its last
-    * run) and `<arm>.prod_count` (production as callers run it; a run
+    * a trajectory past the production cap of 25 stays visible;
+    * `<arm>.rounds` holds [seconds, labels changed, contracted-graph
+    * directed edges] per loop round of its last run, and
+    * `<arm>.driver_finish` whether union-find on the driver finished
+    * it) and `<arm>.prod_count` (production as callers run it; a run
     * past its 25-round cap is a recorded failure).
-    * Latest artifact: `bench_r20_cc_iters_sf1.json`.
+    * Latest artifact: `artifacts/cc_iter_sf10_crossmodal.json`.
     * args: [all|minhash|crossmodal] */
   private def ccIter(p: Probe, args: Seq[String]): Unit = {
     val armFilter = args.headOption.getOrElse("all")
@@ -63,19 +65,22 @@ object Probes {
       val pinned = Pin.checkpoint(mkPairs(), eager = true)
       p.value(s"$arm.n_pairs")(pinned.count())
       val rounds = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
-      val labels = p.action(s"$arm.cc") {
+      val run = p.action(s"$arm.cc") {
         rounds.clear()
         LlmOps.dedupGroupsObserved(docs.select("doc_id"), "doc_id",
-          pinned, maxIters = 40) { (sec, changed) =>
-          rounds += Seq[Any](math.round(sec * 1000).toDouble / 1000.0, changed)
+          pinned, maxIters = 40) { r =>
+          rounds += Seq[Any](math.round(r.seconds * 1000).toDouble / 1000.0,
+            r.changed, r.contracted)
         }
       }
-      p.value(s"$arm.converged")(labels.isDefined)
+      p.value(s"$arm.converged")(run.isDefined)
+      p.value(s"$arm.driver_finish")(run.exists(_.driverFinished))
       p.value(s"$arm.rounds")(rounds.toSeq)
-      val instChk = p.value(s"$arm.chk_inst")(labels.fold("not_converged")(chk))
+      val instChk = p.value(s"$arm.chk_inst")(
+        run.fold("not_converged")(r => chk(r.labels)))
       p.action(s"$arm.prod_count")(prodLabels().count())
       val prodChk = p.value(s"$arm.chk_prod")(chk(prodLabels()))
-      p.value(s"$arm.chk_equal")(labels.isDefined && instChk == prodChk)
+      p.value(s"$arm.chk_equal")(run.isDefined && instChk == prodChk)
       Pin.release(pinned)
     }
 

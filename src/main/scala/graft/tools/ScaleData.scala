@@ -84,7 +84,7 @@ object ScaleData {
   private def decorrelateText(text: Column, replica: Column): Column = {
     val stops = typedLit(StopWords)
     val suffixed = transform(split(text, " "), w =>
-      when(array_contains(stops, lower(w)), w)
+      when(array_contains(stops, graft.functions.GraftLower.lower(w)), w)
         .otherwise(concat(w, lit("xr"), replica.cast("string"))))
     val keyed = zip_with(suffixed, sequence(lit(0), size(suffixed) - 1),
       (w, j) => struct(xxhash64(w, j, replica).as("h"), w.as("w")))

@@ -47,11 +47,11 @@ class C4CleanTextSpec extends AnyFunSuite {
   private val Blk = Seq("lorem", "ipsum", "javascript", "{", "}")
 
   private def check(texts: Seq[String], window: Int = 10,
-      minSegWords: Int = 5): Unit = {
+      minSegWords: Int = 5, blacklist: Seq[String] = Blk): Unit = {
     val df = texts.map(Tuple1(_)).toDF("text")
     val out = df.select(
-      kernel(col("text"), window, minSegWords, Blk).as("k"),
-      composed(col("text"), window, minSegWords, Blk).as("c")).collect()
+      kernel(col("text"), window, minSegWords, blacklist).as("k"),
+      composed(col("text"), window, minSegWords, blacklist).as("c")).collect()
     out.zip(texts).foreach { case (r, t) =>
       assert(r.getStruct(0) === r.getStruct(1), s"text=[$t]")
     }
@@ -71,6 +71,24 @@ class C4CleanTextSpec extends AnyFunSuite {
       "ΑΣ ΒΣ ΓΣ ΔΣ ΕΣ ΖΣ ΗΣ ΘΣ ΙΣ ΚΣ " * 3,      // final-sigma lowering
       ("İstanbul " * 50).trim,                    // Turkish dotted I
       " leading and trailing "))
+  }
+
+  test("lower-cases as Spark's lower() does, under a Turkish default " +
+    "locale and for capitals newer than the JDK's Unicode tables") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(new java.util.Locale("tr"))
+    try {
+      val pad = ("w " * 12).trim
+      // non-ASCII texts, so neither side takes the ASCII fast path;
+      // U+A7C0 (Unicode 14) lowers to U+A7C1 in ICU, not in JDK 17
+      check(Seq(
+        s"café LINK $pad",
+        s"café link $pad",
+        s"café \uA7C0x $pad",
+        s"İSTANBUL Iİ $pad"),
+        window = 4, minSegWords = 1,
+        blacklist = Seq("link", "lınk", "\uA7C1x", "istanbul", "ıi"))
+    } finally java.util.Locale.setDefault(saved)
   }
 
   test("matches the composed form on random texts (property, fixed seed)") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -658,6 +659,60 @@ class LlmOpsSpec extends AnyFunSuite {
       "nprobe=2 recall must not drop below nprobe=1")
   }
 
+  /** [[LlmOps.dedupGroups]] with the driver finish switched off: the
+    * propagation loop runs until no label changes. */
+  private def dedupGroupsLoop(ids: DataFrame, pairs: DataFrame,
+      maxIters: Int = 25): DataFrame =
+    LlmOps.dedupGroupsObserved(ids, "doc_id", pairs, maxIters,
+      driverMaxEdges = -1L)(_ => ()).labels
+
+  test("dedup groups: the driver finish labels exactly as the round loop " +
+    "on chains, stars, cycles and isolated nodes, Long and String ids") {
+    val graphs: Seq[(String, Seq[(Long, Long)])] = Seq(
+      "chain" -> (1L until 40L).map(i => (i + 1, i)),
+      "star" -> (2L to 30L).map(i => (17L, i)),
+      "cycle" -> ((50L until 60L).map(i => (i, i + 1)) :+ (60L -> 50L)),
+      "mixed" -> (Seq((9L, 3L), (3L, 7L), (70L, 71L), (5L, 5L)) ++
+        (80L until 90L).map(i => (i, 80L))))
+    for ((shape, edges) <- graphs) {
+      val ids = (1L to 100L).toDF("doc_id")
+      val pairs = edges.toDF("doc_a", "doc_b")
+      def run(df: DataFrame) =
+        df.collect().map(r => r.get(0) -> r.get(1)).toMap
+      val driver = LlmOps.dedupGroupsObserved(ids, "doc_id", pairs, 25)(_ => ())
+      assert(driver.driverFinished, shape)
+      val loop = run(dedupGroupsLoop(ids, pairs))
+      assert(run(driver.labels) === loop, s"$shape (Long ids)")
+      assert(loop.size === 100 && loop(100L) === 100L, s"$shape: isolated node")
+      // String ids order as strings: "10" < "9", so labels move
+      val sIds = ids.select(col("doc_id").cast("string").as("doc_id"))
+      val sPairs = pairs.select(col("doc_a").cast("string").as("doc_a"),
+        col("doc_b").cast("string").as("doc_b"))
+      val sLoop = run(dedupGroupsLoop(sIds, sPairs))
+      assert(run(LlmOps.dedupGroups(sIds, "doc_id", sPairs)) === sLoop,
+        s"$shape (String ids)")
+    }
+  }
+
+  test("dedup groups: a loop whose contracted graph fits finishes on the " +
+    "driver with the loop's labels") {
+    val ids = (1L to 300L).toDF("doc_id")
+    val pairs = ((2L to 200L).map(i => (i, i - 1)) ++
+      (250L until 300L).map(i => (i, i + 1))).toDF("doc_a", "doc_b")
+    def labels(df: DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[LlmOps.CcRound]
+    val loop = labels(LlmOps.dedupGroupsObserved(ids, "doc_id", pairs, 25,
+      driverMaxEdges = -1L)(rounds += _).labels)
+    // the smallest non-empty contracted graph the loop passed through
+    val bound = rounds.map(_.contracted).filter(_ > 0L).min
+    val run = LlmOps.dedupGroupsObserved(ids, "doc_id", pairs, 25,
+      driverMaxEdges = bound)(_ => ())
+    assert(run.driverFinished, rounds.mkString(", "))
+    assert(labels(run.labels) === loop)
+    assert((1L to 200L).forall(loop(_) == 1L) && (250L to 300L).forall(loop(_) == 250L))
+  }
+
   test("dedup groups: min-label propagation finds component minima") {
     val ids = (1L to 7L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("doc_a", "doc_b")
@@ -714,7 +769,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val ids = (1L to 120L).toDF("doc_id")
     val pairs = (1L until 100L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val (labels, pinnedCc) = pinnedBy {
-      LlmOps.dedupGroups(ids, "doc_id", pairs)
+      dedupGroupsLoop(ids, pairs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
     assert((1L to 100L).forall(labels(_) == 1L), "chain collapses to min id")
@@ -757,7 +812,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // themselves — Spark's carried-over estimate multiplies per round
     val ids = (1L to 120L).toDF("doc_id")
     val pairs = (1L until 100L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val labels = LlmOps.dedupGroups(ids, "doc_id", pairs)
+    val labels = dedupGroupsLoop(ids, pairs)
     val sizes = labels.queryExecution.optimizedPlan.collectLeaves().collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.stats.sizeInBytes
     }
@@ -773,7 +828,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val parts0 = spark.conf.get("spark.sql.shuffle.partitions")
     val ids = (1L to 10L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (3L, 4L)).toDF("doc_a", "doc_b")
-    LlmOps.dedupGroups(ids, "doc_id", pairs).collect()
+    dedupGroupsLoop(ids, pairs).collect()
     // the loop plans in a PRIVATE child session — shared-session conf is
     // process-global and a concurrent query must never see the override
     assert(spark.conf.get("spark.sql.adaptive.enabled") === aqe0)
@@ -781,7 +836,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // non-convergence abort: conf still untouched AND no pinned blocks
     val before = spark.sparkContext.getPersistentRDDs.keySet
     intercept[IllegalStateException](
-      LlmOps.dedupGroups(ids, "doc_id", pairs, maxIters = 0).collect())
+      dedupGroupsLoop(ids, pairs, maxIters = 0).collect())
     assert(spark.conf.get("spark.sql.adaptive.enabled") === aqe0)
     assert(spark.conf.get("spark.sql.shuffle.partitions") === parts0)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before

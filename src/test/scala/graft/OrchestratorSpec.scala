@@ -1059,6 +1059,54 @@ class OrchestratorSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("records_count equals count() for every sink kind; a frame one " +
+    "distributed write reads is neither pinned nor counted again") {
+    val p = fixture((1 to 9).map(i => s"""{"id":$i,"v":${i * 10}}"""), "rc")
+    val out = java.nio.file.Files.createTempDirectory("graft_rc").toString
+    // a filter, so the count is the transform's, not the input's; the
+    // processed flags carry the pipeline name, so no two plans match one
+    // cache
+    def pipe(name: String, load: Option[LoadDef]): PipelineDef =
+      filePipeline(name, p, TransformDef(addProcessedFlags = true)).copy(
+        extract = ExtractDef(filters = Map("v" -> Seq(20L, 40L, 60L, 70L))),
+        load = load)
+    val seq = SequenceDef("s",
+      Seq("distributed", "multi", "zipped", "single", "noload"), Seq(
+        pipe("distributed", Some(LoadDef(s"$out/d", formats = Seq("json")))),
+        pipe("multi", Some(LoadDef(s"$out/m", formats = Seq("csv", "parquet")))),
+        pipe("zipped", Some(LoadDef(s"$out/z", formats = Seq("csv", "json"),
+          zip = true))),
+        pipe("single", Some(LoadDef(s"$out/s", formats = Seq("tsv"),
+          singleFile = true))),
+        pipe("noload", None)))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val ctx = Orchestrator.execute(spark, seq, unpersistOnEnd = false)
+    try {
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      val observed = ctx.results("distributed").recordCount
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+      assert(jobs.get() === 0, "the distributed sink's pass already counted its rows")
+      assert(observed === 4)
+      assert(ctx.results("distributed").df.get.storageLevel ===
+        org.apache.spark.storage.StorageLevel.NONE)
+      for (name <- seq.executionOrder) {
+        val o = ctx.results(name)
+        assert(o.status === "succeeded", s"$name: ${o.error}")
+        assert(o.recordCount === o.df.get.count(), name)
+        assert(Orchestrator.metricsJson(ctx)
+          .contains(s""""name":"$name","duration_ms""""))
+      }
+      assert(Orchestrator.metricsJson(ctx).contains(""""total_records":20"""))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      ctx.unpersistAll()
+    }
+  }
+
   // ----- W7/A1: metrics shape -----------------------------------------
   test("W7: metricsJson carries per-pipeline rows and A1 summary math") {
     val p = fixture(Seq("""{"id":1}""", """{"id":2}""", """{"id":3}"""), "m")
