@@ -161,8 +161,9 @@ object Main {
     // Observation on a distributed write) or from the validation count,
     // so most frames are read once and never pinned; execute pins only
     // a frame something reads twice (a multi-format, ZIP or single-file
-    // sink, a later consumer), and its count reads that pin — so the
-    // pins are released only after reporting. Pinning every output
+    // sink, a later consumer, a write whose failure on_load_error
+    // tolerates), and its count reads that pin — so the pins are
+    // released only after reporting. Pinning every output
     // instead would also run each cached plan without AQE's partition
     // coalescing (a cached plan keeps its shuffle width). On a
     // stop-on-failure abort the orchestrator hands back the partial

@@ -241,7 +241,10 @@ object Orchestrator {
     // record count needs its own pass. The count rides on the sink's
     // pass when the sink is a distributed write (an Observation on it);
     // a single-file render cannot deliver one, so there the count is a
-    // second read. A pipeline with no sink is read once, by the count.
+    // second read. So is a failed write that `on_load_error` tolerates:
+    // the kept frame is counted after the sink died, and the pin keeps
+    // the partitions the write computed from being computed again. A
+    // pipeline with no sink is read once, by the count.
     def consumesPrevious(p: PipelineDef): Boolean = (p.source match {
       case _: PreviousSource | CombinedSource | _: MergedApiSource |
           _: ParameterizedApiSource => true
@@ -249,7 +252,8 @@ object Orchestrator {
     }) || p.conditions.whenRecordsCount.nonEmpty || p.conditions.skipIfEmpty
     def readsTwice(p: PipelineDef): Boolean =
       p.load.exists(l => l.formats.size > 1 || l.appendToSequence ||
-        !observesCount(l)) || validationCounts(p)
+        !Sinks.distributed(l) || TolerantPolicies(seq.onLoadError)) ||
+        validationCounts(p)
     selected.zipWithIndex.foreach { case (name, i) =>
       val p = byName(name)
       val consumedLater =
@@ -346,12 +350,6 @@ object Orchestrator {
     }
   }
 
-  /** True when the sink's own pass can report the record count: a
-    * distributed write (one write action per format), which carries an
-    * Observation. Single-file and ZIP sinks render through the driver's
-    * `toLocalIterator`, which delivers none. */
-  private def observesCount(l: LoadDef): Boolean = !l.singleFile && !l.zip
-
   /** True when `transform.validation` counts the frame (min/max bounds). */
   private def validationCounts(p: PipelineDef): Boolean =
     p.transform.validation.exists(v => v.minRecords.nonEmpty || v.maxRecords.nonEmpty)
@@ -398,7 +396,8 @@ object Orchestrator {
     } catch { case scala.util.control.NonFatal(e) =>
       throw PhaseFailed("transform", e, None) }
     exportShared(p, ctx, intermediate)
-    val observation = p.load.filter(l => validated.isEmpty && observesCount(l))
+    // only a distributed write's query delivers an Observation
+    val observation = p.load.filter(l => validated.isEmpty && Sinks.distributed(l))
       .map(_ => org.apache.spark.sql.Observation())
     val written = observation.fold(main)(o => main.observe(o, count(lit(1)).as("records")))
     val (outPath, lMs) = timed(

@@ -1772,9 +1772,10 @@ object LlmOps {
     *    rounds, all partition-parallel (the MapReduce family Kiveris et
     *    al., SoCC 2014, analyze). After each round that still changed a
     *    label, the contracted graph — distinct (label(src), label(dst))
-    *    pairs whose labels differ — is counted, and once it fits under
-    *    the same bound it is collected and finished on the driver the
-    *    same way, so the long tail of near-converged rounds never runs.
+    *    pairs whose labels differ — is built once into a lazy pin and
+    *    counted, and once it fits under the same bound it is collected
+    *    from that pin and finished on the driver the same way, so the
+    *    long tail of near-converged rounds never runs.
     *    The loop plans in a private child session (static planning,
     *    edge-proportional shuffle width — see the inline note) and
     *    checkpoints each round, releasing the previous one, so lineage
@@ -1787,10 +1788,18 @@ object LlmOps {
     *
     * Scale record (`cc_iter` probe, 4 cores): at sf1 both probe graphs
     * (1.0M and 85k directed edges) finish on the driver with no round,
-    * in 1.9 and 0.24 s; the loop took 8 and 16 rounds. At sf10 the
+    * in 1.2 and 0.25 s; the loop took 8 and 16 rounds. At sf10 the
     * cross-modal union graph (1.92M directed edges), which the loop
     * needed 28 rounds and 30.6 s for, past the cap of 25, finishes on
-    * the driver in 2.8 s. Each loop round checkpoint reports the bytes
+    * the driver in 2.8–3.3 s; its labels' local relation holds 26 MB on
+    * the driver, and the heap in use over the stage, tasks included,
+    * stays under 1.72 GB (the sum of the heap pools' peaks). With the
+    * bound lowered so the sf1 graphs run
+    * the loop (a tenth of their edges), they finish after 1 and 2
+    * rounds in 6.4 and 2.9 s, against 8.8 and 7.1 s for the loop run
+    * to its fixpoint; at 5,000 and 1,000 edges, after 2 and 4 rounds,
+    * in 5.6 and 3.0 s against 6.0 and 4.8 s. A contracted-graph build
+    * costs about one round. Each loop round checkpoint reports the bytes
     * the block manager holds ([[graft.engine.Pin]]), not Spark's
     * estimate, which squared every self-joining round and overflowed by
     * round ~40. */
@@ -1917,9 +1926,16 @@ object LlmOps {
     val out = Pin.rounds(init, maxIters, eager = false, scoped = Seq(edges0),
       until = { next =>
         val changed = next.filter(col("label") < col("oldLabel")).count()
-        val nContracted = if (changed == 0) 0L else contracted(next).count()
-        if (nContracted > 0 && nContracted <= driverMaxEdges)
-          finish = Some(halfEdges(contracted(next)))
+        // the contracted graph is built once: a lazy pin its count
+        // materializes, collected from the pin when it fits
+        val nContracted = if (changed == 0) 0L else {
+          val c = Pin.checkpoint(contracted(next), eager = false)
+          try {
+            val n = c.count()
+            if (n > 0 && n <= driverMaxEdges) finish = Some(halfEdges(c))
+            n
+          } finally Pin.release(c)
+        }
         onRound(CcRound((System.nanoTime() - t0) / 1e9, changed, nContracted))
         changed == 0 || nContracted <= driverMaxEdges
       }) { labels =>

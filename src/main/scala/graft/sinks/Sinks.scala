@@ -25,6 +25,12 @@ import graft.operators.Ops
   */
 object Sinks {
 
+  /** True when `load` writes each format with one distributed action,
+    * so a pass over the frame per format and nothing on the driver;
+    * single-file and ZIP sinks render through the driver's
+    * `toLocalIterator` instead. */
+  def distributed(load: LoadDef): Boolean = !load.zip && !load.singleFile
+
   /** Write `df` (and the optional intermediate branch) in every
     * configured format; returns the output location written. */
   def write(
@@ -36,17 +42,17 @@ object Sinks {
       executionId: String): String = {
     val baseName = graft.config.Templates.substFilename(
       load.filenamePattern, pipelineName, executionId)
-    if (load.zip) writeZip(spark, df, intermediate, load, baseName, pipelineName, executionId)
-    else if (load.singleFile) {
-      load.formats.foreach { fmt =>
-        val target = s"${load.outputPath}/${fileName(load, fmt, baseName)}"
-        writeBytes(spark, target, renderSingle(df, fmt, load.singleFileMaxRows))
-      }
-      load.outputPath
-    } else {
+    if (distributed(load)) {
       load.formats.foreach { fmt =>
         writeDistributed(df, fmt, s"${load.outputPath}/${baseName}_$fmt",
           load.partitionBy, load.mode, load.maxRecordsPerFile)
+      }
+      load.outputPath
+    } else if (load.zip) writeZip(spark, df, intermediate, load, baseName, pipelineName, executionId)
+    else {
+      load.formats.foreach { fmt =>
+        val target = s"${load.outputPath}/${fileName(load, fmt, baseName)}"
+        writeBytes(spark, target, renderSingle(df, fmt, load.singleFileMaxRows))
       }
       load.outputPath
     }

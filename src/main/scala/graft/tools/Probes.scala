@@ -36,6 +36,12 @@ object Probes {
 
   private def longOr0(r: Row, i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
 
+  private def heapPools = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala.toSeq
+      .filter(_.getType == java.lang.management.MemoryType.HEAP)
+  }
+
   /** Connected components, pair build vs labeling: for the MinHash
     * graph (`llm_dedup_groups`) and the SimHash ∪ payload graph
     * (`llm_crossmodal_groups`), per arm `<arm>.pairs`, `<arm>.cc`
@@ -44,8 +50,12 @@ object Probes {
     * `<arm>.rounds` holds [seconds, labels changed, contracted-graph
     * directed edges] per loop round of its last run, and
     * `<arm>.driver_finish` whether union-find on the driver finished
-    * it) and `<arm>.prod_count` (production as callers run it; a run
-    * past its 25-round cap is a recorded failure).
+    * it), `<arm>.cc_heap_mb` (`peak`: the heap in use over `<arm>.cc`,
+    * as the sum of every heap pool's peak, an upper bound that in a
+    * local session includes the tasks' memory; `local_relation`: the
+    * rows the labels' local relation holds on the driver) and
+    * `<arm>.prod_count` (production as callers run it; a run past its
+    * 25-round cap is a recorded failure).
     * Latest artifact: `artifacts/cc_iter_sf10_crossmodal.json`.
     * args: [all|minhash|crossmodal] */
   private def ccIter(p: Probe, args: Seq[String]): Unit = {
@@ -65,6 +75,8 @@ object Probes {
       val pinned = Pin.checkpoint(mkPairs(), eager = true)
       p.value(s"$arm.n_pairs")(pinned.count())
       val rounds = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
+      System.gc()
+      heapPools.foreach(_.resetPeakUsage())
       val run = p.action(s"$arm.cc") {
         rounds.clear()
         LlmOps.dedupGroupsObserved(docs.select("doc_id"), "doc_id",
@@ -73,6 +85,14 @@ object Probes {
             r.changed, r.contracted)
         }
       }
+      val peakHeap = heapPools.map(_.getPeakUsage.getUsed).sum
+      // the rows a driver finish's local relation holds
+      val localBytes = run.fold(0L)(_.labels.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+          org.apache.spark.util.SizeEstimator.estimate(l.data)
+      }.sum)
+      p.value(s"$arm.cc_heap_mb")(ListMap(
+        "peak" -> (peakHeap >> 20), "local_relation" -> (localBytes >> 20)))
       p.value(s"$arm.converged")(run.isDefined)
       p.value(s"$arm.driver_finish")(run.exists(_.driverFinished))
       p.value(s"$arm.rounds")(rounds.toSeq)

@@ -158,6 +158,30 @@ class OrchestratorSpec extends AnyFunSuite {
       Orchestrator.execute(spark, seq.copy(onLoadError = "stop")))
   }
 
+  test("on_load_error=continue: a write that fails after computing its " +
+    "frame leaves it pinned, so the record count does not recompute it") {
+    val src = fixture(Seq("""{"id":1}""", """{"id":2}""", """{"id":3}"""), "le_src")
+    val out = java.nio.file.Files.createTempDirectory("graft_le_out").toString
+    // a private session: the failing commit protocol is session conf
+    val session = spark.newSession()
+    session.conf.set("spark.sql.sources.commitProtocolClass",
+      classOf[RefusingCommitProtocol].getName)
+    val seq = SequenceDef("s", Seq("writer"), Seq(
+      filePipeline("writer", src).copy(
+        load = Some(LoadDef(out, formats = Seq("json"))))),
+      onLoadError = "continue")
+    val ctx = Orchestrator.execute(session, seq, unpersistOnEnd = false)
+    try {
+      assert(ctx.results("writer").failedPhase === Some("load"))
+      val kept = ctx.results("writer").df.get
+        .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      val pin = kept.sparkSession.sharedState.cacheManager.lookupCachedData(kept)
+      assert(pin.exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded),
+        "the failed write's pass filled the kept frame's pin")
+      assert(ctx.results("writer").recordCount === 3L)
+    } finally ctx.unpersistAll()
+  }
+
   test("append_to_sequence: flagged pipelines contribute to ONE combined " +
     "sequence-level write (drift-tolerant union); unflagged and skipped do not") {
     val pa = fixture(Seq("""{"id":1,"a_col":"x"}"""), "ats_a")
@@ -1132,4 +1156,15 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(plan.contains("deps=a"))
     assert(plan.contains("/out (csv/json)"))
   }
+}
+
+/** A file commit protocol whose job commit always fails: a distributed
+  * write that runs every task and then dies. */
+class RefusingCommitProtocol(jobId: String, path: String,
+    dynamicPartitionOverwrite: Boolean)
+    extends org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol(
+      jobId, path, dynamicPartitionOverwrite) {
+  override def commitJob(jobContext: org.apache.hadoop.mapreduce.JobContext,
+      taskCommits: Seq[org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage]): Unit =
+    throw new java.io.IOException("job commit refused")
 }
