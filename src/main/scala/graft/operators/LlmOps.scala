@@ -1788,17 +1788,16 @@ object LlmOps {
     *
     * Scale record (`cc_iter` probe, 4 cores): at sf1 both probe graphs
     * (1.0M and 85k directed edges) finish on the driver with no round,
-    * in 1.2 and 0.25 s; the loop took 8 and 16 rounds. At sf10 the
-    * cross-modal union graph (1.92M directed edges), which the loop
+    * in 1.2–1.9 and 0.24–0.4 s; the loop took 8 and 16 rounds. At sf10
+    * the cross-modal union graph (1.92M directed edges), which the loop
     * needed 28 rounds and 30.6 s for, past the cap of 25, finishes on
     * the driver in 2.8–3.3 s; its labels' local relation holds 26 MB on
     * the driver, and the heap in use over the stage, tasks included,
     * stays under 1.72 GB (the sum of the heap pools' peaks). With the
-    * bound lowered so the sf1 graphs run
-    * the loop (a tenth of their edges), they finish after 1 and 2
-    * rounds in 6.4 and 2.9 s, against 8.8 and 7.1 s for the loop run
-    * to its fixpoint; at 5,000 and 1,000 edges, after 2 and 4 rounds,
-    * in 5.6 and 3.0 s against 6.0 and 4.8 s. A contracted-graph build
+    * bound at a tenth of the edges (`cc_tenth`), so the loop runs, the
+    * sf10 graph finishes after 1 round in 5.9 s and the sf1 graphs
+    * after 1 and 2 rounds in 4.2 and 2.9 s, where the loop run to its
+    * fixpoint took 8.8 and 7.1 s at sf1. A contracted-graph build
     * costs about one round. Each loop round checkpoint reports the bytes
     * the block manager holds ([[graft.engine.Pin]]), not Spark's
     * estimate, which squared every self-joining round and overflowed by

@@ -53,7 +53,11 @@ object Probes {
     * it), `<arm>.cc_heap_mb` (`peak`: the heap in use over `<arm>.cc`,
     * as the sum of every heap pool's peak, an upper bound that in a
     * local session includes the tasks' memory; `local_relation`: the
-    * rows the labels' local relation holds on the driver) and
+    * rows the labels' local relation holds on the driver),
+    * `<arm>.cc_tenth` (the same with the driver bound at a tenth of the
+    * graph's directed edges, so the loop runs until its contracted graph
+    * fits; `<arm>.tenth.{driver_finish, rounds}` as above, and
+    * `<arm>.tenth.chk_equal` whether its labels equal `<arm>.cc`'s) and
     * `<arm>.prod_count` (production as callers run it; a run past its
     * 25-round cap is a recorded failure).
     * Latest artifact: `artifacts/cc_iter_sf10_crossmodal.json`.
@@ -73,18 +77,24 @@ object Probes {
         prodLabels: () => DataFrame): Unit = {
       p.stage(s"$arm.pairs")(mkPairs())
       val pinned = Pin.checkpoint(mkPairs(), eager = true)
-      p.value(s"$arm.n_pairs")(pinned.count())
-      val rounds = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
+      val nPairs = p.value(s"$arm.n_pairs")(pinned.count()).getOrElse(0L)
+      // stage `stage`: dedupGroups over the pinned pairs, and the rounds
+      // of its last run
+      def cc(stage: String, driverMaxEdges: Long) = {
+        val rounds = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
+        val run = p.action(stage) {
+          rounds.clear()
+          LlmOps.dedupGroupsObserved(docs.select("doc_id"), "doc_id",
+            pinned, maxIters = 40, driverMaxEdges) { r =>
+            rounds += Seq[Any](math.round(r.seconds * 1000).toDouble / 1000.0,
+              r.changed, r.contracted)
+          }
+        }
+        (run, rounds.toSeq)
+      }
       System.gc()
       heapPools.foreach(_.resetPeakUsage())
-      val run = p.action(s"$arm.cc") {
-        rounds.clear()
-        LlmOps.dedupGroupsObserved(docs.select("doc_id"), "doc_id",
-          pinned, maxIters = 40) { r =>
-          rounds += Seq[Any](math.round(r.seconds * 1000).toDouble / 1000.0,
-            r.changed, r.contracted)
-        }
-      }
+      val (run, rounds) = cc(s"$arm.cc", TextOps.BroadcastMaxRows)
       val peakHeap = heapPools.map(_.getPeakUsage.getUsed).sum
       // the rows a driver finish's local relation holds
       val localBytes = run.fold(0L)(_.labels.queryExecution.analyzed.collect {
@@ -95,9 +105,16 @@ object Probes {
         "peak" -> (peakHeap >> 20), "local_relation" -> (localBytes >> 20)))
       p.value(s"$arm.converged")(run.isDefined)
       p.value(s"$arm.driver_finish")(run.exists(_.driverFinished))
-      p.value(s"$arm.rounds")(rounds.toSeq)
+      p.value(s"$arm.rounds")(rounds)
       val instChk = p.value(s"$arm.chk_inst")(
         run.fold("not_converged")(r => chk(r.labels)))
+      // the mid-loop finish: the bound at a tenth of the directed edges
+      // (two per pair), so rounds run until the contracted graph fits
+      val (tenth, tenthRounds) = cc(s"$arm.cc_tenth", nPairs / 5)
+      p.value(s"$arm.tenth.driver_finish")(tenth.exists(_.driverFinished))
+      p.value(s"$arm.tenth.rounds")(tenthRounds)
+      p.value(s"$arm.tenth.chk_equal")(
+        tenth.exists(r => instChk.contains(chk(r.labels))))
       p.action(s"$arm.prod_count")(prodLabels().count())
       val prodChk = p.value(s"$arm.chk_prod")(chk(prodLabels()))
       p.value(s"$arm.chk_equal")(run.isDefined && instChk == prodChk)
