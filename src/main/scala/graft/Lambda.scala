@@ -66,16 +66,7 @@ object Lambda {
   /** Env-driven main, mirroring the reference's lambda_runtime::run
     * wrapper: one handler invocation per process. */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .appName("graft-lambda")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Main.session(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"), "graft-lambda")
     try {
       val resp = handle(spark)
       println(s"[graft-lambda] ${resp.message}: ${resp.outputPath} " +

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The local session the query harness (`Verify`, `Bench`) and the
-  * probes (`graft.tools.Probe`) run in: `SPARK_GRAFT_CPUS` executor
+/** The local session the query harness (`Verify`, `Bench`, `Smoke`) and
+  * the probes (`graft.tools.Probe`) run in: `SPARK_GRAFT_CPUS` executor
   * threads and shuffle partitions (default 4), UTC session time, AQE on,
   * and `nanosAsLong` because `events.parquet` stores TIMESTAMP(NANOS). */
 object LocalSpark {

@@ -99,9 +99,16 @@ object Main {
       return
     }
 
+    val spark = session(args.master, s"graft-${seq.name}")
+    val code = try run(spark, seq, args) finally spark.stop()
+    if (code != 0) sys.exit(code)
+  }
+
+  /** The session the CLI mains (`Main`, `Lambda`) run in. */
+  def session(master: String, appName: String): SparkSession = {
     val spark = SparkSession.builder()
-      .master(args.master)
-      .appName(s"graft-${seq.name}")
+      .master(master)
+      .appName(appName)
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
@@ -109,8 +116,7 @@ object Main {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val code = try run(spark, seq, args) finally spark.stop()
-    if (code != 0) sys.exit(code)
+    spark
   }
 
   /** Zero-config simple mode — the reference's bare `samll-etl` run with

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 
 import graft.config._
-import graft.operators.Ops
+import graft.operators.{ImageOps, LlmOps, MultimodalOps, Ops, TextOps}
 import graft.sinks.Sinks
 import graft.sources.Http
 
@@ -52,8 +52,8 @@ final class RunContext(val executionId: String) {
     * least one pipeline set `load.append_to_sequence` and the combined
     * write succeeded (see Orchestrator.writeCombined). */
   var combinedOutput: Option[String] = None
-  /** Frames cached for cross-pipeline reuse, and stage inputs cached
-    * because the stage reads them more than once (`epoch_pack`); all
+  /** Frames cached for cross-pipeline reuse, and the inputs of curation
+    * stages that read them more than once (`Orchestrator.Stages`); all
     * released together at sequence end. */
   val persisted: mutable.ListBuffer[DataFrame] = mutable.ListBuffer.empty
   /** Caches `df` lazily ([[Pin.cache]]) and registers it in
@@ -483,7 +483,7 @@ object Orchestrator {
     * StringType one is UTF-8-encoded (the zero-egress media stand-in). */
   private def payloadCol(frame: DataFrame, field: String): Column =
     if (frame.schema(field).dataType == BinaryType) col(field)
-    else graft.operators.MultimodalOps.withPayload(col(field))
+    else MultimodalOps.withPayload(col(field))
 
   /** Keeps each dedup component's canonical row: the one whose id is the
     * component's `canonical_id`. */
@@ -491,10 +491,211 @@ object Orchestrator {
     df.join(groups.filter(col(idField) === col("canonical_id")).select(idField),
       Seq(idField), "left_semi")
 
+  /** The pair-based dedup stages' shape: connected components over the
+    * near-duplicate `pairs` (`doc_a`, `doc_b`), then [[keepCanonical]]. */
+  private def dedupPairs(df: DataFrame, idField: String, pairs: DataFrame): DataFrame =
+    keepCanonical(df, idField,
+      LlmOps.dedupGroups(df, idField, pairs.select(col("doc_a"), col("doc_b"))))
+
+  /** Joins the classifier `scores` (id, `score`) on as `classifier_score`
+    * and keeps the rows that clear `min`. */
+  private def classifierGate(
+      df: DataFrame, idField: String, min: Double, scores: DataFrame): DataFrame =
+    df.join(scores.select(col(idField), col("score").as("classifier_score")), Seq(idField))
+      .filter(col("classifier_score") >= min)
+
+  /** One curation stage of [[transform]]: its config key, whether its
+    * body reads its input more than once, and the body, defined when the
+    * transform configures the stage. */
+  private[graft] final case class Stage(
+      name: String, rereads: Boolean, body: TransformDef => Option[DataFrame => DataFrame])
+
+  private def stage[A](name: String, rereads: Boolean)(field: TransformDef => Option[A])(
+      run: (A, DataFrame) => DataFrame): Stage =
+    Stage(name, rereads, t => field(t).map(a => (df: DataFrame) => run(a, df)))
+
+  /** The curation stages in the reference's fixed operator order, each
+    * named by its config key. `rereads` marks the stages whose body
+    * evaluates an unpinned input 2 to 6 times per row (measured with a
+    * counting UDF on the input, as in OrchestratorSpec), and
+    * `epoch_pack`, whose training, layout, vocabulary, prefix sum and
+    * sink each read the gated frame. */
+  private[graft] val Stages: Seq[Stage] = Seq(
+    stage("near_dedup", rereads = true)(_.nearDedup) { (nd, df) =>
+      dedupPairs(df, nd.idField,
+        LlmOps.minHashCandidatePairs(df, nd.idField, nd.textField, nd.shingleSize))
+    },
+    stage("winnow_dedup", rereads = true)(_.winnowDedup) { (wd, df) =>
+      dedupPairs(df, wd.idField,
+        TextOps.winnowPairs(df, wd.idField, wd.textField, wd.k, wd.w,
+          wd.maxDocsPerFp, wd.minShared).filter(col("overlap") >= wd.minOverlap))
+    },
+    stage("payload_dedup", rereads = true)(_.payloadDedup) { (pd, df) =>
+      dedupPairs(df, pd.idField, MultimodalOps.payloadNearDupPairs(
+        df.withColumn("__payload", payloadCol(df, pd.payloadField)),
+        pd.idField, "__payload", pd.maxHamming))
+    },
+    stage("payload_dedup_registry", rereads = true)(_.payloadDedupRegistry) { (pr, df) =>
+      // "dedup today's crawl against the media registry": probe the
+      // historical (band, slice) space with the NEW batch only —
+      // history is never re-paired against itself
+      val hist0 = readSide(df.sparkSession, pr.historyFormat, pr.historyPath)
+      val hist = hist0.select(col(pr.historyIdField).as(pr.idField),
+        payloadCol(hist0, pr.historyPayloadField).as("__payload"))
+      MultimodalOps.payloadIncrementalNearDup(
+        df.withColumn("__payload", payloadCol(df, pr.payloadField)),
+        hist, pr.idField, "__payload", pr.maxHamming).drop("__payload")
+    },
+    stage("crossmodal_dedup", rereads = true)(_.crossModalDedup) { (xm, df) =>
+      // cross-modal canonicalization: text SimHash edges ∪ payload
+      // perceptual edges → one CC pass, keep each component's min id
+      keepCanonical(df, xm.idField, MultimodalOps.crossModalDupGroups(
+        df.withColumn("__payload", payloadCol(df, xm.payloadField)),
+        xm.idField, xm.textField, "__payload", xm.maxHamming))
+    },
+    stage("image_dedup", rereads = true)(_.imageDedup) { (im, df) =>
+      // perceptual image dedup: decode → aHash60 → banded Hamming
+      // pairs → CC keep-min. Bytes that don't decode as an image get
+      // no code and therefore no pairs — they are their own singleton
+      // component and always survive (no perceptual information is no
+      // evidence of duplication).
+      dedupPairs(df, im.idField, ImageOps.imageNearDupPairs(
+        df.withColumn("__payload", payloadCol(df, im.payloadField)),
+        im.idField, "__payload", im.maxHamming))
+    },
+    stage("image_semantic_dedup", rereads = true)(_.imageSemanticDedup) { (im, df) =>
+      // semantic image dedup: grid-cell contrast embedding through the
+      // banded hyperplane-LSH + exact-cosine ANN stack — pairs resize/
+      // re-encoded variants whose aHash bits drifted apart. Keep-min
+      // canonical like every other dedup stage.
+      dedupPairs(df, im.idField, ImageOps.imageSemanticNearDupPairs(
+        df.withColumn("__payload", payloadCol(df, im.payloadField)),
+        im.idField, "__payload", im.threshold, im.grid)
+        .select(col("keep_id").as("doc_a"), col("dup_id").as("doc_b")))
+    },
+    stage("decontaminate", rereads = true)(_.decontaminate) { (dc, df) =>
+      LlmOps.decontaminate(df, dc.idField, dc.textField,
+        readSide(df.sparkSession, dc.benchFormat, dc.benchPath),
+        dc.benchIdField, dc.benchTextField,
+        dc.n, dc.minOverlapNgrams, dc.k, dc.w, dc.minContainment)
+    },
+    stage("strip_dup_spans", rereads = true)(_.stripDupSpans) { (sd, df) =>
+      TextOps.stripDupSpans(df, sd.idField, sd.textField,
+        sd.k, sd.w, sd.maxDocsPerFp, sd.gap, sd.minFps)
+    },
+    stage("near_dedup_registry", rereads = true)(_.nearDedupRegistry) { (nr, df) =>
+      val hist = readSide(df.sparkSession, nr.historyFormat, nr.historyPath)
+        .withColumnRenamed(nr.historyIdField, nr.idField)
+        .withColumnRenamed(nr.historyTextField, nr.textField)
+      LlmOps.incrementalNearDedup(
+        df, hist, nr.idField, nr.textField, nr.shingleSize, nr.minJaccard)
+    },
+    stage("lang_filter", rereads = false)(_.langFilter) { (lf, df) =>
+      df.filter(TextOps.langId(col(lf.field)).isin(lf.allowed: _*))
+    },
+    stage("quality_filter", rereads = false)(_.qualityFilter) { (qf, df) =>
+      df.filter(TextOps.qualityScore(col(qf.field)) >= qf.min)
+    },
+    stage("classifier_filter", rereads = true)(_.classifierFilter) { (cf, df) =>
+      val weights = readSide(df.sparkSession, cf.weightsFormat, cf.weightsPath)
+      classifierGate(df, cf.idField, cf.min, TextOps.classifierScore(
+        df, cf.idField, cf.textField, weights, cf.nBuckets, cf.scale, cf.bias))
+    },
+    stage("classifier_train", rereads = true)(_.classifierTrain) { (ct, df) =>
+      val wts = TextOps.classifierTrain(
+        df.filter(col(ct.srcField) === ct.posSource),
+        df.filter(col(ct.srcField) === ct.negSource),
+        ct.idField, ct.textField, ct.nBuckets, ct.iters, lrDen = ct.lrDen)
+      // trained weights are log2-fixed micro-units: score with the
+      // matching 2^20 scale
+      classifierGate(df, ct.idField, ct.min, TextOps.classifierScore(
+        df, ct.idField, ct.textField, wts, ct.nBuckets, scale = (1L << 20).toDouble))
+    },
+    stage("lm_filter", rereads = true)(_.lmFilter) { (lf, df) =>
+      val keep = TextOps.lmStupidBackoff(df, lf.idField, lf.textField,
+        trainPred = col(lf.srcField) === lf.trainSource, lf.threshBits)
+        .filter(col("kept") === 1L).select(col(lf.idField))
+      df.join(keep, Seq(lf.idField), "left_semi")
+    },
+    stage("gopher_filter", rereads = false)(_.gopherFilter) { (gf, df) =>
+      // a per-row gate is a filter, so the upstream is read once; a row
+      // without an id never passes a gate. bindOnce: gopherKeep names the
+      // text ~10 times, and pushdown would copy an upstream rewrite into each
+      df.filter(col(gf.idField).isNotNull &&
+        TextOps.bindOnce(col(gf.textField))(text =>
+          TextOps.gopherKeep(text, gf.minWords, gf.maxWords, gf.minMeanWordLen,
+            gf.maxMeanWordLen, gf.maxSymbolRatio, gf.maxBulletFrac,
+            gf.maxEllipsisFrac, gf.minAlphaFrac, gf.minStopwords)))
+    },
+    stage("c4_clean", rereads = false)(_.c4Clean) { (cc, df) =>
+      val cleaned = TextOps.c4Clean(df, cc.idField, cc.textField,
+        cc.window, cc.minSegWords, cc.minSegs, cc.blacklist)
+        .select(col(cc.idField), col("text_clean"))
+      df.join(cleaned, Seq(cc.idField))
+        .withColumn(cc.textField, col("text_clean")).drop("text_clean")
+    },
+    stage("dsir_select", rereads = true)(_.dsirSelect) { (ds, df) =>
+      val target = readSide(df.sparkSession, ds.targetFormat, ds.targetPath)
+        .select(col(ds.targetTextField.getOrElse(ds.textField)).as(ds.textField))
+      val wts = TextOps.dsirWeights(target, df, ds.textField, ds.nBuckets)
+      val scores = TextOps.dsirScores(df, ds.idField, ds.textField, wts, ds.nBuckets)
+      val top = TextOps.dsirTopK(scores, ds.idField, ds.k)
+        .select(col(ds.idField), col("score").as("dsir_score"))
+      df.join(top, Seq(ds.idField))
+    },
+    stage("repetition_filter", rereads = false)(_.repetitionFilter) { (rf, df) =>
+      df.filter(col(rf.idField).isNotNull && TextOps.gopherRepetitionKeep(
+        col(rf.textField), rf.topThresholds, rf.dupThresholds))
+    },
+    stage("sample", rereads = false)(_.sample) { (sd, df) =>
+      TextOps.stratifiedSample(df, sd.idField, col(sd.strataField), sd.rates, sd.defaultRate)
+    },
+    stage("epoch_pack", rereads = true)(_.epochPack) { (ep, df) =>
+      // merge table: in-engine training > persisted artifact > built-in.
+      // The artifact collect is merge-table-sized (the tokenizer build
+      // step persists rank-ordered (rank, x, y) rows — tens of k), the
+      // same bounded driver traffic as a codebook.
+      val merges: Seq[(String, String)] =
+        if (ep.trainMerges > 0) TextOps.bpeTrainLocal(df, ep.textField, ep.trainMerges)
+        else ep.mergesPath match {
+          case Some(path) =>
+            readSide(df.sparkSession, ep.mergesFormat, path)
+              .select(col("rank").cast("long").as("rank"),
+                col("x").cast("string"), col("y").cast("string"))
+              .orderBy("rank").collect()
+              .map(r => (r.getString(1), r.getString(2))).toSeq
+          case None => TextOps.BpeMergesEn
+        }
+      val sel = ep.mixField match {
+        case Some(f) =>
+          require(ep.mixBudgetTokens > 0,
+            "epoch_pack.mix_budget_tokens must be positive when mix_field is set")
+          val picked = TextOps.temperatureMix(
+            df, ep.idField, ep.textField, col(f), ep.mixBudgetTokens, ep.temperature)
+          df.join(picked.select(ep.idField), Seq(ep.idField))
+        case None => df
+      }
+      val order = ep.layout match {
+        case "shuffle" =>
+          TextOps.epochShuffle(sel.select(ep.idField), ep.idField, ep.salt, ep.nShards)
+        case l @ ("curriculum" | "curriculum_range") =>
+          val f = ep.diffField.getOrElse(sys.error(
+            s"epoch_pack.layout=$l requires diff_field (a difficulty " +
+              "column on the gated frame)"))
+          val layout: (DataFrame, String, String, Int) => DataFrame =
+            if (l == "curriculum") TextOps.curriculumLayout(_, _, _, _)
+            else TextOps.curriculumLayoutRange
+          layout(sel.select(col(ep.idField), col(f)), ep.idField, f, ep.nShards)
+        case other => sys.error(
+          s"epoch_pack.layout must be shuffle | curriculum | curriculum_range: $other")
+      }
+      TextOps.packTokenIdsBy(sel, ep.idField, ep.textField, ep.budget, order, merges)
+    })
+
   /** Transform phase in the reference's operator order
     * (contextual_pipeline.rs:879-1121): text ops → mapping → projection
-    * → enrichment → merge → computed → flags → column order; then the
-    * F1 intermediate branch off the final frame. */
+    * → enrichment → merge → curation [[Stages]] → computed → flags →
+    * column order; then the F1 intermediate branch off the final frame. */
   def transform(
       spark: SparkSession,
       p: PipelineDef,
@@ -527,226 +728,16 @@ object Orchestrator {
         df = Ops.mergeWithPrevious(prevUnique, t.mergeKey)(df)
       }
     }
-    t.nearDedup.foreach { nd =>
-      val pairs = graft.operators.LlmOps
-        .minHashCandidatePairs(df, nd.idField, nd.textField, nd.shingleSize)
-      df = keepCanonical(df, nd.idField,
-        graft.operators.LlmOps.dedupGroups(df, nd.idField, pairs))
-    }
-    t.winnowDedup.foreach { wd =>
-      val pairs = graft.operators.TextOps
-        .winnowPairs(df, wd.idField, wd.textField, wd.k, wd.w,
-          wd.maxDocsPerFp, wd.minShared)
-        .filter(col("overlap") >= wd.minOverlap)
-        .select(col("doc_a"), col("doc_b"))
-      df = keepCanonical(df, wd.idField,
-        graft.operators.LlmOps.dedupGroups(df, wd.idField, pairs))
-    }
-    t.payloadDedup.foreach { pd =>
-      val src = df.withColumn("__payload", payloadCol(df, pd.payloadField))
-      val pairs = graft.operators.MultimodalOps
-        .payloadNearDupPairs(src, pd.idField, "__payload", pd.maxHamming)
-        .select(col("doc_a"), col("doc_b"))
-      df = keepCanonical(df, pd.idField,
-        graft.operators.LlmOps.dedupGroups(df, pd.idField, pairs))
-    }
-    t.payloadDedupRegistry.foreach { pr =>
-      // "dedup today's crawl against the media registry": probe the
-      // historical (band, slice) space with the NEW batch only —
-      // history is never re-paired against itself
-      val hist0 = readSide(spark, pr.historyFormat, pr.historyPath)
-      val hist = hist0
-        .select(col(pr.historyIdField).as(pr.idField),
-          payloadCol(hist0, pr.historyPayloadField).as("__payload"))
-      val src = df.withColumn("__payload", payloadCol(df, pr.payloadField))
-      df = graft.operators.MultimodalOps.payloadIncrementalNearDup(
-        src, hist, pr.idField, "__payload", pr.maxHamming)
-        .drop("__payload")
-    }
-    t.crossModalDedup.foreach { xm =>
-      // cross-modal canonicalization: text SimHash edges ∪ payload
-      // perceptual edges → one CC pass, keep each component's min id
-      val src = df.withColumn("__payload", payloadCol(df, xm.payloadField))
-      df = keepCanonical(df, xm.idField, graft.operators.MultimodalOps.crossModalDupGroups(
-        src, xm.idField, xm.textField, "__payload", xm.maxHamming))
-    }
-    t.imageDedup.foreach { im =>
-      // perceptual image dedup: decode → aHash60 → banded Hamming
-      // pairs → CC keep-min. Bytes that don't decode as an image get
-      // no code and therefore no pairs — they are their own singleton
-      // component and always survive (no perceptual information is no
-      // evidence of duplication).
-      val src = df.withColumn("__payload", payloadCol(df, im.payloadField))
-      val pairs = graft.operators.ImageOps
-        .imageNearDupPairs(src, im.idField, "__payload", im.maxHamming)
-        .select(col("doc_a"), col("doc_b"))
-      df = keepCanonical(df, im.idField,
-        graft.operators.LlmOps.dedupGroups(df, im.idField, pairs))
-    }
-    t.imageSemanticDedup.foreach { im =>
-      // semantic image dedup: grid-cell contrast embedding through the
-      // banded hyperplane-LSH + exact-cosine ANN stack — pairs resize/
-      // re-encoded variants whose aHash bits drifted apart. Keep-min
-      // canonical like every other dedup stage.
-      val src = df.withColumn("__payload", payloadCol(df, im.payloadField))
-      val pairs = graft.operators.ImageOps
-        .imageSemanticNearDupPairs(src, im.idField, "__payload",
-          im.threshold, im.grid)
-        .select(col("keep_id").as("doc_a"), col("dup_id").as("doc_b"))
-      df = keepCanonical(df, im.idField,
-        graft.operators.LlmOps.dedupGroups(df, im.idField, pairs))
-    }
-    t.decontaminate.foreach { dc =>
-      val bench = readSide(spark, dc.benchFormat, dc.benchPath)
-      df = graft.operators.LlmOps.decontaminate(
-        df, dc.idField, dc.textField,
-        bench, dc.benchIdField, dc.benchTextField,
-        dc.n, dc.minOverlapNgrams, dc.k, dc.w, dc.minContainment)
-    }
-    t.stripDupSpans.foreach { sd =>
-      df = graft.operators.TextOps.stripDupSpans(
-        df, sd.idField, sd.textField,
-        sd.k, sd.w, sd.maxDocsPerFp, sd.gap, sd.minFps)
-    }
-    t.nearDedupRegistry.foreach { nr =>
-      val hist = readSide(spark, nr.historyFormat, nr.historyPath)
-        .withColumnRenamed(nr.historyIdField, nr.idField)
-        .withColumnRenamed(nr.historyTextField, nr.textField)
-      df = graft.operators.LlmOps.incrementalNearDedup(
-        df, hist, nr.idField, nr.textField, nr.shingleSize, nr.minJaccard)
-    }
-    t.langFilter.foreach { lf =>
-      df = df.filter(graft.operators.TextOps.langId(col(lf.field))
-        .isin(lf.allowed: _*))
-    }
-    t.qualityFilter.foreach { qf =>
-      df = df.filter(
-        graft.operators.TextOps.qualityScore(col(qf.field)) >= qf.min)
-    }
-    t.classifierFilter.foreach { cf =>
-      val weights = readSide(spark, cf.weightsFormat, cf.weightsPath)
-      val scores = graft.operators.TextOps.classifierScore(
-        df, cf.idField, cf.textField, weights,
-        cf.nBuckets, cf.scale, cf.bias)
-        .select(col(cf.idField), col("score").as("classifier_score"))
-      df = df.join(scores, Seq(cf.idField))
-        .filter(col("classifier_score") >= cf.min)
-    }
-    t.classifierTrain.foreach { ct =>
-      val pos = df.filter(col(ct.srcField) === ct.posSource)
-      val neg = df.filter(col(ct.srcField) === ct.negSource)
-      val wts = graft.operators.TextOps.classifierTrain(
-        pos, neg, ct.idField, ct.textField,
-        ct.nBuckets, ct.iters, lrDen = ct.lrDen)
-      // trained weights are log2-fixed micro-units: score with the
-      // matching 2^20 scale
-      val scores = graft.operators.TextOps.classifierScore(
-        df, ct.idField, ct.textField, wts,
-        ct.nBuckets, scale = (1L << 20).toDouble)
-        .select(col(ct.idField), col("score").as("classifier_score"))
-      df = df.join(scores, Seq(ct.idField))
-        .filter(col("classifier_score") >= ct.min)
-    }
-    t.lmFilter.foreach { lf =>
-      val keep = graft.operators.TextOps.lmStupidBackoff(
-        df, lf.idField, lf.textField,
-        trainPred = col(lf.srcField) === lf.trainSource, lf.threshBits)
-        .filter(col("kept") === 1L).select(col(lf.idField))
-      df = df.join(keep, Seq(lf.idField), "left_semi")
-    }
-    t.gopherFilter.foreach { gf =>
-      // a per-row gate is a filter, so the upstream is read once; a row
-      // without an id never passes a gate. bindOnce: gopherKeep names the
-      // text ~10 times, and pushdown would copy an upstream rewrite into each
-      df = df.filter(col(gf.idField).isNotNull &&
-        graft.operators.TextOps.bindOnce(col(gf.textField))(text =>
-          graft.operators.TextOps.gopherKeep(text,
-            gf.minWords, gf.maxWords, gf.minMeanWordLen, gf.maxMeanWordLen,
-            gf.maxSymbolRatio, gf.maxBulletFrac, gf.maxEllipsisFrac,
-            gf.minAlphaFrac, gf.minStopwords)))
-    }
-    t.c4Clean.foreach { cc =>
-      val cleaned = graft.operators.TextOps.c4Clean(
-        df, cc.idField, cc.textField,
-        cc.window, cc.minSegWords, cc.minSegs, cc.blacklist)
-        .select(col(cc.idField), col("text_clean"))
-      df = df.join(cleaned, Seq(cc.idField))
-        .withColumn(cc.textField, col("text_clean"))
-        .drop("text_clean")
-    }
-    t.dsirSelect.foreach { ds =>
-      val target = readSide(spark, ds.targetFormat, ds.targetPath)
-        .select(col(ds.targetTextField.getOrElse(ds.textField))
-          .as(ds.textField))
-      val wts = graft.operators.TextOps.dsirWeights(
-        target, df, ds.textField, ds.nBuckets)
-      val scores = graft.operators.TextOps.dsirScores(
-        df, ds.idField, ds.textField, wts, ds.nBuckets)
-      val top = graft.operators.TextOps.dsirTopK(scores, ds.idField, ds.k)
-        .select(col(ds.idField), col("score").as("dsir_score"))
-      df = df.join(top, Seq(ds.idField))
-    }
-    t.repetitionFilter.foreach { rf =>
-      df = df.filter(col(rf.idField).isNotNull &&
-        graft.operators.TextOps.gopherRepetitionKeep(col(rf.textField),
-          rf.topThresholds, rf.dupThresholds))
-    }
-    t.sample.foreach { sd =>
-      df = graft.operators.TextOps.stratifiedSample(
-        df, sd.idField, col(sd.strataField), sd.rates, sd.defaultRate)
-    }
-    t.epochPack.foreach { ep =>
-      // training, layout, vocabulary, prefix sum and the sink each read
-      // the gated frame: cache it once instead of recomputing it per action
-      df = ctx.cache(df)
-      // merge table: in-engine training > persisted artifact > built-in.
-      // The artifact collect is merge-table-sized (the tokenizer build
-      // step persists rank-ordered (rank, x, y) rows — tens of k), the
-      // same bounded driver traffic as a codebook.
-      val merges: Seq[(String, String)] =
-        if (ep.trainMerges > 0)
-          graft.operators.TextOps.bpeTrainLocal(df, ep.textField,
-            ep.trainMerges)
-        else ep.mergesPath match {
-          case Some(path) =>
-            readSide(spark, ep.mergesFormat, path)
-              .select(col("rank").cast("long").as("rank"),
-                col("x").cast("string"), col("y").cast("string"))
-              .orderBy("rank").collect()
-              .map(r => (r.getString(1), r.getString(2))).toSeq
-          case None => graft.operators.TextOps.BpeMergesEn
-        }
-      val sel = ep.mixField match {
-        case Some(f) =>
-          require(ep.mixBudgetTokens > 0,
-            "epoch_pack.mix_budget_tokens must be positive when " +
-              "mix_field is set")
-          val picked = graft.operators.TextOps.temperatureMix(
-            df, ep.idField, ep.textField, col(f),
-            ep.mixBudgetTokens, ep.temperature)
-          df.join(picked.select(ep.idField), Seq(ep.idField))
-        case None => df
+    // a configured stage runs under the job description "<pipeline>/<stage>"
+    // (its eager jobs' label in the event log), on a pinned input if it rereads it
+    val sc = spark.sparkContext
+    df = Stages.foldLeft(df) { (in, s) =>
+      s.body(t).fold(in) { run =>
+        val outer = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(s"${p.name}/${s.name}")
+        try run(if (s.rereads) ctx.cache(in) else in)
+        finally sc.setJobDescription(outer)
       }
-      val order = ep.layout match {
-        case "shuffle" =>
-          graft.operators.TextOps.epochShuffle(
-            sel.select(ep.idField), ep.idField, ep.salt, ep.nShards)
-        case l @ ("curriculum" | "curriculum_range") =>
-          val f = ep.diffField.getOrElse(sys.error(
-            s"epoch_pack.layout=$l requires diff_field (a difficulty " +
-              "column on the gated frame)"))
-          if (l == "curriculum")
-            graft.operators.TextOps.curriculumLayout(
-              sel.select(col(ep.idField), col(f)), ep.idField, f, ep.nShards)
-          else
-            graft.operators.TextOps.curriculumLayoutRange(
-              sel.select(col(ep.idField), col(f)), ep.idField, f, ep.nShards)
-        case other => sys.error(
-          s"epoch_pack.layout must be shuffle | curriculum | " +
-            s"curriculum_range: $other")
-      }
-      df = graft.operators.TextOps.packTokenIdsBy(
-        sel, ep.idField, ep.textField, ep.budget, order, merges)
     }
     if (t.computedFields.nonEmpty) {
       if (t.computedFields.valuesIterator.contains("record_index")) {

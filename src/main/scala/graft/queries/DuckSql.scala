@@ -51,6 +51,50 @@ object DuckSql {
        |)""".stripMargin
   }
 
+  /** `words(doc_id, ws)` → `shingles` → `hashed(doc_id, h)`: the
+    * distinct hashes of each document's `n`-word shingles
+    * (LlmOps.shingleHashes), over the `documents` rows `where` keeps. */
+  def duckShingleHashes(where: String = "", n: Int = 2): String =
+    s"""words AS (
+       |  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents $where
+       |),
+       |${duckWordShingles("shingles", "words", n)},
+       |hashed AS (
+       |  SELECT DISTINCT doc_id, ${duckHash("s")} AS h FROM shingles
+       |)""".stripMargin
+
+  /** The stable 60-bit wide-SimHash CTE chain (two avalanched mix32
+    * lanes; the llm_simhash_pairs and cross-modal oracles' text code)
+    * over `documents`, ending in `$out(doc_id, simhash)`. */
+  def duckSimHash60Ctes(out: String): String =
+    s"""__sh_toks AS (
+       |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
+       |  FROM documents
+       |),
+       |__sh_l1 AS (SELECT doc_id, ${duckHash("w")} AS h FROM __sh_toks),
+       |__sh_l2 AS (SELECT doc_id, ${duckHash("'g2:' || w")} AS h FROM __sh_toks),
+       |${duckMix32Ctes("__sh_l1", "doc_id", "h", "__sh_mxa")},
+       |${duckMix32Ctes("__sh_l2", "doc_id", "h", "__sh_mxb")},
+       |__sh_lanes AS (
+       |  SELECT doc_id, k, 0 AS lane FROM __sh_mxa
+       |  UNION ALL
+       |  SELECT doc_id, k, 1 AS lane FROM __sh_mxb
+       |),
+       |__sh_bits AS (
+       |  SELECT doc_id, lane * 32 + lb AS b,
+       |         CASE WHEN sum(((k >> lb) & 1) * 2 - 1) > 0
+       |              THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS bit
+       |  FROM __sh_lanes, generate_series(0, 31) g(lb)
+       |  WHERE lane * 32 + lb < 60
+       |  GROUP BY doc_id, lane * 32 + lb
+       |),
+       |$out AS (
+       |  SELECT doc_id,
+       |    CAST(sum(bit * (CAST(1 AS BIGINT) << CAST(b AS INT))) AS BIGINT)
+       |      AS simhash
+       |  FROM __sh_bits GROUP BY doc_id
+       |)""".stripMargin
+
   /** DuckDB rendering of LlmOps.minHashCandidatePairs' signature and
     * band keys over `$hashed(doc_id, h)`: 8 seeded permutation minima
     * `mh(doc_id, m0..m7)`, then 4 bands of 2 rows hashed into

@@ -15,7 +15,8 @@ import Tables.t
   */
 object LlmQueries {
 
-  import DuckSql.{duckBandPairs, duckCcReach, duckFold, duckHash, duckMinHashBands}
+  import DuckSql.{duckBandPairs, duckCcReach, duckFold, duckHash, duckMinHashBands,
+    duckShingleHashes}
 
   /** Memoized CC labels per (session, dir): a real curation pipeline
     * materializes the cluster labeling ONCE and every downstream pass
@@ -54,16 +55,6 @@ object LlmQueries {
   private def memoizedLabels(
       s: org.apache.spark.sql.SparkSession, dir: String) =
     ccLabelMemo.getOrElseUpdate((s, dir), new LabelCell(s, dir)).labels
-
-  /** DuckDB CTEs: distinct (doc_id, shingle-hash h) over 2-gram shingles. */
-  private def duckShingleHashes(where: String = ""): String =
-    s"""words AS (
-       |  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents $where
-       |),
-       |${DuckSql.duckWordShingles("shingles", "words")},
-       |hashed AS (
-       |  SELECT DISTINCT doc_id, ${duckHash("s")} AS h FROM shingles
-       |)""".stripMargin
 
   /** One k-means round in DuckDB, mirroring LlmOps.kmeansCentroids:
     * assign every vector to its argmax-cosine centroid (id tiebreak),
@@ -455,11 +446,9 @@ object LlmQueries {
     QDef.sql(
       "llm_minhash_pairs",
       s"""WITH ${duckShingleHashes()},
-         |${duckMinHashBands()}
-         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
-         |                         AND a.doc_id < b.doc_id
-         |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
+         |${duckMinHashBands()},
+         |${duckBandPairs("p")}
+         |SELECT doc_a, doc_b FROM p ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
       LlmOps.minHashCandidatePairs(t(s, dir, "documents"), "doc_id", "text")
         .orderBy("doc_a", "doc_b")
     },
@@ -878,32 +867,7 @@ object LlmQueries {
     QDef.sql(
       "llm_simhash_pairs",
       s"""WITH ${DuckSql.duckBandWidthNn},
-         |toks AS (
-         |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w FROM documents
-         |),
-         |l1 AS (SELECT doc_id, ${duckHash("w")} AS h FROM toks),
-         |l2 AS (SELECT doc_id, ${duckHash("'g2:' || w")} AS h FROM toks),
-         |${DuckSql.duckMix32Ctes("l1", "doc_id", "h", "mxa")},
-         |${DuckSql.duckMix32Ctes("l2", "doc_id", "h", "mxb")},
-         |lanes AS (
-         |  SELECT doc_id, k, 0 AS lane FROM mxa
-         |  UNION ALL
-         |  SELECT doc_id, k, 1 AS lane FROM mxb
-         |),
-         |bitsv AS (
-         |  SELECT doc_id, lane * 32 + lb AS b,
-         |         CASE WHEN sum(((k >> lb) & 1) * 2 - 1) > 0
-         |              THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS bit
-         |  FROM lanes, generate_series(0, 31) g(lb)
-         |  WHERE lane * 32 + lb < 60
-         |  GROUP BY doc_id, lane * 32 + lb
-         |),
-         |sh AS (
-         |  SELECT doc_id,
-         |    CAST(sum(bit * (CAST(1 AS BIGINT) << CAST(b AS INT))) AS BIGINT)
-         |      AS simhash
-         |  FROM bitsv GROUP BY doc_id
-         |),
+         |${DuckSql.duckSimHash60Ctes("sh")},
          |${DuckSql.duckHammingPairsSql("sh", "simhash", "p")}""".stripMargin) { (s, dir) =>
       LlmOps.simHashPairsAuto(t(s, dir, "documents"), "doc_id", "text",
         maxHamming = 3)
@@ -967,13 +931,7 @@ object LlmQueries {
     // the corpus side beyond the per-doc count.
     QDef.sql(
       "llm_contamination",
-      s"""WITH words AS (
-         |  SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents
-         |),
-         |${DuckSql.duckWordShingles("shingles", "words", 3)},
-         |hashed AS (
-         |  SELECT DISTINCT doc_id, ${duckHash("s")} AS h FROM shingles
-         |),
+      s"""WITH ${duckShingleHashes(n = 3)},
          |bench AS (
          |  SELECT DISTINCT h FROM hashed WHERE doc_id % 20 = 0
          |)

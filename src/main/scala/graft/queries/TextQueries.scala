@@ -42,9 +42,8 @@ object TextQueries {
 
   /** The payload perceptual-fingerprint CTE chain (the hex twin of
     * MultimodalOps.payloadFingerprint / the native PayloadCode) over
-    * `documents`, ending in `$out(doc_id, pcode)` — factored so the
-    * incremental and cross-modal oracles replay the IDENTICAL
-    * derivation the pinned llm_payload_neardup oracle uses. */
+    * `documents`, ending in `$out(doc_id, pcode)` — the one derivation
+    * the near-dup, incremental and cross-modal payload oracles share. */
   private def duckPayloadCodeCtes(out: String): String =
     s"""__pc_hx AS (
        |  SELECT doc_id, lower(hex(encode(text))) AS h,
@@ -76,38 +75,6 @@ object TextQueries {
        |                  THEN (CAST(1 AS BIGINT) << CAST(p.b AS INT))
        |                  ELSE 0 END) AS BIGINT) AS pcode
        |  FROM __pc_pb p JOIN __pc_tt t USING (doc_id) GROUP BY 1
-       |)""".stripMargin
-
-  /** The stable 60-bit wide-SimHash CTE chain (two avalanched mix32
-    * lanes — the llm_simhash_pairs derivation verbatim) over
-    * `documents`, ending in `$out(doc_id, simhash)`. */
-  private def duckSimHash60Ctes(out: String): String =
-    s"""__sh_toks AS (
-       |  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
-       |  FROM documents
-       |),
-       |__sh_l1 AS (SELECT doc_id, ${DuckSql.duckHash("w")} AS h FROM __sh_toks),
-       |__sh_l2 AS (SELECT doc_id, ${DuckSql.duckHash("'g2:' || w")} AS h FROM __sh_toks),
-       |${DuckSql.duckMix32Ctes("__sh_l1", "doc_id", "h", "__sh_mxa")},
-       |${DuckSql.duckMix32Ctes("__sh_l2", "doc_id", "h", "__sh_mxb")},
-       |__sh_lanes AS (
-       |  SELECT doc_id, k, 0 AS lane FROM __sh_mxa
-       |  UNION ALL
-       |  SELECT doc_id, k, 1 AS lane FROM __sh_mxb
-       |),
-       |__sh_bits AS (
-       |  SELECT doc_id, lane * 32 + lb AS b,
-       |         CASE WHEN sum(((k >> lb) & 1) * 2 - 1) > 0
-       |              THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS bit
-       |  FROM __sh_lanes, generate_series(0, 31) g(lb)
-       |  WHERE lane * 32 + lb < 60
-       |  GROUP BY doc_id, lane * 32 + lb
-       |),
-       |$out AS (
-       |  SELECT doc_id,
-       |    CAST(sum(bit * (CAST(1 AS BIGINT) << CAST(b AS INT))) AS BIGINT)
-       |      AS simhash
-       |  FROM __sh_bits GROUP BY doc_id
        |)""".stripMargin
 
   /** The stableBandWidth(n) CASE ladder as a one-row subquery `(wd)`.
@@ -1336,14 +1303,7 @@ object TextQueries {
     QDef.sql(
       "llm_decontaminate",
       s"""WITH ${duckWinnow(8, 4, "WHERE doc_id < 300")},
-         |words AS (
-         |  SELECT doc_id, string_split(lower(text), ' ') AS ws
-         |  FROM documents WHERE doc_id < 300
-         |),
-         |${DuckSql.duckWordShingles("sh", "words", 3)},
-         |hashed AS (
-         |  SELECT DISTINCT doc_id, ${duckHash("s")} AS h FROM sh
-         |),
+         |${DuckSql.duckShingleHashes("WHERE doc_id < 300", n = 3)},
          |benchh AS (SELECT DISTINCT h FROM hashed WHERE doc_id % 20 = 0),
          |cand AS (
          |  SELECT hashed.doc_id, CAST(count(*) AS BIGINT) AS n_overlap
@@ -1856,37 +1816,7 @@ object TextQueries {
     // information; exact-digest dedup owns them).
     QDef.sql(
       "llm_payload_neardup",
-      s"""WITH hx AS (
-        |  SELECT doc_id, lower(hex(encode(text))) AS h,
-        |         CAST(octet_length(encode(text)) AS BIGINT) AS n
-        |  FROM documents WHERE octet_length(encode(text)) > 0
-        |),
-        |by0 AS (
-        |  SELECT doc_id, n, h, unnest(generate_series(0, n - 1)) AS i
-        |  FROM hx
-        |),
-        |byv AS (
-        |  SELECT doc_id, n, CAST((i // 4) % 60 AS BIGINT) AS b,
-        |    CAST((strpos('0123456789abcdef',
-        |            substr(h, CAST(2 * i + 1 AS INT), 1)) - 1) * 16
-        |       + strpos('0123456789abcdef',
-        |            substr(h, CAST(2 * i + 2 AS INT), 1)) - 1 AS BIGINT) AS v
-        |  FROM by0
-        |),
-        |pb AS (
-        |  SELECT doc_id, b, sum(v) AS bs, CAST(count(*) AS BIGINT) AS bc
-        |  FROM byv GROUP BY 1, 2
-        |),
-        |tt AS (
-        |  SELECT doc_id, sum(bs) AS ts, sum(bc) AS tc FROM pb GROUP BY 1
-        |),
-        |code AS (
-        |  SELECT p.doc_id,
-        |    CAST(sum(CASE WHEN p.bs * t.tc > t.ts * p.bc
-        |                  THEN (CAST(1 AS BIGINT) << CAST(p.b AS INT))
-        |                  ELSE 0 END) AS BIGINT) AS pcode
-        |  FROM pb p JOIN tt t USING (doc_id) GROUP BY 1
-        |),
+      s"""WITH ${duckPayloadCodeCtes("code")},
         |${DuckSql.duckBandWidthNn},
         |${DuckSql.duckHammingPairsSql("code", "pcode", "p2")}""".stripMargin) { (s, dir) =>
       val docs = t(s, dir, "documents")
@@ -1936,7 +1866,7 @@ object TextQueries {
     // reachability the llm_dedup_groups oracle replays.
     QDef.sql(
       "llm_crossmodal_groups",
-      s"""WITH RECURSIVE ${duckSimHash60Ctes("shc")},
+      s"""WITH RECURSIVE ${DuckSql.duckSimHash60Ctes("shc")},
          |${duckPayloadCodeCtes("pcd")},
          |nn AS ${duckWidthLadder("SELECT count(*) FROM documents")},
          |${DuckSql.duckBandSlices("tband", "shc", "simhash")},

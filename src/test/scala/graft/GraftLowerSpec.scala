@@ -54,4 +54,19 @@ class GraftLowerSpec extends AnyFunSuite {
       .select(GraftLower.lower(col("n")), lower(col("n"))).head()
     assert(r.getString(0) === "42" && r.getString(0) === r.getString(1))
   }
+
+  test("lower-cases under a Turkish default locale as under English") {
+    // non-ASCII texts, so none takes the ASCII fast path
+    val texts = Seq("é I", "İ", "é LINK")
+    def lowered(locale: java.util.Locale): Seq[String] = {
+      val saved = java.util.Locale.getDefault
+      java.util.Locale.setDefault(locale)
+      try texts.map(t => GraftLower.lowerUtf8(
+        org.apache.spark.unsafe.types.UTF8String.fromString(t)).toString)
+      finally java.util.Locale.setDefault(saved)
+    }
+    val en = lowered(java.util.Locale.ENGLISH)
+    assert(en === Seq("é i", "i\u0307", "é link"))
+    assert(lowered(new java.util.Locale("tr")) === en)
+  }
 }

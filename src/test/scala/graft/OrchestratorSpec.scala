@@ -889,6 +889,86 @@ class OrchestratorSpec extends AnyFunSuite {
       expect.collect().map(_.toSeq).toSet)
   }
 
+  test("each rereading curation stage evaluates its input at most twice " +
+    "per row, alone and in the chain near_dedup -> c4_clean -> " +
+    "classifier_train") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, udf}
+    val dir = java.nio.file.Files.createTempDirectory("graft_evals").toString
+    val sources = Seq("curated", "crawl", "web")
+    def body(i: Int) = "the report that we have shared with " + (i % 3 match {
+      case 0 => "excellent thoughtful prose "
+      case 1 => "spam casino jackpot "
+      case _ => ""
+    }) + (1 to 53).map(w => s"d${i}w$w").mkString(" ")
+    // every eighth doc is a one-word edit of the one before it
+    val rows = (0 until 24).map { i =>
+      val text = if (i % 8 == 7) body(i - 1).replace(s"d${i - 1}w9 ", "zz ") else body(i)
+      (i.toLong, sources(i % 3), text)
+    }
+    rows.toDF("doc_id", "source", "raw").write.mode("overwrite").parquet(s"$dir/docs")
+    Seq(body(1), body(4)).toDF("text").write.mode("overwrite").parquet(s"$dir/target")
+    val nearDedup = Some(NearDedupDef("doc_id", "text"))
+    val c4Clean = Some(C4CleanDef("doc_id", "text"))
+    val classifierTrain = Some(ClassifierTrainDef(idField = "doc_id",
+      textField = "text", posSource = "curated", negSource = "crawl",
+      nBuckets = 64, iters = 3, lrDen = 64L, min = 0.0))
+    val t = TransformDef(addProcessedFlags = false)
+    val cases = Seq(
+      "gopher_filter" -> t.copy(gopherFilter = Some(GopherFilterDef("doc_id", "text"))),
+      "c4_clean" -> t.copy(c4Clean = c4Clean),
+      "near_dedup" -> t.copy(nearDedup = nearDedup),
+      "winnow_dedup" -> t.copy(winnowDedup = Some(WinnowDedupDef("doc_id", "text"))),
+      "dsir_select" -> t.copy(dsirSelect = Some(DsirSelectDef(idField = "doc_id",
+        textField = "text", targetPath = s"$dir/target", nBuckets = 64, k = 12))),
+      "lm_filter" -> t.copy(lmFilter = Some(LmFilterDef(idField = "doc_id",
+        textField = "text", srcField = "source", trainSource = "curated",
+        threshBits = 30))),
+      "classifier_train" -> t.copy(classifierTrain = classifierTrain),
+      "near_dedup -> c4_clean -> classifier_train" -> t.copy(
+        nearDedup = nearDedup, c4Clean = c4Clean, classifierTrain = classifierTrain))
+    val docs = spark.read.parquet(s"$dir/docs")
+    cases.zipWithIndex.foreach { case ((name, transform), i) =>
+      // the counting UDF of the test above
+      val evals = spark.sparkContext.longAccumulator(s"evals_$i")
+      val tick = udf { (s: String) => evals.add(1L); s }.asNondeterministic()
+      val input = docs.select(col("doc_id"), col("source"), tick(col("raw")).as("text"))
+      val p = PipelineDef(s"evals$i", FileSource(s"$dir/docs"), transform = transform)
+      val ctx = new graft.engine.RunContext("evals")
+      val (out, intermediate) = Orchestrator.transform(spark, p, ctx, input)
+      graft.sinks.Sinks.write(spark, out, intermediate,
+        LoadDef(s"$dir/out$i", formats = Seq("csv")), p.name, ctx.executionId)
+      ctx.unpersistAll()
+      assert(evals.value > 0L && evals.value <= 2L * rows.size,
+        s"$name: ${evals.value} evaluations of ${rows.size} input rows")
+    }
+  }
+
+  test("the stage table names every curation field of TransformDef " +
+    "exactly once, in field order, by the key that configures it") {
+    // every Option field of TransformDef except these is a curation stage
+    val notStages = Set("lookup", "intermediate", "validation")
+    val default = TransformDef()
+    val fields = default.productElementNames.zip(default.productIterator)
+      .collect { case (f, None) if !notStages(f) => f }.toSeq
+    // a table holding every required key any stage reads
+    val req: Map[String, Any] = Seq("id_field", "text_field", "payload_field",
+      "field", "history_path", "bench_path", "bench_id_field",
+      "bench_text_field", "weights_path", "pos_source", "neg_source",
+      "src_field", "train_source", "target_path", "strata_field")
+      .map(_ -> "x").toMap
+    val configured = Orchestrator.Stages.map { s =>
+      val t = TableDecoder.transform(Map(s.name -> req), default)
+      val set = default.productElementNames.zip(t.productIterator)
+        .collect { case (f, Some(_)) => f }.toSeq
+      assert(set.size === 1, s"${s.name} configures $set")
+      assert(Orchestrator.Stages.filter(_.body(t).nonEmpty).map(_.name) === Seq(s.name),
+        s"only ${s.name} runs when ${s.name} alone is configured")
+      set.head
+    }
+    assert(configured === fields)
+  }
+
   test("per-row gates plan their kernels once: a pushed-down gate copies " +
     "neither the coverage kernel nor an upstream text rewrite per reference") {
     import spark.implicits._

@@ -2,7 +2,7 @@
 """Timeline of one Spark application from its event log.
 
 Prints every SQL execution and every job in start order with its call
-site, task count and task time, and the driver-only gaps between jobs
+site (after its job description, when one is set), task count and task time, and the driver-only gaps between jobs
 (wall time in which no job ran: planning, driver loops, collects being
 consumed, JVM start-up and shut-down). Ends with totals.
 
@@ -59,8 +59,17 @@ def load(path):
         elif kind == "SparkListenerApplicationEnd":
             app["end"] = e["Timestamp"]
         elif kind == "SparkListenerSQLExecutionStart":
+            # Spark puts a set job description in place of the call site;
+            # rebuild the call site from the stack in "details"
+            site = e.get("description", "")
+            stack = (e.get("details") or "").splitlines()
+            if len(stack) > 1 and "(" in stack[0] and "(" in stack[1]:
+                call = (stack[0].split("(")[0].rsplit(".", 1)[-1] + " at " +
+                        stack[1].rsplit("(", 1)[-1].rstrip(")"))
+                if call != site:
+                    site = f"<{site}> {call}"
             sqls[e["executionId"]] = {"start": e["time"], "end": None,
-                                      "site": e.get("description", "")}
+                                      "site": site}
         elif kind == "SparkListenerSQLExecutionEnd":
             if e["executionId"] in sqls:
                 sqls[e["executionId"]]["end"] = e["time"]
@@ -73,6 +82,7 @@ def load(path):
                 "start": e["Submission Time"], "end": None,
                 "sql": int(sql) if sql is not None else None,
                 "site": props.get("callSite.short") or first.get("Stage Name", ""),
+                "desc": props.get("spark.job.description"),
                 "stages": e.get("Stage IDs", [])}
         elif kind == "SparkListenerJobEnd":
             if e["Job ID"] in jobs:
@@ -87,6 +97,10 @@ def load(path):
         # its SQL execution's call site says what ran
         if j["sql"] in sqls:
             j["site"] = f"[sql {j['sql']}] {sqls[j['sql']]['site']}"
+        # the job description a transform stage runs under
+        # ("<pipeline>/<stage>"); an SQL execution's site already shows it
+        if j["desc"] and j["desc"] not in j["site"]:
+            j["site"] = f"<{j['desc']}> {j['site']}"
         j["tasks"] = sum(tasks.get(s, [0, 0])[0] for s in j["stages"])
         j["task_ms"] = sum(tasks.get(s, [0, 0])[1] for s in j["stages"])
     return app, sqls, jobs
