@@ -59,12 +59,14 @@ final class RunContext(val executionId: String) {
   /** Caches `df` lazily ([[Pin.cache]]) and registers it in
     * [[persisted]]. A cache, not a checkpoint: callers may read a
     * result frame after [[unpersistAll]], which then recomputes. */
-  def cache(df: DataFrame): DataFrame = {
-    val c = Pin.cache(df)
-    persisted += c
-    c
-  }
-  def unpersistAll(): Unit = { persisted.foreach(Pin.release); persisted.clear() }
+  def cache(df: DataFrame): DataFrame = pinned(Pin.cache(df))
+  /** Checkpoints `df` lazily and registers it: AQE plans a table-cache
+    * job per scan of a cached frame, none per scan of a checkpoint. A
+    * frame over it cannot be read after [[unpersistAll]]. */
+  def checkpoint(df: DataFrame): DataFrame = pinned(Pin.checkpoint(df, eager = false))
+  private def pinned(c: DataFrame): DataFrame = { persisted += c; c }
+  def releaseFrom(n: Int): Unit = { persisted.drop(n).foreach(Pin.release); persisted.takeInPlace(n) }
+  def unpersistAll(): Unit = releaseFrom(0)
 
   def succeeded: Seq[PipelineOutcome] = results.values.filter(_.status == "succeeded").toSeq
   def latestDf: Option[DataFrame] = succeeded.reverse.flatMap(_.df).headOption
@@ -263,10 +265,13 @@ object Orchestrator {
         ctx.results(name) = PipelineOutcome(name, None, None, 0L, "skipped")
       } else {
         val t0 = System.nanoTime()
-        def attempt(remaining: Int): PipelineOutcome =
+        def attempt(remaining: Int): PipelineOutcome = {
+          val pinned = ctx.persisted.size
           try runPipeline(spark, p, ctx, persist = consumedLater)
           catch {
             case scala.util.control.NonFatal(e) if remaining > 0 =>
+              // the retry transforms afresh: the failed attempt's pins back nothing
+              ctx.releaseFrom(pinned)
               if (seq.retryDelayMs > 0) Thread.sleep(seq.retryDelayMs)
               attempt(remaining - 1)
             case scala.util.control.NonFatal(e) =>
@@ -286,6 +291,7 @@ object Orchestrator {
                 countFn = () => frame.map(_.count()).getOrElse(0L),
                 failedPhase = phase)
           }
+        }
         val outcome0 = attempt(seq.retryAttempts)
         val outcome = outcome0.copy(
           durationMs = (System.nanoTime() - t0) / 1000000L)
@@ -729,13 +735,13 @@ object Orchestrator {
       }
     }
     // a configured stage runs under the job description "<pipeline>/<stage>"
-    // (its eager jobs' label in the event log), on a pinned input if it rereads it
+    // (its eager jobs' label in the event log), on a checkpoint of its input if it rereads it
     val sc = spark.sparkContext
     df = Stages.foldLeft(df) { (in, s) =>
       s.body(t).fold(in) { run =>
         val outer = sc.getLocalProperty("spark.job.description")
         sc.setJobDescription(s"${p.name}/${s.name}")
-        try run(if (s.rereads) ctx.cache(in) else in)
+        try run(if (s.rereads) ctx.checkpoint(in) else in)
         finally sc.setJobDescription(outer)
       }
     }

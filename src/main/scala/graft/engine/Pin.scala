@@ -35,8 +35,10 @@ import org.apache.spark.storage.StorageLevel
   *       k-means centroids, HTTP fan-out bodies, image embeddings) stay
   *       until the session ends — the operator cannot know its caller's
   *       last action;
-  *     - [[RunContext.unpersistAll]]: stage caches, released at
-  *       sequence end (caches, so a result read after that recomputes);
+  *     - [[RunContext.unpersistAll]], at sequence end: pipeline-output
+  *       caches (a result read after that recomputes) and the lazy
+  *       checkpoints of rereading curation stages' inputs (a result over
+  *       one can no longer be read, so callers count before releasing);
   *     - the first consuming action: [[untilConsumed]].
   * Never release a result-backing checkpoint early: callers read result
   * frames after the run that made them. */

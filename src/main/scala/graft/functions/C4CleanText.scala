@@ -31,8 +31,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    StringSplit;
   *  - the blacklist is matched on `split(lower(text), " ")` with
   *    lower = [[GraftLower.lowerUtf8]] (Spark's `lower()` under a
-  *    non-Turkic locale: ICU root casing, whatever the JVM's default
-  *    locale), computed on the WHOLE
+  *    locale other than `tr`, `az` or `lt`: ICU root casing, whatever
+  *    the JVM's default locale), computed on the WHOLE
   *    text before splitting — context-sensitive lowercasing (e.g. Greek
   *    final sigma) behaves identically;
   *  - the keep rule reads word counts from the ORIGINAL-case array

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `graft_lower`: Spark's `lower()` on UTF8_BINARY strings under a
-  * non-Turkic JVM locale, bit for bit, without going through
+  * JVM locale other than `tr`, `az` or `lt`, bit for bit, without going through
   * `CollationAwareUTF8String`, and the same under every locale.
   *
   * Spark 4.1's `lower()` (ICU case mappings on, the default) calls
@@ -52,8 +52,8 @@ case class GraftLower(child: Expression) extends UnaryExpression
 
 object GraftLower {
 
-  /** `lower(c)` with Spark's semantics under a non-Turkic locale (see
-    * the class doc). */
+  /** `lower(c)` with Spark's semantics under a locale other than `tr`,
+    * `az` or `lt` (see the class doc). */
   def lower(c: Column): Column =
     ColumnBridge.column(GraftLower(ColumnBridge.expression(c)))
 

@@ -1136,6 +1136,25 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(tooFew.results("p").error.get.contains("min_records"))
   }
 
+  test("a retry releases the failed attempt's pins; a rereading stage's pin is a " +
+    "checkpoint, not a cache") {
+    val p = fixture(Seq("""{"doc_id":1,"text":"a b c d e"}""",
+      """{"doc_id":2,"text":"v w x y z"}"""), "retry_pins")
+    val seq = SequenceDef("s", Seq("p"), Seq(filePipeline("p", p,
+      transform = TransformDef(addProcessedFlags = false,
+        nearDedup = Some(NearDedupDef("doc_id", "text")),
+        validation = Some(ValidationDef(minRecords = Some(5)))))),
+      onPipelineFailure = "continue", retryAttempts = 2)
+    val ctx = Orchestrator.execute(spark, seq, unpersistOnEnd = false)
+    try {
+      assert(ctx.results("p").error.exists(_.contains("min_records")))
+      // the last of 3 attempts: near_dedup's input and the counted output
+      val Seq(stageIn, out) = ctx.persisted.toSeq
+      assert(org.apache.spark.sql.graftbridge.StorageBridge.checkpointed(stageIn).nonEmpty)
+      assert(out.storageLevel.useMemory)
+    } finally ctx.unpersistAll()
+  }
+
   // ----- lazy materialization -----------------------------------------
   test("a pipeline with no sink, no conditions, no export triggers zero Spark jobs") {
     val p = fixture(Seq("""{"id":1}""", """{"id":2}"""), "lazy")
